@@ -54,8 +54,9 @@ class Catalog:
     def append_round_local(self, arrow_table, table: str, round_no: int) -> None:
         """Driver-side parquet write (pyarrow) of one round's rows — same
         directory layout and read path as append_round, but no Spark job.
-        Only for driver-resident state (small bloom segments, collected seen
-        deltas); deployment-scale rounds use the distributed writer."""
+        Only for driver-resident state (seen-filter segments, collected seen
+        deltas, seed/re-enqueue frontiers); the other round tables use the
+        distributed writer."""
         import pyarrow.parquet as pq
 
         path = Path(self.round_path(table, round_no))

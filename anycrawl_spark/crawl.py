@@ -43,6 +43,7 @@ import time
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from .catalog import Catalog
@@ -54,12 +55,7 @@ from .politeness import (
     robots_allowed,
     strategy_cond,
 )
-from .seen import (
-    DRIVER_MERGE_MAX_BYTES,
-    SEGMENT_SCHEMA,
-    exact_antijoin,
-    segments_to_driver,
-)
+from .seen import SEGMENT_SCHEMA, exact_antijoin, segments_to_driver
 from .udfs import make_extract_udf
 
 FRONTIER_COLS = ["job_id", "url", "url_hash", "host", "origin", "path",
@@ -67,6 +63,14 @@ FRONTIER_COLS = ["job_id", "url", "url_hash", "host", "origin", "path",
 FRONTIER_SCHEMA = ("job_id string, url string, url_hash string, host string, "
                    "origin string, path string, depth int, seq long, "
                    "round_added int, attempt int")
+# FRONTIER_SCHEMA for driver-side pyarrow writes (seed round, re-enqueue)
+FRONTIER_ARROW_SCHEMA = pa.schema([
+    ("job_id", pa.string()), ("url", pa.string()),
+    ("url_hash", pa.string()), ("host", pa.string()),
+    ("origin", pa.string()), ("path", pa.string()),
+    ("depth", pa.int32()), ("seq", pa.int64()),
+    ("round_added", pa.int32()), ("attempt", pa.int32()),
+])
 
 # Frontier size above which budget_salt_n="auto" enables the two-stage
 # salted per-host top-k. Measured crossover (BENCH.md round-5 skew probes):
@@ -183,6 +187,11 @@ class CrawlConfig:
         from anycrawl_spark.cuckoo import check_n_slots
 
         check_n_slots(self.cuckoo_n_slots)
+        # the engine's seen filter is driver-resident (built, merged and
+        # written on the driver); at the 50k limit 64 MiB is already
+        # >= 10^4 bits per URL
+        if self.filter_family().total_bytes > 64 * 2**20:
+            raise ValueError("seen-filter geometry exceeds 64 MiB")
 
     def filter_family(self):
         """The configured seen-filter family with geometry bound."""
@@ -302,9 +311,9 @@ class CrawlEngine:
             self.corpus = self.corpus.localCheckpoint(eager=False)
         self.catalog = Catalog(checkpoint_dir)
         self.robots = robots
-        # driver-resident cumulative bloom segments (small-filter fast path;
-        # see seen.DRIVER_MERGE_MAX_BYTES). _bloom_mem_round = the round the
-        # cache is cumulative through; invalidated on resume (fresh engine).
+        # driver-resident cumulative seen-filter segments. _bloom_mem_round =
+        # the round the cache is cumulative through; invalidated on resume
+        # (fresh engine).
         self._bloom_mem: dict[int, bytes] | None = None
         self._bloom_mem_round = -1
         # -- write pipelining (see _finalize_prev) --------------------------
@@ -321,7 +330,6 @@ class CrawlEngine:
         self._graveyard: list = []      # caches from two rounds back
         self._pending_mem: DataFrame | None = None
         self._seen_uncommitted: list[tuple[int, str, bool]] = []
-        self._bloom_uncommitted: tuple[int, str] | None = None
         self._writes: ThreadPoolExecutor | None = None
 
     # -- state helpers ------------------------------------------------------
@@ -332,25 +340,17 @@ class CrawlEngine:
         return self.catalog.round_meta(last) or {}
 
     def _latest_bloom(self, spark: SparkSession,
-                      up_to_round: int) -> DataFrame | None:
-        """Newest bloom round ≤ ``up_to_round`` — committed, or the round
-        whose write this run completed synchronously but whose manifest
-        commit is still deferred (write pipelining). Bloom checkpoints are
-        cumulative (each round's write is the OR-merge of its delta with
-        the prior checkpoint), so the newest round alone IS the seen filter —
-        no per-round history re-merge."""
+                      up_to_round: int) -> dict[int, bytes] | None:
+        """Newest committed bloom round ≤ ``up_to_round`` as a driver dict.
+        Bloom checkpoints are cumulative (each round's write is the merge of
+        its delta into the prior checkpoint), so the newest round alone IS
+        the seen filter — no per-round history re-merge."""
         rounds = [rr for rr in self.catalog.committed_rounds("bloom")
                   if rr <= up_to_round]
-        best = max(rounds) if rounds else None
-        if (self._bloom_uncommitted is not None
-                and self._bloom_uncommitted[0] <= up_to_round
-                and (best is None or self._bloom_uncommitted[0] > best)):
-            return spark.read.schema(SEGMENT_SCHEMA).parquet(
-                self._bloom_uncommitted[1])
-        if best is None:
+        if not rounds:
             return None
-        return self.catalog.read_round(spark, "bloom", best,
-                                       schema=SEGMENT_SCHEMA)
+        return segments_to_driver(self.catalog.read_round(
+            spark, "bloom", max(rounds), schema=SEGMENT_SCHEMA))
 
     def _read_seen(self, spark: SparkSession,
                    up_to_round: int) -> DataFrame | None:
@@ -396,10 +396,6 @@ class CrawlEngine:
                 self._seen_uncommitted = [
                     (rr, p, comp) for rr, p, comp in self._seen_uncommitted
                     if rr not in committed_seen]
-                if (self._bloom_uncommitted is not None
-                        and self._bloom_uncommitted[0]
-                        in self.catalog.committed_rounds("bloom")):
-                    self._bloom_uncommitted = None
             except BaseException:
                 # a failed write/commit aborts the run — release EVERY
                 # cached frame (this round's, the deferred tail's, and the
@@ -490,10 +486,13 @@ class CrawlEngine:
                 rows.append(row)
         return rows
 
+    def _write_seen_driver(self, hashes: list[str], round_no: int) -> None:
+        self.catalog.append_round_local(
+            pa.table({"url_hash": pa.array(hashes, type=pa.string())}),
+            "seen", round_no)
+
     def _write_filter_driver(self, cache: dict[int, bytes],
                              round_no: int) -> None:
-        import pyarrow as pa
-
         self.catalog.append_round_local(
             pa.table({
                 "bucket": pa.array(sorted(cache), type=pa.int32()),
@@ -541,22 +540,18 @@ class CrawlEngine:
         self.catalog.append_round(remaining, "seen", r)
 
         deleted = False
-        if (fam.delete_driver is not None
-                and fam.total_bytes <= DRIVER_MERGE_MAX_BYTES):
+        if fam.delete_driver is not None:
             prior = self._latest_bloom(spark, progress["round"])
             if prior is not None:
-                cache, skipped = fam.delete_driver(
-                    segments_to_driver(prior), hashes)
-                if not skipped:
-                    self._write_filter_driver(cache, r)
-                    deleted = True
+                cache, skipped = fam.delete_driver(prior, hashes)
+                deleted = not skipped
         if not deleted:
-            # bloom (no deletion) / saturated segment / oversized filter:
-            # rebuild the cumulative filter from the compacted exact seen
-            self.catalog.append_round(
-                fam.build_segments(
-                    self.catalog.read_round_uncommitted(spark, "seen", r)),
-                "bloom", r)
+            # bloom (no deletion) / saturated segment: rebuild the
+            # cumulative filter from the compacted exact seen
+            cache = fam.build_driver([
+                row["url_hash"] for row in self.catalog.read_round_uncommitted(
+                    spark, "seen", r).collect()])
+        self._write_filter_driver(cache, r)
 
         meta = {**progress, "round": r, "finalized": True,
                 "pending_next": 0, "phase": "evicted",
@@ -573,8 +568,6 @@ class CrawlEngine:
         re-inserted — the other half of the cuckoo delete/insert round
         trip. `run(cfg, resume=True)` then fetches them (the admission
         limit still applies: pass a limit above the job's done count)."""
-        import pyarrow as pa
-
         spark = self.spark
         progress = self._progress()
         if progress["round"] < 0:
@@ -587,14 +580,6 @@ class CrawlEngine:
         self._check_geometry(fam)
         rows = self._canonical_rows(cfg, urls)
         base = progress["enqueued"]
-
-        pa_schema = pa.schema([
-            ("job_id", pa.string()), ("url", pa.string()),
-            ("url_hash", pa.string()), ("host", pa.string()),
-            ("origin", pa.string()), ("path", pa.string()),
-            ("depth", pa.int32()), ("seq", pa.int64()),
-            ("round_added", pa.int32()), ("attempt", pa.int32()),
-        ])
         cols = {
             "job_id": [row["job_id"] for row in rows],
             "url": [row["url"] for row in rows],
@@ -607,27 +592,13 @@ class CrawlEngine:
             "round_added": [r] * len(rows),
             "attempt": [1] * len(rows),
         }
-        self.catalog.append_round_local(pa.table(cols, schema=pa_schema),
-                                        "pending", r)
-        hashes = [row["url_hash"] for row in rows]
         self.catalog.append_round_local(
-            pa.table({"url_hash": pa.array(hashes, type=pa.string())}),
-            "seen", r)
-
-        if fam.total_bytes <= DRIVER_MERGE_MAX_BYTES:
-            prior = self._latest_bloom(spark, progress["round"])
-            cache = segments_to_driver(prior) if prior is not None else {}
-            cache = fam.merge_driver(cache, fam.build_driver(hashes))
-            self._write_filter_driver(cache, r)
-        else:
-            # distributed-size filter: cumulative write = prior checkpoint
-            # OR-merged with the delta built from the new pending rows
-            delta = fam.build_segments(
-                self.catalog.read_round_uncommitted(spark, "pending", r))
-            prior = self._latest_bloom(spark, progress["round"])
-            segs = (delta if prior is None
-                    else fam.merge_segments(prior.unionByName(delta)))
-            self.catalog.append_round(segs, "bloom", r)
+            pa.table(cols, schema=FRONTIER_ARROW_SCHEMA), "pending", r)
+        hashes = [row["url_hash"] for row in rows]
+        self._write_seen_driver(hashes, r)
+        prior = self._latest_bloom(spark, progress["round"])
+        self._write_filter_driver(
+            fam.merge_driver(prior or {}, fam.build_driver(hashes)), r)
 
         meta = {**progress, "round": r, "finalized": False,
                 "enqueued": base + len(rows), "pending_next": len(rows),
@@ -783,7 +754,6 @@ class CrawlEngine:
         self._graveyard = []
         self._pending_mem = None
         self._seen_uncommitted = []
-        self._bloom_uncommitted = None
         self._writes = ThreadPoolExecutor(max_workers=8)
         try:
             return self._run_loop(cfg, resume, t0)
@@ -819,50 +789,21 @@ class CrawlEngine:
             frontier = self._seed_frontier(cfg)
             if self.robots is not None and cfg.respect_robots:
                 frontier = robots_allowed(frontier, self.robots)
-            if fam.total_bytes <= DRIVER_MERGE_MAX_BYTES:
-                # driver-local seed round: the frontier is one seed row
-                # (already driver-built) — one collect replaces four Spark
-                # jobs (count + pending/seen/bloom writes), shaving ~2 s of
-                # fixed startup from every crawl job. File layout, schema,
-                # and manifest are identical to the distributed path.
-                import pyarrow as pa
-
-                rows = frontier.collect()
-                n_seed = len(rows)
-                pa_schema = pa.schema([
-                    ("job_id", pa.string()), ("url", pa.string()),
-                    ("url_hash", pa.string()), ("host", pa.string()),
-                    ("origin", pa.string()), ("path", pa.string()),
-                    ("depth", pa.int32()), ("seq", pa.int64()),
-                    ("round_added", pa.int32()), ("attempt", pa.int32()),
-                ])
-                self.catalog.append_round_local(
-                    pa.table({c: [r[c] for r in rows]
-                              for c in FRONTIER_COLS}, schema=pa_schema),
-                    "pending", 0)
-                hashes = [r["url_hash"] for r in rows]
-                self.catalog.append_round_local(
-                    pa.table({"url_hash": pa.array(hashes, type=pa.string())}),
-                    "seen", 0)
-                seed_bloom = fam.build_driver(hashes)
-                self.catalog.append_round_local(
-                    pa.table({
-                        "bucket": pa.array(sorted(seed_bloom),
-                                           type=pa.int32()),
-                        "bitmap": pa.array(
-                            [seed_bloom[b] for b in sorted(seed_bloom)],
-                            type=pa.binary()),
-                    }),
-                    "bloom", 0)
-                self._bloom_mem = seed_bloom
-                self._bloom_mem_round = 0
-            else:
-                n_seed = frontier.count()
-                self.catalog.append_round(frontier, "pending", 0)
-                self.catalog.append_round(
-                    frontier.select("url_hash"), "seen", 0)
-                self.catalog.append_round(fam.build_segments(frontier),
-                                          "bloom", 0)
+            # driver-local seed round: the frontier is one seed row
+            # (already driver-built) — one collect replaces four Spark jobs
+            # (count + pending/seen/bloom writes), shaving ~2 s of fixed
+            # startup from every crawl job.
+            rows = frontier.collect()
+            n_seed = len(rows)
+            self.catalog.append_round_local(
+                pa.table({c: [r[c] for r in rows] for c in FRONTIER_COLS},
+                         schema=FRONTIER_ARROW_SCHEMA),
+                "pending", 0)
+            hashes = [r["url_hash"] for r in rows]
+            self._write_seen_driver(hashes, 0)
+            self._bloom_mem = fam.build_driver(hashes)
+            self._bloom_mem_round = 0
+            self._write_filter_driver(self._bloom_mem, 0)
             progress = {"round": 0, "done": 0, "failed": 0, "enqueued": n_seed,
                         "finalized": n_seed == 0, "phase": "seeded",
                         "pending_seq_range": [0, max(0, n_seed - 1)],
@@ -1095,7 +1036,6 @@ class CrawlEngine:
             # round checkpoint is CUMULATIVE (delta OR-merged into the prior
             # round's segments at write time), so reading the seen-filter is
             # one round directory — O(1) per round, not O(rounds) re-merges.
-            driver_bloom = fam.total_bytes <= DRIVER_MERGE_MAX_BYTES
             seen = self._read_seen(spark, r - 1)
             # The probabilistic pre-filter earns its keep only once the
             # seen set is large: below prefilter_min_seen hashes the exact
@@ -1108,22 +1048,15 @@ class CrawlEngine:
             # budget_salt_n='auto' this gates only the physical plan,
             # never membership results.
             prefilter_on = progress["enqueued"] > cfg.prefilter_min_seen
-            segments = None
-            if driver_bloom:
-                if self._bloom_mem is None or self._bloom_mem_round != r - 1:
-                    seg_df = self._latest_bloom(spark, up_to_round=r - 1)
-                    if seg_df is not None:
-                        self._bloom_mem = segments_to_driver(seg_df)
-                        self._bloom_mem_round = r - 1
-                if prefilter_on and self._bloom_mem is not None:
-                    # driver-resident filter: hand the dict straight to the
-                    # probe (broadcast once per executor) — no per-row
-                    # bitmap column, no createDataFrame scan per round
-                    segments = self._bloom_mem
-            else:
-                segments = self._latest_bloom(spark, up_to_round=r - 1)
+            if self._bloom_mem is None or self._bloom_mem_round != r - 1:
+                prior = self._latest_bloom(spark, up_to_round=r - 1)
+                if prior is not None:
+                    self._bloom_mem, self._bloom_mem_round = prior, r - 1
             if prefilter_on:
-                links = fam.filter_new(links, segments, seen)
+                # driver-resident filter: hand the dict straight to the
+                # probe (broadcast once per executor) — no per-row bitmap
+                # column, no createDataFrame scan per round
+                links = fam.filter_new(links, self._bloom_mem, seen)
             elif seen is not None:
                 links = exact_antijoin(links, seen)
 
@@ -1343,76 +1276,36 @@ class CrawlEngine:
                 self._seen_uncommitted.append(
                     (r, self.catalog.round_path("seen", r), True))
             # incremental checkpoint: merge this round's delta into the
-            # previous cumulative segment set ONCE, write it as round r.
-            # Driver-resident filters (small crawls: the per-round delta is
-            # bounded by the job's enqueue limit) collect the new hashes
-            # once, build/merge the delta in numpy, and write BOTH the seen
-            # delta and the cumulative bloom with pyarrow on the driver —
-            # three Spark jobs per round (build_segments, seen write, bloom
-            # write) become one collect. Deployment-size filters keep the
-            # distributed build + applyInPandas merge + Spark writes.
-            if driver_bloom:
-                import pyarrow as pa
-
-                hashes = [row["url_hash"]
-                          for row in new_rows.select("url_hash").collect()]
-                if not compact_seen:
-                    self.catalog.append_round_local(
-                        pa.table({"url_hash": pa.array(hashes,
-                                                       type=pa.string())}),
-                        "seen", r)
-                    self._seen_uncommitted.append(
-                        (r, self.catalog.round_path("seen", r), False))
-                build_hashes = hashes
-                if self._bloom_mem is None and seen is not None:
-                    # prior bloom checkpoint missing/corrupt (filter_new
-                    # degraded to the exact anti-join): REBUILD the
-                    # cumulative filter from the seen history — committing
-                    # a delta-only bitmap as 'cumulative' would bake in
-                    # permanent false negatives for every pre-corruption
-                    # URL. Bounded: driver-resident filters imply the zod
-                    # limit cap on enqueued rows.
-                    build_hashes = hashes + [
-                        row["url_hash"]
-                        for row in seen.select("url_hash").collect()]
-                delta_mem = fam.build_driver(build_hashes)
-                self._bloom_mem = fam.merge_driver(self._bloom_mem or {},
-                                                   delta_mem)
-                self.catalog.append_round_local(
-                    pa.table({
-                        "bucket": pa.array(sorted(self._bloom_mem),
-                                           type=pa.int32()),
-                        "bitmap": pa.array(
-                            [self._bloom_mem[b]
-                             for b in sorted(self._bloom_mem)],
-                            type=pa.binary()),
-                    }),
-                    "bloom", r)
-            else:
-                # Deployment-size filters: seen delta + cumulative bloom are
-                # written SYNCHRONOUSLY — the next round's bloom pre-filter
-                # must include this round's URLs (a stale bloom's false
-                # negatives would mark seen URLs definitely-new and enqueue
-                # duplicates), and both files are read next round ahead of
-                # their deferred manifest commit.
-                if not compact_seen:
-                    self.catalog.append_round(
-                        new_rows.select("url_hash"), "seen", r)
-                    self._seen_uncommitted.append(
-                        (r, self.catalog.round_path("seen", r), False))
-                delta = fam.build_segments(new_rows)
-                if segments is not None:
-                    cumulative = fam.merge_segments(delta.unionByName(segments))
-                elif seen is not None:
-                    # rebuild from the exact seen history (see driver path)
-                    cumulative = fam.merge_segments(delta.unionByName(
-                        fam.build_segments(seen)))
-                else:
-                    cumulative = delta
-                self._bloom_mem = None
-                self.catalog.append_round(cumulative, "bloom", r)
-                self._bloom_uncommitted = (
-                    r, self.catalog.round_path("bloom", r))
+            # previous cumulative segment set ONCE, write it as round r. The
+            # new hashes are collected once (the per-round delta is bounded
+            # by the job's enqueue limit), the delta is built and merged in
+            # numpy, and BOTH the seen delta and the cumulative filter are
+            # written with pyarrow on the driver — no Spark job.
+            hashes = [row["url_hash"]
+                      for row in new_rows.select("url_hash").collect()]
+            # exact_antijoin / prefilter_antijoin skip distinct() on the
+            # seen side because every delta holds each hash once
+            if len(set(hashes)) != len(hashes):
+                raise AssertionError(
+                    f"round {r} seen delta holds duplicate url hashes")
+            if not compact_seen:
+                self._write_seen_driver(hashes, r)
+                self._seen_uncommitted.append(
+                    (r, self.catalog.round_path("seen", r), False))
+            build_hashes = hashes
+            if self._bloom_mem is None and seen is not None:
+                # prior bloom checkpoint missing/corrupt (filter_new
+                # degraded to the exact anti-join): REBUILD the cumulative
+                # filter from the seen history — committing a delta-only
+                # bitmap as 'cumulative' would bake in permanent false
+                # negatives for every pre-corruption URL. Bounded by the
+                # zod limit cap on enqueued rows.
+                build_hashes = hashes + [
+                    row["url_hash"]
+                    for row in seen.select("url_hash").collect()]
+            self._bloom_mem = fam.merge_driver(self._bloom_mem or {},
+                                               fam.build_driver(build_hashes))
+            self._write_filter_driver(self._bloom_mem, r)
         # next-pending count by arithmetic over aggregates this round already
         # computed — no re-read of the just-written files (which cost a
         # footer-scan Spark job per round):

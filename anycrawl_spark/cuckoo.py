@@ -30,8 +30,11 @@ Saturation is the no-false-negative escape hatch: if an insert exhausts its
 eviction chain (table effectively full), the segment is flagged saturated
 and membership tests in that bucket return maybe-seen for every candidate —
 degrading that bucket to the exact anti-join, never to a false negative.
-Fingerprint/index derivation uses the same independent sha256-hex slices as
-seen._positions, so membership is a pure function of the canonical URL.
+Fingerprints, indices and shard buckets come from the numpy hash-slice core
+in :mod:`anycrawl_spark.seen` (``cuckoo_fp_i1``; ``_fp_i1`` is its scalar
+reference), so membership is a pure function of the canonical URL. The
+probe is vectorized per shard bucket — both 4-slot buckets of every row
+gathered at once; only insertion (the eviction chain) stays sequential.
 """
 
 from __future__ import annotations
@@ -40,7 +43,15 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 
-from anycrawl_spark.seen import SEGMENT_SCHEMA, bucket_col
+from anycrawl_spark.seen import (
+    SEGMENT_SCHEMA,
+    bucket_col,
+    bucket_groups,
+    bucket_ids,
+    cuckoo_fp_i1,
+    hex_nibbles,
+    prefilter_antijoin,
+)
 
 SLOT_WIDTH = 4           # fingerprints per cuckoo bucket (4-way associative)
 MAX_KICKS = 500          # eviction-chain bound before declaring saturation
@@ -73,7 +84,8 @@ def _fp_i1(hash_hex: str, n_slots: int) -> tuple[int, int]:
 
 def _alt(i: int, fp: int, n_slots: int) -> int:
     # partial-key alternate index: involution (alt(alt(i)) == i), so either
-    # resident bucket works as the "primary" when re-inserting during merges
+    # resident bucket works as the "primary" when re-inserting during merges;
+    # also applies elementwise to int64 arrays (fp * _FP_MIX < 2**47)
     return (i ^ (fp * _FP_MIX)) & (n_slots - 1)
 
 
@@ -153,8 +165,9 @@ def _build_table(hashes, n_slots: int) -> bytes:
     same URL twice is idempotent, not a second copy."""
     arr = _new_table(n_slots)
     saturated = False
-    for h in sorted(set(hashes)):   # sorted: reproducible checkpoint bytes
-        fp, i1 = _fp_i1(h, n_slots)
+    # sorted: reproducible checkpoint bytes
+    fps, i1s = cuckoo_fp_i1(hex_nibbles(sorted(set(hashes))), n_slots)
+    for fp, i1 in zip(fps.tolist(), i1s.tolist()):
         if not _insert(arr, fp, i1, n_slots):
             saturated = True
             break
@@ -184,12 +197,12 @@ def build_segments(df: DataFrame, url_hash_col: str = "url_hash",
 
 def build_segments_driver(hashes, num_buckets: int = 32,
                           n_slots: int = DEFAULT_N_SLOTS) -> dict[int, bytes]:
-    """Driver-side build over an already-collected hash list (the
-    driver-resident small-filter fast path, seen.DRIVER_MERGE_MAX_BYTES)."""
-    by_bucket: dict[int, list] = {}
-    for h in hashes:
-        by_bucket.setdefault(int(h[:8], 16) % num_buckets, []).append(h)
-    return {b: _build_table(hs, n_slots) for b, hs in by_bucket.items()}
+    """Driver-side build over an already-collected hash list (the crawl
+    engine's driver-resident filter)."""
+    hashes = np.asarray(hashes, dtype=object)
+    return {b: _build_table(hashes[rows], n_slots)
+            for b, rows in bucket_groups(
+                bucket_ids(hex_nibbles(hashes), num_buckets))}
 
 
 def _merge_tables(blobs: list[bytes], n_slots: int) -> bytes:
@@ -224,21 +237,6 @@ def _merge_tables(blobs: list[bytes], n_slots: int) -> bytes:
     return _encode(base, saturated)
 
 
-def merge_segments(segments: DataFrame,
-                   n_slots: int = DEFAULT_N_SLOTS) -> DataFrame:
-    """Distributed per-bucket merge (the deployment-size cumulative
-    checkpoint path — counterpart of seen.merge_segments)."""
-
-    def merge(pdf: pd.DataFrame) -> pd.DataFrame:
-        return pd.DataFrame({
-            "bucket": [int(pdf["bucket"].iloc[0])],
-            "bitmap": [_merge_tables([bytes(b) for b in pdf["bitmap"]],
-                                     n_slots)],
-        })
-
-    return segments.groupBy("bucket").applyInPandas(merge, schema=SEGMENT_SCHEMA)
-
-
 def merge_into_driver(cache: dict[int, bytes], delta: dict[int, bytes],
                       n_slots: int = DEFAULT_N_SLOTS) -> dict[int, bytes]:
     """Driver-resident cumulative merge (counterpart of
@@ -267,8 +265,11 @@ def delete_driver(cache: dict[int, bytes], hashes,
     deleted key may linger as an ordinary false positive)."""
     out = dict(cache)
     skipped: list[str] = []
-    for h in hashes:
-        b = int(h[:8], 16) % num_buckets
+    hashes = list(hashes)
+    nib = hex_nibbles(hashes)
+    fps, i1s = cuckoo_fp_i1(nib, n_slots)
+    for h, b, fp, i1 in zip(hashes, bucket_ids(nib, num_buckets).tolist(),
+                            fps.tolist(), i1s.tolist()):
         blob = out.get(b)
         if blob is None:
             continue
@@ -276,13 +277,38 @@ def delete_driver(cache: dict[int, bytes], hashes,
         if saturated:
             skipped.append(h)
             continue
-        fp, i1 = _fp_i1(h, n_slots)
         if _delete(arr, fp, i1, n_slots):
             out[b] = _encode(arr, False)
     return out, skipped
 
 
-def filter_new(candidates: DataFrame, segments: DataFrame | None,
+def probe(hashes, segments: dict[int, bytes], num_buckets: int,
+          n_slots: int) -> np.ndarray:
+    """Maybe-seen mask of a hash batch: its fingerprint in either of its
+    two 4-slot buckets. A bucket with no segment is definitely new; a
+    saturated segment reads as all maybe-seen."""
+    nib = hex_nibbles(hashes)
+    fp, i1 = cuckoo_fp_i1(nib, n_slots)
+    i2 = _alt(i1, fp, n_slots)
+    maybe = np.zeros(len(nib), dtype=bool)
+    for b, rows in bucket_groups(bucket_ids(nib, num_buckets)):
+        blob = segments.get(b)
+        if blob is None:
+            continue
+        if blob[0]:
+            maybe[rows] = True
+            continue
+        # zero-copy read-only view (the probe never writes)
+        table = np.frombuffer(blob, dtype="<u2",
+                              offset=1).reshape(n_slots, SLOT_WIDTH)
+        f = fp[rows, None]
+        maybe[rows] = ((table[i1[rows]] == f)
+                       | (table[i2[rows]] == f)).any(axis=1)
+    return maybe
+
+
+def filter_new(candidates: DataFrame,
+               segments: "DataFrame | dict[int, bytes] | None",
                seen_exact: DataFrame | None,
                url_hash_col: str = "url_hash",
                num_buckets: int = 32,
@@ -290,21 +316,6 @@ def filter_new(candidates: DataFrame, segments: DataFrame | None,
     """Rows of ``candidates`` not in the seen set: cuckoo pre-filter +
     exact anti-join via the shared seen.prefilter_antijoin pipeline (only
     the membership probe differs between families)."""
-    from anycrawl_spark.seen import prefilter_antijoin
-
-    def test_batch(hashes, bitmaps):
-        maybe = np.zeros(len(hashes), dtype=bool)
-        for i, (h, bm) in enumerate(zip(hashes, bitmaps)):
-            if bm is None:
-                continue   # no segment for this bucket -> definitely new
-            if bm[0]:      # saturated -> everything is maybe-seen
-                maybe[i] = True
-                continue
-            # zero-copy read-only view (the probe never writes)
-            arr = np.frombuffer(bm, dtype="<u2", offset=1)
-            fp, i1 = _fp_i1(h, n_slots)
-            maybe[i] = _contains(arr, fp, i1, n_slots)
-        return maybe
-
-    return prefilter_antijoin(candidates, segments, seen_exact,
-                              url_hash_col, num_buckets, test_batch)
+    return prefilter_antijoin(
+        candidates, segments, seen_exact, url_hash_col, num_buckets,
+        lambda hashes, seg: probe(hashes, seg, num_buckets, n_slots))

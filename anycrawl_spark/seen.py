@@ -1,6 +1,7 @@
-"""Partitioned Bloom-filter URL-seen set + exact anti-join fallback
-(SURVEY.md §2.2 F2, §2.10 item 2; north rule: "URL-seen set is a partitioned
-Bloom/cuckoo filter keyed by canonicalized-URL hash").
+"""Partitioned Bloom-filter URL-seen set, the hash-slice core shared by both
+filter families, and the exact anti-join fallback (SURVEY.md §2.2 F2,
+§2.10 item 2; north rule: "URL-seen set is a partitioned Bloom/cuckoo
+filter keyed by canonicalized-URL hash").
 
 The reference deduplicates exactly via crawlee RequestQueue uniqueKeys
 (``Base.ts:464-493``) — correct but single-node. At 10^10-URL-frontier scale
@@ -9,14 +10,27 @@ massive shuffle, so we put a **partitioned Bloom filter in front of it**:
 
 - the hash space of ``sha2(canonical_url, 256)`` is split into
   ``num_buckets`` partitions; each bucket owns an ``m_bits`` bit array;
-- segments are built per-bucket with ``applyInPandas`` (numpy bitset, no
-  driver involvement), OR-merged across rounds, and checkpointed (they are
-  just ``(bucket, bitmap)`` rows — Iceberg/parquet friendly);
-- candidate filtering joins candidates to their bucket's bitmap and tests
-  k positions inside an Arrow batch. Rows the filter rejects are
-  **definitely new** (no false negatives) and skip the exact join entirely;
-  only the "maybe seen" minority pays the exact anti-join, which guarantees
-  byte-exact membership semantics equal to the reference's exact set.
+  segments are just ``(bucket, bitmap)`` rows — Iceberg/parquet friendly;
+- candidate filtering tests k positions per candidate inside an Arrow
+  batch. Rows the filter rejects are **definitely new** (no false
+  negatives) and skip the exact join entirely; only the "maybe seen"
+  minority pays the exact anti-join, which guarantees byte-exact
+  membership semantics equal to the reference's exact set.
+
+One numpy **hash-slice core** (``hex_nibbles`` + ``hex_slice``) turns a
+batch of sha256 hex hashes into shard buckets (``bucket_ids``), Bloom bit
+positions (``bloom_bits``) and cuckoo fingerprints/indices
+(``cuckoo_fp_i1``). Every Bloom build, both families' probes (bucketized:
+one vectorized gather per shard bucket present in the batch) and the
+streaming dedup (``streaming/stateful.py``) run on it; ``_positions`` and
+``cuckoo._fp_i1`` stay as the scalar references it is tested against.
+
+The crawl engine keeps its filter driver-resident: it builds and merges
+segments in numpy on the driver and writes them with pyarrow
+(``CrawlConfig`` caps the geometry at 64 MiB; the 50k enqueue limit keeps
+the seen set small). The distributed ``applyInPandas`` build plus the
+broadcast-join probe serve the registry leaves (``bloom_seen_filter``,
+``cuckoo_seen_filter``).
 
 Bit positions are derived from independent 32-bit slices of the sha256 hex,
 so membership is a pure function of the canonical URL — deterministic across
@@ -46,9 +60,99 @@ def bucket_col(url_hash_col: str, num_buckets: int = DEFAULT_NUM_BUCKETS):
 
 def _positions(hash_hex: str, m_bits: int, k: int) -> list[int]:
     # slices [9:17), [17:25), ... of the 64-char sha256 hex → k independent
-    # 32-bit values (slice [1:9) is reserved for the bucket id)
+    # 32-bit values (slice [0:8) is reserved for the bucket id)
     return [int(hash_hex[9 + 8 * i: 17 + 8 * i], 16) % m_bits for i in range(k)]
 
+
+# -- hash-slice core ---------------------------------------------------------
+
+_HEX_LEN = 64
+_HEX_VALUE = np.full(128, 255, dtype=np.uint8)   # ASCII -> nibble, 255 = bad
+_HEX_VALUE[np.frombuffer(b"0123456789", np.uint8)] = np.arange(10)
+_HEX_VALUE[np.frombuffer(b"abcdef", np.uint8)] = np.arange(10, 16)
+_HEX_VALUE[np.frombuffer(b"ABCDEF", np.uint8)] = np.arange(10, 16)
+
+
+def hex_nibbles(hashes) -> np.ndarray:
+    """``(n, 64)`` uint8 nibble matrix of a batch of sha256 hex strings.
+    Raises ValueError on a length other than 64 or a non-hex character (a
+    shorter string pads with NUL, which is not hex)."""
+    codes = np.ascontiguousarray(np.asarray(hashes, dtype=str).reshape(-1))
+    if codes.size == 0:
+        return np.zeros((0, _HEX_LEN), dtype=np.uint8)
+    if codes.dtype.itemsize != 4 * _HEX_LEN:
+        raise ValueError(f"url hashes must be {_HEX_LEN} hex chars")
+    points = codes.view(np.uint32).reshape(len(codes), _HEX_LEN)
+    # code points >= 128 clamp to DEL (0x7f), which is not hex
+    nib = _HEX_VALUE[np.minimum(points, 127)]
+    if (nib == 255).any():
+        raise ValueError("url hashes must be hex strings")
+    return nib
+
+
+def hex_slice(nib: np.ndarray, start: int, width: int) -> np.ndarray:
+    """``int(h[start:start + width], 16)`` for every row, as int64 (Python
+    slice semantics: clipped at the end, an empty slice raises)."""
+    stop = min(start + width, nib.shape[1])
+    if stop <= start:
+        raise ValueError(f"hash slice [{start}:{start + width}) is empty")
+    out = np.zeros(len(nib), dtype=np.int64)
+    for j in range(start, stop):
+        out = (out << 4) | nib[:, j]
+    return out
+
+
+def bucket_ids(nib: np.ndarray, num_buckets: int) -> np.ndarray:
+    """Shard bucket per row — the numpy twin of bucket_col."""
+    return hex_slice(nib, 0, 8) % num_buckets
+
+
+def bloom_bits(nib: np.ndarray, m_bits: int, k: int) -> np.ndarray:
+    """``(n, k)`` Bloom bit positions per row (same slices as _positions)."""
+    return np.stack([hex_slice(nib, 9 + 8 * i, 8) % m_bits
+                     for i in range(k)], axis=1)
+
+
+def cuckoo_fp_i1(nib: np.ndarray, n_slots: int
+                 ) -> tuple[np.ndarray, np.ndarray]:
+    """Cuckoo ``(fingerprint, primary index)`` per row (cuckoo._fp_i1)."""
+    fp = hex_slice(nib, 9, 4)
+    fp[fp == 0] = 1
+    return fp, hex_slice(nib, 17, 8) & (n_slots - 1)
+
+
+def bucket_groups(buckets: np.ndarray):
+    """``(bucket, row indices)`` for each distinct bucket id of a batch —
+    the unit both families' builds and probes vectorize over."""
+    order = np.argsort(buckets, kind="stable")
+    ids, starts = np.unique(buckets[order], return_index=True)
+    return zip(ids.tolist(), np.split(order, starts[1:]))
+
+
+def _bloom_bitmap(pos: np.ndarray, m_bits: int) -> bytes:
+    bits = np.zeros(m_bits, dtype=bool)
+    bits[pos.ravel()] = True
+    return np.packbits(bits, bitorder="little").tobytes()
+
+
+def bloom_probe(hashes, segments: dict[int, bytes], num_buckets: int,
+                m_bits: int, k: int) -> np.ndarray:
+    """Maybe-seen mask of a hash batch: all k bits set in its bucket's
+    bitmap (a bucket with no segment is definitely new)."""
+    nib = hex_nibbles(hashes)
+    pos = bloom_bits(nib, m_bits, k)
+    maybe = np.zeros(len(nib), dtype=bool)
+    for b, rows in bucket_groups(bucket_ids(nib, num_buckets)):
+        blob = segments.get(b)
+        if blob is None:
+            continue
+        bitmap = np.frombuffer(blob, dtype=np.uint8)
+        p = pos[rows]
+        maybe[rows] = ((bitmap[p >> 3] >> (p & 7)) & 1).all(axis=1)
+    return maybe
+
+
+# -- Bloom family ------------------------------------------------------------
 
 def build_segments(df: DataFrame, url_hash_col: str = "url_hash",
                    num_buckets: int = DEFAULT_NUM_BUCKETS,
@@ -57,12 +161,9 @@ def build_segments(df: DataFrame, url_hash_col: str = "url_hash",
     """Build (bucket, bitmap) segment rows from a DataFrame of url hashes."""
 
     def build(pdf: pd.DataFrame) -> pd.DataFrame:
-        bitmap = np.zeros(m_bits // 8, dtype=np.uint8)
-        for h in pdf[url_hash_col]:
-            for pos in _positions(h, m_bits, k):
-                bitmap[pos >> 3] |= 1 << (pos & 7)
+        pos = bloom_bits(hex_nibbles(pdf[url_hash_col]), m_bits, k)
         return pd.DataFrame({"bucket": [int(pdf["bucket"].iloc[0])],
-                             "bitmap": [bitmap.tobytes()]})
+                             "bitmap": [_bloom_bitmap(pos, m_bits)]})
 
     return (
         df.select(url_hash_col)
@@ -72,51 +173,19 @@ def build_segments(df: DataFrame, url_hash_col: str = "url_hash",
     )
 
 
-def merge_segments(segments: DataFrame) -> DataFrame:
-    """OR-merge multiple rounds' segments per bucket."""
-
-    def merge(pdf: pd.DataFrame) -> pd.DataFrame:
-        arrays = [np.frombuffer(b, dtype=np.uint8) for b in pdf["bitmap"]]
-        merged = arrays[0].copy()
-        for a in arrays[1:]:
-            np.bitwise_or(merged, a, out=merged)
-        return pd.DataFrame({"bucket": [int(pdf["bucket"].iloc[0])],
-                             "bitmap": [merged.tobytes()]})
-
-    return segments.groupBy("bucket").applyInPandas(merge, schema=SEGMENT_SCHEMA)
-
-
-# Below this total filter size the cumulative OR-merge runs on the driver
-# (collect 32 tiny delta rows, numpy OR, re-create a 32-row DataFrame) —
-# saving two Spark jobs per crawl round (the previous-round parquet re-read
-# and the distributed merge). Above it — deployment-scale filters, e.g.
-# 1024 buckets x 2^30 bits for a 10^10-URL frontier — the distributed
-# applyInPandas merge path is used unchanged. Same adaptive reasoning as a
-# broadcast-join threshold.
-DRIVER_MERGE_MAX_BYTES = 64 * 2**20
-
-
 def build_segments_driver(hashes, num_buckets: int = DEFAULT_NUM_BUCKETS,
                           m_bits: int = DEFAULT_M_BITS,
                           k: int = DEFAULT_K) -> dict[int, bytes]:
     """Driver-side build_segments over an already-collected hash list —
-    same bucket/position derivation as the distributed path (bucket_col /
-    _positions). Only for driver-resident filters (DRIVER_MERGE_MAX_BYTES),
-    where the per-round delta is bounded by the job's enqueue limit."""
-    bitmaps: dict[int, np.ndarray] = {}
-    for h in hashes:
-        b = int(h[:8], 16) % num_buckets
-        bm = bitmaps.get(b)
-        if bm is None:
-            bm = bitmaps[b] = np.zeros(m_bits // 8, dtype=np.uint8)
-        for pos in _positions(h, m_bits, k):
-            bm[pos >> 3] |= 1 << (pos & 7)
-    return {b: bm.tobytes() for b, bm in bitmaps.items()}
+    byte-identical bitmaps (same core), no Spark job."""
+    nib = hex_nibbles(hashes)
+    pos = bloom_bits(nib, m_bits, k)
+    return {b: _bloom_bitmap(pos[rows], m_bits)
+            for b, rows in bucket_groups(bucket_ids(nib, num_buckets))}
 
 
 def segments_to_driver(segments: DataFrame) -> dict[int, bytes]:
-    """Collect (bucket, bitmap) segment rows into a driver dict. Only call
-    when num_buckets * m_bits/8 is under DRIVER_MERGE_MAX_BYTES."""
+    """Collect (bucket, bitmap) segment rows into a driver dict."""
     return {row["bucket"]: bytes(row["bitmap"]) for row in segments.collect()}
 
 
@@ -134,13 +203,6 @@ def merge_into_driver(cache: dict[int, bytes],
     return out
 
 
-def segments_from_driver(spark, cache: dict[int, bytes]) -> DataFrame:
-    """Driver dict → (bucket, bitmap) DataFrame (32ish rows; broadcast-able)."""
-    return spark.createDataFrame(
-        [(int(b), bytearray(bm)) for b, bm in sorted(cache.items())],
-        SEGMENT_SCHEMA)
-
-
 class SeenFilterFamily:
     """Uniform facade over the two seen-filter families (north rule:
     "partitioned Bloom/cuckoo filter"). Both share the segment-row shape
@@ -151,16 +213,13 @@ class SeenFilterFamily:
     the filter only routes candidates between the definitely-new fast path
     and the exact anti-join (tests/test_crawl.py cuckoo-parity test)."""
 
-    def __init__(self, name, total_bytes, geometry, build_segments,
-                 build_driver, merge_driver, merge_segments, filter_new,
-                 delete_driver=None):
+    def __init__(self, name, total_bytes, geometry, build_driver,
+                 merge_driver, filter_new, delete_driver=None):
         self.name = name
         self.total_bytes = total_bytes     # serialized bytes across buckets
         self.geometry = geometry           # resume-fingerprint (JSON list)
-        self.build_segments = build_segments
         self.build_driver = build_driver
         self.merge_driver = merge_driver
-        self.merge_segments = merge_segments
         self.filter_new = filter_new
         # TTL/recrawl eviction: cuckoo supports true deletion; bloom does
         # not (callers rebuild from the exact seen history instead)
@@ -179,12 +238,9 @@ def filter_family(name: str = "bloom", *,
             "bloom",
             num_buckets * (m_bits // 8),
             [num_buckets, m_bits, k],
-            lambda df: build_segments(df, num_buckets=num_buckets,
-                                      m_bits=m_bits, k=k),
             lambda hashes: build_segments_driver(
                 hashes, num_buckets=num_buckets, m_bits=m_bits, k=k),
             merge_into_driver,
-            merge_segments,
             lambda cand, segs, seen: filter_new(
                 cand, segs, seen, num_buckets=num_buckets,
                 m_bits=m_bits, k=k),
@@ -197,13 +253,10 @@ def filter_family(name: str = "bloom", *,
             "cuckoo",
             num_buckets * cuckoo.segment_nbytes(slots),
             ["cuckoo", num_buckets, slots],
-            lambda df: cuckoo.build_segments(df, num_buckets=num_buckets,
-                                             n_slots=slots),
             lambda hashes: cuckoo.build_segments_driver(
                 hashes, num_buckets=num_buckets, n_slots=slots),
             lambda cache, delta: cuckoo.merge_into_driver(
                 cache, delta, n_slots=slots),
-            lambda segs: cuckoo.merge_segments(segs, n_slots=slots),
             lambda cand, segs, seen: cuckoo.filter_new(
                 cand, segs, seen, num_buckets=num_buckets, n_slots=slots),
             delete_driver=lambda cache, hashes: cuckoo.delete_driver(
@@ -219,7 +272,8 @@ def exact_antijoin(candidates: DataFrame, seen_exact: DataFrame,
     No ``distinct()`` on the seen side: a left-anti equi-join returns the
     same rows whether or not the right side holds duplicates, the seen
     checkpoint is unique by construction (each round's delta is new-only
-    hashes), and the dedup cost was real — a full exchange plus two
+    hashes — the crawl round loop asserts it where the delta is collected),
+    and the dedup cost was real — a full exchange plus two
     HashAggregate passes over the whole standing seen set EVERY round,
     two extra stage barriers ahead of the (auto-broadcast) join build.
     """
@@ -237,23 +291,21 @@ def prefilter_antijoin(candidates: DataFrame,
     """Shared pre-filter + exact-anti-join pipeline for both filter
     families (bloom in this module, cuckoo in anycrawl_spark.cuckoo).
 
-    ``test_batch(hashes, bitmaps) -> np.ndarray[bool]`` is the per-batch
-    membership probe — the only thing that differs between families. Rows
-    the probe rejects are definitely new (no false negatives) and skip the
-    exact join; only the maybe-seen minority pays it. With no segments
-    (missing/corrupt checkpoint on resume) this degrades to the plain
-    exact anti-join; with no exact history it is a no-op (a probabilistic
-    filter can never CONFIRM membership — dropping on a filter hit would
-    lose rows to false positives).
+    ``test_batch(hashes, segments) -> np.ndarray[bool]`` is the membership
+    probe of one Arrow batch against a ``{bucket: blob}`` mapping — the
+    only thing that differs between families. Rows the probe rejects are
+    definitely new (no false negatives) and skip the exact join; only the
+    maybe-seen minority pays it. With no segments (missing/corrupt
+    checkpoint on resume) this degrades to the plain exact anti-join; with
+    no exact history it is a no-op (a probabilistic filter can never
+    CONFIRM membership — dropping on a filter hit would lose rows to false
+    positives).
 
-    ``segments`` is either the distributed ``(bucket, bitmap)`` DataFrame
-    or — for driver-resident filters (≤ DRIVER_MERGE_MAX_BYTES) — the
-    driver dict itself. The dict path ships the whole filter ONCE per
-    executor as a Spark broadcast and probes by bucket lookup inside the
-    Arrow batch; the old join path attached the full bucket bitmap (16 KiB
-    at default geometry, far more at deployment geometry) to EVERY
-    candidate row and pushed those bytes through the Python boundary
-    (guide §4.1: pass only the columns the function needs).
+    ``segments`` is either the driver dict (the crawl engine) or a
+    ``(bucket, bitmap)`` DataFrame (the registry leaves). The dict ships
+    ONCE per executor as a Spark broadcast; the DataFrame is broadcast-
+    joined onto the candidates and each batch's distinct buckets form its
+    mapping.
     """
     if seen_exact is None:
         return candidates
@@ -275,12 +327,8 @@ def prefilter_antijoin(candidates: DataFrame,
         def test(iterator):
             seg = bc.value
             for pdf in iterator:
-                hashes = pdf[url_hash_col]
-                blobs = pd.Series(
-                    [seg.get(int(h[:8], 16) % num_buckets) for h in hashes],
-                    index=hashes.index, dtype=object)
                 out = pdf[out_fields].copy()
-                out["__maybe_seen"] = test_batch(hashes, blobs)
+                out["__maybe_seen"] = test_batch(pdf[url_hash_col], seg)
                 yield out
 
         tested = candidates.mapInPandas(test, schema=schema)
@@ -294,9 +342,12 @@ def prefilter_antijoin(candidates: DataFrame,
 
         def test(iterator):
             for pdf in iterator:
+                first = pdf.drop_duplicates("__bucket")
+                seg = {int(b): bm for b, bm in zip(first["__bucket"],
+                                                   first["bitmap"])
+                       if bm is not None}
                 out = pdf[out_fields].copy()
-                out["__maybe_seen"] = test_batch(pdf[url_hash_col],
-                                                 pdf["bitmap"])
+                out["__maybe_seen"] = test_batch(pdf[url_hash_col], seg)
                 yield out
 
         tested = joined.mapInPandas(test, schema=schema)
@@ -322,7 +373,8 @@ def prefilter_antijoin(candidates: DataFrame,
             .drop("__maybe_seen"))
 
 
-def filter_new(candidates: DataFrame, segments: DataFrame | None,
+def filter_new(candidates: DataFrame,
+               segments: "DataFrame | dict[int, bytes] | None",
                seen_exact: DataFrame | None,
                url_hash_col: str = "url_hash",
                num_buckets: int = DEFAULT_NUM_BUCKETS,
@@ -330,20 +382,6 @@ def filter_new(candidates: DataFrame, segments: DataFrame | None,
                k: int = DEFAULT_K) -> DataFrame:
     """Rows of ``candidates`` whose url_hash is NOT in the seen set —
     Bloom pre-filter + exact anti-join (see prefilter_antijoin)."""
-
-    def test_batch(hashes, bitmaps):
-        maybe = np.zeros(len(hashes), dtype=bool)
-        for i, (h, bm) in enumerate(zip(hashes, bitmaps)):
-            if bm is None:
-                continue
-            arr = np.frombuffer(bm, dtype=np.uint8)
-            hit = True
-            for pos in _positions(h, m_bits, k):
-                if not (arr[pos >> 3] >> (pos & 7)) & 1:
-                    hit = False
-                    break
-            maybe[i] = hit
-        return maybe
-
-    return prefilter_antijoin(candidates, segments, seen_exact,
-                              url_hash_col, num_buckets, test_batch)
+    return prefilter_antijoin(
+        candidates, segments, seen_exact, url_hash_col, num_buckets,
+        lambda hashes, seg: bloom_probe(hashes, seg, num_buckets, m_bits, k))

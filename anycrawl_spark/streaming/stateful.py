@@ -7,6 +7,12 @@ For each host group, state holds (bloom bitmap, total urls, emitted urls)
 across micro-batches; the operator emits only first-seen URLs downstream with
 a running per-host sequence — a continuous-ingestion frontier feed where the
 batch engine's round loop is replaced by stream micro-batches.
+
+The bitmap is a Bloom filter of ``M_BITS`` bits over the url's sha256, with
+bit positions from the shared hash-slice core
+(``seen.bloom_bits``, ``DEFAULT_K`` positions, one vectorized call per
+micro-batch); the test-and-set itself stays sequential per row, so a url
+repeated within one batch is dropped at its second occurrence.
 """
 
 from __future__ import annotations
@@ -14,12 +20,15 @@ from __future__ import annotations
 import hashlib
 from typing import Any, Iterable
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
     BinaryType, IntegerType, LongType, StringType, StructField, StructType,
 )
+
+from anycrawl_spark.seen import DEFAULT_K, bloom_bits, hex_nibbles
 
 OUTPUT_SCHEMA = StructType([
     StructField("host", StringType()),
@@ -34,21 +43,6 @@ STATE_SCHEMA = StructType([
 ])
 
 M_BITS = 1 << 16
-K = 4
-
-
-def _positions(url: str) -> list[int]:
-    digest = hashlib.sha256(url.encode("utf-8")).hexdigest()
-    return [int(digest[8 * i: 8 * (i + 1)], 16) % M_BITS for i in range(K)]
-
-
-def _test_and_set(bitmap: bytearray, url: str) -> bool:
-    """True if url was definitely NOT seen before (and marks it seen)."""
-    positions = _positions(url)
-    seen = all((bitmap[p >> 3] >> (p & 7)) & 1 for p in positions)
-    for p in positions:
-        bitmap[p >> 3] |= 1 << (p & 7)
-    return not seen
 
 
 def dedup_state_fn(key: tuple, pdfs: Iterable[pd.DataFrame],
@@ -56,21 +50,27 @@ def dedup_state_fn(key: tuple, pdfs: Iterable[pd.DataFrame],
     host = key[0]
     if state.exists:
         bitmap_bytes, total, emitted = state.get
-        bitmap = bytearray(bitmap_bytes)
+        bits = np.unpackbits(np.frombuffer(bitmap_bytes, dtype=np.uint8),
+                             bitorder="little").astype(bool)
     else:
-        bitmap = bytearray(M_BITS // 8)
+        bits = np.zeros(M_BITS, dtype=bool)
         total = 0
         emitted = 0
+    urls = [url for pdf in pdfs for url in pdf["url"]]
+    positions = bloom_bits(
+        hex_nibbles([hashlib.sha256(url.encode("utf-8")).hexdigest()
+                     for url in urls]), M_BITS, DEFAULT_K)
+    total += len(urls)
     out_urls: list[str] = []
     out_seqs: list[int] = []
-    for pdf in pdfs:
-        for url in pdf["url"]:
-            total += 1
-            if _test_and_set(bitmap, url):
-                out_urls.append(url)
-                out_seqs.append(emitted)
-                emitted += 1
-    state.update((bytes(bitmap), total, emitted))
+    for url, p in zip(urls, positions):
+        if not bits[p].all():       # definitely NOT seen before
+            bits[p] = True
+            out_urls.append(url)
+            out_seqs.append(emitted)
+            emitted += 1
+    state.update((np.packbits(bits, bitorder="little").tobytes(), total,
+                  emitted))
     yield pd.DataFrame({"host": host, "url": out_urls, "host_seq": out_seqs})
 
 

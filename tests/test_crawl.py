@@ -533,6 +533,12 @@ class TestConfigBounds:
             CrawlConfig(job_id="b", seed_url="https://x.test/", limit=0)
         with pytest.raises(ValueError):
             CrawlConfig(job_id="b", seed_url="https://x.test/", limit=50_001)
+        # the driver-resident seen filter is capped at 64 MiB
+        CrawlConfig(job_id="b", seed_url="https://x.test/",
+                    bloom_num_buckets=64, bloom_m_bits=1 << 23)
+        with pytest.raises(ValueError, match="64 MiB"):
+            CrawlConfig(job_id="b", seed_url="https://x.test/",
+                        bloom_num_buckets=65, bloom_m_bits=1 << 23)
 
     def test_seed_url_must_be_absolute_http(self):
         """z.string().url() rejects non-URL seeds; a scheme-less seed would

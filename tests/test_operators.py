@@ -214,15 +214,19 @@ class TestSeenFilter:
         assert dist == local
 
     def test_segment_merge(self, spark):
-        from anycrawl_spark.seen import build_segments, filter_new, merge_segments
+        import hashlib
 
-        a = spark.range(0, 50).select(F.sha2(F.col("id").cast("string"), 256).alias("url_hash"))
-        b = spark.range(50, 100).select(F.sha2(F.col("id").cast("string"), 256).alias("url_hash"))
-        segs = merge_segments(
-            build_segments(a, num_buckets=4, m_bits=1 << 12, k=3).unionByName(
-                build_segments(b, num_buckets=4, m_bits=1 << 12, k=3)))
-        assert segs.count() <= 4
-        both = a.unionByName(b)
+        from anycrawl_spark.seen import (build_segments_driver, filter_new,
+                                         merge_into_driver)
+
+        a, b = ([hashlib.sha256(str(i).encode()).hexdigest() for i in ids]
+                for ids in (range(0, 50), range(50, 100)))
+        segs = merge_into_driver(
+            build_segments_driver(a, num_buckets=4, m_bits=1 << 12, k=3),
+            build_segments_driver(b, num_buckets=4, m_bits=1 << 12, k=3))
+        assert len(segs) <= 4
+        both = spark.range(0, 100).select(
+            F.sha2(F.col("id").cast("string"), 256).alias("url_hash"))
         none_new = filter_new(both, segs, both, num_buckets=4, m_bits=1 << 12, k=3)
         assert none_new.count() == 0
 
