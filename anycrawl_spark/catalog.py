@@ -125,7 +125,8 @@ class Catalog:
                                round_no: int,
                                schema: str | None = None) -> DataFrame:
         """Read a round directory that has been written but not yet committed
-        (used for footer-only counts inside the committing round)."""
+        (evict_urls rebuilds the filter from its compacted seen write before
+        the round's commit)."""
         reader = spark.read.schema(schema) if schema else spark.read
         return reader.parquet(self.round_path(table, round_no))
 

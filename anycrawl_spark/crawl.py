@@ -4,8 +4,9 @@
 Each round r is one Spark batch over immutable checkpointed state:
 
     pending_r  →  per-host budget window (politeness shuffle by host)
-               →  fetch = broadcast-free equi-join against the pages corpus
-                  on url_hash (partition-prunable at scale)
+               →  fetch = left equi-join against the pages corpus on
+                  url_hash, the corpus side semi-reduced first by a
+                  broadcast of the admitted key set
                →  vectorized extraction UDF (T1-T20)
                →  results_r append (scrape_paths-gated persistence)
                →  posexplode(links) → canonicalize (JVM expr) → strategy /
@@ -72,24 +73,6 @@ FRONTIER_ARROW_SCHEMA = pa.schema([
     ("round_added", pa.int32()), ("attempt", pa.int32()),
 ])
 
-# Frontier size above which budget_salt_n="auto" enables the two-stage
-# salted per-host top-k. Measured crossover (BENCH.md round-5 skew probes):
-# at ~10k rows/round salting is a 1.09x LOSS even with 92% of the frontier
-# on one host; at 2M rows it is a 1.43x win (1.85x -> 1.29x). 500k sits
-# safely above the loss regime and below the win regime.
-SALT_FRONTIER_THRESHOLD = 500_000
-
-
-def resolve_salt_n(configured: int | str, known_pending: int | None) -> int:
-    """The budget_salt_n='auto' gate: salt (n=8) only when the round's
-    frontier is known to exceed SALT_FRONTIER_THRESHOLD. Admission rows
-    are salt-invariant (politeness.apply_host_budget), so this choice can
-    never change crawl results — only the physical plan."""
-    if configured != "auto":
-        return configured
-    return 8 if (known_pending or 0) >= SALT_FRONTIER_THRESHOLD else 0
-
-
 @dataclass
 class CrawlConfig:
     """Mirror of the reference's crawl_options zod schema with identical
@@ -107,12 +90,10 @@ class CrawlConfig:
     politeness_budget: int = 0           # fetches per budget key per round; 0 = unlimited
     budget_scope: str = "host"           # 'host' or 'domain' (registrable) —
                                          # north rule: per-DOMAIN politeness
-    budget_salt_n: int | str = "auto"    # >1: two-stage salted per-host top-k (hot
-                                         # hosts); 0: plain window; "auto": salt only
-                                         # when the round's frontier exceeds
-                                         # SALT_FRONTIER_THRESHOLD (measured: salting
-                                         # loses below ~10k rows/round — SCALING.json
-                                         # skew_probe_bfs — and wins at 2M — skew_probe)
+    budget_salt_n: int = 0               # >1: two-stage salted per-host top-k (hot
+                                         # hosts); 0: plain window. Measured: salting
+                                         # loses below ~10k rows/round (SCALING.json
+                                         # skew_probe_bfs) and wins at 2M (skew_probe)
     max_attempts: int = 1                # fetch retries (Queue.ts:84-89 attempts=3)
     batch_size: int = 0                  # rows fetched per round; 0 = whole round
     respect_robots: bool = True          # --anycrawl-compat off ⇒ True (north rule)
@@ -138,11 +119,6 @@ class CrawlConfig:
                                          # or custom URL); results carry the
                                          # RESOLVED mode name like Base.ts:1295
                                          # ('base' when unset / auto)
-    fetch_semi_max: int = 1_000_000      # semi-reduce the corpus side of the
-                                         # fetch join with a broadcast of the
-                                         # admitted key set when the frontier
-                                         # round is at most this many rows;
-                                         # 0 disables (always shuffle join)
     prefilter_min_seen: int = 25_000     # engage the bloom/cuckoo PROBE only
                                          # once the seen set exceeds this many
                                          # hashes; below it the exact anti-join
@@ -176,12 +152,9 @@ class CrawlConfig:
             raise ValueError("politeness_budget/batch_size must be >= 0")
         if self.max_attempts < 1:
             raise ValueError("max_attempts must be >= 1")
-        if isinstance(self.budget_salt_n, str):
-            if self.budget_salt_n != "auto":
-                raise ValueError(f"budget_salt_n must be an int >= 0 or "
-                                 f"'auto', got {self.budget_salt_n!r}")
-        elif self.budget_salt_n < 0:
-            raise ValueError("budget_salt_n must be >= 0")
+        if not isinstance(self.budget_salt_n, int) or self.budget_salt_n < 0:
+            raise ValueError(f"budget_salt_n must be an int >= 0, "
+                             f"got {self.budget_salt_n!r}")
         if self.seen_filter not in ("bloom", "cuckoo"):
             raise ValueError(f"unknown seen_filter {self.seen_filter!r}")
         from anycrawl_spark.cuckoo import check_n_slots
@@ -683,9 +656,7 @@ class CrawlEngine:
                 F.col("error_message"))
         ex["final_attempt"] = final_attempt
         ex["outcome_key"] = final_attempt.alias("final")
-        ex["outcome_aggs"] = [F.count("*").alias("count"),
-                              F.min("seq").alias("min_seq"),
-                              F.max("seq").alias("max_seq")]
+        ex["outcome_aggs"] = [F.count("*").alias("count")]
         ex["metrics_key"] = F.spark_partition_id().alias("partition_id")
         ex["metrics_aggs"] = [
             F.count("*").alias("urls"),
@@ -777,6 +748,15 @@ class CrawlEngine:
             progress = self._progress()
             round_no = progress["round"] + 1
             self._check_geometry(fam)
+            # every round sizes itself from the prior meta's pending count
+            # and seq range, so resume needs both
+            missing = [k for k in ("pending_next", "pending_seq_range")
+                       if k not in progress]
+            if round_no > 0 and missing:
+                raise ValueError(
+                    f"checkpoint round {progress['round']} meta lacks "
+                    f"{missing}; it was written by an older engine — "
+                    f"restart the crawl without resume")
         else:
             self.catalog.destroy()
             self.catalog = Catalog(self.catalog.root)
@@ -806,6 +786,7 @@ class CrawlEngine:
             self._write_filter_driver(self._bloom_mem, 0)
             progress = {"round": 0, "done": 0, "failed": 0, "enqueued": n_seed,
                         "finalized": n_seed == 0, "phase": "seeded",
+                        "pending_next": n_seed,
                         "pending_seq_range": [0, max(0, n_seed - 1)],
                         "bloom_geometry": fam.geometry}
             self.catalog.commit_round(0, ["pending", "seen", "bloom"], progress)
@@ -843,98 +824,147 @@ class CrawlEngine:
 
     def _run_round(self, cfg: CrawlConfig, r: int, progress: dict,
                    ex: dict, fam) -> dict:
-        spark = self.spark
-        writes = self._writes
-        _t0 = time.time()
+        """One round as named stages over one driver-known round size,
+        ``n_pending`` (the prior meta's ``pending_next``). The submission
+        order is load-bearing: the discovery checkpoint, the outcome job
+        and the docs writes evaluate the cached docs frame concurrently,
+        and all three overlap the previous round's writes, which
+        _finalize_prev awaits only before this round's state writes. The
+        time stamps delimit the meta ``timings`` phases."""
+        t0 = time.time()
         # pending: the in-memory frontier from last round (write pipelining —
         # its parquet write may still be in flight) or, on resume / first
         # round, the committed checkpoint
         pending = (self._pending_mem if self._pending_mem is not None
-                   else self.catalog.read_round(spark, "pending", r - 1,
+                   else self.catalog.read_round(self.spark, "pending", r - 1,
                                                 schema=FRONTIER_SCHEMA))
-        # drain check: the prior round's meta already counted pending rows
-        # (pending_next / seed enqueued), so only fall back to a head(1)
-        # probe job when the count is absent (legacy checkpoints)
-        known_pending = progress.get("pending_next",
-                                     progress.get("enqueued")
-                                     if progress.get("phase") == "seeded"
-                                     else None)
-        drained = (pending is None
-                   or (known_pending == 0 if known_pending is not None
-                       else not pending.head(1)))
-        if drained:
+        n_pending = progress["pending_next"]
+        if pending is None or n_pending == 0:
             self._finalize_prev()
-            meta = {**progress, "round": r, "finalized": True, "phase": "drained"}
+            meta = {**progress, "round": r, "finalized": True,
+                    "phase": "drained"}
             self.catalog.commit_round(r, [], meta)
             return meta
+        # unbudgeted: the round admits all of pending; pipelined: no retries
+        # either, so the next pending is exactly this round's new rows
+        unbudgeted = not cfg.politeness_budget and not cfg.batch_size
+        pipelined = unbudgeted and cfg.max_attempts == 1
+        # consumers of the round's docs run at ~1k rows per task
+        n_view = self._width(n_pending, 1000)
+        admitted, deferred = self._admit(cfg, pending, ex, unbudgeted)
+        docs, docs_view = self._fetch_extract(r, admitted, n_pending, n_view,
+                                              ex)
+        seen = disc_fut = None
+        if progress["enqueued"] < cfg.limit:
+            seen, disc_fut = self._submit_discovery(cfg, r, progress, docs,
+                                                   n_view, ex, fam)
+        t_plan = time.time()
+        outcome_fut, doc_writes = self._submit_doc_writes(r, docs, docs_view,
+                                                          ex)
+        ranked, new_rows, n_new = None, None, 0
+        t_ranked = t_counts = t_plan
+        if disc_fut is not None:
+            ranked = disc_fut.result()
+            t_ranked = time.time()
+            counts = {row["__bucket"]: row["cnt"] for row in
+                      ranked.groupBy("__bucket").agg(
+                          F.max("__lrn").alias("cnt")).collect()}
+            t_counts = time.time()
+            new_rows, n_new = self._enqueue(cfg, r, progress["enqueued"],
+                                            ranked, counts, ex)
+        t_discover = time.time()
+        # Finalize the PREVIOUS round here (await its writes — they had this
+        # whole round's compute to overlap with — commit its manifest, free
+        # caches retired two rounds back) before this round's state writes.
+        self._finalize_prev()
+        next_pending, state_writes, state_tables, replace = self._write_state(
+            cfg, r, pending, deferred, docs, new_rows, n_new, seen, ex, fam,
+            pipelined)
+        outcome_rows = outcome_fut.result()
+        meta = self._round_meta(
+            cfg, r, progress, outcome_rows, n_pending, n_new, pipelined,
+            (t0, t_plan, t_ranked, t_counts, t_discover, time.time()))
+        # Deferred commit (write pipelining): the manifest entry lands in
+        # _finalize_prev() during the NEXT round, after the writes complete.
+        # A crash before that resumes from the last committed round with
+        # this round's directories dropped — exact-resume is unchanged.
+        self._prev_inflight = {
+            "round": r, "futures": doc_writes + state_writes,
+            "tables": ["results", "visits", "metrics"] + state_tables,
+            "meta": meta, "replace": replace,
+            "caches_now": [docs] if unbudgeted else [docs, admitted],
+            # ranked is the localCheckpointed block holder; keeping the
+            # reference until the next finalize stops the ContextCleaner
+            # from reclaiming blocks that in-flight writes still read
+            # (unpersist on a checkpointed frame is a harmless no-op)
+            "caches_later": [ranked] if ranked is not None else [],
+        }
+        self._pending_mem = next_pending
+        return meta
 
-        # --- politeness: per-host budget window (the host shuffle) ---------
-        if not cfg.politeness_budget and not cfg.batch_size:
-            # unlimited budget: all pending admitted; a schema-only empty
-            # frame (no lineage back into pending) keeps the deferred branch
-            # out of the next round's write plans entirely. range(0) keeps
-            # the empty source JVM-only (createDataFrame([]) is a pickled
-            # RDD that pulls in Python workers when scanned).
+    def _width(self, n_rows: int, rows_per_task: int) -> int:
+        """Partitions holding ~``rows_per_task`` rows each, capped at one
+        task per core."""
+        return max(1, min(self.spark.sparkContext.defaultParallelism,
+                          (n_rows + rows_per_task - 1) // rows_per_task))
+
+    def _admit(self, cfg: CrawlConfig, pending: DataFrame, ex: dict,
+               unbudgeted: bool) -> tuple[DataFrame, DataFrame]:
+        """Budget/batch split of the round's frontier into (admitted,
+        deferred): the per-host budget window (the politeness shuffle by
+        host), then the coordinator's FIFO batch."""
+        if unbudgeted:
+            # all pending admitted; a schema-only empty frame (no lineage
+            # back into pending) keeps the deferred branch out of the next
+            # round's write plans entirely. range(0) keeps the empty source
+            # JVM-only (createDataFrame([]) is a pickled RDD that pulls in
+            # Python workers when scanned). admitted IS pending (often
+            # already a cached new_rows frame from last round) and feeds
+            # only the docs subtree, which is cached itself — an extra
+            # cache would just serialize the frontier twice.
             if "empty_pending" not in ex:
                 ex["empty_pending"] = [
                     F.lit(None).cast(f.dataType).alias(f.name)
                     for f in pending.schema.fields]
-            admitted, deferred = pending, spark.range(0).select(
-                *ex["empty_pending"])
-        else:
-            # Salting is a large-frontier knob: below ~10k rows/round the
-            # two-stage top-k's extra partial agg costs more than the skew
-            # it removes (SCALING.json skew_probe_bfs: salt8 1.09x SLOWER
-            # on a 92%-one-host crawl at limit 10k), while at 2M rows it
-            # wins 1.85x -> 1.29x (skew_probe). "auto" gates on the prior
-            # round's recorded frontier size; admission rows are
-            # salt-invariant, so the gate cannot change crawl results.
-            salt_n = resolve_salt_n(cfg.budget_salt_n, known_pending)
-            admitted, deferred = apply_host_budget(
-                pending, cfg.politeness_budget, order_cols=("depth", "seq"),
-                salt_n=salt_n, scope=cfg.budget_scope)
-        if cfg.batch_size and cfg.batch_size > 0:
+            return pending, self.spark.range(0).select(*ex["empty_pending"])
+        admitted, deferred = apply_host_budget(
+            pending, cfg.politeness_budget, order_cols=("depth", "seq"),
+            salt_n=cfg.budget_salt_n, scope=cfg.budget_scope)
+        if cfg.batch_size:
             # coordinator batch semantics (crawlCoordinator.ts:33-38): take
             # the first batch_size rows in FIFO (seq) order
             batch = admitted.orderBy("seq").limit(cfg.batch_size)
-            deferred = pending.join(batch.select("url_hash"), "url_hash", "left_anti")
+            deferred = pending.join(batch.select("url_hash"), "url_hash",
+                                    "left_anti")
             admitted = batch
-        # unlimited budget: admitted IS pending (often already a cached
-        # new_rows frame from last round) and feeds only the docs subtree,
-        # which is cached itself — an extra cache would just serialize the
-        # frontier twice. Budget/batch rounds reference admitted from
-        # several branches, so cache it there.
-        admitted_cached = bool(cfg.politeness_budget or cfg.batch_size)
-        if admitted_cached:
-            admitted = admitted.cache()
+        # budget/batch rounds reference admitted from several branches
+        return admitted.cache(), deferred
 
-        # --- fetch = equi-join against the corpus --------------------------
+    def _fetch_extract(self, r: int, admitted: DataFrame, n_pending: int,
+                       n_view: int, ex: dict) -> tuple[DataFrame, DataFrame]:
+        """Fetch (left equi-join against the corpus) and vectorized
+        extraction: the cached docs frame and its consumer view."""
         # The join shuffle hash-partitions on url_hash; AQE parallelismFirst
         # keeps >= defaultParallelism partitions, so the extraction UDF runs
         # at full width without an extra shuffle of the html payload (an
         # explicit repartition here measured 3.6x slower in the bulk path).
         #
-        # Small-frontier fast path: a BFS round's frontier is orders of
-        # magnitude smaller than the standing corpus, and a left join can't
-        # broadcast its left side — so the plain plan re-EXCHANGES the full
-        # corpus (html payloads included) every round, which measured as
-        # ~3.5 s/round of pure fixed cost at sf0.1 regardless of round size.
-        # Semi-reducing the corpus with a broadcast of the admitted key set
-        # first means the join shuffles only the matched pages (≤ admitted
-        # rows). Identity-preserving: reducing the right side of a left
-        # join by the left side's keys changes nothing. Gated on the
-        # driver-known pending count: a 10^10-frontier round with millions
-        # of admitted rows would blow the key broadcast, and falls back to
-        # the hash join (deployment posture there: corpus bucketed by
-        # url_hash, which removes the corpus exchange instead).
-        corpus_side = self.corpus
-        if (cfg.fetch_semi_max > 0 and known_pending is not None
-                and 0 < known_pending <= cfg.fetch_semi_max):
-            keys = admitted.select(ex["keys_sel"])
-            corpus_side = self.corpus.join(F.broadcast(keys),
-                                           "page_url_hash", "left_semi")
+        # A BFS round's frontier is orders of magnitude smaller than the
+        # standing corpus, and a left join can't broadcast its left side —
+        # so the plain plan re-EXCHANGES the full corpus (html payloads
+        # included) every round, which measured as ~3.5 s/round of pure
+        # fixed cost at sf0.1 regardless of round size. Semi-reducing the
+        # corpus with a broadcast of the admitted key set first means the
+        # join shuffles only the matched pages (≤ admitted rows).
+        # Identity-preserving: reducing the right side of a left join by
+        # the left side's keys changes nothing. The zod limit cap (50k
+        # URLs enqueued per job) bounds every round's key set, so the
+        # broadcast stays small whatever the corpus size.
+        keys = admitted.select(ex["keys_sel"])
+        corpus_side = self.corpus.join(F.broadcast(keys), "page_url_hash",
+                                       "left_semi")
         # F11: a corpus miss carries an error message like a fetch error
-        # would (ex["error_msg"]; simulate_fetch_errors draws all five
+        # would (ex["fetch_derived"]; simulate_fetch_errors draws all five
         # failure classes deterministically from the url hash).
         fetched = (
             admitted.join(corpus_side,
@@ -942,7 +972,6 @@ class CrawlEngine:
                           "left")
             .drop("page_url_hash")
         )
-
         # Extraction width scaled to the round (guide §2.2): the fetch-join
         # shuffle leaves 2×cores partitions, so a 100-row round still paid
         # ~64 task launches plus 64 Arrow round-trips in the docs
@@ -956,12 +985,10 @@ class CrawlEngine:
         # scheduling) dominates 64-row batches, and 50 tasks on 32 cores
         # measured slower than 32×100-row tasks on identical rows (0.78 s
         # vs 0.65 s for 3200 pages — tools/kernel_bench-style A/B).
-        # Driver-known count, deterministic; big rounds keep full width.
-        if known_pending is not None and known_pending <= 4096:
-            fetched = fetched.repartition(
-                max(1, min(spark.sparkContext.defaultParallelism,
-                           (known_pending + 63) // 64)), "url_hash")
-        # --- extraction (vectorized UDF) -----------------------------------
+        # Deterministic in the round size; big rounds keep full width.
+        if n_pending <= 4096:
+            fetched = fetched.repartition(self._width(n_pending, 64),
+                                          "url_hash")
         docs = (
             fetched.select("*", *ex["fetch_derived"])
             .select(*ex["docs_fields"], F.lit(r).alias("round"),
@@ -977,248 +1004,201 @@ class CrawlEngine:
         # task launches and wrote 64 splinter files per round regardless of
         # round size — for a 100-row round that is pure scheduling overhead
         # (measured ~0.55 s per job). Consumers therefore read a coalesced
-        # view sized from the driver-known round size (~1k rows/task);
-        # coalesce over the cached scan is a narrow op reading the same
-        # blocks, so the extraction work is not re-partitioned. The metrics
-        # aggregation stays on the full-width frame — its rows record
+        # view sized from the round size (~1k rows/task); coalesce over the
+        # cached scan is a narrow op reading the same blocks, so the
+        # extraction work is not re-partitioned. The metrics aggregation
+        # stays on the full-width frame — its rows record
         # spark_partition_id() lineage, which the view would renumber.
-        if known_pending is not None:
-            n_view = max(1, min(spark.sparkContext.defaultParallelism,
-                                (known_pending + 999) // 1000))
-            docs_view = docs.coalesce(n_view)
-        else:
-            n_view = None
-            docs_view = docs
+        return docs, docs.coalesce(n_view)
 
-        final_attempt = ex["final_attempt"]
+    def _submit_discovery(self, cfg: CrawlConfig, r: int, progress: dict,
+                          docs: DataFrame, n_view: int, ex: dict, fam):
+        """Links → canonicalize → strategy/path/depth/robots filters →
+        first-discovery-wins dedup → seen filter, then the ranked
+        frontier-delta checkpoint, submitted async. Returns (the seen set
+        read, the checkpoint future)."""
+        links = (
+            docs.where(ex["status_200"])
+            .select(*ex["links_pre"])
+            .where(ex["links_precond"])
+        )
+        links = _canonical_cols(links, "url").where(ex["links_cond"])
+        if self.robots is not None and cfg.respect_robots:
+            links = robots_allowed(links, self.robots)
 
-        # --- discovery subtree construction (links → filters → seen) -------
-        # Built BEFORE the outcome job so its one materialization (the
-        # eager localCheckpoint in _build_ranked) can run CONCURRENTLY with
-        # the outcome counts: both evaluate the cached docs frame (block
-        # locks serialize per-partition compute), so wall time is ~max of
-        # the two jobs instead of their sum. The width_bucket bounds come
-        # from the prior round's recorded pending seq range when available
-        # (bounds only need to COVER the admitted parents' seqs — bucket
-        # boundaries don't affect the dense numbering, which orders by
-        # bucket then (parent_seq, link_pos)); on legacy/resumed checkpoints
-        # without the range, materialization waits for the outcome job's
-        # min/max seq.
-        enqueued = progress["enqueued"]
-        disc_build = None
-        disc_fut = None
-        if enqueued < cfg.limit:
-            links = (
-                docs.where(ex["status_200"])
-                .select(*ex["links_pre"])
-                .where(ex["links_precond"])
-            )
-            links = _canonical_cols(links, "url")
-            links = links.where(ex["links_cond"])
-            if self.robots is not None and cfg.respect_robots:
-                links = robots_allowed(links, self.robots)
+        # in-batch dedup: first discovery wins (FIFO order). min_by over
+        # the (parent_seq, link_pos) struct ⇔ row_number()==1 over that
+        # order — (parent_seq, link_pos) is unique per discovered link,
+        # so no tie ambiguity — but as a hash aggregation it partially
+        # aggregates map-side, shuffling one row per distinct url per
+        # map partition instead of every duplicate discovery, and needs
+        # no sort (guide §2.3: aggregate before you shuffle; BFS fanout
+        # makes duplicate links the common case)
+        links = (
+            links.groupBy("url_hash")
+            .agg(ex["dedup_agg"])
+            .select(*ex["dedup_sel"])
+        )
 
-            # in-batch dedup: first discovery wins (FIFO order). min_by over
-            # the (parent_seq, link_pos) struct ⇔ row_number()==1 over that
-            # order — (parent_seq, link_pos) is unique per discovered link,
-            # so no tie ambiguity — but as a hash aggregation it partially
-            # aggregates map-side, shuffling one row per distinct url per
-            # map partition instead of every duplicate discovery, and needs
-            # no sort (guide §2.3: aggregate before you shuffle; BFS fanout
-            # makes duplicate links the common case)
-            links = (
-                links.groupBy("url_hash")
-                .agg(ex["dedup_agg"])
-                .select(*ex["dedup_sel"])
-            )
+        # seen filter: Bloom pre-filter + exact anti-join. Each bloom
+        # round checkpoint is CUMULATIVE (delta OR-merged into the prior
+        # round's segments at write time), so reading the seen-filter is
+        # one round directory — O(1) per round, not O(rounds) re-merges.
+        seen = self._read_seen(self.spark, r - 1)
+        if self._bloom_mem is None or self._bloom_mem_round != r - 1:
+            prior = self._latest_bloom(self.spark, up_to_round=r - 1)
+            if prior is not None:
+                self._bloom_mem, self._bloom_mem_round = prior, r - 1
+        # The probabilistic pre-filter earns its keep only once the
+        # seen set is large: below prefilter_min_seen hashes the exact
+        # anti-join alone is measurably cheaper per round than the
+        # segment broadcast + Arrow probe stage it would precede
+        # (BENCH.md r6 probe: 0.57s vs 1.09s at 5k seen hashes), so
+        # small standing frontiers skip the probe. The filter is still
+        # primed and maintained every round — checkpoints, resume
+        # geometry, and the at-scale path are untouched; this gates only
+        # the physical plan, never membership results.
+        if progress["enqueued"] > cfg.prefilter_min_seen:
+            # driver-resident filter: hand the dict straight to the
+            # probe (broadcast once per executor) — no per-row bitmap
+            # column, no createDataFrame scan per round
+            links = fam.filter_new(links, self._bloom_mem, seen)
+        elif seen is not None:
+            links = exact_antijoin(links, seen)
+        # Submitted BEFORE the outcome job so its one materialization runs
+        # CONCURRENTLY with the outcome counts: both evaluate the cached
+        # docs frame (block locks serialize per-partition compute), so
+        # wall time is ~max of the two jobs instead of their sum. The
+        # width_bucket bounds are the prior round's recorded pending seq
+        # range: bounds only need to COVER the admitted parents' seqs —
+        # bucket boundaries don't affect the dense numbering, which orders
+        # by bucket then (parent_seq, link_pos).
+        lo, hi = progress["pending_seq_range"]
+        return seen, self._writes.submit(self._ranked_checkpoint, links, lo,
+                                         hi, n_view, ex)
 
-            # seen filter: Bloom pre-filter + exact anti-join. Each bloom
-            # round checkpoint is CUMULATIVE (delta OR-merged into the prior
-            # round's segments at write time), so reading the seen-filter is
-            # one round directory — O(1) per round, not O(rounds) re-merges.
-            seen = self._read_seen(spark, r - 1)
-            # The probabilistic pre-filter earns its keep only once the
-            # seen set is large: below prefilter_min_seen hashes the exact
-            # anti-join alone is measurably cheaper per round than the
-            # segment broadcast + Arrow probe stage it would precede
-            # (BENCH.md r6 probe: 0.57s vs 1.09s at 5k seen hashes), so
-            # small standing frontiers skip the probe. The filter is still
-            # primed and maintained every round — checkpoints, resume
-            # geometry, and the at-scale path are untouched; like
-            # budget_salt_n='auto' this gates only the physical plan,
-            # never membership results.
-            prefilter_on = progress["enqueued"] > cfg.prefilter_min_seen
-            if self._bloom_mem is None or self._bloom_mem_round != r - 1:
-                prior = self._latest_bloom(spark, up_to_round=r - 1)
-                if prior is not None:
-                    self._bloom_mem, self._bloom_mem_round = prior, r - 1
-            if prefilter_on:
-                # driver-resident filter: hand the dict straight to the
-                # probe (broadcast once per executor) — no per-row bitmap
-                # column, no createDataFrame scan per round
-                links = fam.filter_new(links, self._bloom_mem, seen)
-            elif seen is not None:
-                links = exact_antijoin(links, seen)
+    def _ranked_checkpoint(self, links: DataFrame, lo: int, hi: int,
+                           n_view: int, ex: dict) -> DataFrame:
+        """ONE evaluation of the discovery subtree: rank within bucket
+        (needs no cross-bucket knowledge), eagerly localCheckpoint the
+        ranked frame; counts and the capped new_rows both derive from the
+        checkpointed blocks.
 
-            n_buckets = 4 * spark.sparkContext.defaultParallelism
+        localCheckpoint, NOT cache: the frontier delta is the round
+        boundary — the next round's whole plan (and this round's in-flight
+        writes) sit on top of it. A cache here nests InMemoryRelations
+        round over round; unpersisting any mid-chain entry makes later
+        plan lookups miss and re-derive the entire crawl history
+        (measured: outcome-job task counts growing ~3x per round).
+        Checkpointing truncates lineage to a LogicalRDD — no plan
+        matching, no recompute path. Blocks are freed by the
+        ContextCleaner once the graveyard drops the reference."""
+        n_buckets = 4 * self.spark.sparkContext.defaultParallelism
+        return (
+            links.select(
+                "*",
+                F.width_bucket(F.col("parent_seq"), F.lit(lo),
+                               F.lit(hi + 1), F.lit(n_buckets))
+                .alias("__bucket"))
+            .select("*", ex["lrn"])
+            .select(*ex["ranked_sel"])
+            # checkpoint the frontier delta at round-size-matched width: its
+            # consumers (counts collect, enqueue select, pending write) are
+            # all thin per-row work, and 64 splinter blocks/files per small
+            # round cost more in task launches than the data
+            .coalesce(n_view)
+            .localCheckpoint()
+        )
 
-            def disc_build(lo, hi, links=links, n_buckets=n_buckets):
-                # ONE evaluation of the discovery subtree: rank within
-                # bucket (needs no cross-bucket knowledge), eagerly
-                # localCheckpoint the ranked frame; counts and the capped
-                # new_rows both derive from the checkpointed blocks.
-                #
-                # localCheckpoint, NOT cache: the frontier delta is the
-                # round boundary — the next round's whole plan (and this
-                # round's in-flight writes) sit on top of it. A cache here
-                # nests InMemoryRelations round over round; unpersisting
-                # any mid-chain entry makes later plan lookups miss and
-                # re-derive the entire crawl history (measured: outcome-job
-                # task counts growing ~3x per round). Checkpointing
-                # truncates lineage to a LogicalRDD — no plan matching, no
-                # recompute path. Blocks are freed by the ContextCleaner
-                # once the graveyard drops the reference.
-                ranked_df = (
-                    links.select(
-                        "*",
-                        F.width_bucket(F.col("parent_seq"), F.lit(lo),
-                                       F.lit(hi + 1), F.lit(n_buckets))
-                        .alias("__bucket"))
-                    .select("*", ex["lrn"])
-                    .select(*ex["ranked_sel"])
-                )
-                if n_view is not None:
-                    # checkpoint the frontier delta at round-size-matched
-                    # width: its consumers (counts collect, enqueue select,
-                    # pending write) are all thin per-row work, and 64
-                    # splinter blocks/files per small round cost more in
-                    # task launches than the data
-                    ranked_df = ranked_df.coalesce(n_view)
-                return ranked_df.localCheckpoint()
-
-            bounds = progress.get("pending_seq_range")
-            if bounds is not None:
-                disc_fut = writes.submit(disc_build, bounds[0], bounds[1])
-        _t_plan = time.time()
-
-        # One job: outcome counts (progress/retry math) + the admitted seq
-        # range (dense-seq bucketing fallback for checkpoints without a
-        # recorded pending seq range). Submitted ASYNC: nothing in the round
-        # needs the result before meta-build time — the drain check subsumes
+    def _submit_doc_writes(self, r: int, docs: DataFrame,
+                           docs_view: DataFrame, ex: dict):
+        """The outcome job and the results / visits / metrics writes, all
+        submitted async. Returns (the outcome future, the write futures)."""
+        # One job: outcome counts (progress/retry math). Nothing in the
+        # round needs it before meta-build time — the drain check subsumes
         # `done >= limit` (done counts admitted rows, which are capped by
         # the enqueue limit, so done can only reach the limit when pending
         # also empties), capacity uses the driver-known `enqueued`, and the
         # width_bucket bounds come from pending_seq_range. The job runs
         # concurrently with the discovery checkpoint and the doc writes
         # (block-level cache locks make the shared docs materialization
-        # single-compute). The no-bounds fallback resolves it early.
-        def _outcome_job():
-            return (
-                docs_view.groupBy("status", ex["outcome_key"])
-                .agg(*ex["outcome_aggs"])
-                .collect()
-            )
-
-        outcome_fut = writes.submit(_outcome_job)
-        _t_fetch = time.time()
-
-
-        # results: persistence gated by scrape_paths (F5) — links still flow;
-        # visits: complete per-round visit log (crawl-order golden surface).
-        # The docs-derived writes are independent reads of the cached docs →
-        # submitted concurrently (Spark schedules concurrent jobs fine; each
-        # write targets its own round directory). None of them is awaited in
-        # this round: _finalize_prev() awaits + commits them while the NEXT
-        # round's compute jobs run (write pipelining).
-        pending_writes = [
-            writes.submit(
-                self.catalog.append_round,
-                docs_view.where(F.col("should_scrape")).drop("links", "should_scrape"),
-                "results", r),
-            writes.submit(
-                self.catalog.append_round,
-                docs_view.select(*ex["visits_sel"]),
-                "visits", r),
+        # single-compute).
+        outcome_fut = self._writes.submit(
+            lambda: docs_view.groupBy("status", ex["outcome_key"])
+            .agg(*ex["outcome_aggs"]).collect())
+        # results: persistence gated by scrape_paths (F5) — links still
+        # flow; visits: complete per-round visit log (crawl-order golden
+        # surface). The docs-derived writes are independent reads of the
+        # cached docs → submitted concurrently (each write targets its own
+        # round directory). None of them is awaited in this round:
+        # _finalize_prev() awaits + commits them while the NEXT round's
+        # compute jobs run (write pipelining).
+        append = self.catalog.append_round
+        futures = [
+            self._writes.submit(
+                append, docs_view.where(F.col("should_scrape"))
+                .drop("links", "should_scrape"), "results", r),
+            self._writes.submit(
+                append, docs_view.select(*ex["visits_sel"]), "visits", r),
         ]
-
         # per-partition lineage/metrics (north rule)
         metrics = (
             docs.groupBy(ex["metrics_key"], "host")
             .agg(*ex["metrics_aggs"])
             .select("*", F.lit(r).alias("round"), ex["job_id"])
         )
-        pending_writes.append(
-            writes.submit(self.catalog.append_round, metrics, "metrics", r))
+        futures.append(self._writes.submit(append, metrics, "metrics", r))
+        return outcome_fut, futures
 
-        # --- discover → filter → dedup → enqueue ---------------------------
-        new_rows = None
-        ranked = None
-        n_new = 0
-        if disc_build is not None:
-            capacity = cfg.limit - enqueued
-            # Buckets whose cumulative offset already exceeds the enqueue
-            # capacity are pruned before the offsets join.
-            if disc_fut is not None:
-                ranked = disc_fut.result()
-                _t_ranked = time.time()
-            else:
-                # no recorded pending_seq_range (resume/legacy checkpoint):
-                # the outcome job's min/max seq supplies the bounds
-                outcome_rows = outcome_fut.result()
-                outcome_fut = None
-                seq_lo = min((row["min_seq"] for row in outcome_rows),
-                             default=0)
-                seq_hi = max((row["max_seq"] for row in outcome_rows),
-                             default=0)
-                ranked = disc_build(seq_lo, seq_hi)
-                _t_ranked = time.time()
-            counts = {row["__bucket"]: row["cnt"] for row in
-                      ranked.groupBy("__bucket").agg(
-                          F.max("__lrn").alias("cnt")).collect()}
-            _t_counts = time.time()
-            total = sum(counts.values())
-            offsets, acc = [], 0
-            for b in sorted(counts):
-                offsets.append((b, acc))
-                acc += counts[b]
-            # bucket→offset as a literal map expression, not a broadcast
-            # join of a createDataFrame frame: local Python rows make a
-            # pickled RDD whose broadcast build re-ran Python workers in
-            # every job that touched new_rows, each round. element_at on a
-            # literal map is pure codegen; a bucket pruned by the capacity
-            # check is absent from the map → null → filtered, exactly the
-            # inner join's semantics. Bucket count is bounded (4×cores), so
-            # the literal stays small at any scale.
-            # one F.expr over a rendered literal string: building the same
-            # map from per-literal F.lit().cast() Column objects cost ~250
-            # py4j round-trips per round on the driver (profiled ~0.24 s)
-            off_items = ",".join(f"{b}L,{o}L" for b, o in offsets
-                                 if o < capacity)
-            off_map = F.expr(f"map({off_items})" if off_items
-                             else "cast(map() as map<bigint,bigint>)")
-            rn = F.col("__off") + F.col("__lrn")
-            new_rows = (
-                ranked.select("*", off_map[F.col("__bucket")].alias("__off"))
-                .where(F.col("__off").isNotNull() & (rn <= capacity))
-                .select(*ex["frontier_head"],
-                        ex["new_depth"],
-                        (F.lit(enqueued) - 1 + rn).alias("seq"),
-                        F.lit(r).alias("round_added"),
-                        ex["new_attempt"])
-            )
-            n_new = min(total, capacity)
-        _t_discover = time.time()
+    def _enqueue(self, cfg: CrawlConfig, r: int, enqueued: int,
+                 ranked: DataFrame, counts: dict[int, int],
+                 ex: dict) -> tuple[DataFrame, int]:
+        """Per-bucket counts → bucket offsets → the capped, densely
+        numbered new frontier rows and their count."""
+        capacity = cfg.limit - enqueued
+        offsets, total = [], 0
+        for b in sorted(counts):
+            offsets.append((b, total))
+            total += counts[b]
+        # bucket→offset as a literal map expression, not a broadcast
+        # join of a createDataFrame frame: local Python rows make a
+        # pickled RDD whose broadcast build re-ran Python workers in
+        # every job that touched new_rows, each round. element_at on a
+        # literal map is pure codegen; a bucket whose offset already
+        # exceeds the enqueue capacity is absent from the map → null →
+        # filtered, exactly the inner join's semantics. Bucket count is
+        # bounded (4×cores), so the literal stays small at any scale.
+        # one F.expr over a rendered literal string: building the same
+        # map from per-literal F.lit().cast() Column objects cost ~250
+        # py4j round-trips per round on the driver (profiled ~0.24 s)
+        off_items = ",".join(f"{b}L,{o}L" for b, o in offsets
+                             if o < capacity)
+        off_map = F.expr(f"map({off_items})" if off_items
+                         else "cast(map() as map<bigint,bigint>)")
+        rn = F.col("__off") + F.col("__lrn")
+        new_rows = (
+            ranked.select("*", off_map[F.col("__bucket")].alias("__off"))
+            .where(F.col("__off").isNotNull() & (rn <= capacity))
+            .select(*ex["frontier_head"],
+                    ex["new_depth"],
+                    (F.lit(enqueued) - 1 + rn).alias("seq"),
+                    F.lit(r).alias("round_added"),
+                    ex["new_attempt"])
+        )
+        return new_rows, min(total, capacity)
 
-        # --- next pending + seen/bloom appends -----------------------------
-        # Finalize the PREVIOUS round here (await its writes — they had this
-        # whole round's compute to overlap with — commit its manifest, free
-        # caches retired two rounds back) before submitting this round's
-        # state writes.
-        self._finalize_prev()
+    def _write_state(self, cfg: CrawlConfig, r: int, pending: DataFrame,
+                     deferred: DataFrame, docs: DataFrame,
+                     new_rows: DataFrame | None, n_new: int,
+                     seen: DataFrame | None, ex: dict, fam,
+                     pipelined: bool):
+        """Round r's next pending, seen and bloom. Returns (the next
+        round's pending frame, the pending write future, the state tables
+        written, the tables whose round chain this write replaces)."""
         next_pending = deferred.select(*FRONTIER_COLS)
         if cfg.max_attempts > 1:
             retries = (
-                docs.where(~final_attempt)
+                docs.where(~ex["final_attempt"])
                 .select("job_id", "url", "url_hash", "host", "depth", "seq",
                         (F.col("attempt") + 1).alias("attempt"))
                 .join(pending.select("url_hash",
@@ -1233,129 +1213,132 @@ class CrawlEngine:
                 .select(*FRONTIER_COLS)
             )
             next_pending = next_pending.unionByName(retries)
-        if new_rows is not None and n_new > 0:
-            if not cfg.politeness_budget and not cfg.batch_size \
-                    and cfg.max_attempts == 1:
-                # deferred is the schema-only empty frame here — skip the
-                # union so next round's admitted is the cached new_rows
-                # frame itself (depth-1 lineage for the pipelined pending)
-                next_pending = new_rows
-            else:
-                next_pending = next_pending.unionByName(new_rows)
-        state_writes = [writes.submit(self.catalog.append_round, next_pending, "pending", r)]
-        # In-memory pending for the next round is only safe when its lineage
-        # is one cached frame deep (unlimited budget, no batching, no
-        # retries): with budgets/batches the deferred branch chains through
-        # every prior round's frontier, so cut lineage by waiting for the
-        # parquet write and reading it back (commit still deferred).
-        pipeline_pending = (not cfg.politeness_budget and not cfg.batch_size
-                            and cfg.max_attempts == 1)
-        if not pipeline_pending:
-            state_writes[0].result()
-            next_pending = spark.read.schema(FRONTIER_SCHEMA).parquet(
-                self.catalog.round_path("pending", r))
-        compact_seen = False
         if n_new > 0:
-            # seen compaction: the seen read unions every committed round's
-            # directory, so an unbounded crawl pays O(rounds) listing/open
-            # cost per round. Every K seen-writing rounds this round's write
-            # holds the full cumulative hash set instead of the delta and
-            # the manifest swap (atomic with the round commit) replaces the
-            # delta chain — read cost stays O(1) directories. The Iceberg
-            # deployment equivalent is snapshot compaction.
-            compact_seen = (
-                cfg.seen_compact_every > 0 and seen is not None
-                and len(self.catalog.committed_rounds("seen"))
-                + len(self._seen_uncommitted)
-                >= cfg.seen_compact_every)
-            if compact_seen:
-                # synchronous: the NEXT round's anti-join reads this file
-                # before its manifest commit lands (write pipelining)
-                self.catalog.append_round(
-                    seen.unionByName(new_rows.select("url_hash")), "seen", r)
-                self._seen_uncommitted.append(
-                    (r, self.catalog.round_path("seen", r), True))
-            # incremental checkpoint: merge this round's delta into the
-            # previous cumulative segment set ONCE, write it as round r. The
-            # new hashes are collected once (the per-round delta is bounded
-            # by the job's enqueue limit), the delta is built and merged in
-            # numpy, and BOTH the seen delta and the cumulative filter are
-            # written with pyarrow on the driver — no Spark job.
-            hashes = [row["url_hash"]
-                      for row in new_rows.select("url_hash").collect()]
-            # exact_antijoin / prefilter_antijoin skip distinct() on the
-            # seen side because every delta holds each hash once
-            if len(set(hashes)) != len(hashes):
-                raise AssertionError(
-                    f"round {r} seen delta holds duplicate url hashes")
-            if not compact_seen:
-                self._write_seen_driver(hashes, r)
-                self._seen_uncommitted.append(
-                    (r, self.catalog.round_path("seen", r), False))
-            build_hashes = hashes
-            if self._bloom_mem is None and seen is not None:
-                # prior bloom checkpoint missing/corrupt (filter_new
-                # degraded to the exact anti-join): REBUILD the cumulative
-                # filter from the seen history — committing a delta-only
-                # bitmap as 'cumulative' would bake in permanent false
-                # negatives for every pre-corruption URL. Bounded by the
-                # zod limit cap on enqueued rows.
-                build_hashes = hashes + [
-                    row["url_hash"]
-                    for row in seen.select("url_hash").collect()]
-            self._bloom_mem = fam.merge_driver(self._bloom_mem or {},
-                                               fam.build_driver(build_hashes))
-            self._write_filter_driver(self._bloom_mem, r)
-        # next-pending count by arithmetic over aggregates this round already
-        # computed — no re-read of the just-written files (which cost a
-        # footer-scan Spark job per round):
-        #   pending(r)  = deferred + retries + newly enqueued
-        #   deferred    = pending(r-1) - admitted      (budget/batch split)
-        # pending(r-1) is the prior round's recorded pending_next (the seed
-        # round records it as `enqueued` = seed count); legacy checkpoints
-        # without either fall back to counting the read DataFrame.
-        if outcome_fut is not None:
-            outcome_rows = outcome_fut.result()
-        outcome_counts = {(row["status"], row["final"]): row["count"]
-                          for row in outcome_rows}
-        n_fetched = sum(v for (s_, fin), v in outcome_counts.items()
-                        if s_ == 200)
-        n_failed = sum(v for (s_, fin), v in outcome_counts.items()
-                       if s_ != 200 and fin)
-        n_pending_prev = (known_pending if known_pending is not None
-                          else pending.count())
-        n_admitted = sum(outcome_counts.values())
-        n_retries = 0
-        if cfg.max_attempts > 1:
-            n_retries = sum(v for (s_, fin), v in outcome_counts.items()
-                            if s_ != 200 and not fin)
-        n_pending_next = (n_pending_prev - n_admitted) + n_retries + n_new
+            # pipelined: deferred is the schema-only empty frame — skip the
+            # union so next round's admitted is the cached new_rows frame
+            # itself (depth-1 lineage for the pipelined pending)
+            next_pending = (new_rows if pipelined
+                            else next_pending.unionByName(new_rows))
+        futures = [self._writes.submit(self.catalog.append_round,
+                                       next_pending, "pending", r)]
+        # In-memory pending for the next round is only safe when its lineage
+        # is one cached frame deep: with budgets/batches/retries the
+        # deferred branch chains through every prior round's frontier, so
+        # cut lineage by waiting for the parquet write and reading it back
+        # (commit still deferred).
+        if not pipelined:
+            futures[0].result()
+            next_pending = self.spark.read.schema(FRONTIER_SCHEMA).parquet(
+                self.catalog.round_path("pending", r))
+        if n_new == 0:
+            tables, replace = ["pending"], []
+        else:
+            compact_seen = self._write_seen(cfg, r, new_rows, seen, fam)
+            # every bloom checkpoint is the full cumulative filter and only
+            # the newest committed round is ever read (_latest_bloom), so
+            # each commit retires the previous copy — otherwise an unbounded
+            # crawl stores O(rounds) superseded full-filter copies
+            tables = ["pending", "seen", "bloom"]
+            replace = ["bloom", "seen"] if compact_seen else ["bloom"]
         if self._bloom_mem is not None:
             # cumulative through this round whether or not a delta was added
             self._bloom_mem_round = r
-        _t_writes = time.time()
+        return next_pending, futures, tables, replace
 
+    def _write_seen(self, cfg: CrawlConfig, r: int, new_rows: DataFrame,
+                    seen: DataFrame | None, fam) -> bool:
+        """Append round r's new hashes to the seen set and merge them into
+        the cumulative filter. Returns whether the seen write was a
+        compaction."""
+        # seen compaction: the seen read unions every committed round's
+        # directory, so an unbounded crawl pays O(rounds) listing/open
+        # cost per round. Every K seen-writing rounds this round's write
+        # holds the full cumulative hash set instead of the delta and
+        # the manifest swap (atomic with the round commit) replaces the
+        # delta chain — read cost stays O(1) directories. The Iceberg
+        # deployment equivalent is snapshot compaction.
+        compact_seen = (
+            cfg.seen_compact_every > 0 and seen is not None
+            and len(self.catalog.committed_rounds("seen"))
+            + len(self._seen_uncommitted)
+            >= cfg.seen_compact_every)
+        if compact_seen:
+            # synchronous: the NEXT round's anti-join reads this file
+            # before its manifest commit lands (write pipelining)
+            self.catalog.append_round(
+                seen.unionByName(new_rows.select("url_hash")), "seen", r)
+            self._seen_uncommitted.append(
+                (r, self.catalog.round_path("seen", r), True))
+        # incremental checkpoint: merge this round's delta into the
+        # previous cumulative segment set ONCE, write it as round r. The
+        # new hashes are collected once (the per-round delta is bounded
+        # by the job's enqueue limit), the delta is built and merged in
+        # numpy, and BOTH the seen delta and the cumulative filter are
+        # written with pyarrow on the driver — no Spark job.
+        hashes = [row["url_hash"]
+                  for row in new_rows.select("url_hash").collect()]
+        # exact_antijoin / prefilter_antijoin skip distinct() on the
+        # seen side because every delta holds each hash once
+        if len(set(hashes)) != len(hashes):
+            raise AssertionError(
+                f"round {r} seen delta holds duplicate url hashes")
+        if not compact_seen:
+            self._write_seen_driver(hashes, r)
+            self._seen_uncommitted.append(
+                (r, self.catalog.round_path("seen", r), False))
+        build_hashes = hashes
+        if self._bloom_mem is None and seen is not None:
+            # prior bloom checkpoint missing/corrupt (filter_new
+            # degraded to the exact anti-join): REBUILD the cumulative
+            # filter from the seen history — committing a delta-only
+            # bitmap as 'cumulative' would bake in permanent false
+            # negatives for every pre-corruption URL. Bounded by the
+            # zod limit cap on enqueued rows.
+            build_hashes = hashes + [
+                row["url_hash"]
+                for row in seen.select("url_hash").collect()]
+        self._bloom_mem = fam.merge_driver(self._bloom_mem or {},
+                                           fam.build_driver(build_hashes))
+        self._write_filter_driver(self._bloom_mem, r)
+        return compact_seen
+
+    @staticmethod
+    def _round_meta(cfg: CrawlConfig, r: int, progress: dict,
+                    outcome_rows: list, n_pending: int, n_new: int,
+                    pipelined: bool, stamps: tuple) -> dict:
+        """The round's committed meta. Counts come by arithmetic over
+        aggregates the round already computed — no re-read of the
+        just-written files (which cost a footer-scan Spark job per round):
+            pending(r) = pending(r-1) - admitted + retries + newly enqueued
+        """
+        outcome = {(row["status"], row["final"]): row["count"]
+                   for row in outcome_rows}
+        n_fetched = sum(v for (s_, _f), v in outcome.items() if s_ == 200)
+        n_failed = sum(v for (s_, fin), v in outcome.items()
+                       if s_ != 200 and fin)
+        n_retries = 0
+        if cfg.max_attempts > 1:
+            n_retries = sum(v for (s_, fin), v in outcome.items()
+                            if s_ != 200 and not fin)
+        n_pending_next = (n_pending - sum(outcome.values()) + n_retries
+                          + n_new)
         done = progress["done"] + n_fetched + n_failed
-        failed = progress["failed"] + n_failed
-        enqueued_total = enqueued + n_new
-        finalized = n_pending_next == 0 or done >= cfg.limit
+        enqueued = progress["enqueued"]
         # Seq range of next round's pending, by arithmetic: new rows carry
         # seq [enqueued, enqueued + n_new - 1]; deferred/retry rows keep
         # seqs within the prior range, so the union of ranges covers them.
         # Drives the next round's width_bucket bounds without waiting for
         # its outcome job (concurrent discovery materialization).
-        prev_rng = progress.get("pending_seq_range")
+        rng = progress["pending_seq_range"]
         if n_new > 0:
-            rng = [enqueued, enqueued + n_new - 1]
-            if prev_rng is not None and (cfg.politeness_budget
-                                         or cfg.batch_size
-                                         or cfg.max_attempts > 1):
-                rng = [min(prev_rng[0], rng[0]), max(prev_rng[1], rng[1])]
-        else:
-            rng = prev_rng
-        meta = {
-            "round": r, "done": done, "failed": failed,
-            "enqueued": enqueued_total, "finalized": finalized,
+            new_rng = [enqueued, enqueued + n_new - 1]
+            rng = (new_rng if pipelined
+                   else [min(rng[0], new_rng[0]), max(rng[1], new_rng[1])])
+        t0, t_plan, t_ranked, t_counts, t_discover, t_writes = stamps
+        return {
+            "round": r, "done": done, "failed": progress["failed"] + n_failed,
+            "enqueued": enqueued + n_new,
+            "finalized": n_pending_next == 0 or done >= cfg.limit,
             "admitted": n_fetched + n_failed, "new": n_new,
             "pending_next": n_pending_next, "phase": "crawl",
             "pending_seq_range": rng,
@@ -1365,47 +1348,17 @@ class CrawlEngine:
             # one "compute" phase — attributing the old fetch_extract /
             # discover_enqueue split would misread plan-build time as work.
             "timings": {
-                "compute": round(_t_discover - _t0, 3),
-                "state_writes": round(_t_writes - _t_discover, 3),
+                "compute": round(t_discover - t0, 3),
+                "state_writes": round(t_writes - t_discover, 3),
                 # compute sub-phases: plan = driver-side build + submits,
                 # disc = the discovery checkpoint job (docs materialize),
-                # counts = the per-bucket count collect
-                "plan": round(_t_plan - _t0, 3),
-                "disc": round((_t_ranked - _t_plan), 3)
-                if disc_build is not None else 0.0,
-                "counts": round((_t_counts - _t_ranked), 3)
-                if disc_build is not None else 0.0,
+                # counts = the per-bucket count collect; both 0 in a round
+                # without discovery
+                "plan": round(t_plan - t0, 3),
+                "disc": round(t_ranked - t_plan, 3),
+                "counts": round(t_counts - t_ranked, 3),
             },
         }
-        tables = ["pending", "results", "visits", "metrics"]
-        # every bloom checkpoint is the full cumulative filter and only the
-        # newest committed round is ever read (_latest_bloom), so each commit
-        # retires the previous copy — otherwise an unbounded crawl stores
-        # O(rounds) superseded full-filter copies
-        replace = ["bloom"] if n_new > 0 else []
-        if n_new > 0:
-            tables += ["seen", "bloom"]
-        if compact_seen:
-            replace.append("seen")
-        # Deferred commit (write pipelining): the manifest entry lands in
-        # _finalize_prev() during the NEXT round, after the writes complete.
-        # A crash before that resumes from the last committed round with
-        # this round's directories dropped — exact-resume is unchanged.
-        caches_now = [docs]
-        if admitted_cached:
-            caches_now.append(admitted)
-        self._prev_inflight = {
-            "round": r, "futures": pending_writes + state_writes,
-            "tables": tables, "meta": meta, "replace": replace,
-            "caches_now": caches_now,
-            # ranked is the localCheckpointed block holder; keeping the
-            # reference until the next finalize stops the ContextCleaner
-            # from reclaiming blocks that in-flight writes still read
-            # (unpersist on a checkpointed frame is a harmless no-op)
-            "caches_later": [ranked] if ranked is not None else [],
-        }
-        self._pending_mem = next_pending
-        return meta
 
     # -- reads for callers --------------------------------------------------
     def results(self) -> DataFrame | None:

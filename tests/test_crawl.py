@@ -195,6 +195,16 @@ class TestResume:
         }
         assert resumed_results == full_results
 
+        # every round sizes itself from the prior meta: each committed seed
+        # and crawl meta records the pending count and seq range
+        for engine in (engine_full, engine_resumed):
+            metas = [engine.catalog.round_meta(rr)
+                     for rr in range(engine.catalog.last_round() + 1)]
+            metas = [m for m in metas if m.get("phase") in ("seeded", "crawl")]
+            assert metas and metas[0]["phase"] == "seeded"
+            for m in metas:
+                assert "pending_next" in m and "pending_seq_range" in m, m
+
 
 class TestSeenCompaction:
     def test_compaction_preserves_crawl_and_bounds_dirs(self, spark, small_corpus,
@@ -291,26 +301,15 @@ class TestRetries:
 
 class TestAutoSaltGate:
     def test_resolve_salt_n(self):
-        """'auto' salts only above the measured crossover; explicit values
-        pass through; CrawlConfig validates the knob."""
+        """CrawlConfig validates the knob: an int >= 0, default 0; strings
+        such as 'auto' are rejected."""
         import pytest
 
-        from anycrawl_spark.crawl import (CrawlConfig, SALT_FRONTIER_THRESHOLD,
-                                          resolve_salt_n)
-
-        assert resolve_salt_n("auto", None) == 0
-        assert resolve_salt_n("auto", 10_000) == 0
-        assert resolve_salt_n("auto", SALT_FRONTIER_THRESHOLD - 1) == 0
-        assert resolve_salt_n("auto", SALT_FRONTIER_THRESHOLD) == 8
-        assert resolve_salt_n(0, 10**9) == 0          # explicit wins
-        assert resolve_salt_n(4, None) == 4
-        CrawlConfig(job_id="j", seed_url="https://a.test/")  # default 'auto' ok
-        with pytest.raises(ValueError):
-            CrawlConfig(job_id="j", seed_url="https://a.test/",
-                        budget_salt_n="always")
-        with pytest.raises(ValueError):
-            CrawlConfig(job_id="j", seed_url="https://a.test/",
-                        budget_salt_n=-1)
+        assert CrawlConfig(job_id="j", seed_url="https://a.test/").budget_salt_n == 0
+        for bad in ("auto", "always", -1):
+            with pytest.raises(ValueError):
+                CrawlConfig(job_id="j", seed_url="https://a.test/",
+                            budget_salt_n=bad)
 
 
 class TestSaltedBudgetParity:
@@ -681,6 +680,23 @@ class TestPipelinedCheckpointing:
                                     respect_robots=False,
                                     bloom_num_buckets=8), resume=True)
         assert engine2._writes is None
+
+        # a newest meta without pending_next: resume rejects it instead of
+        # guessing the round size
+        import json
+
+        mpath = os.path.join(d, "_manifest.json")
+        with open(mpath) as f:
+            manifest = json.load(f)
+        newest = max(manifest["meta"], key=int)
+        manifest["meta"][newest].pop("pending_next")
+        with open(mpath, "w") as f:
+            json.dump(manifest, f)
+        engine3 = CrawlEngine(spark, small_corpus, d)
+        with pytest.raises(ValueError, match="pending_next"):
+            engine3.run(CrawlConfig(job_id="pc", seed_url=SEED, limit=5,
+                                    respect_robots=False), resume=True)
+        assert engine3._writes is None
 
 
 class TestRecrawlEviction:

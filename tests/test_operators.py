@@ -951,6 +951,29 @@ class TestOracleValidator:
         assert ok, msg
 
 
+# Registry leaves checked against their DuckDB oracles at sf0.01: the
+# seen-filter leaves and the dedup leaves, which no other tier-1 test
+# compares with an oracle.
+ORACLE_LEAVES = ["seen_antijoin", "bloom_seen_filter", "cuckoo_seen_filter",
+                 "semantic_dedup", "simhash_near_pairs", "ngram_jaccard_pairs",
+                 "span_dedup", "incremental_dedup", "bigram_surprisal",
+                 "dedup_clusters"]
+
+
+@pytest.mark.parametrize("name", ORACLE_LEAVES)
+def test_leaf_matches_oracle(spark, name):
+    import sys
+    sys.path.insert(0, os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        "tools"))
+    from validate_oracle import compare_query, open_duckdb
+
+    from anycrawl_spark.operators.queries import REGISTRY
+
+    ok, msg = compare_query(spark, open_duckdb(), REGISTRY[name])
+    assert ok, msg
+
+
 class TestDocsRegistryDrift:
     """COVERAGE.md is the judge's checklist — every registry query must be
     cited there, and the DRIVER_ORDER window note must match the actual

@@ -1,12 +1,11 @@
 """The seen-filter hash-slice core (anycrawl_spark/seen.py): property tests
 against the scalar references (``seen._positions``, ``cuckoo._fp_i1`` /
-``cuckoo._contains``), byte-identical Bloom builds, parser rejection, the
-duplicate-tolerant seen side of every anti-join, and the seen-filter
-registry leaves against their DuckDB oracles."""
+``cuckoo._contains``), byte-identical Bloom builds, parser rejection, and the
+duplicate-tolerant seen side of every anti-join. The seen-filter
+registry leaves run against their DuckDB oracles in
+``tests/test_operators.py::test_leaf_matches_oracle``."""
 
 import hashlib
-import os
-import sys
 
 import numpy as np
 import pytest
@@ -178,17 +177,3 @@ class TestDuplicateSeenSide:
         assert hashes_of(cuckoo.filter_new(
             candidates, cuckoo_segs, seen_df, num_buckets=4,
             n_slots=1 << 8)) == expect
-
-
-@pytest.mark.parametrize("name", ["seen_antijoin", "bloom_seen_filter",
-                                  "cuckoo_seen_filter"])
-def test_seen_filter_leaf_matches_oracle(spark, name):
-    sys.path.insert(0, os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "tools"))
-    from validate_oracle import compare_query, open_duckdb
-
-    from anycrawl_spark.operators.queries import REGISTRY
-
-    ok, msg = compare_query(spark, open_duckdb(), REGISTRY[name])
-    assert ok, msg
