@@ -54,9 +54,9 @@ class Catalog:
     def append_round_local(self, arrow_table, table: str, round_no: int) -> None:
         """Driver-side parquet write (pyarrow) of one round's rows — same
         directory layout and read path as append_round, but no Spark job.
-        Only for driver-resident state (seen-filter segments, collected seen
-        deltas, seed/re-enqueue frontiers); the other round tables use the
-        distributed writer."""
+        Only for driver-resident state (the exact seen set and its filter
+        segments, seed/re-enqueue frontiers); the other round tables use
+        the distributed writer."""
         import pyarrow.parquet as pq
 
         path = Path(self.round_path(table, round_no))
@@ -70,13 +70,12 @@ class Catalog:
         """Atomically mark ``round_no`` committed for all given tables.
 
         Tables named in ``replace`` have their round list REPLACED by
-        ``[round_no]`` (compaction: this round's write holds the full
-        cumulative content). The swap shares the round's single atomic
-        manifest write, so a kill at any point leaves either the old delta
-        chain or the compacted table — never a mix. Superseded round
-        directories are deleted after the commit; if that cleanup is
-        interrupted, drop_uncommitted removes them at resume (they are no
-        longer in the manifest)."""
+        ``[round_no]``: this round's write is the table's full cumulative
+        copy. The swap shares the round's single atomic manifest write, so
+        a kill at any point leaves either the previous copy or this one
+        committed — never a mix. Superseded round directories are deleted
+        after the commit; if that cleanup is interrupted, drop_uncommitted
+        removes them at resume (they are no longer in the manifest)."""
         manifest = self._read_manifest()
         superseded: list[tuple[str, int]] = []
         for table in tables:
@@ -120,15 +119,6 @@ class Catalog:
         paths = [self.round_path(table, r) for r in rounds]
         reader = spark.read.schema(schema) if schema else spark.read
         return reader.parquet(*paths)
-
-    def read_round_uncommitted(self, spark: SparkSession, table: str,
-                               round_no: int,
-                               schema: str | None = None) -> DataFrame:
-        """Read a round directory that has been written but not yet committed
-        (evict_urls rebuilds the filter from its compacted seen write before
-        the round's commit)."""
-        reader = spark.read.schema(schema) if schema else spark.read
-        return reader.parquet(self.round_path(table, round_no))
 
     def read_round(self, spark: SparkSession, table: str, round_no: int,
                    schema: str | None = None) -> DataFrame | None:

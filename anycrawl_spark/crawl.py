@@ -13,8 +13,9 @@ Each round r is one Spark batch over immutable checkpointed state:
                   path / depth / robots filters → in-batch dedup
                →  Bloom pre-filter + exact anti-join vs seen set
                →  enqueue-cap top-k → seq assignment → pending_{r+1}
-               →  seen segment, progress, per-partition lineage appended;
-                  manifest commit (atomic) → resumable
+               →  seen set + cumulative filter (full copies), progress,
+                  per-partition lineage appended; manifest commit (atomic)
+                  → resumable
 
 Dedup semantics follow the reference's queue path (crawlee uniqueKey dedup at
 enqueue time, ``Base.ts:464-493``): the seen set is "everything ever
@@ -64,6 +65,10 @@ FRONTIER_COLS = ["job_id", "url", "url_hash", "host", "origin", "path",
 FRONTIER_SCHEMA = ("job_id string, url string, url_hash string, host string, "
                    "origin string, path string, depth int, seq long, "
                    "round_added int, attempt int")
+SEEN_SCHEMA = "url_hash string"
+# tables whose every checkpoint round is the full cumulative state: a
+# commit naming one retires its previous copy
+CUMULATIVE_TABLES = ["seen", "bloom"]
 # FRONTIER_SCHEMA for driver-side pyarrow writes (seed round, re-enqueue)
 FRONTIER_ARROW_SCHEMA = pa.schema([
     ("job_id", pa.string()), ("url", pa.string()),
@@ -109,10 +114,6 @@ class CrawlConfig:
     bloom_k: int = 4
     cuckoo_n_slots: int = 1 << 12        # 4-way cuckoo buckets per segment
     max_rounds: int = 1000
-    seen_compact_every: int = 8          # rewrite the seen table cumulatively
-                                         # every K seen-writing rounds so its
-                                         # read stays O(1) dirs, not O(rounds);
-                                         # 0 disables
     simulate_fetch_errors: bool = False  # F11: draw all five failure classes
                                          # from corpus misses (tests/fixtures)
     proxy: str | None = None             # request proxy option (mode keyword
@@ -284,25 +285,24 @@ class CrawlEngine:
             self.corpus = self.corpus.localCheckpoint(eager=False)
         self.catalog = Catalog(checkpoint_dir)
         self.robots = robots
-        # driver-resident cumulative seen-filter segments. _bloom_mem_round =
-        # the round the cache is cumulative through; invalidated on resume
-        # (fresh engine).
+        # driver-resident seen state, cumulative through the newest round
+        # this run wrote (or, on resume, loaded by _load_seen): the exact
+        # set, the frame over the one file holding it (the anti-join's
+        # seen side) and the filter segments. run() resets it.
+        self._seen: set[str] | None = None
+        self._seen_df: DataFrame | None = None
         self._bloom_mem: dict[int, bytes] | None = None
-        self._bloom_mem_round = -1
         # -- write pipelining (see _finalize_prev) --------------------------
         # The slow per-round parquet writes (results/visits/metrics/pending)
         # overlap the NEXT round's compute jobs: round r submits them async
         # and round r+1 finalizes (await -> commit -> release caches) right
         # before submitting its own writes. Next-round reads come from
         # in-memory state instead of committed files: _pending_mem (the
-        # frontier DataFrame), _bloom_mem (driver-resident filter), and
-        # _seen_uncommitted (synchronously-written seen files as
-        # (round, path, compacted) — compacted entries supersede every
-        # earlier round in _read_seen).
+        # frontier DataFrame) and the seen state above, whose files are
+        # written synchronously ahead of their deferred commit.
         self._prev_inflight: dict | None = None
         self._graveyard: list = []      # caches from two rounds back
         self._pending_mem: DataFrame | None = None
-        self._seen_uncommitted: list[tuple[int, str, bool]] = []
         self._writes: ThreadPoolExecutor | None = None
 
     # -- state helpers ------------------------------------------------------
@@ -325,30 +325,26 @@ class CrawlEngine:
         return segments_to_driver(self.catalog.read_round(
             spark, "bloom", max(rounds), schema=SEGMENT_SCHEMA))
 
-    def _read_seen(self, spark: SparkSession,
-                   up_to_round: int) -> DataFrame | None:
-        """Seen-set union ≤ ``up_to_round``: committed rounds plus rounds
-        whose files this run wrote synchronously ahead of their deferred
-        manifest commit. An uncommitted COMPACTED round holds the full
-        cumulative hash set, so every older round is excluded from the
-        plan — not merely as an optimization: the compaction's deferred
-        commit (replace=['seen']) deletes those superseded directories,
-        and a plan still referencing them would hit FileNotFound when
-        evaluated after _finalize_prev (e.g. a back-to-back compaction or
-        a bloom rebuild with seen_compact_every=1)."""
-        compacted = [rr for rr, _p, comp in self._seen_uncommitted
-                     if comp and rr <= up_to_round]
-        floor = max(compacted) if compacted else None
-        rounds = [rr for rr in self.catalog.committed_rounds("seen")
-                  if rr <= up_to_round
-                  and (floor is None or rr > floor)]
-        paths = [self.catalog.round_path("seen", rr) for rr in rounds]
-        paths += [p for rr, p, _comp in self._seen_uncommitted
-                  if rr <= up_to_round and rr not in rounds
-                  and (floor is None or rr >= floor)]
-        if not paths:
-            return None
-        return spark.read.schema("url_hash string").parquet(*paths)
+    def _load_seen(self, up_to_round: int) -> None:
+        """Load the committed seen state through ``up_to_round`` onto the
+        driver: the exact set (pyarrow reads, no Spark job), the frame over
+        its files, and the cumulative filter (None when no bloom round is
+        committed — the next seen write rebuilds it from the exact set).
+        This engine commits one full-set seen round; a per-round delta
+        chain written by an older engine loads as the union of its rounds,
+        and the next seen write replaces it with one full copy."""
+        import pyarrow.parquet as pq
+
+        paths = [self.catalog.round_path("seen", rr)
+                 for rr in self.catalog.committed_rounds("seen")
+                 if rr <= up_to_round]
+        self._seen = set()
+        for path in paths:
+            self._seen.update(pq.read_table(path).column("url_hash")
+                              .to_pylist())
+        self._seen_df = (self.spark.read.schema(SEEN_SCHEMA).parquet(*paths)
+                         if paths else None)
+        self._bloom_mem = self._latest_bloom(self.spark, up_to_round)
 
     def _finalize_prev(self) -> None:
         """Complete the previous round's deferred tail: await its parquet
@@ -364,11 +360,7 @@ class CrawlEngine:
                     fut.result()
                 self.catalog.commit_round(prev["round"], prev["tables"],
                                           prev["meta"],
-                                          replace=prev["replace"] or None)
-                committed_seen = set(self.catalog.committed_rounds("seen"))
-                self._seen_uncommitted = [
-                    (rr, p, comp) for rr, p, comp in self._seen_uncommitted
-                    if rr not in committed_seen]
+                                          replace=CUMULATIVE_TABLES)
             except BaseException:
                 # a failed write/commit aborts the run — release EVERY
                 # cached frame (this round's, the deferred tail's, and the
@@ -459,30 +451,48 @@ class CrawlEngine:
                 rows.append(row)
         return rows
 
-    def _write_seen_driver(self, hashes: list[str], round_no: int) -> None:
-        self.catalog.append_round_local(
-            pa.table({"url_hash": pa.array(hashes, type=pa.string())}),
-            "seen", round_no)
+    def _insert_seen(self, hashes: set[str], fam) -> None:
+        """Add hashes to the driver-resident seen set and filter. With no
+        filter (its checkpoint missing or corrupt) the filter is REBUILT
+        from the whole exact set — committing a delta-only filter as
+        cumulative would bake in permanent false negatives for every
+        earlier URL. Builds take sorted hashes so checkpoint bytes are
+        deterministic."""
+        self._seen |= hashes
+        if self._bloom_mem is None:
+            self._bloom_mem = fam.build_driver(sorted(self._seen))
+        else:
+            self._bloom_mem = fam.merge_driver(
+                self._bloom_mem, fam.build_driver(sorted(hashes)))
 
-    def _write_filter_driver(self, cache: dict[int, bytes],
-                             round_no: int) -> None:
+    def _write_seen_state(self, round_no: int) -> None:
+        """Checkpoint the driver-resident seen state as ``round_no``: the
+        FULL exact set (sorted) and the cumulative filter, two pyarrow
+        writes with no Spark job. The caller commits both with
+        replace=CUMULATIVE_TABLES; until that (deferred) commit lands, the
+        next round's anti-join reads this file."""
+        self.catalog.append_round_local(
+            pa.table({"url_hash": pa.array(sorted(self._seen),
+                                           type=pa.string())}),
+            "seen", round_no)
+        cache = self._bloom_mem
         self.catalog.append_round_local(
             pa.table({
                 "bucket": pa.array(sorted(cache), type=pa.int32()),
                 "bitmap": pa.array([cache[b] for b in sorted(cache)],
                                    type=pa.binary()),
             }), "bloom", round_no)
+        self._seen_df = self.spark.read.schema(SEEN_SCHEMA).parquet(
+            self.catalog.round_path("seen", round_no))
 
     def evict_urls(self, cfg: CrawlConfig, urls: list[str]) -> dict:
         """Remove URLs from the committed seen state (TTL expiry): the
-        exact seen set is rewritten compacted minus the evicted hashes,
-        and the cumulative filter is amended — cuckoo via true deletion
-        (fam.delete_driver; one copy per distinct key makes it
-        collision-safe), bloom or a saturated cuckoo segment via a full
-        rebuild from the compacted exact seen (the same rebuild-from-
-        history remedy resume applies to corrupt segments). One commit,
-        replace=['seen','bloom']."""
-        spark = self.spark
+        exact seen set loses the evicted hashes, and the cumulative filter
+        is amended — cuckoo via true deletion (fam.delete_driver; one copy
+        per distinct key makes it collision-safe), bloom or a saturated
+        cuckoo segment via a full rebuild from the exact seen set (the
+        same rebuild remedy resume applies to corrupt segments). One
+        commit, replace=['seen','bloom']."""
         progress = self._progress()
         if progress["round"] < 0:
             raise ValueError("no committed crawl state to evict from")
@@ -495,43 +505,32 @@ class CrawlEngine:
         fam = cfg.filter_family()
         self._check_geometry(fam)
 
-        seen = self._read_seen(spark, progress["round"])
-        if seen is None:
+        self._load_seen(progress["round"])
+        if self._seen_df is None:
             raise ValueError("no seen state committed yet")
-        requested = [row["url_hash"] for row in self._canonical_rows(cfg,
-                                                                     urls)]
-        evict_df = spark.createDataFrame([(h,) for h in requested],
-                                         "url_hash string")
+        requested = {row["url_hash"]
+                     for row in self._canonical_rows(cfg, urls)}
         # Evict only hashes actually IN the seen set: cuckoo deletion is
         # defined only for tracked insertions — deleting a never-inserted
         # hash could zero a colliding member's only fingerprint copy and
         # break the no-false-negative contract (cuckoo.py _delete).
-        hashes = sorted(row["url_hash"] for row in seen.join(
-            F.broadcast(evict_df), "url_hash", "left_semi")
-            .select("url_hash").distinct().collect())
-        remaining = seen.join(F.broadcast(evict_df), "url_hash", "left_anti")
-        self.catalog.append_round(remaining, "seen", r)
-
+        hashes = sorted(self._seen & requested)
+        self._seen -= requested
         deleted = False
-        if fam.delete_driver is not None:
-            prior = self._latest_bloom(spark, progress["round"])
-            if prior is not None:
-                cache, skipped = fam.delete_driver(prior, hashes)
-                deleted = not skipped
-        if not deleted:
-            # bloom (no deletion) / saturated segment: rebuild the
-            # cumulative filter from the compacted exact seen
-            cache = fam.build_driver([
-                row["url_hash"] for row in self.catalog.read_round_uncommitted(
-                    spark, "seen", r).collect()])
-        self._write_filter_driver(cache, r)
+        if fam.delete_driver is not None and self._bloom_mem is not None:
+            cache, skipped = fam.delete_driver(self._bloom_mem, hashes)
+            deleted = not skipped
+        # bloom (no deletion) / saturated segment / missing filter:
+        # rebuild the cumulative filter from the exact seen set
+        self._bloom_mem = (cache if deleted
+                           else fam.build_driver(sorted(self._seen)))
+        self._write_seen_state(r)
 
         meta = {**progress, "round": r, "finalized": True,
                 "pending_next": 0, "phase": "evicted",
                 "evicted": len(hashes), "filter_deletion": deleted}
         self.catalog.commit_round(r, ["seen", "bloom"], meta,
-                                  replace=["seen", "bloom"])
-        self._bloom_mem, self._bloom_mem_round = None, -1
+                                  replace=CUMULATIVE_TABLES)
         return meta
 
     def reenqueue_urls(self, cfg: CrawlConfig, urls: list[str]) -> dict:
@@ -541,7 +540,6 @@ class CrawlEngine:
         re-inserted — the other half of the cuckoo delete/insert round
         trip. `run(cfg, resume=True)` then fetches them (the admission
         limit still applies: pass a limit above the job's done count)."""
-        spark = self.spark
         progress = self._progress()
         if progress["round"] < 0:
             raise ValueError("no committed crawl state to enqueue into")
@@ -567,21 +565,16 @@ class CrawlEngine:
         }
         self.catalog.append_round_local(
             pa.table(cols, schema=FRONTIER_ARROW_SCHEMA), "pending", r)
-        hashes = [row["url_hash"] for row in rows]
-        self._write_seen_driver(hashes, r)
-        prior = self._latest_bloom(spark, progress["round"])
-        self._write_filter_driver(
-            fam.merge_driver(prior or {}, fam.build_driver(hashes)), r)
+        self._load_seen(progress["round"])
+        self._insert_seen(set(cols["url_hash"]) - self._seen, fam)
+        self._write_seen_state(r)
 
         meta = {**progress, "round": r, "finalized": False,
                 "enqueued": base + len(rows), "pending_next": len(rows),
                 "pending_seq_range": [base, max(base, base + len(rows) - 1)],
                 "phase": "recrawl_enqueued"}
-        # cumulative filter: retire the prior copy, like the round loop
         self.catalog.commit_round(r, ["pending", "seen", "bloom"], meta,
-                                  replace=["bloom"])
-        self._bloom_mem, self._bloom_mem_round = None, -1
-        self._pending_mem = None
+                                  replace=CUMULATIVE_TABLES)
         return meta
 
     # -- the round loop -----------------------------------------------------
@@ -719,12 +712,13 @@ class CrawlEngine:
 
     def run(self, cfg: CrawlConfig, resume: bool = False) -> dict:
         t0 = time.time()
-        # reset pipelining state: run() may be called again on one engine
-        # (resume/cancel tests); in-memory state from a prior run is stale
+        # reset pipelining and seen state: run() may be called again on one
+        # engine (resume/cancel tests); in-memory state from a prior run is
+        # stale
         self._prev_inflight = None
         self._graveyard = []
         self._pending_mem = None
-        self._seen_uncommitted = []
+        self._seen = self._seen_df = self._bloom_mem = None
         self._writes = ThreadPoolExecutor(max_workers=8)
         try:
             return self._run_loop(cfg, resume, t0)
@@ -760,8 +754,6 @@ class CrawlEngine:
         else:
             self.catalog.destroy()
             self.catalog = Catalog(self.catalog.root)
-            self._bloom_mem = None
-            self._bloom_mem_round = -1
             progress = {"round": -1, "done": 0, "failed": 0, "enqueued": 0, "finalized": False}
             round_no = 0
 
@@ -779,17 +771,16 @@ class CrawlEngine:
                 pa.table({c: [r[c] for r in rows] for c in FRONTIER_COLS},
                          schema=FRONTIER_ARROW_SCHEMA),
                 "pending", 0)
-            hashes = [r["url_hash"] for r in rows]
-            self._write_seen_driver(hashes, 0)
-            self._bloom_mem = fam.build_driver(hashes)
-            self._bloom_mem_round = 0
-            self._write_filter_driver(self._bloom_mem, 0)
+            self._seen = set()
+            self._insert_seen({r["url_hash"] for r in rows}, fam)
+            self._write_seen_state(0)
             progress = {"round": 0, "done": 0, "failed": 0, "enqueued": n_seed,
                         "finalized": n_seed == 0, "phase": "seeded",
                         "pending_next": n_seed,
                         "pending_seq_range": [0, max(0, n_seed - 1)],
                         "bloom_geometry": fam.geometry}
-            self.catalog.commit_round(0, ["pending", "seen", "bloom"], progress)
+            self.catalog.commit_round(0, ["pending", "seen", "bloom"],
+                                      progress, replace=CUMULATIVE_TABLES)
             round_no = 1
 
         extract_udf = make_extract_udf(
@@ -854,10 +845,10 @@ class CrawlEngine:
         admitted, deferred = self._admit(cfg, pending, ex, unbudgeted)
         docs, docs_view = self._fetch_extract(r, admitted, n_pending, n_view,
                                               ex)
-        seen = disc_fut = None
+        disc_fut = None
         if progress["enqueued"] < cfg.limit:
-            seen, disc_fut = self._submit_discovery(cfg, r, progress, docs,
-                                                   n_view, ex, fam)
+            disc_fut = self._submit_discovery(cfg, r, progress, docs, n_view,
+                                              ex, fam)
         t_plan = time.time()
         outcome_fut, doc_writes = self._submit_doc_writes(r, docs, docs_view,
                                                           ex)
@@ -877,8 +868,8 @@ class CrawlEngine:
         # whole round's compute to overlap with — commit its manifest, free
         # caches retired two rounds back) before this round's state writes.
         self._finalize_prev()
-        next_pending, state_writes, state_tables, replace = self._write_state(
-            cfg, r, pending, deferred, docs, new_rows, n_new, seen, ex, fam,
+        next_pending, state_writes, state_tables = self._write_state(
+            cfg, r, pending, deferred, docs, new_rows, n_new, ex, fam,
             pipelined)
         outcome_rows = outcome_fut.result()
         meta = self._round_meta(
@@ -891,7 +882,7 @@ class CrawlEngine:
         self._prev_inflight = {
             "round": r, "futures": doc_writes + state_writes,
             "tables": ["results", "visits", "metrics"] + state_tables,
-            "meta": meta, "replace": replace,
+            "meta": meta,
             "caches_now": [docs] if unbudgeted else [docs, admitted],
             # ranked is the localCheckpointed block holder; keeping the
             # reference until the next finalize stops the ContextCleaner
@@ -1015,8 +1006,8 @@ class CrawlEngine:
                           docs: DataFrame, n_view: int, ex: dict, fam):
         """Links → canonicalize → strategy/path/depth/robots filters →
         first-discovery-wins dedup → seen filter, then the ranked
-        frontier-delta checkpoint, submitted async. Returns (the seen set
-        read, the checkpoint future)."""
+        frontier-delta checkpoint, submitted async. Returns the checkpoint
+        future."""
         links = (
             docs.where(ex["status_200"])
             .select(*ex["links_pre"])
@@ -1040,15 +1031,13 @@ class CrawlEngine:
             .select(*ex["dedup_sel"])
         )
 
-        # seen filter: Bloom pre-filter + exact anti-join. Each bloom
-        # round checkpoint is CUMULATIVE (delta OR-merged into the prior
-        # round's segments at write time), so reading the seen-filter is
-        # one round directory — O(1) per round, not O(rounds) re-merges.
-        seen = self._read_seen(self.spark, r - 1)
-        if self._bloom_mem is None or self._bloom_mem_round != r - 1:
-            prior = self._latest_bloom(self.spark, up_to_round=r - 1)
-            if prior is not None:
-                self._bloom_mem, self._bloom_mem_round = prior, r - 1
+        # seen filter: Bloom pre-filter + exact anti-join against the
+        # driver-resident seen state — loaded from the checkpoint in a
+        # resumed run's first discovery round, then kept current by
+        # _write_seen. The anti-join's seen side is the one full-set file
+        # the last seen-writing round wrote synchronously.
+        if self._seen is None:
+            self._load_seen(r - 1)
         # The probabilistic pre-filter earns its keep only once the
         # seen set is large: below prefilter_min_seen hashes the exact
         # anti-join alone is measurably cheaper per round than the
@@ -1062,9 +1051,9 @@ class CrawlEngine:
             # driver-resident filter: hand the dict straight to the
             # probe (broadcast once per executor) — no per-row bitmap
             # column, no createDataFrame scan per round
-            links = fam.filter_new(links, self._bloom_mem, seen)
-        elif seen is not None:
-            links = exact_antijoin(links, seen)
+            links = fam.filter_new(links, self._bloom_mem, self._seen_df)
+        elif self._seen_df is not None:
+            links = exact_antijoin(links, self._seen_df)
         # Submitted BEFORE the outcome job so its one materialization runs
         # CONCURRENTLY with the outcome counts: both evaluate the cached
         # docs frame (block locks serialize per-partition compute), so
@@ -1074,8 +1063,8 @@ class CrawlEngine:
         # bucket boundaries don't affect the dense numbering, which orders
         # by bucket then (parent_seq, link_pos).
         lo, hi = progress["pending_seq_range"]
-        return seen, self._writes.submit(self._ranked_checkpoint, links, lo,
-                                         hi, n_view, ex)
+        return self._writes.submit(self._ranked_checkpoint, links, lo, hi,
+                                   n_view, ex)
 
     def _ranked_checkpoint(self, links: DataFrame, lo: int, hi: int,
                            n_view: int, ex: dict) -> DataFrame:
@@ -1189,12 +1178,11 @@ class CrawlEngine:
 
     def _write_state(self, cfg: CrawlConfig, r: int, pending: DataFrame,
                      deferred: DataFrame, docs: DataFrame,
-                     new_rows: DataFrame | None, n_new: int,
-                     seen: DataFrame | None, ex: dict, fam,
-                     pipelined: bool):
+                     new_rows: DataFrame | None, n_new: int, ex: dict,
+                     fam, pipelined: bool):
         """Round r's next pending, seen and bloom. Returns (the next
         round's pending frame, the pending write future, the state tables
-        written, the tables whose round chain this write replaces)."""
+        written)."""
         next_pending = deferred.select(*FRONTIER_COLS)
         if cfg.max_attempts > 1:
             retries = (
@@ -1231,76 +1219,29 @@ class CrawlEngine:
             next_pending = self.spark.read.schema(FRONTIER_SCHEMA).parquet(
                 self.catalog.round_path("pending", r))
         if n_new == 0:
-            tables, replace = ["pending"], []
-        else:
-            compact_seen = self._write_seen(cfg, r, new_rows, seen, fam)
-            # every bloom checkpoint is the full cumulative filter and only
-            # the newest committed round is ever read (_latest_bloom), so
-            # each commit retires the previous copy — otherwise an unbounded
-            # crawl stores O(rounds) superseded full-filter copies
-            tables = ["pending", "seen", "bloom"]
-            replace = ["bloom", "seen"] if compact_seen else ["bloom"]
-        if self._bloom_mem is not None:
-            # cumulative through this round whether or not a delta was added
-            self._bloom_mem_round = r
-        return next_pending, futures, tables, replace
+            return next_pending, futures, ["pending"]
+        self._write_seen(r, new_rows, fam)
+        return next_pending, futures, ["pending"] + CUMULATIVE_TABLES
 
-    def _write_seen(self, cfg: CrawlConfig, r: int, new_rows: DataFrame,
-                    seen: DataFrame | None, fam) -> bool:
-        """Append round r's new hashes to the seen set and merge them into
-        the cumulative filter. Returns whether the seen write was a
-        compaction."""
-        # seen compaction: the seen read unions every committed round's
-        # directory, so an unbounded crawl pays O(rounds) listing/open
-        # cost per round. Every K seen-writing rounds this round's write
-        # holds the full cumulative hash set instead of the delta and
-        # the manifest swap (atomic with the round commit) replaces the
-        # delta chain — read cost stays O(1) directories. The Iceberg
-        # deployment equivalent is snapshot compaction.
-        compact_seen = (
-            cfg.seen_compact_every > 0 and seen is not None
-            and len(self.catalog.committed_rounds("seen"))
-            + len(self._seen_uncommitted)
-            >= cfg.seen_compact_every)
-        if compact_seen:
-            # synchronous: the NEXT round's anti-join reads this file
-            # before its manifest commit lands (write pipelining)
-            self.catalog.append_round(
-                seen.unionByName(new_rows.select("url_hash")), "seen", r)
-            self._seen_uncommitted.append(
-                (r, self.catalog.round_path("seen", r), True))
-        # incremental checkpoint: merge this round's delta into the
-        # previous cumulative segment set ONCE, write it as round r. The
-        # new hashes are collected once (the per-round delta is bounded
-        # by the job's enqueue limit), the delta is built and merged in
-        # numpy, and BOTH the seen delta and the cumulative filter are
-        # written with pyarrow on the driver — no Spark job.
+    def _write_seen(self, r: int, new_rows: DataFrame, fam) -> None:
+        """Add round r's new hashes to the driver-resident seen state and
+        checkpoint it as round r. The hashes are collected once (the
+        round's delta is bounded by the job's enqueue limit); the filter
+        merge and both writes run on the driver — no Spark job."""
         hashes = [row["url_hash"]
                   for row in new_rows.select("url_hash").collect()]
-        # exact_antijoin / prefilter_antijoin skip distinct() on the
-        # seen side because every delta holds each hash once
-        if len(set(hashes)) != len(hashes):
+        new = set(hashes)
+        # both invariants keep every URL to one visit: in-batch dedup
+        # yields each new hash once, and the exact anti-join drops every
+        # hash already seen
+        if len(new) != len(hashes):
             raise AssertionError(
                 f"round {r} seen delta holds duplicate url hashes")
-        if not compact_seen:
-            self._write_seen_driver(hashes, r)
-            self._seen_uncommitted.append(
-                (r, self.catalog.round_path("seen", r), False))
-        build_hashes = hashes
-        if self._bloom_mem is None and seen is not None:
-            # prior bloom checkpoint missing/corrupt (filter_new
-            # degraded to the exact anti-join): REBUILD the cumulative
-            # filter from the seen history — committing a delta-only
-            # bitmap as 'cumulative' would bake in permanent false
-            # negatives for every pre-corruption URL. Bounded by the
-            # zod limit cap on enqueued rows.
-            build_hashes = hashes + [
-                row["url_hash"]
-                for row in seen.select("url_hash").collect()]
-        self._bloom_mem = fam.merge_driver(self._bloom_mem or {},
-                                           fam.build_driver(build_hashes))
-        self._write_filter_driver(self._bloom_mem, r)
-        return compact_seen
+        if not new.isdisjoint(self._seen):
+            raise AssertionError(
+                f"round {r} seen delta holds already-seen url hashes")
+        self._insert_seen(new, fam)
+        self._write_seen_state(r)
 
     @staticmethod
     def _round_meta(cfg: CrawlConfig, r: int, progress: dict,

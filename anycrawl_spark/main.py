@@ -56,7 +56,6 @@ def cmd_crawl(args) -> None:
         scrape_paths=args.scrape_paths or [],
         politeness_budget=args.budget, budget_scope=args.budget_scope,
         respect_robots=args.robots is not None,
-        seen_compact_every=args.seen_compact_every,
         seen_filter=args.seen_filter,
         proxy=args.proxy,
     )
@@ -290,9 +289,6 @@ def main(argv=None) -> None:
                    choices=["bloom", "cuckoo"],
                    help="URL-seen pre-filter family (north rule "
                         "'Bloom/cuckoo'); results are identical")
-    p.add_argument("--seen-compact-every", type=int, default=8,
-                   help="rewrite the seen table cumulatively every K "
-                        "seen-writing rounds (0 disables)")
     p.add_argument("--page-cache", default=None,
                    help="directory of a page-cache table to upsert this "
                         "job's admissible results into (the reference "

@@ -35,6 +35,20 @@ def run_engine(spark, corpus, tmp_root, name, robots=None, **cfg_kwargs):
     return engine, summary, visits, seen
 
 
+def assert_one_state_copy(catalog):
+    """Seen and bloom are checkpointed cumulatively: one committed round
+    each, and every table's on-disk round=* dirs are exactly its committed
+    rounds (superseded copies and uncommitted writes are gone)."""
+    assert len(catalog.committed_rounds("seen")) == 1
+    assert len(catalog.committed_rounds("bloom")) == 1
+    for table_dir in catalog.root.iterdir():
+        if table_dir.is_dir():
+            on_disk = {int(p.name.split("=", 1)[1])
+                       for p in table_dir.glob("round=*")}
+            assert on_disk == set(catalog.committed_rounds(table_dir.name)), \
+                table_dir.name
+
+
 def sim_visits(sim):
     return [(v.seq, v.url, v.depth, v.status) for v in sorted(sim.visits, key=lambda v: v.seq)]
 
@@ -204,53 +218,24 @@ class TestResume:
             assert metas and metas[0]["phase"] == "seeded"
             for m in metas:
                 assert "pending_next" in m and "pending_seq_range" in m, m
+            assert_one_state_copy(engine.catalog)
 
 
-class TestSeenCompaction:
-    def test_compaction_preserves_crawl_and_bounds_dirs(self, spark, small_corpus,
-                                                        tmp_root):
-        """seen_compact_every=2 must crawl identically to the uncompacted
-        run, keep the seen table content equal, and bound the number of
-        committed seen round directories; resume across a compaction point
-        stays exact."""
-        kw = dict(seed_url=SEED, strategy="same-hostname", max_depth=6,
-                  limit=40, respect_robots=False)
+class TestSeenInvariant:
+    def test_already_seen_hash_raises(self, spark, small_corpus, tmp_root,
+                                      monkeypatch):
+        """The exact anti-join's contract is asserted where the seen delta
+        is produced: a round enqueueing an already-seen hash (a second
+        visit) raises instead of committing."""
+        import anycrawl_spark.crawl as crawl_mod
 
-        plain_dir = os.path.join(tmp_root, "seen_plain")
-        plain = CrawlEngine(spark, small_corpus, plain_dir)
-        plain.run(CrawlConfig(job_id="sc", seen_compact_every=0, **kw))
-        plain_visits = [(r["seq"], r["url"]) for r in plain.visit_order().collect()]
-        plain_seen = {r["url_hash"] for r in
-                      plain.catalog.read(spark, "seen").collect()}
-
-        comp_dir = os.path.join(tmp_root, "seen_comp")
-        comp = CrawlEngine(spark, small_corpus, comp_dir)
-        comp.run(CrawlConfig(job_id="sc", seen_compact_every=2, **kw))
-        comp_visits = [(r["seq"], r["url"]) for r in comp.visit_order().collect()]
-        comp_seen = {r["url_hash"] for r in
-                     comp.catalog.read(spark, "seen").collect()}
-
-        assert comp_visits == plain_visits
-        assert comp_seen == plain_seen
-        assert (len(comp.catalog.committed_rounds("seen"))
-                <= 3 < len(plain.catalog.committed_rounds("seen")))
-        # superseded delta directories were physically removed
-        import glob as _glob
-
-        on_disk = {int(p.rsplit("=", 1)[1]) for p in
-                   _glob.glob(os.path.join(comp_dir, "seen", "round=*"))}
-        assert on_disk == set(comp.catalog.committed_rounds("seen"))
-
-        # resume across a compaction boundary reproduces the full crawl
-        part_dir = os.path.join(tmp_root, "seen_comp_part")
-        part = CrawlEngine(spark, small_corpus, part_dir)
-        part.run(CrawlConfig(job_id="sc", seen_compact_every=2, max_rounds=3, **kw))
-        resumed = CrawlEngine(spark, small_corpus, part_dir)
-        resumed.run(CrawlConfig(job_id="sc", seen_compact_every=2, **kw),
-                    resume=True)
-        resumed_visits = [(r["seq"], r["url"])
-                          for r in resumed.visit_order().collect()]
-        assert resumed_visits == plain_visits
+        monkeypatch.setattr(crawl_mod, "exact_antijoin",
+                            lambda links, seen: links)
+        engine = CrawlEngine(spark, small_corpus,
+                             os.path.join(tmp_root, "seen_disjoint"))
+        with pytest.raises(AssertionError, match="already-seen"):
+            engine.run(CrawlConfig(job_id="sd", seed_url=SEED, limit=10,
+                                   respect_robots=False))
 
 
 class TestExtractionParity:
@@ -603,70 +588,94 @@ class TestCorpusDedup:
 
 class TestPipelinedCheckpointing:
     """Regression tests for the round-4 write pipelining: deferred commits,
-    back-to-back seen compaction over in-flight files, and resume from a
-    checkpoint whose newest round's writes landed but whose manifest commit
-    never did (the crash window pipelining introduces)."""
+    a crash inside a deferred commit, resume through the bloom rebuild, and
+    resume validation."""
 
-    def test_compact_every_round_matches_default(self, spark, small_corpus, tmp_root):
-        kw = dict(seed_url=SEED, strategy="same-hostname", max_depth=5,
-                  limit=40, respect_robots=False)
+    KW = dict(seed_url=SEED, strategy="same-hostname", max_depth=5,
+              limit=40, respect_robots=False)
 
-        base_dir = os.path.join(tmp_root, "pc_base")
-        engine_base = CrawlEngine(spark, small_corpus, base_dir)
-        engine_base.run(CrawlConfig(job_id="pc", **kw))
-        base_visits = [(r["seq"], r["url"]) for r in
-                       engine_base.visit_order().collect()]
+    def _crawl(self, spark, small_corpus, d, resume=False, **kw):
+        engine = CrawlEngine(spark, small_corpus, d)
+        engine.run(CrawlConfig(job_id="pc", **{**self.KW, **kw}),
+                   resume=resume)
+        return engine
 
-        # seen_compact_every=1: every seen-writing round compacts; the
-        # compaction write reads the PREVIOUS round's uncommitted compacted
-        # file after the prior commit deleted the superseded delta dirs —
-        # this crashed with FileNotFound before _read_seen learned to drop
-        # superseded rounds from the plan.
-        c_dir = os.path.join(tmp_root, "pc_compact1")
-        engine_c = CrawlEngine(spark, small_corpus, c_dir)
-        engine_c.run(CrawlConfig(job_id="pc", seen_compact_every=1, **kw))
-        c_visits = [(r["seq"], r["url"]) for r in
-                    engine_c.visit_order().collect()]
-        assert c_visits == base_visits
-        # compaction keeps the committed seen table at one directory
-        assert len(engine_c.catalog.committed_rounds("seen")) == 1
+    @staticmethod
+    def _state(spark, engine):
+        visits = [(r["seq"], r["url"], r["depth"], r["status"])
+                  for r in engine.visit_order().collect()]
+        results = {(r["url"], r["markdown"], r["text"]) for r in
+                   engine.results().select("url", "markdown", "text")
+                   .collect()}
+        seen = {r["url_hash"] for r in
+                engine.catalog.read(spark, "seen").collect()}
+        return visits, results, seen
 
-    def test_resume_after_uncommitted_tail(self, spark, small_corpus, tmp_root):
+    @pytest.mark.parametrize("point", ["before_manifest", "after_manifest"])
+    def test_crash_inside_commit_resumes_exact(self, spark, small_corpus,
+                                               tmp_root, monkeypatch, point):
+        """A crash inside round 3's deferred commit — before its manifest
+        write, or after it but before the superseded copies are deleted —
+        resumes to the uninterrupted crawl with one seen and bloom copy."""
+        from anycrawl_spark.catalog import Catalog
+
+        full = self._crawl(spark, small_corpus,
+                           os.path.join(tmp_root, f"pc_full_{point}"))
+        # round 3 adds seen hashes: its commit retires the prior seen and
+        # bloom copies
+        assert full.catalog.round_meta(3)["new"] > 0
+
+        class Crash(Exception):
+            pass
+
+        write_manifest = Catalog._write_manifest
+
+        def crashing(catalog, manifest):
+            if "3" not in manifest["meta"]:
+                return write_manifest(catalog, manifest)
+            if point == "after_manifest":
+                write_manifest(catalog, manifest)
+            raise Crash(point)
+
+        d = os.path.join(tmp_root, f"pc_crash_{point}")
+        with monkeypatch.context() as m:
+            m.setattr(Catalog, "_write_manifest", crashing)
+            with pytest.raises(Crash):
+                self._crawl(spark, small_corpus, d)
+        resumed = self._crawl(spark, small_corpus, d, resume=True)
+        assert self._state(spark, resumed) == self._state(spark, full)
+        assert_one_state_copy(resumed.catalog)
+
+    def test_bloom_rebuilt_from_seen_on_resume(self, spark, small_corpus,
+                                               tmp_root):
+        """A checkpoint that lost its bloom filter resumes through the
+        rebuild-from-seen path: the crawl is unchanged and the rebuilt
+        filter reports maybe-seen for every committed seen hash."""
         import json
         import shutil
 
-        kw = dict(seed_url=SEED, strategy="same-hostname", max_depth=5,
-                  limit=40, respect_robots=False)
+        from anycrawl_spark.seen import bloom_probe
 
-        full_dir = os.path.join(tmp_root, "pc_full")
-        engine_full = CrawlEngine(spark, small_corpus, full_dir)
-        engine_full.run(CrawlConfig(job_id="pc", **kw))
-        full_visits = [(r["seq"], r["url"], r["depth"], r["status"]) for r in
-                       engine_full.visit_order().collect()]
-
-        # simulate the pipelining crash window: round N's files are on disk
-        # but its manifest commit never happened — rewind the manifest by
-        # one round and leave the directories in place
-        part_dir = os.path.join(tmp_root, "pc_part")
-        engine_part = CrawlEngine(spark, small_corpus, part_dir)
-        engine_part.run(CrawlConfig(job_id="pc", **kw))
-        mpath = os.path.join(part_dir, "_manifest.json")
+        full = self._crawl(spark, small_corpus,
+                           os.path.join(tmp_root, "pc_rebuild_full"))
+        d = os.path.join(tmp_root, "pc_rebuild")
+        self._crawl(spark, small_corpus, d, max_rounds=2)
+        mpath = os.path.join(d, "_manifest.json")
         with open(mpath) as f:
             manifest = json.load(f)
-        last = max(int(k) for k in manifest["meta"])
-        victims = [r for r in range(last - 1, last + 1)]  # drop final 2 rounds
-        for table, rounds in manifest["tables"].items():
-            manifest["tables"][table] = [r for r in rounds if r not in victims]
-        for v in victims:
-            manifest["meta"].pop(str(v), None)
+        for rr in manifest["tables"].pop("bloom"):
+            shutil.rmtree(os.path.join(d, "bloom", f"round={rr}"))
         with open(mpath, "w") as f:
             json.dump(manifest, f)
 
-        engine_resumed = CrawlEngine(spark, small_corpus, part_dir)
-        engine_resumed.run(CrawlConfig(job_id="pc", **kw), resume=True)
-        resumed_visits = [(r["seq"], r["url"], r["depth"], r["status"]) for r in
-                          engine_resumed.visit_order().collect()]
-        assert resumed_visits == full_visits
+        resumed = self._crawl(spark, small_corpus, d, resume=True)
+        visits, _, seen = self._state(spark, resumed)
+        assert visits == self._state(spark, full)[0]
+        segs = resumed._latest_bloom(spark, resumed.catalog.last_round())
+        assert segs is not None
+        nb, m_bits, k = CrawlConfig(job_id="pc", **self.KW).filter_family(
+            ).geometry
+        assert bloom_probe(sorted(seen), segs, nb, m_bits, k).all()
 
     def test_run_failure_releases_executor(self, spark, small_corpus, tmp_root):
         # resume-validation failure path: executor must not leak
@@ -760,6 +769,7 @@ class TestRecrawlEviction:
             spark, "seen").select("url_hash").collect()}
         assert victim_hashes.isdisjoint(seen_now)
         assert len(seen_now) == s1["enqueued"] - 3
+        assert_one_state_copy(eng.catalog)
         # the amended filter + exact seen treat victims as new again
         fam = cfg.filter_family()
         cand = eng._canonical_rows(cfg, expired)
@@ -773,6 +783,7 @@ class TestRecrawlEviction:
         meta_q = eng.reenqueue_urls(cfg, expired)
         assert meta_q["pending_next"] == 3
         assert meta_q["enqueued"] == s1["enqueued"] + 3
+        assert_one_state_copy(eng.catalog)
         s2 = eng.run(CrawlConfig(job_id="rc", **{**kw, "limit": 43}),
                      resume=True)
         assert s2["done"] == s1["done"] + 3
@@ -792,6 +803,7 @@ class TestRecrawlEviction:
         seen_after = {r["url_hash"] for r in eng.catalog.read(
             spark, "seen").select("url_hash").collect()}
         assert victim_hashes <= seen_after
+        assert_one_state_copy(eng.catalog)
 
 
 class TestPrefilterGate:
