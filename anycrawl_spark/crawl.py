@@ -13,7 +13,7 @@ Each round r is one Spark batch over immutable checkpointed state:
                   path / depth / robots filters → in-batch dedup
                →  Bloom pre-filter + exact anti-join vs seen set
                →  enqueue-cap top-k → seq assignment → pending_{r+1}
-               →  seen set + cumulative filter (full copies), progress,
+               →  seen set + the filter built from it (full copies), progress,
                   per-partition lineage appended; manifest commit (atomic)
                   → resumable
 
@@ -109,10 +109,6 @@ class CrawlConfig:
                                          # results are byte-identical — the
                                          # filter only pre-routes candidates
                                          # ahead of the exact anti-join
-    bloom_num_buckets: int = 32          # hash-space shards (both families)
-    bloom_m_bits: int = 1 << 17
-    bloom_k: int = 4
-    cuckoo_n_slots: int = 1 << 12        # 4-way cuckoo buckets per segment
     max_rounds: int = 1000
     simulate_fetch_errors: bool = False  # F11: draw all five failure classes
                                          # from corpus misses (tests/fixtures)
@@ -158,23 +154,13 @@ class CrawlConfig:
                              f"got {self.budget_salt_n!r}")
         if self.seen_filter not in ("bloom", "cuckoo"):
             raise ValueError(f"unknown seen_filter {self.seen_filter!r}")
-        from anycrawl_spark.cuckoo import check_n_slots
-
-        check_n_slots(self.cuckoo_n_slots)
-        # the engine's seen filter is driver-resident (built, merged and
-        # written on the driver); at the 50k limit 64 MiB is already
-        # >= 10^4 bits per URL
-        if self.filter_family().total_bytes > 64 * 2**20:
-            raise ValueError("seen-filter geometry exceeds 64 MiB")
 
     def filter_family(self):
-        """The configured seen-filter family with geometry bound."""
+        """The configured seen-filter family at its module-default
+        geometry."""
         from anycrawl_spark.seen import filter_family
 
-        return filter_family(
-            self.seen_filter, num_buckets=self.bloom_num_buckets,
-            m_bits=self.bloom_m_bits, k=self.bloom_k,
-            n_slots=self.cuckoo_n_slots)
+        return filter_family(self.seen_filter)
 
 
 def _strip_fragment(col):
@@ -288,7 +274,8 @@ class CrawlEngine:
         # driver-resident seen state, cumulative through the newest round
         # this run wrote (or, on resume, loaded by _load_seen): the exact
         # set, the frame over the one file holding it (the anti-join's
-        # seen side) and the filter segments. run() resets it.
+        # seen side) and the filter segments built from that set. run()
+        # resets it.
         self._seen: set[str] | None = None
         self._seen_df: DataFrame | None = None
         self._bloom_mem: dict[int, bytes] | None = None
@@ -315,9 +302,8 @@ class CrawlEngine:
     def _latest_bloom(self, spark: SparkSession,
                       up_to_round: int) -> dict[int, bytes] | None:
         """Newest committed bloom round ≤ ``up_to_round`` as a driver dict.
-        Bloom checkpoints are cumulative (each round's write is the merge of
-        its delta into the prior checkpoint), so the newest round alone IS
-        the seen filter — no per-round history re-merge."""
+        Each bloom round is the filter built from the full seen set it was
+        committed with, so the newest round alone IS the seen filter."""
         rounds = [rr for rr in self.catalog.committed_rounds("bloom")
                   if rr <= up_to_round]
         if not rounds:
@@ -328,8 +314,10 @@ class CrawlEngine:
     def _load_seen(self, up_to_round: int) -> None:
         """Load the committed seen state through ``up_to_round`` onto the
         driver: the exact set (pyarrow reads, no Spark job), the frame over
-        its files, and the cumulative filter (None when no bloom round is
-        committed — the next seen write rebuilds it from the exact set).
+        its files, and the committed filter, which serves the probe until
+        the next seen write rebuilds it from the exact set (None when no
+        bloom round is committed: the probe then falls back to the exact
+        anti-join).
         This engine commits one full-set seen round; a per-round delta
         chain written by an older engine loads as the union of its rounds,
         and the next seen write replaces it with one full copy."""
@@ -416,20 +404,22 @@ class CrawlEngine:
         return _canonical_cols(seed, "url").select(*FRONTIER_COLS)
 
     # -- TTL eviction / monitor recrawl --------------------------------------
-    # Deployment story (cuckoo.py module docstring): when a page-cache entry
-    # passes its TTL tier (cache.py — page 2d / sitemap 7d), the monitor
-    # evicts the URL from the URL-seen structures and re-enqueues it, so the
-    # next `run(cfg, resume=True)` fetches a fresh copy. Both steps are
-    # atomic manifest commits between runs.
+    # Deployment story: when a page-cache entry passes its TTL tier
+    # (cache.py — page 2d / sitemap 7d), the monitor evicts the URL from
+    # the URL-seen structures and re-enqueues it, so the next
+    # `run(cfg, resume=True)` fetches a fresh copy. Both steps are atomic
+    # manifest commits between runs.
 
     def _check_geometry(self, fam) -> None:
         """Filter family + geometry are baked into every checkpointed
-        segment — resuming, evicting, or re-enqueuing with different
-        parameters would read wrong bit positions / fingerprints (false
-        negatives or IndexError in the tester) or commit wrong-geometry
-        segments a later resume then trusts. Bloom keeps the historic
-        [nb, m_bits, k] fingerprint shape; cuckoo prepends its family tag,
-        so a family switch always mismatches."""
+        segment, and the first resumed round probes the committed filter
+        before any rebuild — resuming, evicting, or re-enqueuing under a
+        different family would read wrong bit positions / fingerprints
+        (false negatives or IndexError in the tester). Bloom keeps the
+        historic [nb, m_bits, k] fingerprint shape; cuckoo prepends its
+        family tag, so a family switch always mismatches, as does a
+        checkpoint written with a geometry other than the module
+        defaults."""
         seeded = self.catalog.round_meta(0) or {}
         fp = seeded.get("bloom_geometry")
         if fp is not None and fp != fam.geometry:
@@ -451,31 +441,19 @@ class CrawlEngine:
                 rows.append(row)
         return rows
 
-    def _insert_seen(self, hashes: set[str], fam) -> None:
-        """Add hashes to the driver-resident seen set and filter. With no
-        filter (its checkpoint missing or corrupt) the filter is REBUILT
-        from the whole exact set — committing a delta-only filter as
-        cumulative would bake in permanent false negatives for every
-        earlier URL. Builds take sorted hashes so checkpoint bytes are
-        deterministic."""
-        self._seen |= hashes
-        if self._bloom_mem is None:
-            self._bloom_mem = fam.build_driver(sorted(self._seen))
-        else:
-            self._bloom_mem = fam.merge_driver(
-                self._bloom_mem, fam.build_driver(sorted(hashes)))
-
-    def _write_seen_state(self, round_no: int) -> None:
-        """Checkpoint the driver-resident seen state as ``round_no``: the
-        FULL exact set (sorted) and the cumulative filter, two pyarrow
-        writes with no Spark job. The caller commits both with
+    def _write_seen_state(self, round_no: int, fam) -> None:
+        """Checkpoint the driver-resident seen set as ``round_no``: the
+        FULL exact set (sorted) and the filter built from it — the filter's
+        one producer, so every committed bloom round equals
+        ``fam.build_driver`` of the seen round beside it. Two pyarrow
+        writes, no Spark job. The caller commits both with
         replace=CUMULATIVE_TABLES; until that (deferred) commit lands, the
         next round's anti-join reads this file."""
+        ordered = sorted(self._seen)
+        self._bloom_mem = cache = fam.build_driver(ordered)
         self.catalog.append_round_local(
-            pa.table({"url_hash": pa.array(sorted(self._seen),
-                                           type=pa.string())}),
+            pa.table({"url_hash": pa.array(ordered, type=pa.string())}),
             "seen", round_no)
-        cache = self._bloom_mem
         self.catalog.append_round_local(
             pa.table({
                 "bucket": pa.array(sorted(cache), type=pa.int32()),
@@ -487,12 +465,10 @@ class CrawlEngine:
 
     def evict_urls(self, cfg: CrawlConfig, urls: list[str]) -> dict:
         """Remove URLs from the committed seen state (TTL expiry): the
-        exact seen set loses the evicted hashes, and the cumulative filter
-        is amended — cuckoo via true deletion (fam.delete_driver; one copy
-        per distinct key makes it collision-safe), bloom or a saturated
-        cuckoo segment via a full rebuild from the exact seen set (the
-        same rebuild remedy resume applies to corrupt segments). One
-        commit, replace=['seen','bloom']."""
+        exact seen set loses the evicted hashes and the filter is rebuilt
+        from what is left, for both families. ``evicted`` counts only
+        requested hashes that were members. One commit,
+        replace=['seen','bloom']."""
         progress = self._progress()
         if progress["round"] < 0:
             raise ValueError("no committed crawl state to evict from")
@@ -508,27 +484,14 @@ class CrawlEngine:
         self._load_seen(progress["round"])
         if self._seen_df is None:
             raise ValueError("no seen state committed yet")
-        requested = {row["url_hash"]
-                     for row in self._canonical_rows(cfg, urls)}
-        # Evict only hashes actually IN the seen set: cuckoo deletion is
-        # defined only for tracked insertions — deleting a never-inserted
-        # hash could zero a colliding member's only fingerprint copy and
-        # break the no-false-negative contract (cuckoo.py _delete).
-        hashes = sorted(self._seen & requested)
-        self._seen -= requested
-        deleted = False
-        if fam.delete_driver is not None and self._bloom_mem is not None:
-            cache, skipped = fam.delete_driver(self._bloom_mem, hashes)
-            deleted = not skipped
-        # bloom (no deletion) / saturated segment / missing filter:
-        # rebuild the cumulative filter from the exact seen set
-        self._bloom_mem = (cache if deleted
-                           else fam.build_driver(sorted(self._seen)))
-        self._write_seen_state(r)
+        evicted = self._seen & {row["url_hash"]
+                                for row in self._canonical_rows(cfg, urls)}
+        self._seen -= evicted
+        self._write_seen_state(r, fam)
 
         meta = {**progress, "round": r, "finalized": True,
                 "pending_next": 0, "phase": "evicted",
-                "evicted": len(hashes), "filter_deletion": deleted}
+                "evicted": len(evicted)}
         self.catalog.commit_round(r, ["seen", "bloom"], meta,
                                   replace=CUMULATIVE_TABLES)
         return meta
@@ -536,10 +499,10 @@ class CrawlEngine:
     def reenqueue_urls(self, cfg: CrawlConfig, urls: list[str]) -> dict:
         """Enqueue URLs as a fresh pending round (the monitor re-check):
         frontier rows at depth 0 with enqueue seqs continuing the job's
-        dense numbering, hashes re-marked seen, and the cumulative filter
-        re-inserted — the other half of the cuckoo delete/insert round
-        trip. `run(cfg, resume=True)` then fetches them (the admission
-        limit still applies: pass a limit above the job's done count)."""
+        dense numbering, hashes re-marked seen, and the filter rebuilt from
+        the grown set — the other half of the evict round trip.
+        `run(cfg, resume=True)` then fetches them (the admission limit
+        still applies: pass a limit above the job's done count)."""
         progress = self._progress()
         if progress["round"] < 0:
             raise ValueError("no committed crawl state to enqueue into")
@@ -566,8 +529,8 @@ class CrawlEngine:
         self.catalog.append_round_local(
             pa.table(cols, schema=FRONTIER_ARROW_SCHEMA), "pending", r)
         self._load_seen(progress["round"])
-        self._insert_seen(set(cols["url_hash"]) - self._seen, fam)
-        self._write_seen_state(r)
+        self._seen |= set(cols["url_hash"])
+        self._write_seen_state(r, fam)
 
         meta = {**progress, "round": r, "finalized": False,
                 "enqueued": base + len(rows), "pending_next": len(rows),
@@ -771,9 +734,8 @@ class CrawlEngine:
                 pa.table({c: [r[c] for r in rows] for c in FRONTIER_COLS},
                          schema=FRONTIER_ARROW_SCHEMA),
                 "pending", 0)
-            self._seen = set()
-            self._insert_seen({r["url_hash"] for r in rows}, fam)
-            self._write_seen_state(0)
+            self._seen = {r["url_hash"] for r in rows}
+            self._write_seen_state(0, fam)
             progress = {"round": 0, "done": 0, "failed": 0, "enqueued": n_seed,
                         "finalized": n_seed == 0, "phase": "seeded",
                         "pending_next": n_seed,
@@ -1227,7 +1189,7 @@ class CrawlEngine:
         """Add round r's new hashes to the driver-resident seen state and
         checkpoint it as round r. The hashes are collected once (the
         round's delta is bounded by the job's enqueue limit); the filter
-        merge and both writes run on the driver — no Spark job."""
+        build and both writes run on the driver — no Spark job."""
         hashes = [row["url_hash"]
                   for row in new_rows.select("url_hash").collect()]
         new = set(hashes)
@@ -1240,8 +1202,8 @@ class CrawlEngine:
         if not new.isdisjoint(self._seen):
             raise AssertionError(
                 f"round {r} seen delta holds already-seen url hashes")
-        self._insert_seen(new, fam)
-        self._write_seen_state(r)
+        self._seen |= new
+        self._write_seen_state(r, fam)
 
     @staticmethod
     def _round_meta(cfg: CrawlConfig, r: int, progress: dict,

@@ -8,23 +8,22 @@ rejects are definitely new (no false negatives), rows it flags pay the exact
 anti-join — so crawl results are byte-identical whichever family is
 configured. What cuckoo buys over Bloom at deployment scale:
 
-- **deletion**: a fingerprint can be evicted without rebuilding the segment
-  (the recrawl/TTL story: when a page-cache entry expires, its URL can be
-  removed from the seen set so a monitor job re-enqueues it; a Bloom bit
-  can never be cleared because it is shared by other keys);
 - **bounded lookup cost**: membership probes exactly 2 buckets x 4 slots,
   independent of load, vs k scattered bit reads;
 - **higher load factor at equal FP rate**: 16-bit fingerprints in 4-way
   buckets give ~0.012% FP up to ~95% occupancy.
 
+The crawl engine rebuilds the filter from its exact seen set at every
+seen-state write, TTL eviction included, so the table is never merged or
+deleted from: it is derived state with one producer (the driver build).
+
 Layout per hash-space bucket (same ``sha2(canonical_url, 256)`` sharding as
 the Bloom family): a partial-key cuckoo table [Fan et al., CoNEXT'14 —
 public algorithm] of ``n_slots`` 4-way buckets holding 16-bit fingerprints
 (uint16 little-endian, 0 = empty), serialized as ``1 saturation-flag byte +
-table bytes``. The alternate index is ``i XOR H(fp)`` so an entry's other
+table bytes``. The alternate index is ``i XOR H(fp)``, so an entry's other
 bucket is recoverable from (slot index, fingerprint) alone — which is what
-makes **merge by re-insertion** possible (the per-round cumulative
-checkpoint merge in the crawl engine) without keeping the original keys.
+lets the eviction chain move a fingerprint without its original key.
 
 Saturation is the no-false-negative escape hatch: if an insert exhausts its
 eviction chain (table effectively full), the segment is flagged saturated
@@ -83,9 +82,9 @@ def _fp_i1(hash_hex: str, n_slots: int) -> tuple[int, int]:
 
 
 def _alt(i: int, fp: int, n_slots: int) -> int:
-    # partial-key alternate index: involution (alt(alt(i)) == i), so either
-    # resident bucket works as the "primary" when re-inserting during merges;
-    # also applies elementwise to int64 arrays (fp * _FP_MIX < 2**47)
+    # partial-key alternate index: involution (alt(alt(i)) == i), so an
+    # evicted fingerprint's other bucket follows from where it sat; also
+    # applies elementwise to int64 arrays (fp * _FP_MIX < 2**47)
     return (i ^ (fp * _FP_MIX)) & (n_slots - 1)
 
 
@@ -135,18 +134,6 @@ def _contains(arr: np.ndarray, fp: int, i1: int, n_slots: int) -> bool:
     return False
 
 
-def _delete(arr: np.ndarray, fp: int, i1: int, n_slots: int) -> bool:
-    """Remove one copy of ``fp`` (safe only for keys actually inserted —
-    the standard cuckoo-filter deletion contract)."""
-    for i in (i1, _alt(i1, fp, n_slots)):
-        base = i * SLOT_WIDTH
-        for s in range(SLOT_WIDTH):
-            if arr[base + s] == fp:
-                arr[base + s] = 0
-                return True
-    return False
-
-
 def _encode(arr: np.ndarray, saturated: bool) -> bytes:
     return bytes([1 if saturated else 0]) + arr.astype("<u2").tobytes()
 
@@ -157,12 +144,9 @@ def _decode(blob: bytes) -> tuple[np.ndarray, bool]:
 
 
 def _build_table(hashes, n_slots: int) -> bytes:
-    """One fingerprint copy is stored PER DISTINCT KEY, even when two keys
-    collide on (fp, bucket pair) — the standard cuckoo-filter rule that
-    makes deletion safe (removing one key's copy must not erase another
-    key's membership; a shared slot would turn deletion into a false
-    negative). Input keys themselves are dedup'd (set): re-inserting the
-    same URL twice is idempotent, not a second copy."""
+    """One segment's table from its keys. Input keys are dedup'd (set):
+    the same URL twice is one fingerprint copy; two distinct keys that
+    collide on (fp, bucket pair) keep a copy each."""
     arr = _new_table(n_slots)
     saturated = False
     # sorted: reproducible checkpoint bytes
@@ -203,83 +187,6 @@ def build_segments_driver(hashes, num_buckets: int = 32,
     return {b: _build_table(hashes[rows], n_slots)
             for b, rows in bucket_groups(
                 bucket_ids(hex_nibbles(hashes), num_buckets))}
-
-
-def _merge_tables(blobs: list[bytes], n_slots: int) -> bytes:
-    """Merge cuckoo tables by re-inserting every occupied fingerprint of the
-    smaller tables into the fullest one. Possible without the original keys
-    because the alternate index is recoverable from (slot index, fp). Any
-    saturated input — or a failed re-insert — saturates the result (a
-    saturated table's contents are incomplete, so only the
-    everything-is-maybe-seen reading stays false-negative-free)."""
-    decoded = [_decode(b) for b in blobs]
-    if any(sat for _, sat in decoded):
-        return _encode(max((arr for arr, _ in decoded),
-                           key=lambda a: int(np.count_nonzero(a))), True)
-    # fullest table as the base; deterministic tie-break on serialized bytes
-    order = sorted(range(len(decoded)),
-                   key=lambda ix: (-int(np.count_nonzero(decoded[ix][0])),
-                                   blobs[ix]))
-    base = decoded[order[0]][0].copy()
-    saturated = False
-    for ix in order[1:]:
-        arr = decoded[ix][0]
-        for pos in np.flatnonzero(arr):
-            # every stored copy is re-inserted (no dedup): copies are
-            # per-key, and collapsing them would break deletion safety
-            fp = int(arr[pos])
-            i = int(pos) // SLOT_WIDTH
-            if not _insert(base, fp, i, n_slots):
-                saturated = True
-                break
-        if saturated:
-            break
-    return _encode(base, saturated)
-
-
-def merge_into_driver(cache: dict[int, bytes], delta: dict[int, bytes],
-                      n_slots: int = DEFAULT_N_SLOTS) -> dict[int, bytes]:
-    """Driver-resident cumulative merge (counterpart of
-    seen.merge_into_driver)."""
-    out = dict(cache)
-    for bucket, bm in delta.items():
-        out[bucket] = (_merge_tables([out[bucket], bm], n_slots)
-                       if bucket in out else bm)
-    return out
-
-
-def delete_driver(cache: dict[int, bytes], hashes,
-                  num_buckets: int = 32,
-                  n_slots: int = DEFAULT_N_SLOTS
-                  ) -> tuple[dict[int, bytes], list[str]]:
-    """Remove url hashes from a driver-resident filter (recrawl/TTL-expiry
-    path). Returns ``(new_cache, skipped)``: deletion from a saturated
-    segment is refused — its table is incomplete, so removal can't be
-    verified (the cuckoo-filter contract defines deletion only for tracked
-    insertions) — and the refused hashes are reported so the caller can
-    rebuild that segment from the exact seen history instead (the same
-    remedy crawl.py applies to missing/corrupt checkpoints). Deletion is
-    safe against fingerprint collisions because builds/merges store one
-    copy per distinct key (_build_table): removing one key's copy leaves a
-    colliding survivor's copy in place (the survivor stays a member; the
-    deleted key may linger as an ordinary false positive)."""
-    out = dict(cache)
-    skipped: list[str] = []
-    hashes = list(hashes)
-    nib = hex_nibbles(hashes)
-    fps, i1s = cuckoo_fp_i1(nib, n_slots)
-    for h, b, fp, i1 in zip(hashes, bucket_ids(nib, num_buckets).tolist(),
-                            fps.tolist(), i1s.tolist()):
-        blob = out.get(b)
-        if blob is None:
-            continue
-        arr, saturated = _decode(blob)
-        if saturated:
-            skipped.append(h)
-            continue
-        if _delete(arr, fp, i1, n_slots):
-            out[b] = _encode(arr, False)
-    return out, skipped
 
 
 def probe(hashes, segments: dict[int, bytes], num_buckets: int,

@@ -16,7 +16,6 @@ testable and usable from plain Python.
 
 from __future__ import annotations
 
-import re
 from typing import Any
 
 from .dom import parse_html, serialize
@@ -133,14 +132,3 @@ def process_markdown_dom(cleaned) -> str:
         markdown = html_to_markdown_dom(fallback_clean_dom(cleaned))
     return markdown
 
-
-_WS_RE = re.compile(r"\s+")
-
-
-def normalize_content_text(markdown: str | None, text: str | None,
-                           html: str | None, raw_html: str | None) -> str:
-    """Monitor-style normalization (SURVEY.md §2.8 M1,
-    ``packages/scrape/src/monitor/normalize.ts:14-78``): pick
-    markdown→text→html→rawHtml, collapse ≥3 newlines."""
-    content = next((c for c in (markdown, text, html, raw_html) if c), "")
-    return re.sub(r"\n{3,}", "\n\n", content).strip()

@@ -103,11 +103,6 @@ def _is_void(node: Node) -> bool:
     return node.__class__ is Element and node.tag in VOID
 
 
-def _is_pre_or_code(node: Node) -> bool:
-    # preformattedCode: true → CODE content is treated as preformatted
-    return node.__class__ is Element and node.tag in ("pre", "code")
-
-
 _BLANK_DISQUALIFIERS = VOID | MEANINGFUL_WHEN_BLANK
 _DISQ_CACHE: dict[int, bool] = {}
 

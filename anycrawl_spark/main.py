@@ -211,9 +211,9 @@ def cmd_map(args) -> None:
 
 def cmd_recrawl(args) -> None:
     """TTL eviction + monitor re-enqueue against a finished crawl
-    checkpoint (the cuckoo deployment story): evict the given URLs from
-    the seen structures, enqueue them as a fresh pending round, and —
-    unless --no-run — resume the crawl to fetch them again. The limit is
+    checkpoint: evict the given URLs from the seen set (the filter is
+    rebuilt from what is left), enqueue them as a fresh pending round, and
+    — unless --no-run — resume the crawl to fetch them again. The limit is
     raised automatically to cover the re-enqueued URLs."""
     from anycrawl_spark.catalog import Catalog
     from anycrawl_spark.crawl import CrawlConfig, CrawlEngine
@@ -223,25 +223,17 @@ def cmd_recrawl(args) -> None:
     engine = CrawlEngine(spark, corpus, args.checkpoint)
     cat = Catalog(args.checkpoint)
     done = (cat.round_meta(cat.last_round()) or {}).get("done", 0)
-    # family + geometry are baked into the checkpoint (round-0 meta);
-    # resolving them here keeps eviction family-consistent by construction
+    # the filter family is baked into the checkpoint (round-0 meta);
+    # reading it here keeps eviction family-consistent by construction
     geometry = (cat.round_meta(0) or {}).get("bloom_geometry") or []
-    if geometry and geometry[0] == "cuckoo":
-        fam_kw = {"seen_filter": "cuckoo", "bloom_num_buckets": geometry[1],
-                  "cuckoo_n_slots": geometry[2]}
-    elif geometry:
-        fam_kw = {"seen_filter": "bloom", "bloom_num_buckets": geometry[0],
-                  "bloom_m_bits": geometry[1], "bloom_k": geometry[2]}
-    else:
-        fam_kw = {}
+    family = "cuckoo" if geometry[:1] == ["cuckoo"] else "bloom"
     cfg = CrawlConfig(job_id=args.job_id, seed_url=args.urls[0],
                       strategy="all",
                       limit=min(50_000, done + len(args.urls)),
-                      respect_robots=False, **fam_kw)
+                      respect_robots=False, seen_filter=family)
     evicted = engine.evict_urls(cfg, args.urls)
     enqueued = engine.reenqueue_urls(cfg, args.urls)
     summary = {"evicted": evicted["evicted"],
-               "filter_deletion": evicted["filter_deletion"],
                "reenqueued": enqueued["pending_next"]}
     if not args.no_run:
         summary["run"] = engine.run(cfg, resume=True)

@@ -70,16 +70,6 @@ def domain_filter(df: DataFrame, seed_host: str,
     return df.where(host == seed_host.lower())
 
 
-def clean_page_links(df: DataFrame, url_col: str = "url") -> DataFrame:
-    """Map page-link cleanup (MapService.ts:268-289, F12): http(s) only,
-    fragment stripped, dedup."""
-    return (
-        df.withColumn(url_col, F.split(F.col(url_col), "#", 2)[0])
-        .where(F.col(url_col).startswith("http"))
-        .dropDuplicates([url_col])
-    )
-
-
 def expand_sitemaps(robots: DataFrame, pages: DataFrame) -> DataFrame:
     """Sitemap discovery (MapService.ts:172-201 re-expressed): explode the
     robots fixture's sitemap urls and join to the corpus host's pages —

@@ -31,11 +31,6 @@ def normalize_content_col(markdown="markdown", text="text",
     return F.trim(F.regexp_replace(picked, r"\n{3,}", "\n\n"))
 
 
-def content_hash_col(content_col):
-    """M2: sha256 of normalized content (normalize.ts:84-86)."""
-    return F.sha2(content_col, 256)
-
-
 def lcs_diff(old: str, new: str) -> dict:
     """M3 (diff.ts:24-152): line-level LCS diff → added/removed counts,
     unified-style hunks, change ratio."""

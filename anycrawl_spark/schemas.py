@@ -278,11 +278,6 @@ class ZRecord(Z):
         return v
 
 
-class ZAny(Z):
-    def _parse(self, v, path, issues):
-        return None if v is MISSING else v
-
-
 class ZOptional(Z):
     def __init__(self, inner: Z):
         self.inner = inner

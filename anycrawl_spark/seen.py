@@ -25,12 +25,12 @@ one vectorized gather per shard bucket present in the batch) and the
 streaming dedup (``streaming/stateful.py``) run on it; ``_positions`` and
 ``cuckoo._fp_i1`` stay as the scalar references it is tested against.
 
-The crawl engine keeps its filter driver-resident: it builds and merges
-segments in numpy on the driver and writes them with pyarrow
-(``CrawlConfig`` caps the geometry at 64 MiB; the 50k enqueue limit keeps
-the seen set small). The distributed ``applyInPandas`` build plus the
-broadcast-join probe serve the registry leaves (``bloom_seen_filter``,
-``cuckoo_seen_filter``).
+The crawl engine keeps its filter driver-resident and derived: every
+seen-state write rebuilds it in numpy from the exact seen set it is
+checkpointed beside (the 50k enqueue limit keeps that set small) and
+writes it with pyarrow, so there is no merge or deletion path. The
+distributed ``applyInPandas`` build plus the broadcast-join probe serve
+the registry leaves (``bloom_seen_filter``, ``cuckoo_seen_filter``).
 
 Bit positions are derived from independent 32-bit slices of the sha256 hex,
 so membership is a pure function of the canonical URL — deterministic across
@@ -189,41 +189,24 @@ def segments_to_driver(segments: DataFrame) -> dict[int, bytes]:
     return {row["bucket"]: bytes(row["bitmap"]) for row in segments.collect()}
 
 
-def merge_into_driver(cache: dict[int, bytes],
-                      delta: dict[int, bytes]) -> dict[int, bytes]:
-    """OR-merge delta segments into the driver-resident cumulative dict."""
-    out = dict(cache)
-    for bucket, bm in delta.items():
-        if bucket in out:
-            merged = np.bitwise_or(np.frombuffer(out[bucket], dtype=np.uint8),
-                                   np.frombuffer(bm, dtype=np.uint8))
-            out[bucket] = merged.tobytes()
-        else:
-            out[bucket] = bm
-    return out
-
-
 class SeenFilterFamily:
     """Uniform facade over the two seen-filter families (north rule:
     "partitioned Bloom/cuckoo filter"). Both share the segment-row shape
     ``(bucket int, bitmap binary)``, the sha256 hash-space sharding, and the
     pre-filter + exact-anti-join contract, so the crawl engine is family-
-    agnostic: every checkpoint/merge/filter touchpoint goes through one of
-    these callables. Crawl results are byte-identical across families —
-    the filter only routes candidates between the definitely-new fast path
-    and the exact anti-join (tests/test_crawl.py cuckoo-parity test)."""
+    agnostic: it builds the filter from the exact seen set
+    (``build_driver``) and probes it (``filter_new``) through these
+    callables. Crawl results are byte-identical across families — the
+    filter only routes candidates between the definitely-new fast path and
+    the exact anti-join (tests/test_cuckoo.py crawl-parity test)."""
 
     def __init__(self, name, total_bytes, geometry, build_driver,
-                 merge_driver, filter_new, delete_driver=None):
+                 filter_new):
         self.name = name
         self.total_bytes = total_bytes     # serialized bytes across buckets
         self.geometry = geometry           # resume-fingerprint (JSON list)
         self.build_driver = build_driver
-        self.merge_driver = merge_driver
         self.filter_new = filter_new
-        # TTL/recrawl eviction: cuckoo supports true deletion; bloom does
-        # not (callers rebuild from the exact seen history instead)
-        self.delete_driver = delete_driver
 
 
 def filter_family(name: str = "bloom", *,
@@ -240,7 +223,6 @@ def filter_family(name: str = "bloom", *,
             [num_buckets, m_bits, k],
             lambda hashes: build_segments_driver(
                 hashes, num_buckets=num_buckets, m_bits=m_bits, k=k),
-            merge_into_driver,
             lambda cand, segs, seen: filter_new(
                 cand, segs, seen, num_buckets=num_buckets,
                 m_bits=m_bits, k=k),
@@ -255,12 +237,8 @@ def filter_family(name: str = "bloom", *,
             ["cuckoo", num_buckets, slots],
             lambda hashes: cuckoo.build_segments_driver(
                 hashes, num_buckets=num_buckets, n_slots=slots),
-            lambda cache, delta: cuckoo.merge_into_driver(
-                cache, delta, n_slots=slots),
             lambda cand, segs, seen: cuckoo.filter_new(
                 cand, segs, seen, num_buckets=num_buckets, n_slots=slots),
-            delete_driver=lambda cache, hashes: cuckoo.delete_driver(
-                cache, hashes, num_buckets=num_buckets, n_slots=slots),
         )
     raise ValueError(f"unknown seen-filter family: {name!r}")
 

@@ -121,16 +121,6 @@ def make_extract_udf(formats: tuple[str, ...] = ("markdown", "text", "links", "h
 
 
 @F.pandas_udf(StringType())
-def canonicalize_udf(url: pd.Series) -> pd.Series:
-    """Python-kernel canonicalization — used only in tests to cross-check the
-    JVM-side ``canonical_url_col`` expression; the crawl path uses the
-    expression (stays in codegen)."""
-    from anycrawl_spark.kernel.canonical import normalize_url
-
-    return url.map(normalize_url)
-
-
-@F.pandas_udf(StringType())
 def html_to_text_udf(html: pd.Series) -> pd.Series:
     from anycrawl_spark.kernel.text import html_to_text
 

@@ -37,10 +37,24 @@ def run_engine(spark, corpus, tmp_root, name, robots=None, **cfg_kwargs):
 
 def assert_one_state_copy(catalog):
     """Seen and bloom are checkpointed cumulatively: one committed round
-    each, and every table's on-disk round=* dirs are exactly its committed
-    rounds (superseded copies and uncommitted writes are gone)."""
-    assert len(catalog.committed_rounds("seen")) == 1
-    assert len(catalog.committed_rounds("bloom")) == 1
+    each, the same round, and every table's on-disk round=* dirs are
+    exactly its committed rounds (superseded copies and uncommitted writes
+    are gone). The committed filter is derived state: byte for byte the
+    build of the committed seen set by the checkpoint's filter family."""
+    import pyarrow.parquet as pq
+
+    from anycrawl_spark.seen import filter_family
+
+    (state_round,) = catalog.committed_rounds("seen")
+    assert catalog.committed_rounds("bloom") == [state_round]
+    geometry = catalog.round_meta(0)["bloom_geometry"]
+    fam = filter_family("cuckoo" if geometry[0] == "cuckoo" else "bloom")
+    assert fam.geometry == geometry
+    seen = pq.read_table(catalog.round_path("seen", state_round))
+    bloom = pq.read_table(catalog.round_path("bloom", state_round))
+    assert dict(zip(bloom.column("bucket").to_pylist(),
+                    bloom.column("bitmap").to_pylist())) == \
+        fam.build_driver(sorted(seen.column("url_hash").to_pylist()))
     for table_dir in catalog.root.iterdir():
         if table_dir.is_dir():
             on_disk = {int(p.name.split("=", 1)[1])
@@ -517,12 +531,6 @@ class TestConfigBounds:
             CrawlConfig(job_id="b", seed_url="https://x.test/", limit=0)
         with pytest.raises(ValueError):
             CrawlConfig(job_id="b", seed_url="https://x.test/", limit=50_001)
-        # the driver-resident seen filter is capped at 64 MiB
-        CrawlConfig(job_id="b", seed_url="https://x.test/",
-                    bloom_num_buckets=64, bloom_m_bits=1 << 23)
-        with pytest.raises(ValueError, match="64 MiB"):
-            CrawlConfig(job_id="b", seed_url="https://x.test/",
-                        bloom_num_buckets=65, bloom_m_bits=1 << 23)
 
     def test_seed_url_must_be_absolute_http(self):
         """z.string().url() rejects non-URL seeds; a scheme-less seed would
@@ -535,22 +543,6 @@ class TestConfigBounds:
                 CrawlConfig(job_id="b", seed_url=bad)
         with pytest.raises(ValueError):
             CrawlConfig(job_id="b", seed_url="https://x.test/", max_attempts=0)
-
-    def test_resume_rejects_bloom_geometry_change(self, spark, small_corpus,
-                                                  tmp_root):
-        import pytest
-
-        ckpt = os.path.join(tmp_root, "geom")
-        engine = CrawlEngine(spark, small_corpus, ckpt)
-        engine.run(CrawlConfig(job_id="g", seed_url=SEED,
-                               strategy="same-hostname", max_depth=2,
-                               limit=10, respect_robots=False, max_rounds=1))
-        resumed = CrawlEngine(spark, small_corpus, ckpt)
-        with pytest.raises(ValueError, match="bloom geometry"):
-            resumed.run(CrawlConfig(job_id="g", seed_url=SEED,
-                                    strategy="same-hostname", max_depth=2,
-                                    limit=10, respect_robots=False,
-                                    bloom_m_bits=1 << 16), resume=True)
 
 
 class TestCorpusDedup:
@@ -687,7 +679,7 @@ class TestPipelinedCheckpointing:
         with pytest.raises(ValueError, match="bloom geometry"):
             engine2.run(CrawlConfig(job_id="pc", seed_url=SEED, limit=5,
                                     respect_robots=False,
-                                    bloom_num_buckets=8), resume=True)
+                                    seen_filter="cuckoo"), resume=True)
         assert engine2._writes is None
 
         # a newest meta without pending_next: resume rejects it instead of
@@ -709,12 +701,12 @@ class TestPipelinedCheckpointing:
 
 
 class TestRecrawlEviction:
-    """TTL eviction → re-enqueue → recrawl round trip (the cuckoo.py
-    deployment story): a page-cache entry passes its TTL tier, the monitor
-    evicts the URL from the seen structures (true deletion on the cuckoo
-    family; rebuild-from-exact-seen on bloom) and re-enqueues it, and a
-    resumed run fetches exactly those URLs again with dense visit
-    numbering intact and every rediscovered link still deduped."""
+    """TTL eviction → re-enqueue → recrawl round trip: a page-cache entry
+    passes its TTL tier, the monitor evicts the URL from the seen set (the
+    filter is rebuilt from what is left, for both families) and
+    re-enqueues it, and a resumed run fetches exactly those URLs again
+    with dense visit numbering intact and every rediscovered link still
+    deduped."""
 
     @pytest.mark.parametrize("fam_name", ["cuckoo", "bloom"])
     def test_cache_expiry_roundtrip(self, spark, small_corpus, tmp_root,
@@ -751,18 +743,17 @@ class TestRecrawlEviction:
         assert expired == sorted(victims)   # page-tier TTL flags exactly them
 
         # --- evict: seen state loses exactly the victim hashes. A never-
-        # crawled URL in the batch must NOT be deleted (cuckoo deletion of
-        # a non-member could zero a colliding member's only fingerprint),
-        # and a mismatched filter geometry must be rejected before any
-        # state is touched (the resume guard, applied to eviction too).
+        # crawled URL in the batch is not counted as evicted, and a
+        # switched filter family must be rejected before any state is
+        # touched (the resume guard, applied to eviction too).
         cfg = CrawlConfig(job_id="rc", **kw)
+        other = "bloom" if fam_name == "cuckoo" else "cuckoo"
         with pytest.raises(ValueError, match="geometry mismatch"):
             eng.evict_urls(CrawlConfig(job_id="rc", **{
-                **kw, "bloom_num_buckets": 8}), expired)
+                **kw, "seen_filter": other}), expired)
         meta_e = eng.evict_urls(
             cfg, expired + ["https://never-crawled.test/x"])
         assert meta_e["evicted"] == 3
-        assert meta_e["filter_deletion"] is (fam_name == "cuckoo")
         victim_hashes = {v["url_hash"] for v in visits1
                          if v["url"] in victims}
         seen_now = {r["url_hash"] for r in eng.catalog.read(
@@ -770,7 +761,7 @@ class TestRecrawlEviction:
         assert victim_hashes.isdisjoint(seen_now)
         assert len(seen_now) == s1["enqueued"] - 3
         assert_one_state_copy(eng.catalog)
-        # the amended filter + exact seen treat victims as new again
+        # the rebuilt filter + exact seen treat victims as new again
         fam = cfg.filter_family()
         cand = eng._canonical_rows(cfg, expired)
         cand_df = spark.createDataFrame(cand)
@@ -803,6 +794,86 @@ class TestRecrawlEviction:
         seen_after = {r["url_hash"] for r in eng.catalog.read(
             spark, "seen").select("url_hash").collect()}
         assert victim_hashes <= seen_after
+        assert_one_state_copy(eng.catalog)
+
+    FAULT_KW = dict(seed_url=SEED, strategy="all", max_depth=4, limit=40,
+                    respect_robots=False)
+    STEPS = (("evict", CrawlEngine.evict_urls),
+             ("reenqueue", CrawlEngine.reenqueue_urls))
+
+    @pytest.fixture(scope="class")
+    def recrawl_reference(self, spark, small_corpus, tmp_root):
+        """A finished crawl checkpoint, the URLs to recrawl, and the state
+        after its uninterrupted evict → re-enqueue → resume round trip;
+        shared by the crash cases."""
+        import shutil
+
+        base = os.path.join(tmp_root, "rf_base")
+        eng = CrawlEngine(spark, small_corpus, base)
+        cfg = CrawlConfig(job_id="rf", **self.FAULT_KW)
+        eng.run(cfg)
+        victims = sorted(v["url"] for v in eng.visits().collect()
+                         if v["status"] == 200)[1:4]
+        ref_dir = os.path.join(tmp_root, "rf_ref")
+        shutil.copytree(base, ref_dir)
+        ref = CrawlEngine(spark, small_corpus, ref_dir)
+        for _, call in self.STEPS:
+            call(ref, cfg, victims)
+        ref.run(CrawlConfig(job_id="rf", **{**self.FAULT_KW, "limit": 43}),
+                resume=True)
+        assert_one_state_copy(ref.catalog)
+        return base, victims, TestPipelinedCheckpointing._state(spark, ref)
+
+    @pytest.mark.parametrize("point", ["before_manifest", "after_manifest"])
+    @pytest.mark.parametrize("step", ["evict", "reenqueue"])
+    def test_crash_inside_recrawl_commit_resumes_exact(
+            self, spark, small_corpus, tmp_root, monkeypatch,
+            recrawl_reference, step, point):
+        """A crash inside the commit of evict_urls or reenqueue_urls —
+        before its manifest write (the call is retried) or after it (the
+        call is committed; the sequence goes on) — ends at the
+        uninterrupted round trip's visits, results and seen set, with one
+        seen and bloom copy."""
+        import shutil
+
+        from anycrawl_spark.catalog import Catalog
+
+        base, victims, ref_state = recrawl_reference
+        d = os.path.join(tmp_root, f"rf_{step}_{point}")
+        shutil.copytree(base, d)
+        cfg = CrawlConfig(job_id="rf", **self.FAULT_KW)
+        phase = {"evict": "evicted", "reenqueue": "recrawl_enqueued"}[step]
+
+        class Crash(Exception):
+            pass
+
+        write_manifest = Catalog._write_manifest
+
+        def crashing(catalog, manifest):
+            newest = manifest["meta"][max(manifest["meta"], key=int)]
+            if newest.get("phase") != phase:
+                return write_manifest(catalog, manifest)
+            if point == "after_manifest":
+                write_manifest(catalog, manifest)
+            raise Crash(point)
+
+        eng = CrawlEngine(spark, small_corpus, d)
+        for name, call in self.STEPS:
+            if name == step:
+                with monkeypatch.context() as m:
+                    m.setattr(Catalog, "_write_manifest", crashing)
+                    with pytest.raises(Crash):
+                        call(eng, cfg, victims)
+                # a restarted process continues on the same checkpoint
+                eng = CrawlEngine(spark, small_corpus, d)
+                assert (eng._progress()["phase"] == phase) is \
+                    (point == "after_manifest")
+                if point == "after_manifest":
+                    continue
+            call(eng, cfg, victims)
+        eng.run(CrawlConfig(job_id="rf", **{**self.FAULT_KW, "limit": 43}),
+                resume=True)
+        assert TestPipelinedCheckpointing._state(spark, eng) == ref_state
         assert_one_state_copy(eng.catalog)
 
 

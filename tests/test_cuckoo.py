@@ -1,7 +1,7 @@
 """Cuckoo-filter seen-set family (anycrawl_spark/cuckoo.py): no false
-negatives, bounded false positives, deletion, merge-by-reinsertion,
-saturation degrade, and byte-identical crawl parity vs the Bloom family
-(north rule: "partitioned Bloom/cuckoo filter")."""
+negatives, bounded false positives, saturation degrade, and
+byte-identical crawl parity vs the Bloom family (north rule: "partitioned
+Bloom/cuckoo filter")."""
 
 import hashlib
 import os
@@ -45,77 +45,10 @@ class TestCuckooCore:
         b = cuckoo.build_segments_driver(list(reversed(HASHES)), num_buckets=4)
         assert a == b                                   # sorted insertion
 
-    def test_merge_driver_equals_joint_build(self):
-        joint = cuckoo.build_segments_driver(HASHES, num_buckets=4)
-        a = cuckoo.build_segments_driver(HASHES[:2500], num_buckets=4)
-        b = cuckoo.build_segments_driver(HASHES[2500:], num_buckets=4)
-        merged = cuckoo.merge_into_driver(a, b)
-        # merged table layout may differ from the joint build (insertion
-        # order differs) — the contract is MEMBERSHIP, not bytes
-        n_slots = cuckoo.DEFAULT_N_SLOTS
-        for h in HASHES:
-            bkt = int(h[:8], 16) % 4
-            arr, sat = cuckoo._decode(merged[bkt])
-            assert not sat
-            fp, i1 = cuckoo._fp_i1(h, n_slots)
-            assert cuckoo._contains(arr, fp, i1, n_slots)
-        assert set(merged) == set(joint)
-
-    def test_delete(self):
-        seg = cuckoo.build_segments_driver(HASHES[:100], num_buckets=2)
-        out, skipped = cuckoo.delete_driver(seg, HASHES[:10], num_buckets=2)
-        assert skipped == []
-        n_slots = cuckoo.DEFAULT_N_SLOTS
-
-        def member(segs, h):
-            arr, _ = cuckoo._decode(segs[int(h[:8], 16) % 2])
-            fp, i1 = cuckoo._fp_i1(h, n_slots)
-            return cuckoo._contains(arr, fp, i1, n_slots)
-
-        # deleted keys gone (a deleted key may only linger when it collides
-        # with a surviving key's fingerprint; none among these 100)
-        fps_kept = {cuckoo._fp_i1(h, n_slots) for h in HASHES[10:100]}
-        for h in HASHES[:10]:
-            if cuckoo._fp_i1(h, n_slots) not in fps_kept:
-                assert not member(out, h)
-        for h in HASHES[10:100]:
-            assert member(out, h)
-
-    def test_delete_keeps_colliding_survivor(self):
-        # two distinct keys with identical bucket ([0:8)), fingerprint
-        # ([9:13)) and primary index ([17:25)) slices: builds store one
-        # copy PER KEY, so deleting one must not erase the other
-        base = "00000000" + "0" + "abcd" + "0000" + "00000123" + "0" * 38
-        h1, h2 = base + "1", base + "2"
-        assert len(h1) == 64 and h1 != h2
-        seg = cuckoo.build_segments_driver([h1, h2], num_buckets=1)
-        n_slots = cuckoo.DEFAULT_N_SLOTS
-        fp, i1 = cuckoo._fp_i1(h1, n_slots)
-        arr, _ = cuckoo._decode(seg[0])
-        assert int((arr == fp).sum()) == 2          # one copy per key
-        out, skipped = cuckoo.delete_driver(seg, [h1], num_buckets=1)
-        assert skipped == []
-        arr, _ = cuckoo._decode(out[0])
-        assert int((arr == fp).sum()) == 1          # survivor's copy intact
-        assert cuckoo._contains(arr, fp, i1, n_slots)
-
-    def test_delete_refuses_saturated_segment(self):
-        seg = cuckoo.build_segments_driver(HASHES[:500], num_buckets=1,
-                                           n_slots=8)
-        assert cuckoo._decode(seg[0])[1]
-        out, skipped = cuckoo.delete_driver(seg, HASHES[:3], num_buckets=1,
-                                            n_slots=8)
-        assert skipped == HASHES[:3] and out == seg
-
     def test_n_slots_validation(self):
         for bad in (0, -4, 3, 48):
             with pytest.raises(ValueError, match="power of two"):
                 cuckoo.check_n_slots(bad)
-        from anycrawl_spark.crawl import CrawlConfig
-
-        with pytest.raises(ValueError, match="power of two"):
-            CrawlConfig(job_id="x", seed_url="https://a.test/",
-                        seen_filter="cuckoo", cuckoo_n_slots=0)
 
     def test_saturation_degrades_not_corrupts(self):
         # 8 slots x 4 = 32 entries per segment; 500 keys into 1 bucket
@@ -123,10 +56,6 @@ class TestCuckooCore:
                                            n_slots=8)
         arr, sat = cuckoo._decode(seg[0])
         assert sat                                     # flagged, not wrong
-        merged = cuckoo.merge_into_driver(
-            seg, cuckoo.build_segments_driver(FRESH[:5], num_buckets=1,
-                                              n_slots=8), n_slots=8)
-        assert cuckoo._decode(merged[0])[1]            # saturation is sticky
 
     def test_family_geometry_and_sizes(self):
         fam = filter_family("cuckoo", num_buckets=8, n_slots=1 << 10)
@@ -220,8 +149,8 @@ class TestCuckooCrawlParity:
 
 
 class TestCuckooProperties:
-    """Property tests: the no-false-negative contract must survive
-    arbitrary insert orders, merges, and deletions of other keys."""
+    """Property test: the no-false-negative contract must survive
+    arbitrary key sets at high load factors."""
 
     def test_membership_after_random_merge_plan(self):
         import random
@@ -231,45 +160,11 @@ class TestCuckooProperties:
         for trial in range(20):
             keys = [hashlib.sha256(f"t{trial}-{i}".encode()).hexdigest()
                     for i in range(rng.randrange(1, 700))]
-            # random split into 1-4 independently built segments, merged
-            parts, acc = [], []
-            for h in keys:
-                acc.append(h)
-                if rng.random() < 0.3:
-                    parts.append(acc)
-                    acc = []
-            if acc:
-                parts.append(acc)
-            merged = {}
-            for part in parts:
-                delta = cuckoo.build_segments_driver(part, num_buckets=2,
-                                                     n_slots=n_slots)
-                merged = cuckoo.merge_into_driver(merged, delta,
-                                                  n_slots=n_slots)
+            built = cuckoo.build_segments_driver(keys, num_buckets=2,
+                                                 n_slots=n_slots)
             for h in keys:   # NO false negatives, loaded or saturated
-                blob = merged[int(h[:8], 16) % 2]
+                blob = built[int(h[:8], 16) % 2]
                 arr, sat = cuckoo._decode(blob)
                 fp, i1 = cuckoo._fp_i1(h, n_slots)
                 assert sat or cuckoo._contains(arr, fp, i1, n_slots), \
                     (trial, len(keys))
-
-    def test_delete_never_creates_false_negative_for_others(self):
-        import random
-
-        rng = random.Random(7)
-        n_slots = 1 << 8
-        for trial in range(10):
-            keys = [hashlib.sha256(f"d{trial}-{i}".encode()).hexdigest()
-                    for i in range(rng.randrange(2, 400))]
-            seg = cuckoo.build_segments_driver(keys, num_buckets=1,
-                                               n_slots=n_slots)
-            victims = rng.sample(keys, k=len(keys) // 3)
-            out, skipped = cuckoo.delete_driver(seg, victims, num_buckets=1,
-                                                n_slots=n_slots)
-            survivors = [h for h in keys if h not in set(victims)]
-            arr, sat = cuckoo._decode(out[0])
-            if sat:
-                continue   # saturated segments refuse deletion (skipped)
-            for h in survivors:
-                fp, i1 = cuckoo._fp_i1(h, n_slots)
-                assert cuckoo._contains(arr, fp, i1, n_slots), trial

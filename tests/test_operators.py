@@ -216,14 +216,12 @@ class TestSeenFilter:
     def test_segment_merge(self, spark):
         import hashlib
 
-        from anycrawl_spark.seen import (build_segments_driver, filter_new,
-                                         merge_into_driver)
+        from anycrawl_spark.seen import build_segments_driver, filter_new
 
         a, b = ([hashlib.sha256(str(i).encode()).hexdigest() for i in ids]
                 for ids in (range(0, 50), range(50, 100)))
-        segs = merge_into_driver(
-            build_segments_driver(a, num_buckets=4, m_bits=1 << 12, k=3),
-            build_segments_driver(b, num_buckets=4, m_bits=1 << 12, k=3))
+        segs = build_segments_driver(a + b, num_buckets=4, m_bits=1 << 12,
+                                     k=3)
         assert len(segs) <= 4
         both = spark.range(0, 100).select(
             F.sha2(F.col("id").cast("string"), 256).alias("url_hash"))
