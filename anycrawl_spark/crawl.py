@@ -12,10 +12,17 @@ Each round r is one Spark batch over immutable checkpointed state:
                →  posexplode(links) → canonicalize (JVM expr) → strategy /
                   path / depth / robots filters → in-batch dedup
                →  Bloom pre-filter + exact anti-join vs seen set
-               →  enqueue-cap top-k → seq assignment → pending_{r+1}
-               →  seen set + the filter built from it (full copies), progress,
+               →  enqueue-cap top-k: one bounded Arrow collect in
+                  (parent_seq, link_pos) order
+               →  on the driver: seq assignment, pending_{r+1} = unadmitted
+                  + retried + new rows, written with pyarrow beside the seen
+                  set and the filter built from it (full copies); progress,
                   per-partition lineage appended; manifest commit (atomic)
                   → resumable
+
+The frontier and the seen set are driver-resident: both are bounded by the
+zod ``limit`` (≤ 50,000 URLs enqueued per job), so the round numbers and
+persists them without a Spark job.
 
 Dedup semantics follow the reference's queue path (crawlee uniqueKey dedup at
 enqueue time, ``Base.ts:464-493``): the seen set is "everything ever
@@ -46,6 +53,7 @@ from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 
 import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from .catalog import Catalog
@@ -69,7 +77,7 @@ SEEN_SCHEMA = "url_hash string"
 # tables whose every checkpoint round is the full cumulative state: a
 # commit naming one retires its previous copy
 CUMULATIVE_TABLES = ["seen", "bloom"]
-# FRONTIER_SCHEMA for driver-side pyarrow writes (seed round, re-enqueue)
+# FRONTIER_SCHEMA for the driver-resident frontier and its pyarrow writes
 FRONTIER_ARROW_SCHEMA = pa.schema([
     ("job_id", pa.string()), ("url", pa.string()),
     ("url_hash", pa.string()), ("host", pa.string()),
@@ -279,17 +287,17 @@ class CrawlEngine:
         self._seen: set[str] | None = None
         self._seen_df: DataFrame | None = None
         self._bloom_mem: dict[int, bytes] | None = None
+        # driver-resident frontier: the next round's pending rows, built by
+        # the previous round (or, on a run's first round, loaded by
+        # _load_pending). Its file is written synchronously ahead of the
+        # round's deferred commit, like the seen state above.
+        self._pending: pa.Table | None = None
         # -- write pipelining (see _finalize_prev) --------------------------
-        # The slow per-round parquet writes (results/visits/metrics/pending)
-        # overlap the NEXT round's compute jobs: round r submits them async
-        # and round r+1 finalizes (await -> commit -> release caches) right
-        # before submitting its own writes. Next-round reads come from
-        # in-memory state instead of committed files: _pending_mem (the
-        # frontier DataFrame) and the seen state above, whose files are
-        # written synchronously ahead of their deferred commit.
+        # The slow per-round parquet writes (results/visits/metrics) overlap
+        # the NEXT round's compute jobs: round r submits them async and
+        # round r+1 finalizes (await -> commit -> release caches) right
+        # before its own state writes.
         self._prev_inflight: dict | None = None
-        self._graveyard: list = []      # caches from two rounds back
-        self._pending_mem: DataFrame | None = None
         self._writes: ThreadPoolExecutor | None = None
 
     # -- state helpers ------------------------------------------------------
@@ -334,40 +342,39 @@ class CrawlEngine:
                          if paths else None)
         self._bloom_mem = self._latest_bloom(self.spark, up_to_round)
 
+    def _load_pending(self, round_no: int, expected: int) -> None:
+        """Load the committed pending round ``round_no`` onto the driver
+        (a pyarrow read of whatever parquet parts the round directory
+        holds, no Spark job). Its row count must equal the round meta's
+        ``pending_next``: a lost or truncated frontier file would otherwise
+        resume as a silently shorter crawl."""
+        import pyarrow.parquet as pq
+
+        table = pq.read_table(self.catalog.round_path("pending", round_no))
+        table = table.select(FRONTIER_COLS).cast(FRONTIER_ARROW_SCHEMA)
+        if table.num_rows != expected:
+            raise ValueError(
+                f"pending round {round_no} holds {table.num_rows} rows but "
+                f"its meta records pending_next={expected}")
+        self._pending = table
+
     def _finalize_prev(self) -> None:
         """Complete the previous round's deferred tail: await its parquet
-        writes, commit its manifest entry, then release the caches retired
-        two rounds back (the previous round's in-flight writes may still
-        reference last round's cached frames through deferred/retry
-        lineage, so each round's caches live exactly one extra round)."""
+        writes, commit its manifest entry, then release its cached frames
+        (only those writes read them; the next round reads its frontier
+        from the driver-written pending file)."""
         prev = self._prev_inflight
         self._prev_inflight = None
-        if prev is not None:
-            try:
-                for fut in prev["futures"]:
-                    fut.result()
-                self.catalog.commit_round(prev["round"], prev["tables"],
-                                          prev["meta"],
-                                          replace=CUMULATIVE_TABLES)
-            except BaseException:
-                # a failed write/commit aborts the run — release EVERY
-                # cached frame (this round's, the deferred tail's, and the
-                # graveyard's) so the Spark session doesn't leak persisted
-                # DataFrames past the failure
-                for df in (prev["caches_now"] + prev["caches_later"]
-                           + self._graveyard):
-                    df.unpersist()
-                self._graveyard = []
-                raise
-            # docs/admitted are only read by the just-awaited writes —
-            # release them now (the payload-heavy frames). new_rows backs
-            # the in-memory pending the CURRENT round's in-flight writes
-            # still read, so it waits one more finalize in the graveyard.
-            for df in prev["caches_now"]:
+        if prev is None:
+            return
+        try:
+            for fut in prev["futures"]:
+                fut.result()
+            self.catalog.commit_round(prev["round"], prev["tables"],
+                                      prev["meta"], replace=CUMULATIVE_TABLES)
+        finally:
+            for df in prev["caches"]:
                 df.unpersist()
-        for df in self._graveyard:
-            df.unpersist()
-        self._graveyard = prev["caches_later"] if prev is not None else []
 
     # -- cancellation (Progress.ts:434-448) ---------------------------------
     # A marker file in the checkpoint root, so any process holding the
@@ -534,7 +541,6 @@ class CrawlEngine:
 
         meta = {**progress, "round": r, "finalized": False,
                 "enqueued": base + len(rows), "pending_next": len(rows),
-                "pending_seq_range": [base, max(base, base + len(rows) - 1)],
                 "phase": "recrawl_enqueued"}
         self.catalog.commit_round(r, ["pending", "seen", "bloom"], meta,
                                   replace=CUMULATIVE_TABLES)
@@ -549,9 +555,8 @@ class CrawlEngine:
         Column objects every round (the docs select list, the failure
         classifier tree, the link filters). Column objects are immutable
         and reusable across DataFrames, so the loop now builds them here
-        and re-uses them; only genuinely per-round literals (round number,
-        width-bucket bounds, enqueue offsets) are constructed inside
-        _run_round."""
+        and re-uses them; only genuinely per-round literals (the round
+        number) are constructed inside _run_round."""
         ex: dict = {}
         ex["keys_sel"] = F.col("url_hash").alias("page_url_hash")
         if cfg.simulate_fetch_errors:
@@ -610,9 +615,7 @@ class CrawlEngine:
             # fail on their first attempt regardless of max_attempts
             final_attempt = final_attempt | ~should_retry_col(
                 F.col("error_message"))
-        ex["final_attempt"] = final_attempt
         ex["outcome_key"] = final_attempt.alias("final")
-        ex["outcome_aggs"] = [F.count("*").alias("count")]
         ex["metrics_key"] = F.spark_partition_id().alias("partition_id")
         ex["metrics_aggs"] = [
             F.count("*").alias("urls"),
@@ -646,17 +649,6 @@ class CrawlEngine:
             F.struct(F.col("parent_seq"), F.col("link_pos"))).alias("__first")
         ex["dedup_sel"] = [F.col("url_hash")] + [
             F.col(f"__first.{c}").alias(c) for c in link_cols]
-        w_local = Window.partitionBy("__bucket").orderBy(
-            "parent_seq", "link_pos")
-        ex["lrn"] = F.row_number().over(w_local).alias("__lrn")
-        ex["ranked_sel"] = [F.col(c) for c in
-                            ("job_id", "url", "url_hash", "host", "origin",
-                             "path", "parent_depth", "__bucket", "__lrn")]
-        ex["frontier_head"] = [F.col(c) for c in
-                               ("job_id", "url", "url_hash", "host",
-                                "origin", "path")]
-        ex["new_depth"] = (F.col("parent_depth") + 1).alias("depth")
-        ex["new_attempt"] = F.lit(1).alias("attempt")
         return ex
 
     @staticmethod
@@ -679,22 +671,19 @@ class CrawlEngine:
         # engine (resume/cancel tests); in-memory state from a prior run is
         # stale
         self._prev_inflight = None
-        self._graveyard = []
-        self._pending_mem = None
+        self._pending = None
         self._seen = self._seen_df = self._bloom_mem = None
         self._writes = ThreadPoolExecutor(max_workers=8)
         try:
             return self._run_loop(cfg, resume, t0)
         finally:
             # flush the deferred tail even when resume validation / seeding
-            # throws: the last round's writes + commit, then every cache
-            # still parked in the graveyard chain; always release the
+            # throws: the last round's writes + commit; always release the
             # executor (a leaked pool accumulates 8 threads per failed call)
             try:
                 self._finalize_prev()
-                self._finalize_prev()
             finally:
-                self._pending_mem = None
+                self._pending = None
                 self._writes.shutdown(wait=True)
                 self._writes = None
 
@@ -705,15 +694,16 @@ class CrawlEngine:
             progress = self._progress()
             round_no = progress["round"] + 1
             self._check_geometry(fam)
-            # every round sizes itself from the prior meta's pending count
-            # and seq range, so resume needs both
-            missing = [k for k in ("pending_next", "pending_seq_range")
-                       if k not in progress]
-            if round_no > 0 and missing:
+            # the loaded frontier is checked against the prior meta's
+            # pending count, so resume needs it
+            if round_no > 0 and "pending_next" not in progress:
                 raise ValueError(
                     f"checkpoint round {progress['round']} meta lacks "
-                    f"{missing}; it was written by an older engine — "
+                    f"pending_next; it was written by an older engine — "
                     f"restart the crawl without resume")
+            if round_no > 0 and not progress.get("finalized"):
+                self._load_pending(progress["round"],
+                                   progress["pending_next"])
         else:
             self.catalog.destroy()
             self.catalog = Catalog(self.catalog.root)
@@ -730,16 +720,15 @@ class CrawlEngine:
             # startup from every crawl job.
             rows = frontier.collect()
             n_seed = len(rows)
-            self.catalog.append_round_local(
-                pa.table({c: [r[c] for r in rows] for c in FRONTIER_COLS},
-                         schema=FRONTIER_ARROW_SCHEMA),
-                "pending", 0)
+            self._pending = pa.table(
+                {c: [r[c] for r in rows] for c in FRONTIER_COLS},
+                schema=FRONTIER_ARROW_SCHEMA)
+            self.catalog.append_round_local(self._pending, "pending", 0)
             self._seen = {r["url_hash"] for r in rows}
             self._write_seen_state(0, fam)
             progress = {"round": 0, "done": 0, "failed": 0, "enqueued": n_seed,
                         "finalized": n_seed == 0, "phase": "seeded",
                         "pending_next": n_seed,
-                        "pending_seq_range": [0, max(0, n_seed - 1)],
                         "bloom_geometry": fam.geometry}
             self.catalog.commit_round(0, ["pending", "seen", "bloom"],
                                       progress, replace=CUMULATIVE_TABLES)
@@ -777,82 +766,64 @@ class CrawlEngine:
 
     def _run_round(self, cfg: CrawlConfig, r: int, progress: dict,
                    ex: dict, fam) -> dict:
-        """One round as named stages over one driver-known round size,
-        ``n_pending`` (the prior meta's ``pending_next``). The submission
-        order is load-bearing: the discovery checkpoint, the outcome job
-        and the docs writes evaluate the cached docs frame concurrently,
-        and all three overlap the previous round's writes, which
-        _finalize_prev awaits only before this round's state writes. The
-        time stamps delimit the meta ``timings`` phases."""
+        """One round as named stages over the driver-resident frontier
+        ``self._pending``, which Spark reads from the round file the
+        previous round wrote. The submission order is load-bearing: the
+        discovery collect, the outcome job and the docs writes evaluate the
+        cached docs frame concurrently, and all three overlap the previous
+        round's writes, which _finalize_prev awaits only before this
+        round's state writes. The driver then builds the next pending from
+        the two collects. The time stamps delimit the meta ``timings``
+        phases."""
         t0 = time.time()
-        # pending: the in-memory frontier from last round (write pipelining —
-        # its parquet write may still be in flight) or, on resume / first
-        # round, the committed checkpoint
-        pending = (self._pending_mem if self._pending_mem is not None
-                   else self.catalog.read_round(self.spark, "pending", r - 1,
-                                                schema=FRONTIER_SCHEMA))
-        n_pending = progress["pending_next"]
-        if pending is None or n_pending == 0:
+        n_pending = self._pending.num_rows
+        if n_pending == 0:
             self._finalize_prev()
             meta = {**progress, "round": r, "finalized": True,
                     "phase": "drained"}
             self.catalog.commit_round(r, [], meta)
             return meta
-        # unbudgeted: the round admits all of pending; pipelined: no retries
-        # either, so the next pending is exactly this round's new rows
-        unbudgeted = not cfg.politeness_budget and not cfg.batch_size
-        pipelined = unbudgeted and cfg.max_attempts == 1
+        pending = self.spark.read.schema(FRONTIER_SCHEMA).parquet(
+            self.catalog.round_path("pending", r - 1))
         # consumers of the round's docs run at ~1k rows per task
         n_view = self._width(n_pending, 1000)
-        admitted, deferred = self._admit(cfg, pending, ex, unbudgeted)
+        admitted = self._admit(cfg, pending)
         docs, docs_view = self._fetch_extract(r, admitted, n_pending, n_view,
                                               ex)
         disc_fut = None
         if progress["enqueued"] < cfg.limit:
-            disc_fut = self._submit_discovery(cfg, r, progress, docs, n_view,
-                                              ex, fam)
+            disc_fut = self._submit_discovery(cfg, r, progress, docs, ex, fam)
         t_plan = time.time()
         outcome_fut, doc_writes = self._submit_doc_writes(r, docs, docs_view,
                                                           ex)
-        ranked, new_rows, n_new = None, None, 0
-        t_ranked = t_counts = t_plan
+        new_rows = FRONTIER_ARROW_SCHEMA.empty_table()
+        t_disc = t_plan
         if disc_fut is not None:
-            ranked = disc_fut.result()
-            t_ranked = time.time()
-            counts = {row["__bucket"]: row["cnt"] for row in
-                      ranked.groupBy("__bucket").agg(
-                          F.max("__lrn").alias("cnt")).collect()}
-            t_counts = time.time()
-            new_rows, n_new = self._enqueue(cfg, r, progress["enqueued"],
-                                            ranked, counts, ex)
-        t_discover = time.time()
+            disc = disc_fut.result()
+            t_disc = time.time()
+            new_rows = self._enqueue(r, progress["enqueued"], disc)
+        t_enqueue = time.time()
         # Finalize the PREVIOUS round here (await its writes — they had this
-        # whole round's compute to overlap with — commit its manifest, free
-        # caches retired two rounds back) before this round's state writes.
+        # whole round's compute to overlap with — and commit its manifest)
+        # before this round's state writes.
         self._finalize_prev()
-        next_pending, state_writes, state_tables = self._write_state(
-            cfg, r, pending, deferred, docs, new_rows, n_new, ex, fam,
-            pipelined)
-        outcome_rows = outcome_fut.result()
+        outcome = outcome_fut.result()
+        state_tables = self._write_state(r, progress["enqueued"], outcome,
+                                         new_rows, fam)
         meta = self._round_meta(
-            cfg, r, progress, outcome_rows, n_pending, n_new, pipelined,
-            (t0, t_plan, t_ranked, t_counts, t_discover, time.time()))
+            cfg, r, progress, outcome, new_rows.num_rows,
+            self._pending.num_rows,
+            (t0, t_plan, t_disc, t_enqueue, time.time()))
         # Deferred commit (write pipelining): the manifest entry lands in
         # _finalize_prev() during the NEXT round, after the writes complete.
         # A crash before that resumes from the last committed round with
         # this round's directories dropped — exact-resume is unchanged.
         self._prev_inflight = {
-            "round": r, "futures": doc_writes + state_writes,
+            "round": r, "futures": doc_writes,
             "tables": ["results", "visits", "metrics"] + state_tables,
             "meta": meta,
-            "caches_now": [docs] if unbudgeted else [docs, admitted],
-            # ranked is the localCheckpointed block holder; keeping the
-            # reference until the next finalize stops the ContextCleaner
-            # from reclaiming blocks that in-flight writes still read
-            # (unpersist on a checkpointed frame is a harmless no-op)
-            "caches_later": [ranked] if ranked is not None else [],
+            "caches": [docs] if admitted is pending else [docs, admitted],
         }
-        self._pending_mem = next_pending
         return meta
 
     def _width(self, n_rows: int, rows_per_task: int) -> int:
@@ -861,37 +832,23 @@ class CrawlEngine:
         return max(1, min(self.spark.sparkContext.defaultParallelism,
                           (n_rows + rows_per_task - 1) // rows_per_task))
 
-    def _admit(self, cfg: CrawlConfig, pending: DataFrame, ex: dict,
-               unbudgeted: bool) -> tuple[DataFrame, DataFrame]:
-        """Budget/batch split of the round's frontier into (admitted,
-        deferred): the per-host budget window (the politeness shuffle by
-        host), then the coordinator's FIFO batch."""
-        if unbudgeted:
-            # all pending admitted; a schema-only empty frame (no lineage
-            # back into pending) keeps the deferred branch out of the next
-            # round's write plans entirely. range(0) keeps the empty source
-            # JVM-only (createDataFrame([]) is a pickled RDD that pulls in
-            # Python workers when scanned). admitted IS pending (often
-            # already a cached new_rows frame from last round) and feeds
-            # only the docs subtree, which is cached itself — an extra
-            # cache would just serialize the frontier twice.
-            if "empty_pending" not in ex:
-                ex["empty_pending"] = [
-                    F.lit(None).cast(f.dataType).alias(f.name)
-                    for f in pending.schema.fields]
-            return pending, self.spark.range(0).select(*ex["empty_pending"])
-        admitted, deferred = apply_host_budget(
+    def _admit(self, cfg: CrawlConfig, pending: DataFrame) -> DataFrame:
+        """The round's admitted frontier rows: the per-host budget window
+        (the politeness shuffle by host), then the coordinator's FIFO
+        batch. An unbudgeted round admits the pending frame itself; the
+        rows left out stay in the driver's frontier (_write_state)."""
+        if not cfg.politeness_budget and not cfg.batch_size:
+            return pending
+        admitted, _ = apply_host_budget(
             pending, cfg.politeness_budget, order_cols=("depth", "seq"),
             salt_n=cfg.budget_salt_n, scope=cfg.budget_scope)
         if cfg.batch_size:
             # coordinator batch semantics (crawlCoordinator.ts:33-38): take
             # the first batch_size rows in FIFO (seq) order
-            batch = admitted.orderBy("seq").limit(cfg.batch_size)
-            deferred = pending.join(batch.select("url_hash"), "url_hash",
-                                    "left_anti")
-            admitted = batch
-        # budget/batch rounds reference admitted from several branches
-        return admitted.cache(), deferred
+            admitted = admitted.orderBy("seq").limit(cfg.batch_size)
+        # both sides of the fetch join (the broadcast key set and the left
+        # side) read admitted: evaluate the budget window once
+        return admitted.cache()
 
     def _fetch_extract(self, r: int, admitted: DataFrame, n_pending: int,
                        n_view: int, ex: dict) -> tuple[DataFrame, DataFrame]:
@@ -953,7 +910,7 @@ class CrawlEngine:
         # UDF materializes at full parallelism (the cache also pins that
         # width — canChangeCachedPlanOutputPartitioning is off, so AQE
         # cannot byte-coalesce the compute-dense extract stage). But every
-        # CONSUMER job (results/visits writes, outcome counts) then paid 64
+        # CONSUMER job (results/visits writes, outcome collect) then paid 64
         # task launches and wrote 64 splinter files per round regardless of
         # round size — for a 100-row round that is pure scheduling overhead
         # (measured ~0.55 s per job). Consumers therefore read a coalesced
@@ -965,11 +922,11 @@ class CrawlEngine:
         return docs, docs.coalesce(n_view)
 
     def _submit_discovery(self, cfg: CrawlConfig, r: int, progress: dict,
-                          docs: DataFrame, n_view: int, ex: dict, fam):
+                          docs: DataFrame, ex: dict, fam):
         """Links → canonicalize → strategy/path/depth/robots filters →
-        first-discovery-wins dedup → seen filter, then the ranked
-        frontier-delta checkpoint, submitted async. Returns the checkpoint
-        future."""
+        first-discovery-wins dedup → seen filter, then the enqueue-cap
+        top-k collected to the driver as Arrow, submitted async. Returns
+        the collect's future."""
         links = (
             docs.where(ex["status_200"])
             .select(*ex["links_pre"])
@@ -996,7 +953,7 @@ class CrawlEngine:
         # seen filter: Bloom pre-filter + exact anti-join against the
         # driver-resident seen state — loaded from the checkpoint in a
         # resumed run's first discovery round, then kept current by
-        # _write_seen. The anti-join's seen side is the one full-set file
+        # _write_state. The anti-join's seen side is the one full-set file
         # the last seen-writing round wrote synchronously.
         if self._seen is None:
             self._load_seen(r - 1)
@@ -1017,66 +974,33 @@ class CrawlEngine:
         elif self._seen_df is not None:
             links = exact_antijoin(links, self._seen_df)
         # Submitted BEFORE the outcome job so its one materialization runs
-        # CONCURRENTLY with the outcome counts: both evaluate the cached
+        # CONCURRENTLY with the outcome collect: both evaluate the cached
         # docs frame (block locks serialize per-partition compute), so
         # wall time is ~max of the two jobs instead of their sum. The
-        # width_bucket bounds are the prior round's recorded pending seq
-        # range: bounds only need to COVER the admitted parents' seqs —
-        # bucket boundaries don't affect the dense numbering, which orders
-        # by bucket then (parent_seq, link_pos).
-        lo, hi = progress["pending_seq_range"]
-        return self._writes.submit(self._ranked_checkpoint, links, lo, hi,
-                                   n_view, ex)
-
-    def _ranked_checkpoint(self, links: DataFrame, lo: int, hi: int,
-                           n_view: int, ex: dict) -> DataFrame:
-        """ONE evaluation of the discovery subtree: rank within bucket
-        (needs no cross-bucket knowledge), eagerly localCheckpoint the
-        ranked frame; counts and the capped new_rows both derive from the
-        checkpointed blocks.
-
-        localCheckpoint, NOT cache: the frontier delta is the round
-        boundary — the next round's whole plan (and this round's in-flight
-        writes) sit on top of it. A cache here nests InMemoryRelations
-        round over round; unpersisting any mid-chain entry makes later
-        plan lookups miss and re-derive the entire crawl history
-        (measured: outcome-job task counts growing ~3x per round).
-        Checkpointing truncates lineage to a LogicalRDD — no plan
-        matching, no recompute path. Blocks are freed by the
-        ContextCleaner once the graveyard drops the reference."""
-        n_buckets = 4 * self.spark.sparkContext.defaultParallelism
-        return (
-            links.select(
-                "*",
-                F.width_bucket(F.col("parent_seq"), F.lit(lo),
-                               F.lit(hi + 1), F.lit(n_buckets))
-                .alias("__bucket"))
-            .select("*", ex["lrn"])
-            .select(*ex["ranked_sel"])
-            # checkpoint the frontier delta at round-size-matched width: its
-            # consumers (counts collect, enqueue select, pending write) are
-            # all thin per-row work, and 64 splinter blocks/files per small
-            # round cost more in task launches than the data
-            .coalesce(n_view)
-            .localCheckpoint()
-        )
+        # enqueue cap is a top-k in FIFO order — (parent_seq, link_pos) is
+        # unique per deduped link, so the k-th row's rank is its enqueue
+        # number — which Spark plans as one TakeOrderedAndProject: no
+        # global sort, and at most the remaining limit crosses to the
+        # driver.
+        capacity = cfg.limit - progress["enqueued"]
+        return self._writes.submit(
+            lambda: links.orderBy("parent_seq", "link_pos").limit(capacity)
+            .toArrow())
 
     def _submit_doc_writes(self, r: int, docs: DataFrame,
                            docs_view: DataFrame, ex: dict):
         """The outcome job and the results / visits / metrics writes, all
         submitted async. Returns (the outcome future, the write futures)."""
-        # One job: outcome counts (progress/retry math). Nothing in the
-        # round needs it before meta-build time — the drain check subsumes
-        # `done >= limit` (done counts admitted rows, which are capped by
-        # the enqueue limit, so done can only reach the limit when pending
-        # also empties), capacity uses the driver-known `enqueued`, and the
-        # width_bucket bounds come from pending_seq_range. The job runs
-        # concurrently with the discovery checkpoint and the doc writes
-        # (block-level cache locks make the shared docs materialization
-        # single-compute).
+        # One job: one (seq, status, final) row per admitted URL, from
+        # which the driver derives the progress counts, the admitted seqs
+        # and the retries (_write_state). Nothing in the round needs it
+        # before the state writes — capacity uses the driver-known
+        # `enqueued` — so it runs concurrently with the discovery collect
+        # and the doc writes (block-level cache locks make the shared docs
+        # materialization single-compute).
         outcome_fut = self._writes.submit(
-            lambda: docs_view.groupBy("status", ex["outcome_key"])
-            .agg(*ex["outcome_aggs"]).collect())
+            lambda: docs_view.select("seq", "status", ex["outcome_key"])
+            .toArrow())
         # results: persistence gated by scrape_paths (F5) — links still
         # flow; visits: complete per-round visit log (crawl-order golden
         # surface). The docs-derived writes are independent reads of the
@@ -1101,97 +1025,52 @@ class CrawlEngine:
         futures.append(self._writes.submit(append, metrics, "metrics", r))
         return outcome_fut, futures
 
-    def _enqueue(self, cfg: CrawlConfig, r: int, enqueued: int,
-                 ranked: DataFrame, counts: dict[int, int],
-                 ex: dict) -> tuple[DataFrame, int]:
-        """Per-bucket counts → bucket offsets → the capped, densely
-        numbered new frontier rows and their count."""
-        capacity = cfg.limit - enqueued
-        offsets, total = [], 0
-        for b in sorted(counts):
-            offsets.append((b, total))
-            total += counts[b]
-        # bucket→offset as a literal map expression, not a broadcast
-        # join of a createDataFrame frame: local Python rows make a
-        # pickled RDD whose broadcast build re-ran Python workers in
-        # every job that touched new_rows, each round. element_at on a
-        # literal map is pure codegen; a bucket whose offset already
-        # exceeds the enqueue capacity is absent from the map → null →
-        # filtered, exactly the inner join's semantics. Bucket count is
-        # bounded (4×cores), so the literal stays small at any scale.
-        # one F.expr over a rendered literal string: building the same
-        # map from per-literal F.lit().cast() Column objects cost ~250
-        # py4j round-trips per round on the driver (profiled ~0.24 s)
-        off_items = ",".join(f"{b}L,{o}L" for b, o in offsets
-                             if o < capacity)
-        off_map = F.expr(f"map({off_items})" if off_items
-                         else "cast(map() as map<bigint,bigint>)")
-        rn = F.col("__off") + F.col("__lrn")
-        new_rows = (
-            ranked.select("*", off_map[F.col("__bucket")].alias("__off"))
-            .where(F.col("__off").isNotNull() & (rn <= capacity))
-            .select(*ex["frontier_head"],
-                    ex["new_depth"],
-                    (F.lit(enqueued) - 1 + rn).alias("seq"),
-                    F.lit(r).alias("round_added"),
-                    ex["new_attempt"])
-        )
-        return new_rows, min(total, capacity)
+    @staticmethod
+    def _enqueue(r: int, enqueued: int, disc: pa.Table) -> pa.Table:
+        """The discovery collect (at most the remaining limit's worth of
+        deduped links, in (parent_seq, link_pos) order) → the densely
+        numbered new frontier rows: seq = enqueued + rank."""
+        n = disc.num_rows
+        return pa.table({
+            **{c: disc.column(c) for c in ("job_id", "url", "url_hash",
+                                           "host", "origin", "path")},
+            "depth": pc.add(disc.column("parent_depth"), 1),
+            "seq": pa.array(range(enqueued, enqueued + n)),
+            "round_added": pa.array([r] * n),
+            "attempt": pa.array([1] * n),
+        }, schema=FRONTIER_ARROW_SCHEMA)
 
-    def _write_state(self, cfg: CrawlConfig, r: int, pending: DataFrame,
-                     deferred: DataFrame, docs: DataFrame,
-                     new_rows: DataFrame | None, n_new: int, ex: dict,
-                     fam, pipelined: bool):
-        """Round r's next pending, seen and bloom. Returns (the next
-        round's pending frame, the pending write future, the state tables
-        written)."""
-        next_pending = deferred.select(*FRONTIER_COLS)
-        if cfg.max_attempts > 1:
-            retries = (
-                docs.where(~ex["final_attempt"])
-                .select("job_id", "url", "url_hash", "host", "depth", "seq",
-                        (F.col("attempt") + 1).alias("attempt"))
-                .join(pending.select("url_hash",
-                                     F.col("origin").alias("__o"),
-                                     F.col("path").alias("__p"),
-                                     F.col("round_added").alias("__ra")),
-                      "url_hash")
-                .select("job_id", "url", "url_hash", "host",
-                        F.col("__o").alias("origin"), F.col("__p").alias("path"),
-                        "depth", "seq", F.col("__ra").alias("round_added"),
-                        "attempt")
-                .select(*FRONTIER_COLS)
-            )
-            next_pending = next_pending.unionByName(retries)
-        if n_new > 0:
-            # pipelined: deferred is the schema-only empty frame — skip the
-            # union so next round's admitted is the cached new_rows frame
-            # itself (depth-1 lineage for the pipelined pending)
-            next_pending = (new_rows if pipelined
-                            else next_pending.unionByName(new_rows))
-        futures = [self._writes.submit(self.catalog.append_round,
-                                       next_pending, "pending", r)]
-        # In-memory pending for the next round is only safe when its lineage
-        # is one cached frame deep: with budgets/batches/retries the
-        # deferred branch chains through every prior round's frontier, so
-        # cut lineage by waiting for the parquet write and reading it back
-        # (commit still deferred).
-        if not pipelined:
-            futures[0].result()
-            next_pending = self.spark.read.schema(FRONTIER_SCHEMA).parquet(
-                self.catalog.round_path("pending", r))
-        if n_new == 0:
-            return next_pending, futures, ["pending"]
-        self._write_seen(r, new_rows, fam)
-        return next_pending, futures, ["pending"] + CUMULATIVE_TABLES
-
-    def _write_seen(self, r: int, new_rows: DataFrame, fam) -> None:
-        """Add round r's new hashes to the driver-resident seen state and
-        checkpoint it as round r. The hashes are collected once (the
-        round's delta is bounded by the job's enqueue limit); the filter
-        build and both writes run on the driver — no Spark job."""
-        hashes = [row["url_hash"]
-                  for row in new_rows.select("url_hash").collect()]
+    def _write_state(self, r: int, enqueued: int, outcome: pa.Table,
+                     new_rows: pa.Table, fam) -> list[str]:
+        """Round r's next pending — the unadmitted rows, the retries
+        (attempt + 1, every other column kept) and the new rows — written
+        with pyarrow and kept as the driver's frontier, then the seen state
+        grown by the new hashes and checkpointed as round r (the filter
+        build and every write run on the driver — no Spark job). Returns
+        the state tables written."""
+        pending, seq = self._pending, self._pending.column("seq")
+        not_final = outcome.filter(pc.invert(outcome.column("final")))
+        retries = pending.filter(pc.is_in(
+            seq, value_set=not_final.column("seq").combine_chunks()))
+        retries = retries.set_column(
+            FRONTIER_COLS.index("attempt"), "attempt",
+            pc.add(retries.column("attempt"), 1).cast(pa.int32()))
+        unadmitted = pending.filter(pc.invert(pc.is_in(
+            seq, value_set=outcome.column("seq").combine_chunks())))
+        nxt = pa.concat_tables([unadmitted, retries, new_rows])
+        # a seq names one frontier row from enqueue to its final attempt,
+        # and the new rows continue the job's dense enqueue numbering
+        if pc.count_distinct(nxt.column("seq")).as_py() != nxt.num_rows:
+            raise AssertionError(f"round {r} next pending repeats a seq")
+        if new_rows.column("seq").to_pylist() != list(
+                range(enqueued, enqueued + new_rows.num_rows)):
+            raise AssertionError(
+                f"round {r} new rows are not numbered from {enqueued}")
+        self.catalog.append_round_local(nxt, "pending", r)
+        self._pending = nxt
+        if new_rows.num_rows == 0:
+            return ["pending"]
+        hashes = new_rows.column("url_hash").to_pylist()
         new = set(hashes)
         # both invariants keep every URL to one visit: in-batch dedup
         # yields each new hash once, and the exact anti-join drops every
@@ -1204,62 +1083,43 @@ class CrawlEngine:
                 f"round {r} seen delta holds already-seen url hashes")
         self._seen |= new
         self._write_seen_state(r, fam)
+        return ["pending"] + CUMULATIVE_TABLES
 
     @staticmethod
     def _round_meta(cfg: CrawlConfig, r: int, progress: dict,
-                    outcome_rows: list, n_pending: int, n_new: int,
-                    pipelined: bool, stamps: tuple) -> dict:
-        """The round's committed meta. Counts come by arithmetic over
-        aggregates the round already computed — no re-read of the
-        just-written files (which cost a footer-scan Spark job per round):
-            pending(r) = pending(r-1) - admitted + retries + newly enqueued
-        """
-        outcome = {(row["status"], row["final"]): row["count"]
-                   for row in outcome_rows}
-        n_fetched = sum(v for (s_, _f), v in outcome.items() if s_ == 200)
-        n_failed = sum(v for (s_, fin), v in outcome.items()
-                       if s_ != 200 and fin)
-        n_retries = 0
-        if cfg.max_attempts > 1:
-            n_retries = sum(v for (s_, fin), v in outcome.items()
-                            if s_ != 200 and not fin)
-        n_pending_next = (n_pending - sum(outcome.values()) + n_retries
-                          + n_new)
+                    outcome: pa.Table, n_new: int, n_pending_next: int,
+                    stamps: tuple) -> dict:
+        """The round's committed meta, counted from the outcome collect —
+        no re-read of the just-written files."""
+        rows = zip(outcome.column("status").to_pylist(),
+                   outcome.column("final").to_pylist())
+        n_fetched = n_failed = 0
+        for status, final in rows:
+            n_fetched += status == 200
+            n_failed += status != 200 and final
         done = progress["done"] + n_fetched + n_failed
-        enqueued = progress["enqueued"]
-        # Seq range of next round's pending, by arithmetic: new rows carry
-        # seq [enqueued, enqueued + n_new - 1]; deferred/retry rows keep
-        # seqs within the prior range, so the union of ranges covers them.
-        # Drives the next round's width_bucket bounds without waiting for
-        # its outcome job (concurrent discovery materialization).
-        rng = progress["pending_seq_range"]
-        if n_new > 0:
-            new_rng = [enqueued, enqueued + n_new - 1]
-            rng = (new_rng if pipelined
-                   else [min(rng[0], new_rng[0]), max(rng[1], new_rng[1])])
-        t0, t_plan, t_ranked, t_counts, t_discover, t_writes = stamps
+        t0, t_plan, t_disc, t_enqueue, t_writes = stamps
         return {
             "round": r, "done": done, "failed": progress["failed"] + n_failed,
-            "enqueued": enqueued + n_new,
+            "enqueued": progress["enqueued"] + n_new,
             "finalized": n_pending_next == 0 or done >= cfg.limit,
             "admitted": n_fetched + n_failed, "new": n_new,
             "pending_next": n_pending_next, "phase": "crawl",
-            "pending_seq_range": rng,
             # per-phase wall seconds (lineage/metrics; negligible cost).
             # Since the round-4 pipelining the outcome (fetch/extract) job
-            # and the discovery checkpoint run CONCURRENTLY, so they share
+            # and the discovery collect run CONCURRENTLY, so they share
             # one "compute" phase — attributing the old fetch_extract /
             # discover_enqueue split would misread plan-build time as work.
             "timings": {
-                "compute": round(t_discover - t0, 3),
-                "state_writes": round(t_writes - t_discover, 3),
+                "compute": round(t_enqueue - t0, 3),
+                "state_writes": round(t_writes - t_enqueue, 3),
                 # compute sub-phases: plan = driver-side build + submits,
-                # disc = the discovery checkpoint job (docs materialize),
-                # counts = the per-bucket count collect; both 0 in a round
+                # disc = the discovery collect (docs materialize), counts =
+                # the driver-side build of the new rows; both 0 in a round
                 # without discovery
                 "plan": round(t_plan - t0, 3),
-                "disc": round(t_ranked - t_plan, 3),
-                "counts": round(t_counts - t_ranked, 3),
+                "disc": round(t_disc - t_plan, 3),
+                "counts": round(t_enqueue - t_disc, 3),
             },
         }
 

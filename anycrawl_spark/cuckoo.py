@@ -66,11 +66,6 @@ def check_n_slots(n_slots: int) -> None:
                          f"got {n_slots}")
 
 
-def segment_nbytes(n_slots: int) -> int:
-    """Serialized size of one segment: flag byte + uint16 table."""
-    return 1 + n_slots * SLOT_WIDTH * 2
-
-
 def _fp_i1(hash_hex: str, n_slots: int) -> tuple[int, int]:
     # hex slices [9:13) -> 16-bit fingerprint (0 remapped to 1: 0 is the
     # empty-slot sentinel), [17:25) -> primary index. Slice [1:9) is the
@@ -139,8 +134,7 @@ def _encode(arr: np.ndarray, saturated: bool) -> bytes:
 
 
 def _decode(blob: bytes) -> tuple[np.ndarray, bool]:
-    return (np.frombuffer(blob, dtype="<u2", offset=1).copy(),
-            blob[0] != 0)
+    return np.frombuffer(blob, dtype="<u2", offset=1), blob[0] != 0
 
 
 def _build_table(hashes, n_slots: int) -> bytes:

@@ -200,10 +200,8 @@ class SeenFilterFamily:
     filter only routes candidates between the definitely-new fast path and
     the exact anti-join (tests/test_cuckoo.py crawl-parity test)."""
 
-    def __init__(self, name, total_bytes, geometry, build_driver,
-                 filter_new):
+    def __init__(self, name, geometry, build_driver, filter_new):
         self.name = name
-        self.total_bytes = total_bytes     # serialized bytes across buckets
         self.geometry = geometry           # resume-fingerprint (JSON list)
         self.build_driver = build_driver
         self.filter_new = filter_new
@@ -219,7 +217,6 @@ def filter_family(name: str = "bloom", *,
     if name == "bloom":
         return SeenFilterFamily(
             "bloom",
-            num_buckets * (m_bits // 8),
             [num_buckets, m_bits, k],
             lambda hashes: build_segments_driver(
                 hashes, num_buckets=num_buckets, m_bits=m_bits, k=k),
@@ -233,7 +230,6 @@ def filter_family(name: str = "bloom", *,
         slots = n_slots if n_slots is not None else cuckoo.DEFAULT_N_SLOTS
         return SeenFilterFamily(
             "cuckoo",
-            num_buckets * cuckoo.segment_nbytes(slots),
             ["cuckoo", num_buckets, slots],
             lambda hashes: cuckoo.build_segments_driver(
                 hashes, num_buckets=num_buckets, n_slots=slots),

@@ -181,6 +181,74 @@ class TestCrawlParity:
         assert any("/blog/" not in v[1] for v in visits)
 
 
+def _page(links: list[str]) -> str:
+    anchors = "".join(f'<a href="{u}">link {i}</a> '
+                      for i, u in enumerate(links))
+    return (f"<html><head><title>t</title></head><body><main>"
+            f"<p>A page of the enqueue-boundary corpus.</p>{anchors}"
+            f"</main></body></html>")
+
+
+class TestEnqueueBoundary:
+    """The enqueue cap cuts inside one parent's link list, in the round
+    where two parents link the same new URL and a link is already seen:
+    the top-k numbering must enqueue exactly the simulator's prefix."""
+
+    A, B = "https://a.test", "https://b.test"
+    LINKS = {
+        # round 1: the seed enqueues p1, p2, p3 (seqs 1-3)
+        f"{A}/p0": [f"{A}/p1", f"{A}/p2", f"{B}/p3"],
+        # round 2: p1 links the seed (seen) and /shared, which p2 links
+        # again; new links number x1=4, shared=5, x2=6, y1=7, y2=8, ...
+        f"{A}/p1": [f"{A}/p0", f"{A}/x1", f"{A}/shared", f"{A}/x2"],
+        f"{A}/p2": [f"{A}/shared", f"{A}/y1", f"{A}/y2", f"{A}/y3"],
+        f"{B}/p3": [f"{A}/z1", f"{B}/z2"],
+        f"{A}/x1": [f"{A}/p0"], f"{A}/shared": [f"{A}/x1"],
+        f"{A}/x2": [], f"{A}/y1": [f"{A}/y9"], f"{A}/y2": [],
+        f"{A}/z1": [], f"{B}/z2": [f"{A}/p2"],
+    }
+
+    @pytest.fixture(scope="class")
+    def boundary_corpus(self, spark):
+        import datetime
+
+        from anycrawl_spark.corpus import PAGES_SCHEMA
+
+        ts = datetime.datetime(2024, 1, 1)
+        rows = [(url, ts, _page(links).encode(), "", "en")
+                for url, links in self.LINKS.items()]
+        return spark.createDataFrame(rows, schema=PAGES_SCHEMA)
+
+    # limit 6 cuts inside p1's list after /shared; limit 8 cuts inside
+    # p2's list after y1, past p2's duplicate of /shared
+    @pytest.mark.parametrize("limit,last_in,first_out",
+                             [(6, "shared", "x2"), (8, "y1", "y2")])
+    @pytest.mark.parametrize("budget", [0, 2])
+    def test_cap_inside_link_list_matches_simulator(
+            self, spark, boundary_corpus, tmp_root, limit, last_in,
+            first_out, budget):
+        import hashlib
+
+        corpus = corpus_to_dict([{"url": u, "html": _page(ls)}
+                                 for u, ls in self.LINKS.items()])
+        seed = f"{self.A}/p0"
+        kw = dict(seed_url=seed, strategy="all", max_depth=5, limit=limit,
+                  politeness_budget=budget)
+        engine, summary, visits, seen = run_engine(
+            spark, boundary_corpus, tmp_root, f"cap_{limit}_{budget}",
+            respect_robots=False, **kw)
+        sim = simulate_crawl(corpus, **kw)
+        assert_parity(spark, visits, seen, sim)
+        assert summary["enqueued"] == sim.enqueued == limit
+        # the premise: round 2 fills the cap and the cut lands between
+        # two links of one parent
+        meta = engine.catalog.round_meta(2)
+        assert meta["new"] == limit - 4
+        h = lambda name: hashlib.sha256(  # noqa: E731
+            key_of(f"{self.A}/{name}").encode()).hexdigest()
+        assert h(last_in) in seen and h(first_out) not in seen
+
+
 class TestResume:
     def test_kill_and_resume_exact(self, spark, small_corpus, tmp_root):
         kw = dict(seed_url=SEED, strategy="same-hostname", max_depth=5, limit=40,
@@ -223,16 +291,76 @@ class TestResume:
         }
         assert resumed_results == full_results
 
-        # every round sizes itself from the prior meta: each committed seed
-        # and crawl meta records the pending count and seq range
+        # resume checks the loaded frontier against the prior meta: each
+        # committed seed and crawl meta records the pending count
         for engine in (engine_full, engine_resumed):
             metas = [engine.catalog.round_meta(rr)
                      for rr in range(engine.catalog.last_round() + 1)]
             metas = [m for m in metas if m.get("phase") in ("seeded", "crawl")]
             assert metas and metas[0]["phase"] == "seeded"
             for m in metas:
-                assert "pending_next" in m and "pending_seq_range" in m, m
+                assert "pending_next" in m, m
             assert_one_state_copy(engine.catalog)
+
+
+    KW = dict(seed_url=SEED, strategy="same-hostname", max_depth=5, limit=40,
+              respect_robots=False)
+
+    def _interrupted(self, spark, small_corpus, tmp_root, name):
+        """A crawl stopped after round 2, and its pending round's path."""
+        engine = CrawlEngine(spark, small_corpus, os.path.join(tmp_root, name))
+        engine.run(CrawlConfig(job_id="resume", max_rounds=2, **self.KW))
+        r = engine.catalog.last_round()
+        assert engine.catalog.round_meta(r)["pending_next"] > 1
+        return engine.catalog.root, engine.catalog.round_path("pending", r)
+
+    def test_truncated_pending_rejects_resume(self, spark, small_corpus,
+                                              tmp_root):
+        """A committed pending file that lost a row does not resume as a
+        shorter crawl: its row count is checked against the meta."""
+        import shutil
+
+        import pyarrow.parquet as pq
+
+        root, path = self._interrupted(spark, small_corpus, tmp_root,
+                                       "resume_truncated")
+        table = pq.read_table(path)
+        n = table.num_rows
+        shutil.rmtree(path)
+        os.makedirs(path)
+        pq.write_table(table.slice(1), os.path.join(path, "part-0.parquet"))
+        engine = CrawlEngine(spark, small_corpus, root)
+        with pytest.raises(ValueError,
+                           match=rf"holds {n - 1} rows .*pending_next={n}"):
+            engine.run(CrawlConfig(job_id="resume", **self.KW), resume=True)
+        assert engine._writes is None
+
+    def test_resume_from_spark_written_pending(self, spark, small_corpus,
+                                               tmp_root):
+        """A pending round laid out as Spark's writer leaves it (several
+        part files, _SUCCESS and .crc side files) resumes to the
+        uninterrupted crawl."""
+        import shutil
+
+        _, full_visits, full_seen = run_engine(
+            spark, small_corpus, tmp_root, "resume_spark_full",
+            **self.KW)[1:]
+        root, path = self._interrupted(spark, small_corpus, tmp_root,
+                                       "resume_spark_part")
+        spark.read.parquet(path).repartition(3).write.parquet(path + ".tmp")
+        shutil.rmtree(path)
+        shutil.move(path + ".tmp", path)
+        files = os.listdir(path)
+        assert "_SUCCESS" in files
+        assert sum(f.startswith("part-") for f in files) > 1
+
+        engine = CrawlEngine(spark, small_corpus, root)
+        engine.run(CrawlConfig(job_id="resume", **self.KW), resume=True)
+        visits = [(r["seq"], r["url"], r["depth"], r["status"])
+                  for r in engine.visit_order().collect()]
+        seen = {r["url_hash"]
+                for r in engine.catalog.read(spark, "seen").collect()}
+        assert (visits, seen) == (full_visits, full_seen)
 
 
 class TestSeenInvariant:

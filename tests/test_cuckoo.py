@@ -60,7 +60,6 @@ class TestCuckooCore:
     def test_family_geometry_and_sizes(self):
         fam = filter_family("cuckoo", num_buckets=8, n_slots=1 << 10)
         assert fam.geometry == ["cuckoo", 8, 1024]
-        assert fam.total_bytes == 8 * (1 + 1024 * 4 * 2)
         with pytest.raises(ValueError):
             filter_family("vacuum")
 
