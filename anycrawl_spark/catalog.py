@@ -54,9 +54,9 @@ class Catalog:
     def append_round_local(self, arrow_table, table: str, round_no: int) -> None:
         """Driver-side parquet write (pyarrow) of one round's rows — same
         directory layout and read path as append_round, but no Spark job.
-        Only for driver-resident state (the exact seen set and its filter
-        segments, seed/re-enqueue frontiers); the other round tables use
-        the distributed writer."""
+        Only for driver-resident state (the exact seen set and the
+        pending frontiers); the other round tables use the distributed
+        writer."""
         import pyarrow.parquet as pq
 
         path = Path(self.round_path(table, round_no))
@@ -109,8 +109,7 @@ class Catalog:
              schema: str | None = None) -> DataFrame | None:
         """Union of all committed rounds of ``table`` (optionally ≤ a round).
         ``schema``: optional explicit DDL schema — skips the driver-side
-        footer read parquet schema inference costs per call (the round loop
-        reads seen/pending/bloom every round)."""
+        footer read parquet schema inference costs per call."""
         rounds = self.committed_rounds(table)
         if up_to_round is not None:
             rounds = [r for r in rounds if r <= up_to_round]

@@ -11,14 +11,14 @@ Each round r is one Spark batch over immutable checkpointed state:
                →  results_r append (scrape_paths-gated persistence)
                →  posexplode(links) → canonicalize (JVM expr) → strategy /
                   path / depth / robots filters → in-batch dedup
-               →  Bloom pre-filter + exact anti-join vs seen set
+               →  Bloom pre-filter (built from the seen set, once it is
+                  large) + exact anti-join vs seen set
                →  enqueue-cap top-k: one bounded Arrow collect in
                   (parent_seq, link_pos) order
                →  on the driver: seq assignment, pending_{r+1} = unadmitted
-                  + retried + new rows, written with pyarrow beside the seen
-                  set and the filter built from it (full copies); progress,
-                  per-partition lineage appended; manifest commit (atomic)
-                  → resumable
+                  + retried + new rows, written with pyarrow beside the full
+                  seen set; progress, per-partition lineage appended;
+                  manifest commit (atomic) → resumable
 
 The frontier and the seen set are driver-resident: both are bounded by the
 zod ``limit`` (≤ 50,000 URLs enqueued per job), so the round numbers and
@@ -65,7 +65,7 @@ from .politeness import (
     robots_allowed,
     strategy_cond,
 )
-from .seen import SEGMENT_SCHEMA, exact_antijoin, segments_to_driver
+from .seen import exact_antijoin
 from .udfs import make_extract_udf
 
 FRONTIER_COLS = ["job_id", "url", "url_hash", "host", "origin", "path",
@@ -76,7 +76,7 @@ FRONTIER_SCHEMA = ("job_id string, url string, url_hash string, host string, "
 SEEN_SCHEMA = "url_hash string"
 # tables whose every checkpoint round is the full cumulative state: a
 # commit naming one retires its previous copy
-CUMULATIVE_TABLES = ["seen", "bloom"]
+CUMULATIVE_TABLES = ["seen"]
 # FRONTIER_SCHEMA for the driver-resident frontier and its pyarrow writes
 FRONTIER_ARROW_SCHEMA = pa.schema([
     ("job_id", pa.string()), ("url", pa.string()),
@@ -128,11 +128,11 @@ class CrawlConfig:
                                          # once the seen set exceeds this many
                                          # hashes; below it the exact anti-join
                                          # alone is measurably cheaper than the
-                                         # segment broadcast + Arrow probe
-                                         # stage (BENCH.md r6). The filter is
-                                         # still built/checkpointed every
-                                         # round — this gates the physical
-                                         # plan only, never membership
+                                         # filter build + segment broadcast +
+                                         # Arrow probe stage (BENCH.md r6).
+                                         # The filter is built only in rounds
+                                         # that probe — this gates the
+                                         # physical plan only, never membership
 
     def __post_init__(self) -> None:
         # zod schema bounds (CrawlSchema.ts:31-47) — parse() rejects, so do we
@@ -281,12 +281,10 @@ class CrawlEngine:
         self.robots = robots
         # driver-resident seen state, cumulative through the newest round
         # this run wrote (or, on resume, loaded by _load_seen): the exact
-        # set, the frame over the one file holding it (the anti-join's
-        # seen side) and the filter segments built from that set. run()
-        # resets it.
+        # set and the frame over the one file holding it (the anti-join's
+        # seen side). run() resets it.
         self._seen: set[str] | None = None
         self._seen_df: DataFrame | None = None
-        self._bloom_mem: dict[int, bytes] | None = None
         # driver-resident frontier: the next round's pending rows, built by
         # the previous round (or, on a run's first round, loaded by
         # _load_pending). Its file is written synchronously ahead of the
@@ -307,25 +305,10 @@ class CrawlEngine:
             return {"round": -1, "done": 0, "failed": 0, "enqueued": 0, "finalized": False}
         return self.catalog.round_meta(last) or {}
 
-    def _latest_bloom(self, spark: SparkSession,
-                      up_to_round: int) -> dict[int, bytes] | None:
-        """Newest committed bloom round ≤ ``up_to_round`` as a driver dict.
-        Each bloom round is the filter built from the full seen set it was
-        committed with, so the newest round alone IS the seen filter."""
-        rounds = [rr for rr in self.catalog.committed_rounds("bloom")
-                  if rr <= up_to_round]
-        if not rounds:
-            return None
-        return segments_to_driver(self.catalog.read_round(
-            spark, "bloom", max(rounds), schema=SEGMENT_SCHEMA))
-
     def _load_seen(self, up_to_round: int) -> None:
         """Load the committed seen state through ``up_to_round`` onto the
-        driver: the exact set (pyarrow reads, no Spark job), the frame over
-        its files, and the committed filter, which serves the probe until
-        the next seen write rebuilds it from the exact set (None when no
-        bloom round is committed: the probe then falls back to the exact
-        anti-join).
+        driver: the exact set (pyarrow reads, no Spark job) and the frame
+        over its files.
         This engine commits one full-set seen round; a per-round delta
         chain written by an older engine loads as the union of its rounds,
         and the next seen write replaces it with one full copy."""
@@ -340,7 +323,6 @@ class CrawlEngine:
                               .to_pylist())
         self._seen_df = (self.spark.read.schema(SEEN_SCHEMA).parquet(*paths)
                          if paths else None)
-        self._bloom_mem = self._latest_bloom(self.spark, up_to_round)
 
     def _load_pending(self, round_no: int, expected: int) -> None:
         """Load the committed pending round ``round_no`` onto the driver
@@ -417,25 +399,6 @@ class CrawlEngine:
     # `run(cfg, resume=True)` fetches a fresh copy. Both steps are atomic
     # manifest commits between runs.
 
-    def _check_geometry(self, fam) -> None:
-        """Filter family + geometry are baked into every checkpointed
-        segment, and the first resumed round probes the committed filter
-        before any rebuild — resuming, evicting, or re-enqueuing under a
-        different family would read wrong bit positions / fingerprints
-        (false negatives or IndexError in the tester). Bloom keeps the
-        historic [nb, m_bits, k] fingerprint shape; cuckoo prepends its
-        family tag, so a family switch always mismatches, as does a
-        checkpoint written with a geometry other than the module
-        defaults."""
-        seeded = self.catalog.round_meta(0) or {}
-        fp = seeded.get("bloom_geometry")
-        if fp is not None and fp != fam.geometry:
-            raise ValueError(
-                f"seen-filter geometry mismatch (bloom geometry "
-                f"[nb, m_bits, k] or cuckoo geometry ['cuckoo', nb, "
-                f"n_slots] is baked into checkpointed segments): "
-                f"checkpoint has {fp}, config asks {fam.geometry}")
-
     def _canonical_rows(self, cfg: CrawlConfig, urls: list[str]) -> list:
         frontier = _canonical_cols(
             self.spark.createDataFrame([(cfg.job_id, u) for u in urls],
@@ -448,34 +411,24 @@ class CrawlEngine:
                 rows.append(row)
         return rows
 
-    def _write_seen_state(self, round_no: int, fam) -> None:
+    def _write_seen_state(self, round_no: int) -> None:
         """Checkpoint the driver-resident seen set as ``round_no``: the
-        FULL exact set (sorted) and the filter built from it — the filter's
-        one producer, so every committed bloom round equals
-        ``fam.build_driver`` of the seen round beside it. Two pyarrow
-        writes, no Spark job. The caller commits both with
-        replace=CUMULATIVE_TABLES; until that (deferred) commit lands, the
-        next round's anti-join reads this file."""
-        ordered = sorted(self._seen)
-        self._bloom_mem = cache = fam.build_driver(ordered)
+        FULL exact set, sorted — the only checkpointed seen state (the
+        filter is derived from it where it is probed). One pyarrow write,
+        no Spark job. The caller commits it with replace=CUMULATIVE_TABLES;
+        until that (deferred) commit lands, the next round's anti-join
+        reads this file."""
         self.catalog.append_round_local(
-            pa.table({"url_hash": pa.array(ordered, type=pa.string())}),
+            pa.table({"url_hash": pa.array(sorted(self._seen),
+                                           type=pa.string())}),
             "seen", round_no)
-        self.catalog.append_round_local(
-            pa.table({
-                "bucket": pa.array(sorted(cache), type=pa.int32()),
-                "bitmap": pa.array([cache[b] for b in sorted(cache)],
-                                   type=pa.binary()),
-            }), "bloom", round_no)
         self._seen_df = self.spark.read.schema(SEEN_SCHEMA).parquet(
             self.catalog.round_path("seen", round_no))
 
     def evict_urls(self, cfg: CrawlConfig, urls: list[str]) -> dict:
         """Remove URLs from the committed seen state (TTL expiry): the
-        exact seen set loses the evicted hashes and the filter is rebuilt
-        from what is left, for both families. ``evicted`` counts only
-        requested hashes that were members. One commit,
-        replace=['seen','bloom']."""
+        exact seen set loses the evicted hashes. ``evicted`` counts only
+        requested hashes that were members. One commit, replace=['seen']."""
         progress = self._progress()
         if progress["round"] < 0:
             raise ValueError("no committed crawl state to evict from")
@@ -485,29 +438,26 @@ class CrawlEngine:
             raise ValueError("evict_urls runs between jobs — resume the "
                              "crawl to completion first")
         r = progress["round"] + 1
-        fam = cfg.filter_family()
-        self._check_geometry(fam)
-
         self._load_seen(progress["round"])
         if self._seen_df is None:
             raise ValueError("no seen state committed yet")
         evicted = self._seen & {row["url_hash"]
                                 for row in self._canonical_rows(cfg, urls)}
         self._seen -= evicted
-        self._write_seen_state(r, fam)
+        self._write_seen_state(r)
 
         meta = {**progress, "round": r, "finalized": True,
                 "pending_next": 0, "phase": "evicted",
                 "evicted": len(evicted)}
-        self.catalog.commit_round(r, ["seen", "bloom"], meta,
+        self.catalog.commit_round(r, CUMULATIVE_TABLES, meta,
                                   replace=CUMULATIVE_TABLES)
         return meta
 
     def reenqueue_urls(self, cfg: CrawlConfig, urls: list[str]) -> dict:
         """Enqueue URLs as a fresh pending round (the monitor re-check):
         frontier rows at depth 0 with enqueue seqs continuing the job's
-        dense numbering, hashes re-marked seen, and the filter rebuilt from
-        the grown set — the other half of the evict round trip.
+        dense numbering and hashes re-marked seen — the other half of the
+        evict round trip.
         `run(cfg, resume=True)` then fetches them (the admission limit
         still applies: pass a limit above the job's done count)."""
         progress = self._progress()
@@ -517,8 +467,6 @@ class CrawlEngine:
             raise ValueError("reenqueue_urls runs between jobs — resume "
                              "the crawl to completion first")
         r = progress["round"] + 1
-        fam = cfg.filter_family()
-        self._check_geometry(fam)
         rows = self._canonical_rows(cfg, urls)
         base = progress["enqueued"]
         cols = {
@@ -537,12 +485,12 @@ class CrawlEngine:
             pa.table(cols, schema=FRONTIER_ARROW_SCHEMA), "pending", r)
         self._load_seen(progress["round"])
         self._seen |= set(cols["url_hash"])
-        self._write_seen_state(r, fam)
+        self._write_seen_state(r)
 
         meta = {**progress, "round": r, "finalized": False,
                 "enqueued": base + len(rows), "pending_next": len(rows),
                 "phase": "recrawl_enqueued"}
-        self.catalog.commit_round(r, ["pending", "seen", "bloom"], meta,
+        self.catalog.commit_round(r, ["pending"] + CUMULATIVE_TABLES, meta,
                                   replace=CUMULATIVE_TABLES)
         return meta
 
@@ -672,7 +620,7 @@ class CrawlEngine:
         # stale
         self._prev_inflight = None
         self._pending = None
-        self._seen = self._seen_df = self._bloom_mem = None
+        self._seen = self._seen_df = None
         self._writes = ThreadPoolExecutor(max_workers=8)
         try:
             return self._run_loop(cfg, resume, t0)
@@ -688,12 +636,10 @@ class CrawlEngine:
                 self._writes = None
 
     def _run_loop(self, cfg: CrawlConfig, resume: bool, t0: float) -> dict:
-        fam = cfg.filter_family()
         if resume:
             self.catalog.drop_uncommitted()
             progress = self._progress()
             round_no = progress["round"] + 1
-            self._check_geometry(fam)
             # the loaded frontier is checked against the prior meta's
             # pending count, so resume needs it
             if round_no > 0 and "pending_next" not in progress:
@@ -725,12 +671,11 @@ class CrawlEngine:
                 schema=FRONTIER_ARROW_SCHEMA)
             self.catalog.append_round_local(self._pending, "pending", 0)
             self._seen = {r["url_hash"] for r in rows}
-            self._write_seen_state(0, fam)
+            self._write_seen_state(0)
             progress = {"round": 0, "done": 0, "failed": 0, "enqueued": n_seed,
                         "finalized": n_seed == 0, "phase": "seeded",
-                        "pending_next": n_seed,
-                        "bloom_geometry": fam.geometry}
-            self.catalog.commit_round(0, ["pending", "seen", "bloom"],
+                        "pending_next": n_seed}
+            self.catalog.commit_round(0, ["pending"] + CUMULATIVE_TABLES,
                                       progress, replace=CUMULATIVE_TABLES)
             round_no = 1
 
@@ -750,7 +695,7 @@ class CrawlEngine:
                             "phase": "cancelled"}
                 self.catalog.commit_round(round_no, [], progress)
                 break
-            progress = self._run_round(cfg, round_no, progress, ex, fam)
+            progress = self._run_round(cfg, round_no, progress, ex)
             round_no += 1
 
         fetched_total = progress["done"] - progress["failed"]
@@ -765,7 +710,7 @@ class CrawlEngine:
         }
 
     def _run_round(self, cfg: CrawlConfig, r: int, progress: dict,
-                   ex: dict, fam) -> dict:
+                   ex: dict) -> dict:
         """One round as named stages over the driver-resident frontier
         ``self._pending``, which Spark reads from the round file the
         previous round wrote. The submission order is load-bearing: the
@@ -792,7 +737,7 @@ class CrawlEngine:
                                               ex)
         disc_fut = None
         if progress["enqueued"] < cfg.limit:
-            disc_fut = self._submit_discovery(cfg, r, progress, docs, ex, fam)
+            disc_fut = self._submit_discovery(cfg, r, progress, docs, ex)
         t_plan = time.time()
         outcome_fut, doc_writes = self._submit_doc_writes(r, docs, docs_view,
                                                           ex)
@@ -809,7 +754,7 @@ class CrawlEngine:
         self._finalize_prev()
         outcome = outcome_fut.result()
         state_tables = self._write_state(r, progress["enqueued"], outcome,
-                                         new_rows, fam)
+                                         new_rows)
         meta = self._round_meta(
             cfg, r, progress, outcome, new_rows.num_rows,
             self._pending.num_rows,
@@ -922,7 +867,7 @@ class CrawlEngine:
         return docs, docs.coalesce(n_view)
 
     def _submit_discovery(self, cfg: CrawlConfig, r: int, progress: dict,
-                          docs: DataFrame, ex: dict, fam):
+                          docs: DataFrame, ex: dict):
         """Links → canonicalize → strategy/path/depth/robots filters →
         first-discovery-wins dedup → seen filter, then the enqueue-cap
         top-k collected to the driver as Arrow, submitted async. Returns
@@ -950,8 +895,8 @@ class CrawlEngine:
             .select(*ex["dedup_sel"])
         )
 
-        # seen filter: Bloom pre-filter + exact anti-join against the
-        # driver-resident seen state — loaded from the checkpoint in a
+        # seen filter: Bloom/cuckoo pre-filter + exact anti-join against
+        # the driver-resident seen state — loaded from the checkpoint in a
         # resumed run's first discovery round, then kept current by
         # _write_state. The anti-join's seen side is the one full-set file
         # the last seen-writing round wrote synchronously.
@@ -962,15 +907,16 @@ class CrawlEngine:
         # anti-join alone is measurably cheaper per round than the
         # segment broadcast + Arrow probe stage it would precede
         # (BENCH.md r6 probe: 0.57s vs 1.09s at 5k seen hashes), so
-        # small standing frontiers skip the probe. The filter is still
-        # primed and maintained every round — checkpoints, resume
-        # geometry, and the at-scale path are untouched; this gates only
-        # the physical plan, never membership results.
+        # small standing frontiers skip the probe, and its filter is
+        # built only here, in rounds that probe. This gates only the
+        # physical plan, never membership results.
         if progress["enqueued"] > cfg.prefilter_min_seen:
-            # driver-resident filter: hand the dict straight to the
-            # probe (broadcast once per executor) — no per-row bitmap
-            # column, no createDataFrame scan per round
-            links = fam.filter_new(links, self._bloom_mem, self._seen_df)
+            # the filter is derived state: built in numpy from the exact
+            # set and handed straight to the probe as a driver dict
+            # (broadcast once per executor) — nothing about it persists
+            fam = cfg.filter_family()
+            links = fam.filter_new(links, fam.build_driver(sorted(self._seen)),
+                                   self._seen_df)
         elif self._seen_df is not None:
             links = exact_antijoin(links, self._seen_df)
         # Submitted BEFORE the outcome job so its one materialization runs
@@ -1041,13 +987,13 @@ class CrawlEngine:
         }, schema=FRONTIER_ARROW_SCHEMA)
 
     def _write_state(self, r: int, enqueued: int, outcome: pa.Table,
-                     new_rows: pa.Table, fam) -> list[str]:
+                     new_rows: pa.Table) -> list[str]:
         """Round r's next pending — the unadmitted rows, the retries
         (attempt + 1, every other column kept) and the new rows — written
         with pyarrow and kept as the driver's frontier, then the seen state
-        grown by the new hashes and checkpointed as round r (the filter
-        build and every write run on the driver — no Spark job). Returns
-        the state tables written."""
+        grown by the new hashes and checkpointed as round r (every write
+        runs on the driver — no Spark job). Returns the state tables
+        written."""
         pending, seq = self._pending, self._pending.column("seq")
         not_final = outcome.filter(pc.invert(outcome.column("final")))
         retries = pending.filter(pc.is_in(
@@ -1082,7 +1028,7 @@ class CrawlEngine:
             raise AssertionError(
                 f"round {r} seen delta holds already-seen url hashes")
         self._seen |= new
-        self._write_seen_state(r, fam)
+        self._write_seen_state(r)
         return ["pending"] + CUMULATIVE_TABLES
 
     @staticmethod

@@ -102,7 +102,7 @@ def _insert(arr: np.ndarray, fp: int, i1: int, n_slots: int) -> bool:
     i = i1
     for kick in range(MAX_KICKS):
         # deterministic victim (kick % width): membership never depends on
-        # table layout, but determinism keeps checkpoints reproducible
+        # table layout, but determinism keeps segment bytes reproducible
         base = i * SLOT_WIDTH
         s = kick % SLOT_WIDTH
         victim = int(arr[base + s])
@@ -143,7 +143,7 @@ def _build_table(hashes, n_slots: int) -> bytes:
     collide on (fp, bucket pair) keep a copy each."""
     arr = _new_table(n_slots)
     saturated = False
-    # sorted: reproducible checkpoint bytes
+    # sorted: reproducible segment bytes
     fps, i1s = cuckoo_fp_i1(hex_nibbles(sorted(set(hashes))), n_slots)
     for fp, i1 in zip(fps.tolist(), i1s.tolist()):
         if not _insert(arr, fp, i1, n_slots):

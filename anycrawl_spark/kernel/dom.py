@@ -10,6 +10,34 @@ Only the selector features actually used by the reference are implemented
 descendant combinator, comma lists) — see
 ``/root/reference/packages/scrape/src/core/transformers/HTMLTransformer.ts:31-165``
 and ``/root/reference/packages/search/src/engines/Google.ts:201-257``.
+
+``parse_html`` is the one parser the kernel uses: a flat regex tokenizer
+driving ``_TreeBuilder``. ``_parse_stdlib`` drives the same builder from
+``html.parser`` and is kept as the reference the tokenizer is tested
+against (tests/test_kernel.py::TestDomBackends).
+
+## Node contract
+
+The kernel walks (transformer/markdown/text/ocr) rely on exactly this
+surface, and check node kinds by class identity:
+
+- ``Element``: ``tag`` (lowercase str), ``attrs`` (dict, lowercase keys,
+  first occurrence wins, valueless attrs -> ""), ``children`` (list of
+  nodes in document order), ``parent``; methods ``append``,
+  ``remove_child``, ``detach``, ``get``, ``text_content``,
+  ``element_children``, ``iter`` (pre-order descendants).
+- ``Text``: ``data`` (entity-decoded), ``parent``.
+- ``Comment``: ``data``, ``parent`` (retained in the tree; serialization
+  and text render skip it).
+- Root: a synthetic ``Element('#root')`` wrapping the document.
+
+Tree-building semantics: void elements never take children; ``<p>``
+implicit close set (``_P_CLOSERS``) and sibling implicit closes
+(li/dt/dd/tr/td/th/...); htmlparser2-style tolerance (stray ``</br>``
+emits ``<br>``, unmatched ``</p>`` synthesizes an empty ``<p>``, implicit
+closes cascade, tolerant end-tag forms like ``</b extra>``, depth cap at
+``MAX_TREE_DEPTH``); rawtext elements (script/style) swallow markup until
+their end tag; entities decode in text and attribute values, &-tolerant.
 """
 
 from __future__ import annotations
@@ -269,7 +297,7 @@ class _TreeBuilder(HTMLParser):
 
 
 # ---------------------------------------------------------------------------
-# Fast tokenizer backend
+# Fast tokenizer
 #
 # html.parser's goahead() is a char-by-char state machine with several
 # function calls per token (updatepos, parse_starttag, check_for_whole_...)
@@ -279,9 +307,9 @@ class _TreeBuilder(HTMLParser):
 # tag-name semantics are identical by construction. Text/attr charrefs
 # decode via html.unescape exactly as convert_charrefs=True does; script/
 # style content is raw until the case-insensitive closing tag (html.parser
-# set_cdata_mode parity). Byte-parity with the stdlib backend is asserted
-# over every fixture page + golden in tests (test_kernel.py::TestDomBackends)
-# — select the stdlib path with ANYCRAWL_DOM_BACKEND=stdlib.
+# set_cdata_mode parity). Tree parity with the stdlib parser is asserted
+# over every fixture page + malformed edge case in tests
+# (test_kernel.py::TestDomBackends).
 # ---------------------------------------------------------------------------
 
 from html import unescape as _unescape  # noqa: E402
@@ -292,10 +320,35 @@ _ENDTAG_RX = re.compile(r"</\s*([a-zA-Z][-.a-zA-Z0-9:_]*)\s*>")
 _RAW_END = {t: re.compile(r"</\s*%s\s*>" % t, re.I) for t in _RAWTEXT}
 
 
+def _feed_tail(handle_data, pieces: list[str]) -> None:
+    """html.parser's EOF fallback for a page tail with no '>' left, where
+    no markup can close: ``pieces`` is the tail split at '<' (without the
+    leading empty piece). A '<' that opens markup (letter, '/', '!', '?')
+    is literal text through the next '<'; a lone '<', or one with no '<'
+    after it, is its own text node before the text that follows."""
+    last = len(pieces) - 1
+    for j, p in enumerate(pieces):
+        c = p[:1]
+        if j < last and c and ("a" <= c <= "z" or "A" <= c <= "Z"
+                               or c in "/!?"):
+            text = "<" + p
+            handle_data(_unescape(text) if "&" in text else text)
+        else:
+            handle_data("<")
+            if p:
+                handle_data(_unescape(p) if "&" in p else p)
+
+
 def _fast_feed(core: "_TreeBuilder", rawdata: str) -> None:
     i, n = 0, len(rawdata)
     find = rawdata.find
     handle_data = core.handle_data
+    # every scan below ends at a '>' (or '-->') it then consumes, so the
+    # feed stays linear; past the last '>' nothing can close, and past a
+    # failed '-->' search no comment can — both known once, not re-searched
+    # to EOF per '<' (html.parser re-scans there: CVE-2025-6069)
+    last_gt = rawdata.rfind(">")
+    comments_open = True
     while i < n:
         lt = find("<", i)
         if lt < 0:
@@ -305,6 +358,9 @@ def _fast_feed(core: "_TreeBuilder", rawdata: str) -> None:
         if lt > i:
             text = rawdata[i:lt]
             handle_data(_unescape(text) if "&" in text else text)
+        if lt > last_gt:
+            _feed_tail(handle_data, rawdata[lt + 1:].split("<"))
+            break
         c = rawdata[lt + 1:lt + 2]
         if "a" <= c <= "z" or "A" <= c <= "Z":
             m = _tagfind.match(rawdata, lt + 1)
@@ -345,8 +401,13 @@ def _fast_feed(core: "_TreeBuilder", rawdata: str) -> None:
                     attrs[attrname] = attrvalue if attrvalue is not None else ""
                 k = am.end()
             gt = find(">", k)
-            if gt < 0:  # truncated start tag at EOF → literal data
-                handle_data(rawdata[lt:])
+            if gt < 0:
+                # the attribute scan ran past the last '>' (it sat inside
+                # a quoted value): the rest is literal data. html.parser
+                # resumes after that '>' and rescans, quadratic in the
+                # number of such tags
+                text = rawdata[lt:]
+                handle_data(_unescape(text) if "&" in text else text)
                 break
             end = rawdata[k:gt + 1].strip()
             if end not in (">", "/>"):  # junk before '>': literal data
@@ -400,11 +461,15 @@ def _fast_feed(core: "_TreeBuilder", rawdata: str) -> None:
                         i = gt + 1
         elif c == "!":
             if rawdata.startswith("<!--", lt):
-                end_c = find("-->", lt + 4)
-                if end_c < 0:  # unterminated at EOF: literal text (stdlib)
-                    text = rawdata[lt:]
+                end_c = find("-->", lt + 4) if comments_open else -1
+                if end_c < 0:
+                    # unterminated: literal text through the next '>'
+                    # (there is one: lt < last_gt), as html.parser does
+                    comments_open = False
+                    i = find(">", lt + 1) + 1
+                    text = rawdata[lt:i]
                     handle_data(_unescape(text) if "&" in text else text)
-                    break
+                    continue
                 core.handle_comment(rawdata[lt + 4:end_c])
                 i = end_c + 3
             else:  # declaration (DOCTYPE) — dropped, like handle_decl
@@ -419,44 +484,19 @@ def _fast_feed(core: "_TreeBuilder", rawdata: str) -> None:
 
 
 def _parse_stdlib(html: str) -> Element:
+    """The reference parser: html.parser driving the same tree builder."""
     builder = _TreeBuilder()
     builder.feed(html or "")
     builder.close()
     return builder.root
 
 
-def _parse_fast(html: str) -> Element:
+def parse_html(html: str) -> Element:
+    """Parse an HTML string into a DOM rooted at a synthetic ``#root``
+    (the flat tokenizer above; node contract in the module docstring)."""
     builder = _TreeBuilder()
     _fast_feed(builder, html or "")
     return builder.root
-
-
-def parse_html(html: str, backend: str | None = None) -> Element:
-    """Parse an HTML string into a DOM rooted at a synthetic ``#root``.
-
-    ``backend`` names a registered backend (kernel.backend.BACKENDS):
-    ``fast`` (default; flat regex tokenizer), ``stdlib`` (html.parser), or
-    any deployment-registered C parser adapter — overridable via
-    ``ANYCRAWL_DOM_BACKEND``. All backends must produce identical trees
-    (node contract + conformance suite in kernel/backend.py)."""
-    import os
-
-    from anycrawl_spark.kernel.backend import BACKENDS
-
-    name = backend or os.environ.get("ANYCRAWL_DOM_BACKEND", "fast")
-    parse = BACKENDS.get(name)
-    if parse is None:
-        raise ValueError(
-            f"unknown DOM backend {name!r}; registered: {sorted(BACKENDS)}")
-    return parse(html)
-
-
-# register the built-in backends (import-order safe: backend.py holds only
-# the registry; dom.py registers into it at import)
-from anycrawl_spark.kernel.backend import register_backend  # noqa: E402
-
-register_backend("fast", _parse_fast)
-register_backend("stdlib", _parse_stdlib)
 
 
 # ---------------------------------------------------------------------------

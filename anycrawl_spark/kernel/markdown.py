@@ -58,8 +58,8 @@ _TC_CACHE: dict[int, str] = {}
 
 def _tc(node: Node) -> str:
     """Memoized textContent — the tree is static during rule evaluation.
-    Identity class checks throughout these helpers: the backend contract
-    (kernel/backend.py) requires every parser to emit dom.Element/Text/
+    Identity class checks throughout these helpers: the node contract
+    (kernel/dom.py docstring) has the parser emit dom.Element/Text/
     Comment instances, so no subclass can appear."""
     cls = node.__class__
     if cls is Text:

@@ -66,8 +66,8 @@ class _Renderer:
 
     # -- inline rendering ---------------------------------------------------
     def _inline(self, node: Node) -> str:
-        # identity class checks: backends must emit dom node classes
-        # (kernel/backend.py node contract)
+        # identity class checks: the parser emits exactly the dom node
+        # classes (node contract in kernel/dom.py)
         cls = node.__class__
         if cls is Text:
             data = node.data

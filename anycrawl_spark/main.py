@@ -211,10 +211,10 @@ def cmd_map(args) -> None:
 
 def cmd_recrawl(args) -> None:
     """TTL eviction + monitor re-enqueue against a finished crawl
-    checkpoint: evict the given URLs from the seen set (the filter is
-    rebuilt from what is left), enqueue them as a fresh pending round, and
-    — unless --no-run — resume the crawl to fetch them again. The limit is
-    raised automatically to cover the re-enqueued URLs."""
+    checkpoint: evict the given URLs from the seen set, enqueue them as a
+    fresh pending round, and — unless --no-run — resume the crawl to fetch
+    them again. The limit is raised automatically to cover the re-enqueued
+    URLs."""
     from anycrawl_spark.catalog import Catalog
     from anycrawl_spark.crawl import CrawlConfig, CrawlEngine
 
@@ -223,14 +223,10 @@ def cmd_recrawl(args) -> None:
     engine = CrawlEngine(spark, corpus, args.checkpoint)
     cat = Catalog(args.checkpoint)
     done = (cat.round_meta(cat.last_round()) or {}).get("done", 0)
-    # the filter family is baked into the checkpoint (round-0 meta);
-    # reading it here keeps eviction family-consistent by construction
-    geometry = (cat.round_meta(0) or {}).get("bloom_geometry") or []
-    family = "cuckoo" if geometry[:1] == ["cuckoo"] else "bloom"
     cfg = CrawlConfig(job_id=args.job_id, seed_url=args.urls[0],
                       strategy="all",
                       limit=min(50_000, done + len(args.urls)),
-                      respect_robots=False, seen_filter=family)
+                      respect_robots=False)
     evicted = engine.evict_urls(cfg, args.urls)
     enqueued = engine.reenqueue_urls(cfg, args.urls)
     summary = {"evicted": evicted["evicted"],

@@ -25,10 +25,10 @@ one vectorized gather per shard bucket present in the batch) and the
 streaming dedup (``streaming/stateful.py``) run on it; ``_positions`` and
 ``cuckoo._fp_i1`` stay as the scalar references it is tested against.
 
-The crawl engine keeps its filter driver-resident and derived: every
-seen-state write rebuilds it in numpy from the exact seen set it is
-checkpointed beside (the 50k enqueue limit keeps that set small) and
-writes it with pyarrow, so there is no merge or deletion path. The
+The crawl engine keeps its filter driver-resident and derived: a round
+that probes builds it in numpy from the exact seen set (the 50k enqueue
+limit keeps that set small), which is the only seen state it checkpoints,
+so the filter has no merge, deletion or persistence path. The
 distributed ``applyInPandas`` build plus the broadcast-join probe serve
 the registry leaves (``bloom_seen_filter``, ``cuckoo_seen_filter``).
 
@@ -184,11 +184,6 @@ def build_segments_driver(hashes, num_buckets: int = DEFAULT_NUM_BUCKETS,
             for b, rows in bucket_groups(bucket_ids(nib, num_buckets))}
 
 
-def segments_to_driver(segments: DataFrame) -> dict[int, bytes]:
-    """Collect (bucket, bitmap) segment rows into a driver dict."""
-    return {row["bucket"]: bytes(row["bitmap"]) for row in segments.collect()}
-
-
 class SeenFilterFamily:
     """Uniform facade over the two seen-filter families (north rule:
     "partitioned Bloom/cuckoo filter"). Both share the segment-row shape
@@ -202,7 +197,7 @@ class SeenFilterFamily:
 
     def __init__(self, name, geometry, build_driver, filter_new):
         self.name = name
-        self.geometry = geometry           # resume-fingerprint (JSON list)
+        self.geometry = geometry           # bound geometry (JSON list)
         self.build_driver = build_driver
         self.filter_new = filter_new
 
@@ -246,10 +241,11 @@ def exact_antijoin(candidates: DataFrame, seen_exact: DataFrame,
     No ``distinct()`` on the seen side: a left-anti equi-join returns the
     same rows whether or not the right side holds duplicates, the seen
     checkpoint is unique by construction (each round's delta is new-only
-    hashes — the crawl round loop asserts it where the delta is collected),
-    and the dedup cost was real — a full exchange plus two
-    HashAggregate passes over the whole standing seen set EVERY round,
-    two extra stage barriers ahead of the (auto-broadcast) join build.
+    hashes — ``CrawlEngine._write_state`` asserts it before the delta
+    joins the seen set), and the dedup cost was real — a full exchange
+    plus two HashAggregate passes over the whole standing seen set EVERY
+    round, two extra stage barriers ahead of the (auto-broadcast) join
+    build.
     """
     return candidates.join(
         seen_exact.select(F.col(url_hash_col).alias("__seen_hash")),
@@ -269,11 +265,10 @@ def prefilter_antijoin(candidates: DataFrame,
     probe of one Arrow batch against a ``{bucket: blob}`` mapping — the
     only thing that differs between families. Rows the probe rejects are
     definitely new (no false negatives) and skip the exact join; only the
-    maybe-seen minority pays it. With no segments (missing/corrupt
-    checkpoint on resume) this degrades to the plain exact anti-join; with
-    no exact history it is a no-op (a probabilistic filter can never
-    CONFIRM membership — dropping on a filter hit would lose rows to false
-    positives).
+    maybe-seen minority pays it. With no segments this degrades to the
+    plain exact anti-join; with no exact history it is a no-op (a
+    probabilistic filter can never CONFIRM membership — dropping on a
+    filter hit would lose rows to false positives).
 
     ``segments`` is either the driver dict (the crawl engine) or a
     ``(bucket, bitmap)`` DataFrame (the registry leaves). The dict ships

@@ -36,25 +36,12 @@ def run_engine(spark, corpus, tmp_root, name, robots=None, **cfg_kwargs):
 
 
 def assert_one_state_copy(catalog):
-    """Seen and bloom are checkpointed cumulatively: one committed round
-    each, the same round, and every table's on-disk round=* dirs are
-    exactly its committed rounds (superseded copies and uncommitted writes
-    are gone). The committed filter is derived state: byte for byte the
-    build of the committed seen set by the checkpoint's filter family."""
-    import pyarrow.parquet as pq
-
-    from anycrawl_spark.seen import filter_family
-
-    (state_round,) = catalog.committed_rounds("seen")
-    assert catalog.committed_rounds("bloom") == [state_round]
-    geometry = catalog.round_meta(0)["bloom_geometry"]
-    fam = filter_family("cuckoo" if geometry[0] == "cuckoo" else "bloom")
-    assert fam.geometry == geometry
-    seen = pq.read_table(catalog.round_path("seen", state_round))
-    bloom = pq.read_table(catalog.round_path("bloom", state_round))
-    assert dict(zip(bloom.column("bucket").to_pylist(),
-                    bloom.column("bitmap").to_pylist())) == \
-        fam.build_driver(sorted(seen.column("url_hash").to_pylist()))
+    """The exact seen set is the only checkpointed seen state and is
+    checkpointed cumulatively: one committed round, no filter table on
+    disk, and every table's on-disk round=* dirs are exactly its committed
+    rounds (superseded copies and uncommitted writes are gone)."""
+    assert len(catalog.committed_rounds("seen")) == 1
+    assert not (catalog.root / "bloom").exists()
     for table_dir in catalog.root.iterdir():
         if table_dir.is_dir():
             on_disk = {int(p.name.split("=", 1)[1])
@@ -708,8 +695,8 @@ class TestCorpusDedup:
 
 class TestPipelinedCheckpointing:
     """Regression tests for the round-4 write pipelining: deferred commits,
-    a crash inside a deferred commit, resume through the bloom rebuild, and
-    resume validation."""
+    a crash inside a deferred commit or with a round's writes in flight,
+    and resume validation."""
 
     KW = dict(seed_url=SEED, strategy="same-hostname", max_depth=5,
               limit=40, respect_robots=False)
@@ -731,18 +718,19 @@ class TestPipelinedCheckpointing:
                 engine.catalog.read(spark, "seen").collect()}
         return visits, results, seen
 
-    @pytest.mark.parametrize("point", ["before_manifest", "after_manifest"])
+    @pytest.mark.parametrize("point", ["before_manifest", "after_manifest",
+                                       "writes_in_flight"])
     def test_crash_inside_commit_resumes_exact(self, spark, small_corpus,
                                                tmp_root, monkeypatch, point):
         """A crash inside round 3's deferred commit — before its manifest
         write, or after it but before the superseded copies are deleted —
-        resumes to the uninterrupted crawl with one seen and bloom copy."""
+        or in round 3's state writes while its doc writes are in flight,
+        resumes to the uninterrupted crawl with one seen copy."""
         from anycrawl_spark.catalog import Catalog
 
         full = self._crawl(spark, small_corpus,
                            os.path.join(tmp_root, f"pc_full_{point}"))
-        # round 3 adds seen hashes: its commit retires the prior seen and
-        # bloom copies
+        # round 3 adds seen hashes: its commit retires the prior seen copy
         assert full.catalog.round_meta(3)["new"] > 0
 
         class Crash(Exception):
@@ -757,63 +745,43 @@ class TestPipelinedCheckpointing:
                 write_manifest(catalog, manifest)
             raise Crash(point)
 
+        write_state = CrawlEngine._write_state
+
+        def crashing_state(engine, r, *args):
+            # round 3's results/visits/metrics writes were submitted
+            # before its state writes and are still uncommitted
+            tables = write_state(engine, r, *args)
+            if r == 3:
+                raise Crash(point)
+            return tables
+
         d = os.path.join(tmp_root, f"pc_crash_{point}")
         with monkeypatch.context() as m:
-            m.setattr(Catalog, "_write_manifest", crashing)
+            if point == "writes_in_flight":
+                m.setattr(CrawlEngine, "_write_state", crashing_state)
+            else:
+                m.setattr(Catalog, "_write_manifest", crashing)
             with pytest.raises(Crash):
                 self._crawl(spark, small_corpus, d)
+        if point == "writes_in_flight":
+            crashed = Catalog(d)
+            assert crashed.last_round() == 2
+            # the shut-down executor let the in-flight writes land
+            assert os.path.isdir(crashed.round_path("results", 3))
         resumed = self._crawl(spark, small_corpus, d, resume=True)
         assert self._state(spark, resumed) == self._state(spark, full)
         assert_one_state_copy(resumed.catalog)
 
-    def test_bloom_rebuilt_from_seen_on_resume(self, spark, small_corpus,
-                                               tmp_root):
-        """A checkpoint that lost its bloom filter resumes through the
-        rebuild-from-seen path: the crawl is unchanged and the rebuilt
-        filter reports maybe-seen for every committed seen hash."""
-        import json
-        import shutil
-
-        from anycrawl_spark.seen import bloom_probe
-
-        full = self._crawl(spark, small_corpus,
-                           os.path.join(tmp_root, "pc_rebuild_full"))
-        d = os.path.join(tmp_root, "pc_rebuild")
-        self._crawl(spark, small_corpus, d, max_rounds=2)
-        mpath = os.path.join(d, "_manifest.json")
-        with open(mpath) as f:
-            manifest = json.load(f)
-        for rr in manifest["tables"].pop("bloom"):
-            shutil.rmtree(os.path.join(d, "bloom", f"round={rr}"))
-        with open(mpath, "w") as f:
-            json.dump(manifest, f)
-
-        resumed = self._crawl(spark, small_corpus, d, resume=True)
-        visits, _, seen = self._state(spark, resumed)
-        assert visits == self._state(spark, full)[0]
-        segs = resumed._latest_bloom(spark, resumed.catalog.last_round())
-        assert segs is not None
-        nb, m_bits, k = CrawlConfig(job_id="pc", **self.KW).filter_family(
-            ).geometry
-        assert bloom_probe(sorted(seen), segs, nb, m_bits, k).all()
-
     def test_run_failure_releases_executor(self, spark, small_corpus, tmp_root):
-        # resume-validation failure path: executor must not leak
-        d = os.path.join(tmp_root, "pc_geom")
+        # resume-validation failure path: executor must not leak. A newest
+        # meta without pending_next: resume rejects it instead of guessing
+        # the round size
+        import json
+
+        d = os.path.join(tmp_root, "pc_pending_next")
         engine = CrawlEngine(spark, small_corpus, d)
         engine.run(CrawlConfig(job_id="pc", seed_url=SEED, limit=5,
                                respect_robots=False))
-        engine2 = CrawlEngine(spark, small_corpus, d)
-        with pytest.raises(ValueError, match="bloom geometry"):
-            engine2.run(CrawlConfig(job_id="pc", seed_url=SEED, limit=5,
-                                    respect_robots=False,
-                                    seen_filter="cuckoo"), resume=True)
-        assert engine2._writes is None
-
-        # a newest meta without pending_next: resume rejects it instead of
-        # guessing the round size
-        import json
-
         mpath = os.path.join(d, "_manifest.json")
         with open(mpath) as f:
             manifest = json.load(f)
@@ -821,17 +789,16 @@ class TestPipelinedCheckpointing:
         manifest["meta"][newest].pop("pending_next")
         with open(mpath, "w") as f:
             json.dump(manifest, f)
-        engine3 = CrawlEngine(spark, small_corpus, d)
+        resumed = CrawlEngine(spark, small_corpus, d)
         with pytest.raises(ValueError, match="pending_next"):
-            engine3.run(CrawlConfig(job_id="pc", seed_url=SEED, limit=5,
+            resumed.run(CrawlConfig(job_id="pc", seed_url=SEED, limit=5,
                                     respect_robots=False), resume=True)
-        assert engine3._writes is None
+        assert resumed._writes is None
 
 
 class TestRecrawlEviction:
     """TTL eviction → re-enqueue → recrawl round trip: a page-cache entry
-    passes its TTL tier, the monitor evicts the URL from the seen set (the
-    filter is rebuilt from what is left, for both families) and
+    passes its TTL tier, the monitor evicts the URL from the seen set and
     re-enqueues it, and a resumed run fetches exactly those URLs again
     with dense visit numbering intact and every rediscovered link still
     deduped."""
@@ -871,16 +838,14 @@ class TestRecrawlEviction:
         assert expired == sorted(victims)   # page-tier TTL flags exactly them
 
         # --- evict: seen state loses exactly the victim hashes. A never-
-        # crawled URL in the batch is not counted as evicted, and a
-        # switched filter family must be rejected before any state is
-        # touched (the resume guard, applied to eviction too).
+        # crawled URL in the batch is not counted as evicted. No filter is
+        # checkpointed, so the eviction runs under the other filter family
+        # and the round trip goes on under this one.
         cfg = CrawlConfig(job_id="rc", **kw)
         other = "bloom" if fam_name == "cuckoo" else "cuckoo"
-        with pytest.raises(ValueError, match="geometry mismatch"):
-            eng.evict_urls(CrawlConfig(job_id="rc", **{
-                **kw, "seen_filter": other}), expired)
         meta_e = eng.evict_urls(
-            cfg, expired + ["https://never-crawled.test/x"])
+            CrawlConfig(job_id="rc", **{**kw, "seen_filter": other}),
+            expired + ["https://never-crawled.test/x"])
         assert meta_e["evicted"] == 3
         victim_hashes = {v["url_hash"] for v in visits1
                          if v["url"] in victims}
@@ -889,12 +854,12 @@ class TestRecrawlEviction:
         assert victim_hashes.isdisjoint(seen_now)
         assert len(seen_now) == s1["enqueued"] - 3
         assert_one_state_copy(eng.catalog)
-        # the rebuilt filter + exact seen treat victims as new again
+        # the filter built from the seen set + exact seen treat victims as
+        # new again
         fam = cfg.filter_family()
         cand = eng._canonical_rows(cfg, expired)
         cand_df = spark.createDataFrame(cand)
-        segs = eng._latest_bloom(spark, meta_e["round"])
-        fresh = fam.filter_new(cand_df, segs,
+        fresh = fam.filter_new(cand_df, fam.build_driver(sorted(seen_now)),
                                eng.catalog.read(spark, "seen"))
         assert {r["url_hash"] for r in fresh.collect()} == victim_hashes
 
@@ -961,7 +926,7 @@ class TestRecrawlEviction:
         before its manifest write (the call is retried) or after it (the
         call is committed; the sequence goes on) — ends at the
         uninterrupted round trip's visits, results and seen set, with one
-        seen and bloom copy."""
+        seen copy."""
         import shutil
 
         from anycrawl_spark.catalog import Catalog

@@ -122,26 +122,24 @@ class TestCuckooCrawlParity:
             )
         assert runs["bloom"] == runs["cuckoo"]
 
-    def test_cuckoo_resume_and_family_switch_rejected(self, spark,
-                                                      small_corpus, tmp_root):
+    def test_cuckoo_checkpoint_resumes_under_bloom(self, spark, small_corpus,
+                                                   tmp_root):
+        """No filter is checkpointed, so a cuckoo crawl's checkpoint
+        resumes under the Bloom family (probe forced) to the fresh cuckoo
+        run's visits."""
         root = os.path.join(tmp_root, "fam_resume")
         engine = CrawlEngine(spark, small_corpus, root)
         kw = dict(seed_url=SEED, strategy="all", max_depth=6, limit=30,
-                  respect_robots=False, seen_filter="cuckoo",
-                  prefilter_min_seen=0)
+                  respect_robots=False, prefilter_min_seen=0)
         # killed after 2 rounds (max_rounds=2 simulates the kill)
-        engine.run(CrawlConfig(job_id="fr", max_rounds=2, **kw))
-        # family switch on resume must be rejected (geometry fingerprint)
-        with pytest.raises(ValueError, match="geometry mismatch"):
-            engine.run(CrawlConfig(job_id="fr", seed_url=SEED, strategy="all",
-                                   max_depth=6, respect_robots=False,
-                                   limit=30, seen_filter="bloom"),
-                       resume=True)
-        summary = engine.run(CrawlConfig(job_id="fr", **kw), resume=True)
+        engine.run(CrawlConfig(job_id="fr", max_rounds=2,
+                               seen_filter="cuckoo", **kw))
+        summary = engine.run(CrawlConfig(job_id="fr", seen_filter="bloom",
+                                         **kw), resume=True)
         assert summary["done"] == 30
         fresh = CrawlEngine(spark, small_corpus,
                             os.path.join(tmp_root, "fam_fresh"))
-        fresh.run(CrawlConfig(job_id="fr2", **kw))
+        fresh.run(CrawlConfig(job_id="fr2", seen_filter="cuckoo", **kw))
         resumed = [(r["seq"], r["url"]) for r in engine.visit_order().collect()]
         direct = [(r["seq"], r["url"]) for r in fresh.visit_order().collect()]
         assert resumed == direct

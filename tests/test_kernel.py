@@ -5,6 +5,8 @@ Cases re-express the reference's semantics with citations; cache/normalizeUrl
 cases mirror ``packages/libs/src/__tests__/cache.test.ts``.
 """
 
+import pytest
+
 from anycrawl_spark.kernel.canonical import (
     base_domain_of,
     host_of,
@@ -260,9 +262,30 @@ class TestExtractPage:
         assert a == b
 
 
+def _tree_dump(root) -> list[tuple]:
+    """Pre-order ``(depth, kind, ...)`` records of a parsed tree: every
+    element's tag and attrs (in order), every text and comment's data."""
+    from anycrawl_spark.kernel.dom import Comment, Element, Text
+
+    out, stack = [], [(0, root)]
+    while stack:
+        depth, node = stack.pop()
+        cls = node.__class__
+        if cls is Element:
+            out.append((depth, "element", node.tag, list(node.attrs.items())))
+            stack.extend((depth + 1, c) for c in reversed(node.children))
+        elif cls is Text:
+            out.append((depth, "text", node.data))
+        elif cls is Comment:
+            out.append((depth, "comment", node.data))
+        else:
+            raise AssertionError(f"unexpected node class {cls!r}")
+    return out
+
+
 class TestDomBackends:
-    """The fast regex tokenizer must build byte-identical trees to the
-    stdlib html.parser backend — asserted over every fixture page plus
+    """The fast regex tokenizer must build the same tree as the stdlib
+    html.parser reference — asserted over every fixture page plus
     malformed-HTML edge cases."""
 
     EDGES = [
@@ -283,26 +306,44 @@ class TestDomBackends:
         "</ >x",
         "no</p>match",
         "<table><tr><td>a<tr><td>b</table>",
+        # markup still open at EOF: literal text split at each '<'
+        "x</b",
+        "a <b <!-- c <d &amp; e",
+        "<!-- a > b <p>z</p>",
+        "<p>a</p><!-- never <b>closed &amp; <",
     ]
 
     def test_extract_parity_fixtures_and_edges(self):
-        import os
-
+        """Full structural dumps (tags, attrs, text and comment data, in
+        document order) are equal. Extraction reads only the tree, so
+        equal trees give equal extraction output."""
         from anycrawl_spark.corpus import build_page_html
-        from anycrawl_spark.kernel.extract import extract_page
+        from anycrawl_spark.kernel.dom import _parse_stdlib, parse_html
 
-        cases = [(f"https://site00{h}.test/p/{i}",
-                  build_page_html(h, 6, i, 30, "en"))
+        cases = [build_page_html(h, 6, i, 30, "en")
                  for h in range(4) for i in range(30)]
-        cases += [(f"https://e.test/{j}", h) for j, h in enumerate(self.EDGES)]
-        for url, html in cases:
-            fast = extract_page(url, html)
-            os.environ["ANYCRAWL_DOM_BACKEND"] = "stdlib"
-            try:
-                std = extract_page(url, html)
-            finally:
-                del os.environ["ANYCRAWL_DOM_BACKEND"]
-            assert fast == std, url
+        for j, html in enumerate(cases + self.EDGES):
+            assert _tree_dump(parse_html(html)) == \
+                _tree_dump(_parse_stdlib(html)), (j, html[:80])
+
+    @pytest.mark.parametrize("unit, n", [
+        ("<a ", 3000),          # start tags with no '>' left
+        ("<a x='>' ", 3000),    # the only '>' sit inside quoted values
+        ("<!--", 50000),        # comments with no '-->' left
+        ("<!-- a >", 50000),
+    ])
+    def test_open_markup_tail_parses_in_linear_time(self, unit, n):
+        """Markup that cannot close before EOF is not re-scanned to EOF
+        once per '<' (html.parser's fallback does that: CVE-2025-6069);
+        a rescanning tokenizer takes seconds on these, a linear one ms."""
+        import time
+
+        from anycrawl_spark.kernel.dom import parse_html
+
+        t0 = time.perf_counter()
+        root = parse_html("<p>x</p>" + unit * n)
+        assert time.perf_counter() - t0 < 1.0
+        assert root.children[0].tag == "p"
 
 
 class TestParserHtmlparser2Semantics:
@@ -633,56 +674,37 @@ class TestAutoEngine:
 
 
 class TestBackendConformance:
-    """Conformance suite for the DOM-backend protocol (kernel/backend.py):
-    every registered backend — the two built-ins today, a C parser adapter
-    at deployment — must (a) produce byte-identical extraction output and
-    (b) honor the node contract the kernel walks rely on. This is the
-    guarantee that makes the lxml/selectolax swap-in parity-safe."""
+    """Both parsers give byte-identical extraction output and honor the
+    node contract the kernel walks rely on (kernel/dom.py docstring)."""
 
-    def _cases(self):
+    def test_extraction_parity_across_all_backends(self, monkeypatch):
+        """End to end: ``extract_page`` with every kernel module's
+        ``parse_html`` swapped for the stdlib reference equals the
+        fast-parser output."""
         from anycrawl_spark.corpus import build_page_html
+        from anycrawl_spark.kernel import extract, markdown, text, transformer
+        from anycrawl_spark.kernel.dom import _parse_stdlib
 
         cases = [(f"https://site00{h}.test/p/{i}",
                   build_page_html(h, 6, i, 30, "en"))
                  for h in range(3) for i in range(20)]
         cases += [(f"https://e.test/{j}", h)
                   for j, h in enumerate(TestDomBackends.EDGES)]
-        return cases
-
-    def test_registry_has_builtins(self):
-        from anycrawl_spark.kernel.backend import available_backends
-
-        names = available_backends()
-        assert "fast" in names and "stdlib" in names
-
-    def test_extraction_parity_across_all_backends(self):
-        import os
-
-        from anycrawl_spark.kernel.backend import available_backends
-        from anycrawl_spark.kernel.extract import extract_page
-
-        cases = self._cases()
-        for url, html in cases:
-            outputs = {}
-            for name in available_backends():
-                os.environ["ANYCRAWL_DOM_BACKEND"] = name
-                try:
-                    outputs[name] = extract_page(url, html)
-                finally:
-                    del os.environ["ANYCRAWL_DOM_BACKEND"]
-            base = outputs["fast"]
-            for name, out in outputs.items():
-                assert out == base, (name, url)
+        fast = [extract.extract_page(url, html) for url, html in cases]
+        for mod in (extract, markdown, text, transformer):
+            monkeypatch.setattr(mod, "parse_html", _parse_stdlib)
+        for (url, html), want in zip(cases, fast):
+            assert extract.extract_page(url, html) == want, url
 
     def test_node_contract(self):
-        from anycrawl_spark.kernel.backend import BACKENDS, available_backends
         from anycrawl_spark.kernel.dom import (
-            VOID_ELEMENTS, Comment, Element, Text, serialize)
+            VOID_ELEMENTS, Comment, Element, Text, _parse_stdlib, parse_html,
+            serialize)
 
         html = ('<div CLASS="A b" Data-X=1 novalue><p>t &amp; u<br>v'
                 '<img SRC=x.png></p><!-- c --><script>a<b</script></div>')
-        for name in available_backends():
-            root = BACKENDS[name](html)
+        for name, parse in (("fast", parse_html), ("stdlib", _parse_stdlib)):
+            root = parse(html)
             assert isinstance(root, Element) and root.tag == "#root"
             seen_comment = seen_text = False
             stack = [root]
@@ -708,13 +730,5 @@ class TestBackendConformance:
             assert div.get("class") == "A b" and div.get("novalue") == "", name
             # serialize(parse(x)) is a fixed point: parse(serialize) == same
             once = serialize(root)
-            again = serialize(BACKENDS[name](once))
+            again = serialize(parse(once))
             assert once == again, name
-
-    def test_unknown_backend_rejected(self):
-        import pytest as _pytest
-
-        from anycrawl_spark.kernel.dom import parse_html
-
-        with _pytest.raises(ValueError, match="unknown DOM backend"):
-            parse_html("<p>x</p>", backend="no-such-parser")
