@@ -25,8 +25,12 @@ from pyspark.sql import DataFrame, SparkSession
 
 
 class Catalog:
-    def __init__(self, root: str | os.PathLike) -> None:
+    def __init__(self, root: str | os.PathLike,
+                 tables: list[str] | None = None) -> None:
+        """``tables``: every table the writer writes. Given it, each commit
+        also retires any other table a previous writer left committed."""
         self.root = Path(root)
+        self.tables = tables
         self.root.mkdir(parents=True, exist_ok=True)
         self._manifest_path = self.root / "_manifest.json"
 
@@ -75,8 +79,14 @@ class Catalog:
         a kill at any point leaves either the previous copy or this one
         committed — never a mix. Superseded round directories are deleted
         after the commit; if that cleanup is interrupted, drop_uncommitted
-        removes them at resume (they are no longer in the manifest)."""
+        removes them at resume (they are no longer in the manifest). Tables
+        outside ``self.tables`` leave the manifest in the same write and
+        their directories go after it, the same way."""
         manifest = self._read_manifest()
+        retired = [t for t in manifest["tables"]
+                   if self.tables is not None and t not in self.tables]
+        for table in retired:
+            del manifest["tables"][table]
         superseded: list[tuple[str, int]] = []
         for table in tables:
             rounds = manifest["tables"].setdefault(table, [])
@@ -92,6 +102,8 @@ class Catalog:
         self._write_manifest(manifest)
         for table, rr in superseded:
             shutil.rmtree(self.round_path(table, rr), ignore_errors=True)
+        for table in retired:
+            shutil.rmtree(self.root / table, ignore_errors=True)
 
     def committed_rounds(self, table: str) -> list[int]:
         return self._read_manifest()["tables"].get(table, [])
@@ -127,7 +139,9 @@ class Catalog:
         return reader.parquet(self.round_path(table, round_no))
 
     def drop_uncommitted(self) -> None:
-        """Remove round directories not present in the manifest (resume hygiene)."""
+        """Remove round directories not present in the manifest, and the
+        emptied directory of a table the manifest no longer names (resume
+        hygiene)."""
         manifest = self._read_manifest()
         for table_dir in self.root.iterdir():
             if not table_dir.is_dir():
@@ -137,6 +151,9 @@ class Catalog:
                 r = int(round_dir.name.split("=", 1)[1])
                 if r not in committed:
                     shutil.rmtree(round_dir)
+            if (table_dir.name not in manifest["tables"]
+                    and not any(table_dir.iterdir())):
+                table_dir.rmdir()
 
     def destroy(self) -> None:
         shutil.rmtree(self.root, ignore_errors=True)

@@ -3,7 +3,8 @@
 
 Each round r is one Spark batch over immutable checkpointed state:
 
-    pending_r  →  per-host budget window (politeness shuffle by host)
+    pending_r  →  per-host budget and FIFO batch, ranked on the driver;
+                  Spark gets only the admitted rows, as a local relation
                →  fetch = left equi-join against the pages corpus on
                   url_hash, the corpus side semi-reduced first by a
                   broadcast of the admitted key set
@@ -17,12 +18,13 @@ Each round r is one Spark batch over immutable checkpointed state:
                   (parent_seq, link_pos) order
                →  on the driver: seq assignment, pending_{r+1} = unadmitted
                   + retried + new rows, written with pyarrow beside the full
-                  seen set; progress, per-partition lineage appended;
+                  seen set and the round's visits (admitted rows + fetch
+                  outcome); progress, per-partition lineage appended;
                   manifest commit (atomic) → resumable
 
 The frontier and the seen set are driver-resident: both are bounded by the
-zod ``limit`` (≤ 50,000 URLs enqueued per job), so the round numbers and
-persists them without a Spark job.
+zod ``limit`` (≤ 50,000 URLs enqueued per job), so the round admits from,
+numbers and persists them without a Spark job.
 
 Dedup semantics follow the reference's queue path (crawlee uniqueKey dedup at
 enqueue time, ``Base.ts:464-493``): the seen set is "everything ever
@@ -60,7 +62,7 @@ from .catalog import Catalog
 from .errors import failure_reason_col, should_retry_col
 from .kernel.canonical import host_of
 from .politeness import (
-    apply_host_budget,
+    admit_arrow,
     path_filter_cond,
     robots_allowed,
     strategy_cond,
@@ -74,6 +76,8 @@ FRONTIER_SCHEMA = ("job_id string, url string, url_hash string, host string, "
                    "origin string, path string, depth int, seq long, "
                    "round_added int, attempt int")
 SEEN_SCHEMA = "url_hash string"
+# every table the engine writes; a commit retires any other (Catalog)
+TABLES = ["results", "visits", "metrics", "pending", "seen"]
 # tables whose every checkpoint round is the full cumulative state: a
 # commit naming one retires its previous copy
 CUMULATIVE_TABLES = ["seen"]
@@ -103,10 +107,6 @@ class CrawlConfig:
     politeness_budget: int = 0           # fetches per budget key per round; 0 = unlimited
     budget_scope: str = "host"           # 'host' or 'domain' (registrable) —
                                          # north rule: per-DOMAIN politeness
-    budget_salt_n: int = 0               # >1: two-stage salted per-host top-k (hot
-                                         # hosts); 0: plain window. Measured: salting
-                                         # loses below ~10k rows/round (SCALING.json
-                                         # skew_probe_bfs) and wins at 2M (skew_probe)
     max_attempts: int = 1                # fetch retries (Queue.ts:84-89 attempts=3)
     batch_size: int = 0                  # rows fetched per round; 0 = whole round
     respect_robots: bool = True          # --anycrawl-compat off ⇒ True (north rule)
@@ -157,9 +157,6 @@ class CrawlConfig:
             raise ValueError("politeness_budget/batch_size must be >= 0")
         if self.max_attempts < 1:
             raise ValueError("max_attempts must be >= 1")
-        if not isinstance(self.budget_salt_n, int) or self.budget_salt_n < 0:
-            raise ValueError(f"budget_salt_n must be an int >= 0, "
-                             f"got {self.budget_salt_n!r}")
         if self.seen_filter not in ("bloom", "cuckoo"):
             raise ValueError(f"unknown seen_filter {self.seen_filter!r}")
 
@@ -277,7 +274,7 @@ class CrawlEngine:
         # out of scope.
         if cache_corpus or prepared:
             self.corpus = self.corpus.localCheckpoint(eager=False)
-        self.catalog = Catalog(checkpoint_dir)
+        self.catalog = Catalog(checkpoint_dir, tables=TABLES)
         self.robots = robots
         # driver-resident seen state, cumulative through the newest round
         # this run wrote (or, on resume, loaded by _load_seen): the exact
@@ -291,9 +288,9 @@ class CrawlEngine:
         # round's deferred commit, like the seen state above.
         self._pending: pa.Table | None = None
         # -- write pipelining (see _finalize_prev) --------------------------
-        # The slow per-round parquet writes (results/visits/metrics) overlap
+        # The slow per-round parquet writes (results/metrics) overlap
         # the NEXT round's compute jobs: round r submits them async and
-        # round r+1 finalizes (await -> commit -> release caches) right
+        # round r+1 finalizes (await -> commit -> release docs) right
         # before its own state writes.
         self._prev_inflight: dict | None = None
         self._writes: ThreadPoolExecutor | None = None
@@ -342,9 +339,8 @@ class CrawlEngine:
 
     def _finalize_prev(self) -> None:
         """Complete the previous round's deferred tail: await its parquet
-        writes, commit its manifest entry, then release its cached frames
-        (only those writes read them; the next round reads its frontier
-        from the driver-written pending file)."""
+        writes, commit its manifest entry, then release its cached docs
+        frame (only those writes read it)."""
         prev = self._prev_inflight
         self._prev_inflight = None
         if prev is None:
@@ -355,8 +351,7 @@ class CrawlEngine:
             self.catalog.commit_round(prev["round"], prev["tables"],
                                       prev["meta"], replace=CUMULATIVE_TABLES)
         finally:
-            for df in prev["caches"]:
-                df.unpersist()
+            prev["docs"].unpersist()
 
     # -- cancellation (Progress.ts:434-448) ---------------------------------
     # A marker file in the checkpoint root, so any process holding the
@@ -571,9 +566,6 @@ class CrawlEngine:
             .alias("fetched"),
             F.sum(F.coalesce(F.col("bytes"), F.lit(0))).alias("bytes")]
         ex["job_id"] = F.lit(cfg.job_id).alias("job_id")
-        ex["visits_sel"] = [F.col(c) for c in
-                            ("job_id", "url", "url_hash", "host", "depth",
-                             "seq", "attempt", "status", "round")]
         ex["links_pre"] = [
             F.col("job_id"),
             F.col("depth").alias("parent_depth"),
@@ -652,7 +644,7 @@ class CrawlEngine:
                                    progress["pending_next"])
         else:
             self.catalog.destroy()
-            self.catalog = Catalog(self.catalog.root)
+            self.catalog = Catalog(self.catalog.root, tables=TABLES)
             progress = {"round": -1, "done": 0, "failed": 0, "enqueued": 0, "finalized": False}
             round_no = 0
 
@@ -712,14 +704,13 @@ class CrawlEngine:
     def _run_round(self, cfg: CrawlConfig, r: int, progress: dict,
                    ex: dict) -> dict:
         """One round as named stages over the driver-resident frontier
-        ``self._pending``, which Spark reads from the round file the
-        previous round wrote. The submission order is load-bearing: the
-        discovery collect, the outcome job and the docs writes evaluate the
-        cached docs frame concurrently, and all three overlap the previous
-        round's writes, which _finalize_prev awaits only before this
-        round's state writes. The driver then builds the next pending from
-        the two collects. The time stamps delimit the meta ``timings``
-        phases."""
+        ``self._pending``, admitted on the driver. The submission order is
+        load-bearing: the discovery collect, the outcome job and the docs
+        writes evaluate the cached docs frame concurrently, and all three
+        overlap the previous round's writes, which _finalize_prev awaits
+        only before this round's state writes. The driver then builds the
+        visits and the next pending from the two collects. The time stamps
+        delimit the meta ``timings`` phases."""
         t0 = time.time()
         n_pending = self._pending.num_rows
         if n_pending == 0:
@@ -728,11 +719,9 @@ class CrawlEngine:
                     "phase": "drained"}
             self.catalog.commit_round(r, [], meta)
             return meta
-        pending = self.spark.read.schema(FRONTIER_SCHEMA).parquet(
-            self.catalog.round_path("pending", r - 1))
         # consumers of the round's docs run at ~1k rows per task
         n_view = self._width(n_pending, 1000)
-        admitted = self._admit(cfg, pending)
+        admitted, admitted_rows = self._admit(cfg, r)
         docs, docs_view = self._fetch_extract(r, admitted, n_pending, n_view,
                                               ex)
         disc_fut = None
@@ -753,8 +742,8 @@ class CrawlEngine:
         # before this round's state writes.
         self._finalize_prev()
         outcome = outcome_fut.result()
-        state_tables = self._write_state(r, progress["enqueued"], outcome,
-                                         new_rows)
+        state_tables = self._write_state(r, progress["enqueued"],
+                                         admitted_rows, outcome, new_rows)
         meta = self._round_meta(
             cfg, r, progress, outcome, new_rows.num_rows,
             self._pending.num_rows,
@@ -765,9 +754,8 @@ class CrawlEngine:
         # this round's directories dropped — exact-resume is unchanged.
         self._prev_inflight = {
             "round": r, "futures": doc_writes,
-            "tables": ["results", "visits", "metrics"] + state_tables,
-            "meta": meta,
-            "caches": [docs] if admitted is pending else [docs, admitted],
+            "tables": ["results", "metrics"] + state_tables,
+            "meta": meta, "docs": docs,
         }
         return meta
 
@@ -777,23 +765,20 @@ class CrawlEngine:
         return max(1, min(self.spark.sparkContext.defaultParallelism,
                           (n_rows + rows_per_task - 1) // rows_per_task))
 
-    def _admit(self, cfg: CrawlConfig, pending: DataFrame) -> DataFrame:
-        """The round's admitted frontier rows: the per-host budget window
-        (the politeness shuffle by host), then the coordinator's FIFO
-        batch. An unbudgeted round admits the pending frame itself; the
-        rows left out stay in the driver's frontier (_write_state)."""
+    def _admit(self, cfg: CrawlConfig, r: int) -> tuple[DataFrame, pa.Table]:
+        """The round's admitted rows, as the fetch join's frame and as the
+        driver table the visits are built from. An unbudgeted round admits
+        its whole pending file. Otherwise the driver ranks the frontier the
+        ``limit`` keeps small (politeness.admit_arrow: per-host budget, then
+        the coordinator's FIFO batch, crawlCoordinator.ts:33-38) and Spark
+        gets only the admitted rows. The rest stay in the driver's
+        frontier (_write_state)."""
         if not cfg.politeness_budget and not cfg.batch_size:
-            return pending
-        admitted, _ = apply_host_budget(
-            pending, cfg.politeness_budget, order_cols=("depth", "seq"),
-            salt_n=cfg.budget_salt_n, scope=cfg.budget_scope)
-        if cfg.batch_size:
-            # coordinator batch semantics (crawlCoordinator.ts:33-38): take
-            # the first batch_size rows in FIFO (seq) order
-            admitted = admitted.orderBy("seq").limit(cfg.batch_size)
-        # both sides of the fetch join (the broadcast key set and the left
-        # side) read admitted: evaluate the budget window once
-        return admitted.cache()
+            return (self.spark.read.schema(FRONTIER_SCHEMA).parquet(
+                self.catalog.round_path("pending", r - 1)), self._pending)
+        rows = admit_arrow(self._pending, cfg.politeness_budget,
+                           cfg.budget_scope, cfg.batch_size)
+        return self.spark.createDataFrame(rows), rows
 
     def _fetch_extract(self, r: int, admitted: DataFrame, n_pending: int,
                        n_view: int, ex: dict) -> tuple[DataFrame, DataFrame]:
@@ -935,11 +920,11 @@ class CrawlEngine:
 
     def _submit_doc_writes(self, r: int, docs: DataFrame,
                            docs_view: DataFrame, ex: dict):
-        """The outcome job and the results / visits / metrics writes, all
-        submitted async. Returns (the outcome future, the write futures)."""
+        """The outcome job and the results / metrics writes, all submitted
+        async. Returns (the outcome future, the write futures)."""
         # One job: one (seq, status, final) row per admitted URL, from
-        # which the driver derives the progress counts, the admitted seqs
-        # and the retries (_write_state). Nothing in the round needs it
+        # which the driver derives the progress counts, the retries and
+        # the visits (_write_state). Nothing in the round needs it
         # before the state writes — capacity uses the driver-known
         # `enqueued` — so it runs concurrently with the discovery collect
         # and the doc writes (block-level cache locks make the shared docs
@@ -948,8 +933,7 @@ class CrawlEngine:
             lambda: docs_view.select("seq", "status", ex["outcome_key"])
             .toArrow())
         # results: persistence gated by scrape_paths (F5) — links still
-        # flow; visits: complete per-round visit log (crawl-order golden
-        # surface). The docs-derived writes are independent reads of the
+        # flow. The docs-derived writes are independent reads of the
         # cached docs → submitted concurrently (each write targets its own
         # round directory). None of them is awaited in this round:
         # _finalize_prev() awaits + commits them while the NEXT round's
@@ -959,8 +943,6 @@ class CrawlEngine:
             self._writes.submit(
                 append, docs_view.where(F.col("should_scrape"))
                 .drop("links", "should_scrape"), "results", r),
-            self._writes.submit(
-                append, docs_view.select(*ex["visits_sel"]), "visits", r),
         ]
         # per-partition lineage/metrics (north rule)
         metrics = (
@@ -986,14 +968,28 @@ class CrawlEngine:
             "attempt": pa.array([1] * n),
         }, schema=FRONTIER_ARROW_SCHEMA)
 
-    def _write_state(self, r: int, enqueued: int, outcome: pa.Table,
-                     new_rows: pa.Table) -> list[str]:
-        """Round r's next pending — the unadmitted rows, the retries
+    def _write_state(self, r: int, enqueued: int, admitted: pa.Table,
+                     outcome: pa.Table, new_rows: pa.Table) -> list[str]:
+        """Round r's visits — the admitted rows beside their fetch
+        outcome — and next pending — the unadmitted rows, the retries
         (attempt + 1, every other column kept) and the new rows — written
-        with pyarrow and kept as the driver's frontier, then the seen state
-        grown by the new hashes and checkpointed as round r (every write
-        runs on the driver — no Spark job). Returns the state tables
-        written."""
+        with pyarrow, the latter kept as the driver's frontier, then the
+        seen state grown by the new hashes and checkpointed as round r
+        (every write runs on the driver — no Spark job). Returns the
+        tables written."""
+        admitted, outcome = admitted.sort_by("seq"), outcome.sort_by("seq")
+        # one outcome row per admitted row: a non-unique corpus key would
+        # fan out the visits and the done/failed counts
+        if not outcome.column("seq").equals(admitted.column("seq")):
+            raise AssertionError(
+                f"round {r} fetch outcome seqs differ from its admitted seqs")
+        self.catalog.append_round_local(pa.table({
+            **{c: admitted.column(c) for c in ("job_id", "url", "url_hash",
+                                               "host", "depth", "seq",
+                                               "attempt")},
+            "status": outcome.column("status").cast(pa.int32()),
+            "round": pa.array([r] * admitted.num_rows, pa.int32()),
+        }), "visits", r)
         pending, seq = self._pending, self._pending.column("seq")
         not_final = outcome.filter(pc.invert(outcome.column("final")))
         retries = pending.filter(pc.is_in(
@@ -1002,7 +998,7 @@ class CrawlEngine:
             FRONTIER_COLS.index("attempt"), "attempt",
             pc.add(retries.column("attempt"), 1).cast(pa.int32()))
         unadmitted = pending.filter(pc.invert(pc.is_in(
-            seq, value_set=outcome.column("seq").combine_chunks())))
+            seq, value_set=admitted.column("seq").combine_chunks())))
         nxt = pa.concat_tables([unadmitted, retries, new_rows])
         # a seq names one frontier row from enqueue to its final attempt,
         # and the new rows continue the job's dense enqueue numbering
@@ -1015,7 +1011,7 @@ class CrawlEngine:
         self.catalog.append_round_local(nxt, "pending", r)
         self._pending = nxt
         if new_rows.num_rows == 0:
-            return ["pending"]
+            return ["visits", "pending"]
         hashes = new_rows.column("url_hash").to_pylist()
         new = set(hashes)
         # both invariants keep every URL to one visit: in-batch dedup
@@ -1029,7 +1025,7 @@ class CrawlEngine:
                 f"round {r} seen delta holds already-seen url hashes")
         self._seen |= new
         self._write_seen_state(r)
-        return ["pending"] + CUMULATIVE_TABLES
+        return ["visits", "pending"] + CUMULATIVE_TABLES
 
     @staticmethod
     def _round_meta(cfg: CrawlConfig, r: int, progress: dict,

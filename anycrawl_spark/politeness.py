@@ -3,8 +3,10 @@
 robots rules, per-domain politeness budgets, explicit salting of skewed
 hosts).
 
-All of this is JVM-side DataFrame code — window functions, broadcast joins,
-and rlike predicates. No Python executes per row.
+All of this but ``admit_arrow`` is JVM-side DataFrame code — window
+functions, broadcast joins, and rlike predicates. No Python executes per
+row. ``admit_arrow`` is the per-host budget's driver twin over an Arrow
+frontier, for the crawl, whose frontier the zod limit keeps on the driver.
 """
 
 from __future__ import annotations
@@ -330,6 +332,50 @@ def apply_host_budget(frontier: DataFrame, budget: int | None,
     admitted = ranked.where(F.col("__host_rank") <= budget).drop("__host_rank")
     deferred = ranked.where(F.col("__host_rank") > budget).drop("__host_rank")
     return admitted, deferred
+
+
+def admit_arrow(frontier, budget: int, scope: str = "host",
+                batch_size: int = 0):
+    """The driver twin of ``apply_host_budget(frontier, budget,
+    order_cols=("depth", "seq"), scope=scope)`` followed by the
+    coordinator's FIFO batch ``orderBy("seq").limit(batch_size)``, over a
+    ``pa.Table`` frontier whose ``seq`` is unique: at most ``budget`` rows
+    per budget key, lowest (depth, seq) first, then the first
+    ``batch_size`` of those by seq (0 turns either bound off). Returns the
+    admitted rows in seq order.
+
+    Null hosts share one key, as the window's partitionBy groups them. The
+    ranking is vectorized: hosts are dictionary-encoded, so with
+    ``scope='domain'`` base_domain_of runs once per distinct host."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    from anycrawl_spark.kernel.canonical import base_domain_of
+
+    seq = frontier.column("seq").to_numpy()
+    keep = np.arange(frontier.num_rows)
+    if budget:
+        hosts = pc.dictionary_encode(
+            frontier.column("host").combine_chunks(), null_encoding="encode")
+        key = hosts.indices.to_numpy()
+        if scope == "domain":
+            domains = pa.array([h if h is None else base_domain_of(h)
+                                for h in hosts.dictionary.to_pylist()],
+                               pa.string())
+            key = pc.dictionary_encode(
+                domains, null_encoding="encode").indices.to_numpy()[key]
+        order = np.lexsort((seq, frontier.column("depth").to_numpy(), key))
+        # rank within each key's run of the sorted order
+        k = key[order]
+        starts = np.flatnonzero(np.r_[True, k[1:] != k[:-1]])
+        rank = np.arange(len(k)) - np.repeat(starts, np.diff(
+            np.r_[starts, len(k)]))
+        keep = order[rank < budget]
+    keep = keep[np.argsort(seq[keep])]
+    if batch_size:
+        keep = keep[:batch_size]
+    return frontier.take(keep)
 
 
 def salt_skewed_hosts(df: DataFrame, host_col: str = "host",

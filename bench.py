@@ -247,27 +247,24 @@ def ensure_hot_corpus(spark, n: int = 100_000) -> str:
 
 def skew_bfs_probe(spark, corpus_path: str, budget: int = 500,
                    limit: int = 10_000, trials: int = 2) -> dict:
-    """Verdict-r4 item 8: the salted-vs-uniform skew comparison measured on
+    """Verdict-r4 item 8: the hot-vs-uniform skew comparison measured on
     the PRODUCTION code path — a real CrawlEngine BFS (limit 10k, per-host
     politeness budget) over a hot-host corpus (~92% of pages on one host),
     not the 2M-row synthetic-frontier microbench (skew_probe above, which
-    remains the at-scale regime evidence).
+    remains the at-scale regime evidence for salting).
 
-    Three configs: default mixed-skew corpus salt0 (baseline), hot corpus
-    salt0, hot corpus salt8. The budget makes round counts differ between
-    corpora (the hot host throttles to `budget` urls/round), so the
-    comparable number is seconds PER ROUND — each round pays the same
-    politeness-window shuffle whose single hot-host task is what salting
-    splits. salt0 vs salt8 on the hot corpus is row-identical admission
-    (politeness.apply_host_budget invariant), so their round counts match
-    and the per-round ratio isolates the window cost."""
+    Two configs: the default mixed-skew corpus (baseline) and the hot
+    corpus. The budget makes round counts differ between corpora (the hot
+    host throttles to `budget` urls/round), so the comparable number is
+    seconds PER ROUND. The crawl admits on the driver (no budget window to
+    salt), so the salted arm this probe once ran is retired."""
     from pyspark.storagelevel import StorageLevel
 
     from anycrawl_spark.crawl import CrawlConfig, CrawlEngine, prepare_corpus
 
     hot_path = ensure_hot_corpus(spark)
 
-    def run(path: str, salt_n: int) -> tuple[float, int, int]:
+    def run(path: str) -> tuple[float, int, int]:
         pages = spark.read.parquet(path)
         corpus = prepare_corpus(pages).persist(StorageLevel.MEMORY_AND_DISK)
         corpus.count()
@@ -279,8 +276,7 @@ def skew_bfs_probe(spark, corpus_path: str, budget: int = 500,
             summary = engine.run(CrawlConfig(
                 job_id="skewbfs", seed_url="https://site000.test/p/0",
                 strategy="all", max_depth=20, limit=limit,
-                politeness_budget=budget, budget_salt_n=salt_n,
-                respect_robots=False))
+                politeness_budget=budget, respect_robots=False))
             sec = time.time() - t0
             rounds, done = summary["rounds"], summary["done"]
             if best is None or sec < best:
@@ -288,30 +284,23 @@ def skew_bfs_probe(spark, corpus_path: str, budget: int = 500,
         corpus.unpersist()
         return best, rounds, done
 
-    base_sec, base_rounds, base_done = run(corpus_path, 0)
-    hot0_sec, hot0_rounds, hot0_done = run(hot_path, 0)
-    hot8_sec, hot8_rounds, hot8_done = run(hot_path, 8)
+    base_sec, base_rounds, base_done = run(corpus_path)
+    hot_sec, hot_rounds, hot_done = run(hot_path)
     per_round = lambda s, r: s / max(r, 1)  # noqa: E731
     return {
         "budget": budget,
         "limit": limit,
         "baseline": {"sec": round(base_sec, 2), "rounds": base_rounds,
                      "done": base_done},
-        "hot_salt0": {"sec": round(hot0_sec, 2), "rounds": hot0_rounds,
-                      "done": hot0_done},
-        "hot_salt8": {"sec": round(hot8_sec, 2), "rounds": hot8_rounds,
-                      "done": hot8_done},
+        "hot": {"sec": round(hot_sec, 2), "rounds": hot_rounds,
+                "done": hot_done},
         "sec_per_round": {
             "baseline": round(per_round(base_sec, base_rounds), 3),
-            "hot_salt0": round(per_round(hot0_sec, hot0_rounds), 3),
-            "hot_salt8": round(per_round(hot8_sec, hot8_rounds), 3),
+            "hot": round(per_round(hot_sec, hot_rounds), 3),
         },
-        "salted_vs_baseline_per_round": round(
-            per_round(hot8_sec, hot8_rounds)
+        "hot_vs_baseline_per_round": round(
+            per_round(hot_sec, hot_rounds)
             / per_round(base_sec, base_rounds), 2),
-        "salted_vs_unsalted_per_round": round(
-            per_round(hot8_sec, hot8_rounds)
-            / per_round(hot0_sec, hot0_rounds), 2),
     }
 
 

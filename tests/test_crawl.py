@@ -349,6 +349,92 @@ class TestResume:
                 for r in engine.catalog.read(spark, "seen").collect()}
         assert (visits, seen) == (full_visits, full_seen)
 
+    def test_resume_over_spark_written_visits(self, spark, small_corpus,
+                                              tmp_root):
+        """Visits rounds written by Spark (an older engine wrote every
+        visits round that way) and the driver's pyarrow-written rounds
+        read back as one table: a budgeted crawl resumed over rewritten
+        rounds keeps the uninterrupted visit order, and the driver writes
+        depth/attempt/status/round as int32 and seq as int64, the types
+        of Spark's write."""
+        import shutil
+
+        import pyarrow.parquet as pq
+
+        kw = {**self.KW, "politeness_budget": 3}
+        _, full_visits, _ = run_engine(spark, small_corpus, tmp_root,
+                                       "visits_full", **kw)[1:]
+        root = os.path.join(tmp_root, "visits_part")
+        CrawlEngine(spark, small_corpus, root).run(
+            CrawlConfig(job_id="visits_full", max_rounds=3, **kw))
+        engine = CrawlEngine(spark, small_corpus, root)
+        spark_rounds = engine.catalog.committed_rounds("visits")
+        for rr in spark_rounds:
+            path = engine.catalog.round_path("visits", rr)
+            spark.read.parquet(path).repartition(2).write.parquet(
+                path + ".tmp")
+            shutil.rmtree(path)
+            shutil.move(path + ".tmp", path)
+        engine.run(CrawlConfig(job_id="visits_full", **kw), resume=True)
+        visits = [(r["seq"], r["url"], r["depth"], r["status"])
+                  for r in engine.visit_order().collect()]
+        assert visits == full_visits
+        driver_round = engine.catalog.committed_rounds("visits")[-1]
+        assert driver_round not in spark_rounds
+        schema = pq.read_schema(os.path.join(
+            engine.catalog.round_path("visits", driver_round),
+            "part-00000.parquet"))
+        assert {c: str(schema.field(c).type) for c in
+                ("depth", "seq", "attempt", "status", "round")} == {
+            "depth": "int32", "seq": "int64", "attempt": "int32",
+            "status": "int32", "round": "int32"}
+
+    def test_stale_bloom_table_retired(self, spark, small_corpus, tmp_root):
+        """A checkpoint from an engine that still committed a ``bloom``
+        filter table loses that table at the first commit after resume:
+        no manifest entry and no directory remain."""
+        import pyarrow as pa
+
+        from anycrawl_spark.catalog import Catalog
+
+        root, _ = self._interrupted(spark, small_corpus, tmp_root,
+                                    "resume_bloom")
+        old = Catalog(root)
+        r = old.last_round()
+        old.append_round_local(pa.table({"bits": [b"\x00" * 8]}), "bloom", r)
+        old.commit_round(r, ["bloom"])
+        assert old.committed_rounds("bloom") == [r]
+
+        engine = CrawlEngine(spark, small_corpus, root)
+        engine.run(CrawlConfig(job_id="resume", **self.KW), resume=True)
+        assert "bloom" not in engine.catalog._read_manifest()["tables"]
+        assert_one_state_copy(engine.catalog)
+
+    def test_retired_table_dir_removed_at_resume(self, tmp_path,
+                                                  monkeypatch):
+        """A crash after the commit that retires a table but before its
+        directory is deleted leaves the directory unnamed by the manifest;
+        resume hygiene removes it."""
+        import shutil
+
+        import pyarrow as pa
+
+        from anycrawl_spark.catalog import Catalog
+
+        old = Catalog(tmp_path)
+        for table in ("bloom", "seen"):
+            old.append_round_local(pa.table({"x": [1]}), table, 0)
+        old.commit_round(0, ["bloom", "seen"])
+        new = Catalog(tmp_path, tables=["seen"])
+        with monkeypatch.context() as m:
+            m.setattr(shutil, "rmtree", lambda *a, **k: None)
+            new.commit_round(1, [])
+        assert new.committed_rounds("bloom") == []
+        assert (tmp_path / "bloom").exists()
+        new.drop_uncommitted()
+        assert not (tmp_path / "bloom").exists()
+        assert new.committed_rounds("seen") == [0]
+
 
 class TestSeenInvariant:
     def test_already_seen_hash_raises(self, spark, small_corpus, tmp_root,
@@ -413,33 +499,6 @@ class TestRetries:
         assert summary["failed"] == n404_urls
 
 
-class TestAutoSaltGate:
-    def test_resolve_salt_n(self):
-        """CrawlConfig validates the knob: an int >= 0, default 0; strings
-        such as 'auto' are rejected."""
-        import pytest
-
-        assert CrawlConfig(job_id="j", seed_url="https://a.test/").budget_salt_n == 0
-        for bad in ("auto", "always", -1):
-            with pytest.raises(ValueError):
-                CrawlConfig(job_id="j", seed_url="https://a.test/",
-                            budget_salt_n=bad)
-
-
-class TestSaltedBudgetParity:
-    def test_salted_budget_crawl_matches_simulator(self, spark, small_corpus,
-                                                   corpus_dict, tmp_root):
-        """budget_salt_n changes physical execution (two-stage top-k), never
-        semantics: visit order and seen set still equal the simulator."""
-        kw = dict(seed_url=SEED, strategy="all", max_depth=4, limit=60,
-                  politeness_budget=2, budget_salt_n=4, respect_robots=False)
-        _, _, visits, seen = run_engine(spark, small_corpus, tmp_root,
-                                        "saltbudget", **kw)
-        sim = simulate_crawl(corpus_dict, SEED, strategy="all", max_depth=4,
-                             limit=60, politeness_budget=2)
-        assert_parity(spark, visits, seen, sim)
-
-
 class TestCombinedSemantics:
     def test_all_features_together(self, spark, small_corpus, corpus_dict,
                                    robots_df, robots_dict, tmp_root):
@@ -462,13 +521,13 @@ class TestCombinedSemantics:
 
     def test_everything_at_once(self, spark, small_corpus, corpus_dict,
                                 robots_df, robots_dict, tmp_root):
-        """Capstone: robots + DOMAIN-scoped salted budget + batch_size +
+        """Capstone: robots + DOMAIN-scoped budget + batch_size +
         include globs + depth + limit in one job — exact order/membership
         parity with the simulator under the full feature matrix."""
         inc = ["**/p/*"]
         kw = dict(seed_url=SEED, strategy="same-domain", max_depth=6,
                   limit=50, include_paths=inc, politeness_budget=2,
-                  budget_scope="domain", budget_salt_n=4, batch_size=7,
+                  budget_scope="domain", batch_size=7,
                   respect_robots=True)
         _, summary, visits, seen = run_engine(
             spark, small_corpus, tmp_root, "capstone", robots=robots_df, **kw)
@@ -599,6 +658,81 @@ class TestDomainBudget:
                        "https://other.test/0", "https://other.test/1"]
 
 
+class TestDriverAdmission:
+    """``politeness.admit_arrow`` is the crawl's admission; the distributed
+    ``apply_host_budget`` (plus the coordinator's ``orderBy("seq")
+    .limit(batch_size)``) is its specification."""
+
+    HOSTS = ["a.test", "b.test", "sub.a.test", "x.co.uk", "y.x.co.uk",
+             "z.y.x.co.uk", "co.uk", "localhost", None]
+
+    @pytest.mark.parametrize("batched", [False, True])
+    @pytest.mark.parametrize("scope", ["host", "domain"])
+    def test_matches_apply_host_budget(self, spark, scope, batched):
+        import random
+
+        import pyarrow as pa
+        from hypothesis import example, given, settings, strategies as st
+
+        from anycrawl_spark.politeness import admit_arrow, apply_host_budget
+
+        @settings(max_examples=20, deadline=None)
+        @given(rows=st.lists(st.tuples(st.sampled_from(self.HOSTS),
+                                       st.integers(0, 3)),
+                             min_size=1, max_size=40),
+               budget=st.integers(0 if batched else 1, 4),
+               batch_size=st.integers(1, 12) if batched else st.just(0),
+               rnd=st.randoms(use_true_random=False))
+        # more null hosts than the budget: they share one key
+        @example(rows=[(None, 1), (None, 0), (None, 0), ("x.co.uk", 0),
+                       ("y.x.co.uk", 0), ("a.test", 1), ("sub.a.test", 0)],
+                 budget=1, batch_size=12 if batched else 0,
+                 rnd=random.Random(0))
+        def check(rows, budget, batch_size, rnd):
+            seqs = list(range(len(rows)))
+            rnd.shuffle(seqs)
+            frontier = pa.table({
+                "url": [f"https://{h}/{i}" for i, (h, _) in enumerate(rows)],
+                "host": pa.array([h for h, _ in rows], pa.string()),
+                "depth": pa.array([d for _, d in rows], pa.int32()),
+                "seq": pa.array(seqs, pa.int64()),
+            })
+            want, _ = apply_host_budget(
+                spark.createDataFrame(frontier), budget,
+                order_cols=("depth", "seq"), scope=scope)
+            if batched:
+                want = want.orderBy("seq").limit(batch_size)
+            got = admit_arrow(frontier, budget, scope, batch_size)
+            assert got.column("seq").to_pylist() == sorted(
+                r["seq"] for r in want.collect())
+
+        check()
+
+    def test_base_domain_of_matches_column(self, spark):
+        """The driver's budget key (base_domain_of) equals the window's
+        (base_domain_col) on hosts with empty labels, a trailing dot and
+        multi-label public suffixes."""
+        from hypothesis import given, settings, strategies as st
+
+        from anycrawl_spark.kernel.canonical import (base_domain_col,
+                                                     base_domain_of)
+
+        label = st.sampled_from(["", "a", "b", "www", "co", "uk", "com",
+                                 "au", "org", "test", "localhost"])
+        hosts: list[str] = []
+
+        @settings(max_examples=300, deadline=None)
+        @given(st.lists(label, min_size=1, max_size=5))
+        def collect(labels):
+            hosts.append(".".join(labels))
+
+        collect()
+        got = {r["host"]: r["key"] for r in spark.createDataFrame(
+            [(h,) for h in hosts], "host string").select(
+                "host", base_domain_col(F.col("host")).alias("key")).collect()}
+        assert {h: base_domain_of(h) for h in hosts} == got
+
+
 class TestSpecRobotsCrawl:
     def test_crawl_with_wildcard_robots(self, spark, small_corpus, tmp_root):
         """Engine accepts raw robots.txt with wildcard/Allow rules: the
@@ -691,6 +825,24 @@ class TestCorpusDedup:
         with pytest.raises(ValueError):
             CrawlConfig(job_id="b", seed_url="https://x.test/",
                         budget_scope="continent")
+
+
+class TestFetchInvariant:
+    def test_duplicate_prepared_corpus_key_raises(self, spark, small_corpus,
+                                                  tmp_root):
+        """A prepared corpus is trusted to be unique on page_url_hash. One
+        that is not fans the fetch join out, and the round raises where the
+        fetch outcome meets the admitted rows instead of committing
+        duplicate visits and done/failed counts."""
+        from anycrawl_spark.crawl import prepare_corpus
+
+        corpus = prepare_corpus(small_corpus, dedup=False)
+        engine = CrawlEngine(spark, corpus.unionByName(corpus),
+                             os.path.join(tmp_root, "fanout"), prepared=True)
+        with pytest.raises(AssertionError, match="outcome seqs differ"):
+            engine.run(CrawlConfig(job_id="fo", seed_url=SEED, limit=10,
+                                   respect_robots=False))
+        assert engine.catalog.committed_rounds("visits") == []
 
 
 class TestPipelinedCheckpointing:
