@@ -340,12 +340,6 @@ def normalize_charge_details(charge_details, charged, reason: str):
                                 "source_total": items_total}}]}
 
 
-CHARGE_EVENT_SCHEMA = (
-    "seq long, job_id string, mode string, amount double, reason string, "
-    "idempotency_key string, calculator string, "
-    "items array<struct<code string, credits double>>"
-)
-
 _LEDGER_FOLD_SCHEMA = (
     "job_id string, api_key string, seq long, mode string, reason string, "
     "idempotency_key string, charged double, before_used double, "

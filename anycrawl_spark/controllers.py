@@ -89,15 +89,6 @@ EXECUTION_STATUS_ICONS = {
 }
 DEFAULT_EXECUTION_ICON = "Clock"
 
-# ScheduledTasksController.ts:34-39
-TASK_TYPE_ICONS = {
-    "scrape": "FileText",
-    "crawl": "Network",
-    "search": "Search",
-    "template": "FileCode",
-}
-DEFAULT_TASK_ICON = "Calendar"
-
 # CrawlController.ts:380 — statuses that reject cancellation
 FINISHED_STATUSES = ("completed", "failed", "cancelled")
 

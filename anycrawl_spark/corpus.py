@@ -242,28 +242,6 @@ def generate_robots(spark, num_hosts: int = 40):
     return spark.createDataFrame(rows, schema=ROBOTS_SCHEMA)
 
 
-SEEDS_SCHEMA = (
-    "job_id string, seed_url string, strategy string, max_depth int, "
-    "page_limit int, include_paths array<string>, exclude_paths array<string>, "
-    "scrape_paths array<string>, politeness_budget int"
-)
-
-
-def generate_seeds(spark, num_hosts: int = 40):
-    rows = [
-        ("job-bfs", page_url(host_name(0), 0), "same-hostname", 5, 40, [], [], [], 0),
-        ("job-limit", page_url(host_name(0), 0), "same-hostname", 10, 12, [], [], [], 0),
-        ("job-depth", page_url(host_name(1), 0), "same-hostname", 2, 100, [], [], [], 0),
-        ("job-glob", page_url(host_name(0), 0), "same-hostname", 6, 60,
-         ["**/p/*"], ["**/blog/**"], [], 0),
-        ("job-domain", page_url(host_name(3), 0), "same-domain", 4, 50, [], [], [], 0),
-        ("job-budget", page_url(host_name(0), 0), "all", 4, 60, [], [], [], 2),
-        ("job-scrape-paths", page_url(host_name(0), 0), "same-hostname", 5, 30,
-         [], [], ["**/blog/**"], 0),
-    ]
-    return spark.createDataFrame(rows, schema=SEEDS_SCHEMA)
-
-
 # ---------------------------------------------------------------------------
 # SERP fixtures (FIXTURES.md §4) — Google parser input
 # ---------------------------------------------------------------------------

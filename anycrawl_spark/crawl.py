@@ -60,7 +60,6 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from .catalog import Catalog
 from .errors import failure_reason_col, should_retry_col
-from .kernel.canonical import host_of
 from .politeness import (
     admit_arrow,
     path_filter_cond,

@@ -32,10 +32,6 @@ from __future__ import annotations
 
 from pyspark.sql import Column, functions as F
 
-FAILURE_CLASSES = (
-    "cloudflare_challenge", "blocked", "proxy_error", "timeout", "http_error",
-)
-
 TEMPORARY_PROXY_ERRORS = (
     "ERR_PROXY_CONNECTION_FAILED",
     "ERR_TUNNEL_CONNECTION_FAILED",
@@ -100,31 +96,3 @@ def should_retry_col(msg_col: Column, error_name_col: Column | None = None) -> C
         .otherwise(False)
     )
 
-
-# Python twins (simulator / unit tests) --------------------------------------
-
-def failure_reason(msg: str, error_name: str | None = None) -> str:
-    msg = msg or ""
-    if any(m in msg for m in ("cloudflare", "CF_",
-                              "ANYCRAWL_PROXY_ACTION_UPGRADE_TO_STEALTH")):
-        return "cloudflare_challenge"
-    if "403" in msg or "blocked" in msg:
-        return "blocked"
-    if any(m in msg for m in TEMPORARY_PROXY_ERRORS) or "proxy" in msg:
-        return "proxy_error"
-    if error_name == "TimeoutError" or "timeout" in msg.lower():
-        return "timeout"
-    return "http_error"
-
-
-def should_retry(msg: str, error_name: str | None = None) -> bool:
-    msg = msg or ""
-    if any(m in msg for m in _UPGRADE_MARKERS + _ROTATE_MARKERS):
-        return True
-    if "Received blocked status code: 403" in msg:
-        return True
-    if error_name == "TimeoutError":
-        return False
-    if any(m in msg for m in TEMPORARY_PROXY_ERRORS):
-        return True
-    return False

@@ -24,7 +24,7 @@ from __future__ import annotations
 
 import hashlib
 from functools import lru_cache as _lru_cache
-from urllib.parse import quote, urljoin, urlsplit, urlunsplit
+from urllib.parse import urljoin, urlsplit, urlunsplit
 
 TRACKING_PARAMS = (
     "utm_source", "utm_medium", "utm_campaign", "utm_term", "utm_content",

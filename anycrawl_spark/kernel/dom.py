@@ -43,7 +43,6 @@ their end tag; entities decode in text and attribute values, &-tolerant.
 from __future__ import annotations
 
 import re
-from html import escape as _html_escape
 from html.parser import HTMLParser
 
 VOID_ELEMENTS = {
@@ -339,6 +338,20 @@ def _feed_tail(handle_data, pieces: list[str]) -> None:
                 handle_data(_unescape(p) if "&" in p else p)
 
 
+def _feed_rawtext(core: "_TreeBuilder", rawdata: str, tag: str,
+                  i: int) -> int:
+    """Raw (undecoded) script/style content from ``i`` to the closing tag;
+    returns the position after it. Unterminated content is dropped and the
+    feed ends, as html.parser's cdata mode leaves it unflushed at EOF."""
+    em = _RAW_END[tag].search(rawdata, i)
+    if em is None:
+        return len(rawdata)
+    if em.start() > i:
+        core.handle_data(rawdata[i:em.start()])
+    core.end_fast(tag)
+    return em.end()
+
+
 def _fast_feed(core: "_TreeBuilder", rawdata: str) -> None:
     i, n = 0, len(rawdata)
     find = rawdata.find
@@ -373,16 +386,7 @@ def _fast_feed(core: "_TreeBuilder", rawdata: str) -> None:
                 core.start_fast(tag, attrs)
                 i = k + 1
                 if tag in _RAWTEXT:
-                    em = _RAW_END[tag].search(rawdata, i)
-                    if em:
-                        if em.start() > i:
-                            handle_data(rawdata[i:em.start()])
-                        core.end_fast(tag)
-                        i = em.end()
-                    else:
-                        if i < n:
-                            handle_data(rawdata[i:])
-                        break
+                    i = _feed_rawtext(core, rawdata, tag, i)
                 continue
             while k < n:
                 am = _attrfind.match(rawdata, k)
@@ -410,8 +414,17 @@ def _fast_feed(core: "_TreeBuilder", rawdata: str) -> None:
                 handle_data(_unescape(text) if "&" in text else text)
                 break
             end = rawdata[k:gt + 1].strip()
-            if end not in (">", "/>"):  # junk before '>': literal data
-                handle_data(rawdata[lt:gt + 1])
+            if end not in (">", "/>"):
+                c = rawdata[k:k + 1]
+                if c in "=/" or "a" <= c <= "z" or "A" <= c <= "Z":
+                    # a quoted value that never closes: html.parser finds
+                    # the tag incomplete and, at EOF, emits it as decoded
+                    # text through the first '>' after the '<'
+                    gt = find(">", lt + 1)
+                    text = rawdata[lt:gt + 1]
+                    handle_data(_unescape(text) if "&" in text else text)
+                else:  # junk before '>': literal data
+                    handle_data(rawdata[lt:gt + 1])
                 i = gt + 1
                 continue
             # "/>" == start tag here: <div/> is an open tag in HTML and void
@@ -422,16 +435,7 @@ def _fast_feed(core: "_TreeBuilder", rawdata: str) -> None:
             if end == "/>":
                 continue
             if tag in _RAWTEXT:
-                em = _RAW_END[tag].search(rawdata, i)
-                if em:
-                    if em.start() > i:
-                        handle_data(rawdata[i:em.start()])  # raw, no unescape
-                    core.end_fast(tag)
-                    i = em.end()
-                else:
-                    if i < n:
-                        handle_data(rawdata[i:])
-                    break
+                i = _feed_rawtext(core, rawdata, tag, i)
         elif c == "/":
             m = _ENDTAG_RX.match(rawdata, lt)
             if m:

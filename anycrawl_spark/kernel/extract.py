@@ -19,34 +19,15 @@ from __future__ import annotations
 from typing import Any
 
 from .dom import parse_html, serialize
-from .markdown import html_to_markdown, html_to_markdown_dom
-from .text import html_to_text, html_to_text_dom
+from .markdown import html_to_markdown_dom
+from .text import html_to_text_dom
 from .transformer import (
     TransformOptions,
-    extract_links,
-    extract_metadata,
-    extract_title,
     fallback_clean_dom,
-    fallback_html,
     meta_entry,
     resolve_link_anchors,
     transform_dom,
-    transform_html,
 )
-
-DEFAULT_FORMATS = ("markdown",)  # BaseSchema.ts default formats: ["markdown"]
-
-
-def process_markdown(html: str) -> str:
-    """Markdown with the reference's smart fallback (DataExtractor.ts:335-394):
-    if the main-content conversion yields <100 chars or <20 words, re-convert
-    from minimally-cleaned raw html."""
-    markdown = html_to_markdown(html)
-    trimmed = markdown.strip()
-    word_count = len(trimmed.split()) if trimmed else 0
-    if len(trimmed) < 100 or word_count < 20:
-        markdown = html_to_markdown(fallback_html(html))
-    return markdown
 
 
 def extract_page(

@@ -223,20 +223,6 @@ def split_text_into_chunks(text: str, max_tokens: int, overlap_tokens: int,
     return chunks
 
 
-def chunk_stats(chunks: list[dict]) -> dict:
-    """TextChunker.getChunkStats (TextChunker.ts:118-149): aggregate chunk
-    statistics (total/average rounded half-up like JS Math.round, min/max)."""
-    if not chunks:
-        return {"total_chunks": 0, "total_tokens": 0,
-                "average_tokens_per_chunk": 0, "min_tokens": 0,
-                "max_tokens": 0}
-    tokens = [c["tokens"] for c in chunks]
-    total = sum(tokens)
-    return {"total_chunks": len(chunks), "total_tokens": total,
-            "average_tokens_per_chunk": math.floor(total / len(chunks) + 0.5),
-            "min_tokens": min(tokens), "max_tokens": max(tokens)}
-
-
 def _overlap_lines(lines, current_index, overlap_tokens, counter):
     out: list[str] = []
     tokens = 0

@@ -362,10 +362,6 @@ def _flanked_by_ws(node: Element, *, left: bool) -> bool:
     return False
 
 
-_TRAIL_NL = re.compile(r"\n+$")
-_LEAD_NL = re.compile(r"^\n+")
-
-
 # ---------------------------------------------------------------------------
 # Rules
 # ---------------------------------------------------------------------------

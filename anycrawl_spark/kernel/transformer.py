@@ -28,12 +28,8 @@ from .dom import (
     Comment,
     CompoundIndex,
     Element,
-    Text,
-    inner_html,
     parse_compound_list,
-    parse_html,
     select,
-    serialize,
 )
 
 # Verbatim constants from HTMLTransformer.ts:21-165
@@ -261,14 +257,6 @@ def transform_dom(root: Element, base_url: str,
     return _clean_dom_tree(root, options)
 
 
-def transform_html(html: str, base_url: str, options: TransformOptions | None = None) -> str:
-    """``HTMLTransformer.transformHtml`` equivalent (ts:176-187)."""
-    options = options or TransformOptions()
-    root = parse_html(html)
-    cleaned = transform_dom(root, base_url, options)
-    return inner_html(cleaned) if cleaned.tag == "div" else serialize(cleaned)
-
-
 def fallback_clean_dom(root: Element) -> Element:
     """DOM-level minimal cleaning for the markdown fallback path."""
     _remove_selected(root, "script, style, noscript, iframe")
@@ -276,31 +264,15 @@ def fallback_clean_dom(root: Element) -> Element:
     return root
 
 
-def fallback_html(html: str) -> str:
-    """Minimal cleaning for the markdown fallback path
-    (``DataExtractor.getFallbackHtml``, DataExtractor.ts:397-412): remove only
-    script/style/noscript/iframe and comments."""
-    return serialize(fallback_clean_dom(parse_html(html)))
-
-
 # ---------------------------------------------------------------------------
-# Title / metadata / links (T2/T3/T15)
+# Metadata / links (T3/T15); extract_page walks the raw DOM once for
+# title, metadata and anchors
 # ---------------------------------------------------------------------------
-
-def extract_title(html_or_root) -> str:
-    root = html_or_root if isinstance(html_or_root, Element) else parse_html(html_or_root)
-    title = None
-    for el in root.iter():
-        if el.tag == "title":
-            title = el
-            break
-    return title.text_content.strip() if title is not None else ""
 
 
 def meta_entry(el: Element) -> dict | None:
     """One ``<meta>`` element → entry dict, or None if it lacks
-    (name|property)+content (DataExtractor.ts:307-330). Single source of
-    truth shared by extract_metadata and extract_page's fused walk."""
+    (name|property)+content (DataExtractor.ts:307-330)."""
     name = el.attrs.get("name")
     prop = el.attrs.get("property")
     content = el.attrs.get("content")
@@ -310,31 +282,10 @@ def meta_entry(el: Element) -> dict | None:
     return None
 
 
-def extract_metadata(html_or_root) -> list[dict]:
-    """Every ``<meta>`` with (name|property)+content → ordered entries
-    (DataExtractor.ts:307-330)."""
-    root = html_or_root if isinstance(html_or_root, Element) else parse_html(html_or_root)
-    out: list[dict] = []
-    for el in root.iter():
-        if el.tag != "meta":
-            continue
-        entry = meta_entry(el)
-        if entry is not None:
-            out.append(entry)
-    return out
-
-
-def extract_links(html_or_root, base_url: str) -> list[str]:
-    """All ``a[href]`` resolved against base, http(s) only, document order,
-    first-seen dedup — crawlee ``extractUrlsFromCheerio`` semantics
-    (DataExtractor.ts:490-494)."""
-    root = html_or_root if isinstance(html_or_root, Element) else parse_html(html_or_root)
-    anchors = [a for a in root.iter() if a.tag == "a" and "href" in a.attrs]
-    return resolve_link_anchors(anchors, base_url)
-
-
 def resolve_link_anchors(anchors, base_url: str) -> list[str]:
-    """extract_links over an already-collected document-order anchor list."""
+    """All ``a[href]`` of a document-order anchor list resolved against
+    base, http(s) only, first-seen dedup — crawlee
+    ``extractUrlsFromCheerio`` semantics (DataExtractor.ts:490-494)."""
     seen: set[str] = set()
     out: list[str] = []
     for a in anchors:

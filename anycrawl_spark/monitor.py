@@ -17,8 +17,6 @@ from pyspark.sql.types import (
     StructType,
 )
 
-VOLATILE_KEYS = ("timestamp", "screenshot", "screenshot@fullPage")
-
 
 def normalize_content_col(markdown="markdown", text="text",
                           html="html", raw_html="raw_html"):
@@ -254,30 +252,6 @@ def judge_change(goal: str, diff_text: str, url: str,
         return dict(JUDGE_FALLBACK)
     except Exception:
         return dict(JUDGE_FALLBACK)
-
-
-JUDGE_STRUCT = StructType([
-    StructField("meaningful", BooleanType()),
-    StructField("confidence", StringType()),
-    StructField("reason", StringType()),
-])
-
-
-def make_judge_udf(goal: str, model_call=None):
-    """Batch change-judging over (diff_text, url) columns — the Spark seam
-    for running judge_change across a monitor job's changed snapshots."""
-
-    @F.pandas_udf(JUDGE_STRUCT)
-    def judge(diff_text: pd.Series, url: pd.Series) -> pd.DataFrame:
-        out = {"meaningful": [], "confidence": [], "reason": []}
-        for d, u in zip(diff_text, url):
-            v = judge_change(goal, d or "", u or "", model_call=model_call)
-            out["meaningful"].append(v["meaningful"])
-            out["confidence"].append(v["confidence"])
-            out["reason"].append(v["reason"])
-        return pd.DataFrame(out)
-
-    return judge
 
 
 # --- M7 (r5): snapshot post-processing pipeline ---------------------------

@@ -29,8 +29,6 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
-
-
 def load_wide(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load + repartition to full parallelism — the driver's parquet tables
     are single files, which would serialize expensive per-row transforms
@@ -2659,8 +2657,6 @@ def q_glob_path_filter(spark, sf_dir):
     return df.where(path_filter_cond(F.col("url"), ["**/p/*"], ["**/blog/**"]))
 
 
-
-
 @register(
     "webhook_match",
     """WITH subs AS (
@@ -3924,14 +3920,6 @@ def q_proxy_cache_replay(spark, sf_dir):
                             (F.floor(e / 5) % 5).cast("int") + 1))
         .alias("reason"))
     return proxy_cache_replay(ev)
-
-
-_IP_WL_CASES = {
-    2: ["10.0.0.0/8"],
-    3: ["192.168.1.0/24", "172.16.0.0/12"],
-    4: ["10.1.0.5"],
-    5: ["1.2.3.0/24abc", "10.0.0.0/33"],
-}
 
 
 @register(

@@ -241,9 +241,8 @@ def robots_allowed(candidates: DataFrame, robots: DataFrame | None,
     array ``exists`` — all JVM-side.
 
     Dispatch: a robots table carrying a ``rules`` column (the compiled
-    spec-rule shape from :func:`compile_robots_rules` /
-    :func:`robots_rules_from_texts`) routes to the full RFC 9309 matcher;
-    the fixture shape (``disallow`` prefix array) keeps this fast path."""
+    spec-rule shape from :func:`compile_robots_rules`) routes to the full
+    RFC 9309 matcher; the fixture shape (``disallow`` prefix array) keeps this fast path."""
     if robots is None:
         return candidates
     if "rules" in robots.columns:
@@ -522,19 +521,3 @@ def robots_allowed_spec(candidates: DataFrame, rules: DataFrame,
     return out.drop("__rpath") if url_col is not None else out
 
 
-def robots_rules_from_texts(spark, texts: dict[str, str],
-                            user_agent: str = "anycrawl") -> DataFrame:
-    """Raw per-host robots.txt bodies → compiled spec-rule table (the shape
-    :func:`robots_allowed` dispatches to the full matcher). Sitemap URLs are
-    carried alongside for the map path."""
-    parsed = {host: parse_robots_txt(text, user_agent)
-              for host, text in texts.items()}
-    rows = [
-        (host,
-         [(len(p), int(allow), robots_pattern_to_regex(p))
-          for allow, p in info["rules"]],
-         info["sitemaps"])
-        for host, info in parsed.items()
-    ]
-    return spark.createDataFrame(
-        rows, ROBOTS_RULES_SCHEMA + ", sitemaps array<string>")

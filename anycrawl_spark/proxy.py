@@ -127,32 +127,6 @@ def resolve_proxy_mode_with_fallback(
     return [[proxy_value]]
 
 
-def resolve_proxy_mode(proxy_value: Optional[str], base_urls: Sequence[str],
-                       stealth_urls: Sequence[str]) -> Optional[list[str]]:
-    """Proxy.ts:668-676: first (primary) tier, nulls dropped."""
-    tiered = resolve_proxy_mode_with_fallback(proxy_value, base_urls,
-                                              stealth_urls)
-    if not tiered or not tiered[0]:
-        return None
-    return [u for u in tiered[0] if u is not None]
-
-
-def can_proxy_fallback(proxy_value: Optional[str]) -> bool:
-    """Proxy.ts:703-710: only the stealth and auto modes may switch
-    tiers; base and custom URLs never do."""
-    if not proxy_value:
-        return False
-    return proxy_value in ("stealth", "auto")
-
-
-def get_proxy_tier_count(proxy_value: Optional[str], base_urls: Sequence[str],
-                         stealth_urls: Sequence[str]) -> int:
-    """Proxy.ts:717-720."""
-    tiered = resolve_proxy_mode_with_fallback(proxy_value, base_urls,
-                                              stealth_urls)
-    return len(tiered) if tiered else 0
-
-
 def get_proxy_from_mode(proxy_value: Optional[str], proxy_tier: int,
                         rotation_index: int, base_urls: Sequence[str],
                         stealth_urls: Sequence[str]

@@ -496,7 +496,6 @@ def subscription_excess_tasks(tasks: DataFrame, api_keys: DataFrame,
 
 # -- Execution finalize transitions (ExecutionLifecycle.ts:44-178) -----------
 
-TERMINAL_STATUSES = ("completed", "failed", "cancelled")
 OPEN_STATUSES = ("pending", "running")
 
 

@@ -768,10 +768,6 @@ def parse_task_create(obj) -> dict:
     return _task_create_schema().parse(obj)
 
 
-def parse_task_update(obj) -> dict:
-    return _task_create_schema().partial().parse(obj)
-
-
 # MonitorSchema.ts:18-89 (monitorTargetSchema + createMonitorSchema)
 MONITOR_TARGET_SCHEMA = ZObject({
     "url": ZString(url=True),

@@ -20,10 +20,10 @@ massive shuffle, so we put a **partitioned Bloom filter in front of it**:
 One numpy **hash-slice core** (``hex_nibbles`` + ``hex_slice``) turns a
 batch of sha256 hex hashes into shard buckets (``bucket_ids``), Bloom bit
 positions (``bloom_bits``) and cuckoo fingerprints/indices
-(``cuckoo_fp_i1``). Every Bloom build, both families' probes (bucketized:
-one vectorized gather per shard bucket present in the batch) and the
-streaming dedup (``streaming/stateful.py``) run on it; ``_positions`` and
-``cuckoo._fp_i1`` stay as the scalar references it is tested against.
+(``cuckoo_fp_i1``). Every Bloom build and both families' probes
+(bucketized: one vectorized gather per shard bucket present in the batch)
+run on it; ``_positions`` and ``cuckoo._fp_i1`` stay as the scalar
+references it is tested against.
 
 The crawl engine keeps its filter driver-resident and derived: a round
 that probes builds it in numpy from the exact seen set (the 50k enqueue

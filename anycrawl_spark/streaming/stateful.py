@@ -1,103 +1,23 @@
-"""Custom stateful streaming operator: per-host streaming URL-seen dedup +
-crawl-rate state via ``applyInPandasWithState`` (task brief: "custom stateful
-operators"; SURVEY.md §2.9 — the reference's Redis counters re-expressed as
-managed stream state).
+"""Stateful streaming sessionization via ``applyInPandasWithState``
+(SURVEY.md §2.9 — the reference's Redis counters re-expressed as managed
+stream state).
 
-For each host group, state holds (bloom bitmap, total urls, emitted urls)
-across micro-batches; the operator emits only first-seen URLs downstream with
-a running per-host sequence — a continuous-ingestion frontier feed where the
-batch engine's round loop is replaced by stream micro-batches.
-
-The bitmap is a Bloom filter of ``M_BITS`` bits over the url's sha256, with
-bit positions from the shared hash-slice core
-(``seen.bloom_bits``, ``DEFAULT_K`` positions, one vectorized call per
-micro-batch); the test-and-set itself stays sequential per row, so a url
-repeated within one batch is dropped at its second occurrence.
+Per user, state carries the open session; a new event with gap >
+session_gap CLOSES the previous session and emits it. The final open
+session per user stays in state (emitted on a later event or state timeout
+in a live stream) — exactly a streaming sessionizer's contract; the batch
+``sessionize_events`` query is the offline counterpart.
 """
 
 from __future__ import annotations
 
-import hashlib
-from typing import Any, Iterable
+from typing import Iterable
 
-import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-from pyspark.sql.types import (
-    BinaryType, IntegerType, LongType, StringType, StructField, StructType,
-)
+from pyspark.sql.types import LongType, StringType, StructField, StructType
 
-from anycrawl_spark.seen import DEFAULT_K, bloom_bits, hex_nibbles
-
-OUTPUT_SCHEMA = StructType([
-    StructField("host", StringType()),
-    StructField("url", StringType()),
-    StructField("host_seq", LongType()),
-])
-
-STATE_SCHEMA = StructType([
-    StructField("bitmap", BinaryType()),
-    StructField("total_seen", LongType()),
-    StructField("emitted", LongType()),
-])
-
-M_BITS = 1 << 16
-
-
-def dedup_state_fn(key: tuple, pdfs: Iterable[pd.DataFrame],
-                   state: GroupState) -> Iterable[pd.DataFrame]:
-    host = key[0]
-    if state.exists:
-        bitmap_bytes, total, emitted = state.get
-        bits = np.unpackbits(np.frombuffer(bitmap_bytes, dtype=np.uint8),
-                             bitorder="little").astype(bool)
-    else:
-        bits = np.zeros(M_BITS, dtype=bool)
-        total = 0
-        emitted = 0
-    urls = [url for pdf in pdfs for url in pdf["url"]]
-    positions = bloom_bits(
-        hex_nibbles([hashlib.sha256(url.encode("utf-8")).hexdigest()
-                     for url in urls]), M_BITS, DEFAULT_K)
-    total += len(urls)
-    out_urls: list[str] = []
-    out_seqs: list[int] = []
-    for url, p in zip(urls, positions):
-        if not bits[p].all():       # definitely NOT seen before
-            bits[p] = True
-            out_urls.append(url)
-            out_seqs.append(emitted)
-            emitted += 1
-    state.update((np.packbits(bits, bitorder="little").tobytes(), total,
-                  emitted))
-    yield pd.DataFrame({"host": host, "url": out_urls, "host_seq": out_seqs})
-
-
-def streaming_seen_dedup(urls: DataFrame) -> DataFrame:
-    """urls: streaming DataFrame with (host, url). Emits first-seen rows with
-    a dense per-host sequence; state persists across micro-batches (and
-    restarts via the stream checkpoint)."""
-    return (
-        urls.groupBy("host")
-        .applyInPandasWithState(
-            dedup_state_fn,
-            outputStructType=OUTPUT_SCHEMA,
-            stateStructType=STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )
-
-
-# ---------------------------------------------------------------------------
-# Stateful streaming sessionization (task brief: applyInPandasWithState for
-# custom stateful operators). Per user, state carries the open session; a
-# new event with gap > session_gap CLOSES the previous session and emits it.
-# The final open session per user stays in state (emitted on a later event
-# or state timeout in a live stream) — exactly a streaming sessionizer's
-# contract; the batch `sessionize_events` query is the offline counterpart.
-# ---------------------------------------------------------------------------
 
 SESSION_OUTPUT_SCHEMA = StructType([
     StructField("user_id", LongType()),

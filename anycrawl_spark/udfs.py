@@ -132,16 +132,6 @@ def html_to_text_udf(html: pd.Series) -> pd.Series:
     )
 
 
-@F.pandas_udf(ArrayType(StringType()))
-def markdown_image_urls_udf(markdown: pd.Series) -> pd.Series:
-    """Distinct image urls per markdown doc, in first-occurrence order —
-    the fan-out set an OCR model batch would be called with
-    (reference: MarkdownOCR.ts collectMarkdownImageOccurrences)."""
-    from anycrawl_spark.kernel.ocr import image_urls
-
-    return markdown.map(lambda md: image_urls(md or ""))
-
-
 JSON_EXTRACT_STRUCT = StructType([
     StructField("data", StringType()),        # extracted object, JSON text
     StructField("chunks", IntegerType()),

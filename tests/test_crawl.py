@@ -571,25 +571,38 @@ class TestFailureClasses:
                 # fail-fast classes: single attempt
                 assert tries == [1], (f["url"], f["failure_reason"], tries)
 
-    def test_classifier_precedence(self):
-        from anycrawl_spark.errors import failure_reason, should_retry
+    def test_classifier_precedence(self, spark):
+        from anycrawl_spark.errors import failure_reason_col, should_retry_col
 
-        assert failure_reason("cloudflare says no") == "cloudflare_challenge"
-        assert failure_reason("saw CF_RAY header") == "cloudflare_challenge"
-        # 403 inside a proxy/timeout message: blocked wins (precedence)
-        assert failure_reason("proxy timeout after 403") == "blocked"
-        assert failure_reason("ERR_NEED_TO_RETRY") == "proxy_error"
-        assert failure_reason("lowercase proxy issue") == "proxy_error"
-        assert failure_reason("Navigation TIMEOUT") == "timeout"
-        assert failure_reason("boom", error_name="TimeoutError") == "timeout"
-        assert failure_reason("HTTP 500") == "http_error"
+        def classify(cases, col_fn):
+            df = spark.createDataFrame(cases, "msg string, name string")
+            return [r[0] for r in df.select(
+                col_fn(F.col("msg"), F.col("name"))).collect()]
+
+        reasons = [
+            ("cloudflare says no", None, "cloudflare_challenge"),
+            ("saw CF_RAY header", None, "cloudflare_challenge"),
+            # 403 inside a proxy/timeout message: blocked wins (precedence)
+            ("proxy timeout after 403", None, "blocked"),
+            ("ERR_NEED_TO_RETRY", None, "proxy_error"),
+            ("lowercase proxy issue", None, "proxy_error"),
+            ("Navigation TIMEOUT", None, "timeout"),
+            ("boom", "TimeoutError", "timeout"),
+            ("HTTP 500", None, "http_error"),
+        ]
+        assert classify([c[:2] for c in reasons], failure_reason_col) == \
+            [c[2] for c in reasons]
         # retry table
-        assert should_retry("ANYCRAWL_PROXY_ACTION_ROTATE_PROXY")
-        assert should_retry("Received blocked status code: 403")
-        assert not should_retry("request blocked by origin")  # plain blocked
-        assert should_retry("ERR_SOCKS_CONNECTION_FAILED")
-        assert not should_retry("timeout of 30s", error_name="TimeoutError")
-        assert not should_retry("HTTP 500")
+        retries = [
+            ("ANYCRAWL_PROXY_ACTION_ROTATE_PROXY", None, True),
+            ("Received blocked status code: 403", None, True),
+            ("request blocked by origin", None, False),  # plain blocked
+            ("ERR_SOCKS_CONNECTION_FAILED", None, True),
+            ("timeout of 30s", "TimeoutError", False),
+            ("HTTP 500", None, False),
+        ]
+        assert classify([c[:2] for c in retries], should_retry_col) == \
+            [c[2] for c in retries]
 
 
 class TestCancellation:
@@ -738,7 +751,8 @@ class TestSpecRobotsCrawl:
         """Engine accepts raw robots.txt with wildcard/Allow rules: the
         blog subtree is disallowed via '/blog*' but '/blog/p/3' is re-allowed
         by a longer Allow rule; visited set reflects both."""
-        from anycrawl_spark.politeness import robots_rules_from_texts
+        from anycrawl_spark.politeness import (compile_robots_rules,
+                                               parse_robots_txt)
 
         txt = (
             "User-agent: anycrawl\n"
@@ -746,8 +760,8 @@ class TestSpecRobotsCrawl:
             "Allow: /blog/p/3\n"
             "Disallow: /*.png$\n"
         )
-        robots = robots_rules_from_texts(
-            spark, {"site000.test": txt}, user_agent="anycrawl")
+        robots = compile_robots_rules(spark, {
+            "site000.test": parse_robots_txt(txt, "anycrawl")["rules"]})
         engine = CrawlEngine(spark, small_corpus,
                              os.path.join(tmp_root, "specrb"), robots=robots)
         engine.run(CrawlConfig(job_id="specrb", seed_url=SEED,

@@ -7,6 +7,7 @@ import re
 import pytest
 from pyspark.sql import functions as F
 
+from anycrawl_spark.operators.queries import REGISTRY
 from anycrawl_spark.politeness import compile_path_patterns, glob_to_regex
 
 
@@ -250,30 +251,6 @@ class TestSalting:
         assert cold_keys == {"cold.test"}
 
 
-class TestStreaming:
-    def test_stream_extract_available_now(self, spark, small_corpus, tmp_root):
-        from anycrawl_spark.streaming.stream import stream_extract
-
-        corpus_dir = os.path.join(tmp_root, "stream_pages")
-        small_corpus.limit(40).write.mode("overwrite").parquet(corpus_dir)
-        out_dir = os.path.join(tmp_root, "stream_out")
-        ckpt = os.path.join(tmp_root, "stream_ckpt")
-        query = stream_extract(spark, corpus_dir, out_dir, ckpt)
-        query.awaitTermination(180)
-        result = spark.read.parquet(out_dir)
-        assert result.count() == 40
-        assert result.where(F.col("markdown").isNotNull()).count() == 40
-
-    def test_stream_metrics_plan(self, spark, small_corpus, tmp_root):
-        from anycrawl_spark.streaming.stream import stream_metrics
-
-        corpus_dir = os.path.join(tmp_root, "stream_pages2")
-        small_corpus.limit(20).write.mode("overwrite").parquet(corpus_dir)
-        agg = stream_metrics(spark, corpus_dir)
-        assert agg.isStreaming
-        assert set(agg.columns) == {"window_start", "window_end", "host", "pages", "bytes"}
-
-
 class TestMainCli:
     def test_scrape_subcommand(self, spark, small_corpus, tmp_root, monkeypatch):
         from anycrawl_spark import main as cli
@@ -398,50 +375,6 @@ class TestUserTransformHook:
                .withColumn("doc", extract(F.col("url"), F.col("html")))
                .select("doc.title", "doc.user_data").collect()[0])
         assert row["user_data"].startswith(row["title"] + "|")
-
-
-class TestStatefulStreaming:
-    def test_streaming_seen_dedup(self, spark, tmp_root):
-        """applyInPandasWithState: per-host first-seen dedup across
-        micro-batches (state survives between batches)."""
-        import json
-
-        from anycrawl_spark.streaming.stateful import streaming_seen_dedup
-
-        src = os.path.join(tmp_root, "state_src")
-        # two files → with maxFilesPerTrigger=1 they arrive as two batches;
-        # the duplicate url in file2 must be suppressed by batch-1 state
-        os.makedirs(src, exist_ok=True)
-        spark.createDataFrame(
-            [("a.test", "https://a.test/1"), ("a.test", "https://a.test/2"),
-             ("b.test", "https://b.test/1")],
-            schema="host string, url string").coalesce(1).write.mode(
-            "overwrite").parquet(os.path.join(src, "f1"))
-        spark.createDataFrame(
-            [("a.test", "https://a.test/2"), ("a.test", "https://a.test/3"),
-             ("b.test", "https://b.test/1")],
-            schema="host string, url string").coalesce(1).write.mode(
-            "overwrite").parquet(os.path.join(src, "f2"))
-
-        stream = (spark.readStream.schema("host string, url string")
-                  .option("maxFilesPerTrigger", "1")
-                  .parquet(os.path.join(src, "*")))
-        out_dir = os.path.join(tmp_root, "state_out")
-        ckpt = os.path.join(tmp_root, "state_ckpt")
-        query = (streaming_seen_dedup(stream)
-                 .writeStream.outputMode("append")
-                 .format("parquet").option("path", out_dir)
-                 .option("checkpointLocation", ckpt)
-                 .trigger(availableNow=True).start())
-        query.awaitTermination(180)
-        rows = {(r["host"], r["url"]): r["host_seq"]
-                for r in spark.read.parquet(out_dir).collect()}
-        assert len(rows) == 4  # 6 inputs, 2 duplicates suppressed
-        assert ("a.test", "https://a.test/1") in rows
-        assert ("a.test", "https://a.test/3") in rows
-        assert ("b.test", "https://b.test/1") in rows
-        # dense per-host sequence
-        assert sorted(v for (h, _), v in rows.items() if h == "a.test") == [0, 1, 2]
 
 
 class TestSaltedBudget:
@@ -810,54 +743,6 @@ class TestSitemapXml:
         assert got == ["https://h.test/p1", "https://h.test/p2"]
 
 
-class TestStreamingJobs:
-    def test_stream_crawl_jobs_drains_queue(self, spark, small_corpus, tmp_root):
-        """Continuous job intake (the reference's queue-worker shape): two
-        crawl jobs land as stream files; the foreachBatch worker runs each to
-        completion with its own exact-resume checkpoint, results match a
-        direct engine run."""
-        import json
-
-        from anycrawl_spark.crawl import CrawlConfig, CrawlEngine
-        from anycrawl_spark.streaming.stream import stream_crawl_jobs
-
-        jobs_dir = os.path.join(tmp_root, "jobs_in")
-        os.makedirs(jobs_dir, exist_ok=True)
-        jobs = [
-            {"job_id": "sj1", "seed_url": "https://site000.test/p/0",
-             "strategy": "same-hostname", "max_depth": 3, "crawl_limit": 15},
-            {"job_id": "sj2", "seed_url": "https://site001.test/p/0",
-             "strategy": "same-hostname", "max_depth": 3, "crawl_limit": 10},
-        ]
-        for i, job in enumerate(jobs):
-            with open(os.path.join(jobs_dir, f"job{i}.json"), "w") as f:
-                f.write(json.dumps(job) + "\n")
-
-        ckpt_root = os.path.join(tmp_root, "stream_jobs")
-        q = stream_crawl_jobs(
-            spark, jobs_dir, small_corpus, ckpt_root,
-            os.path.join(tmp_root, "stream_jobs_ck"))
-        q.awaitTermination(300)
-
-        for job in jobs:
-            with open(os.path.join(ckpt_root, job["job_id"],
-                                   "_summary.json")) as f:
-                summary = json.load(f)
-            assert summary["done"] == job["crawl_limit"]
-            # matches a direct engine run of the same config
-            direct = CrawlEngine(spark, small_corpus,
-                                 os.path.join(tmp_root, f"direct_{job['job_id']}"))
-            direct.run(CrawlConfig(
-                job_id=job["job_id"], seed_url=job["seed_url"],
-                strategy=job["strategy"], max_depth=job["max_depth"],
-                limit=job["crawl_limit"], respect_robots=False))
-            got = spark.read.parquet(
-                os.path.join(ckpt_root, job["job_id"], "visits", "round=*"))
-            want = direct.visits()
-            assert sorted((r["seq"], r["url"]) for r in got.collect()) == \
-                   sorted((r["seq"], r["url"]) for r in want.collect())
-
-
 class TestStreamingSessionize:
     def test_closed_sessions_match_batch(self, spark, tmp_root):
         """Streaming sessionizer (applyInPandasWithState) emits exactly the
@@ -949,13 +834,9 @@ class TestOracleValidator:
         assert ok, msg
 
 
-# Registry leaves checked against their DuckDB oracles at sf0.01: the
-# seen-filter leaves and the dedup leaves, which no other tier-1 test
-# compares with an oracle.
-ORACLE_LEAVES = ["seen_antijoin", "bloom_seen_filter", "cuckoo_seen_filter",
-                 "semantic_dedup", "simhash_near_pairs", "ngram_jaccard_pairs",
-                 "span_dedup", "incremental_dedup", "bigram_surprisal",
-                 "dedup_clusters"]
+# Every registry leaf with a DuckDB oracle, checked against it at sf0.01.
+ORACLE_LEAVES = [name for name, spec in REGISTRY.items()
+                 if spec.oracle is not None]
 
 
 @pytest.mark.parametrize("name", ORACLE_LEAVES)
@@ -965,8 +846,6 @@ def test_leaf_matches_oracle(spark, name):
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
         "tools"))
     from validate_oracle import compare_query, open_duckdb
-
-    from anycrawl_spark.operators.queries import REGISTRY
 
     ok, msg = compare_query(spark, open_duckdb(), REGISTRY[name])
     assert ok, msg

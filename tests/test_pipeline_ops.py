@@ -1038,19 +1038,32 @@ class TestChangeJudge:
                 "g", "d", "u", model_call=lambda s, p, b=bad: b) == JUDGE_FALLBACK
 
     def test_judge_udf(self, spark):
-        from pyspark.sql import functions as F
+        """Batch judging over the default seam: every changed snapshot of a
+        goal-carrying monitor gets the degraded fallback verdict."""
+        import json
 
-        from anycrawl_spark.monitor import make_judge_udf
+        from anycrawl_spark.monitor import monitor_post_process
 
-        df = spark.createDataFrame(
-            [("+price: 10 -> 8", "https://a.test/1"),
-             ("", "https://a.test/2")],
-            "diff string, url string")
-        judge = make_judge_udf("track price changes")   # default seam
-        rows = df.select(judge(F.col("diff"), F.col("url")).alias("v")).collect()
+        results = spark.createDataFrame(
+            [("m1", "https://a.test/1", "price: 8", None),
+             ("m1", "https://a.test/2", "new body", None)],
+            "monitor_id string, url string, content string, "
+            "extracted string")
+        monitors = spark.createDataFrame(
+            [("m1", "track price changes", "text", False, None)],
+            "monitor_id string, goal string, track_mode string, "
+            "only_meaningful boolean, price_change_pct double")
+        prevs = spark.createDataFrame(
+            [("m1", "https://a.test/1", "h1", "price: 10", None),
+             ("m1", "https://a.test/2", "h2", "old body", None)],
+            "monitor_id string, url string, content_hash string, "
+            "content string, extracted string")
+        rows = monitor_post_process(results, monitors, prevs).collect()
+        assert len(rows) == 2
         for r in rows:
-            assert r["v"]["meaningful"] is True
-            assert r["v"]["confidence"] == "low"
+            verdict = json.loads(r["judgment"])
+            assert verdict["meaningful"] is True
+            assert verdict["confidence"] == "low"
 
 
 class TestSchedulerSweep:

@@ -14,12 +14,10 @@ from pyspark.sql import functions as F
 
 from anycrawl_spark.proxy import (
     PROXY_FAILURE_TTL_MS,
-    can_proxy_fallback,
     compute_new_mode,
     extract_domain,
     find_proxy_for_url,
     get_proxy_from_mode,
-    get_proxy_tier_count,
     get_resolved_proxy_mode,
     is_proxy_mode,
     matches_domain_pattern,
@@ -28,7 +26,6 @@ from anycrawl_spark.proxy import (
     proxy_cache_replay,
     proxy_failure_state,
     proxy_select,
-    resolve_proxy_mode,
     resolve_proxy_mode_with_fallback,
     select_proxy,
     wildcard_regex,
@@ -85,16 +82,17 @@ class TestModeHelpers:
         assert resolve_proxy_mode_with_fallback(None, BASE, STEALTH) is None
 
     def test_primary_tier_and_counts(self):
-        assert resolve_proxy_mode("auto", BASE, STEALTH) == BASE
-        assert resolve_proxy_mode("nope://x", BASE, STEALTH) is None or \
-            resolve_proxy_mode("nope://x", BASE, STEALTH) == ["nope://x"]
-        assert get_proxy_tier_count("auto", BASE, STEALTH) == 2
-        assert get_proxy_tier_count("base", BASE, STEALTH) == 1
-        assert get_proxy_tier_count("auto", [], []) == 0
-        assert can_proxy_fallback("auto") and can_proxy_fallback("stealth")
-        assert not can_proxy_fallback("base") \
-            and not can_proxy_fallback("http://c:1") \
-            and not can_proxy_fallback(None)
+        # Proxy.ts:668-720: the primary tier is the first tier, the tier
+        # count is the tier list's length, and only stealth/auto modes have
+        # a second tier to fall back to
+        tiers = resolve_proxy_mode_with_fallback
+        assert tiers("auto", BASE, STEALTH)[0] == BASE
+        assert tiers("nope://x", BASE, STEALTH) == [["nope://x"]]
+        assert len(tiers("auto", BASE, STEALTH)) == 2
+        assert len(tiers("stealth", BASE, STEALTH)) == 2
+        assert len(tiers("base", BASE, STEALTH)) == 1
+        assert len(tiers("http://c:1", BASE, STEALTH)) == 1
+        assert tiers("auto", [], []) is None and tiers(None, BASE, STEALTH) is None
 
     def test_get_proxy_from_mode_rotation_and_clamp(self):
         # Proxy.ts:663-697: tier clamps to last; counter ticks only when
