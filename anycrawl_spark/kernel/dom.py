@@ -419,8 +419,12 @@ def _fast_feed(core: "_TreeBuilder", rawdata: str) -> None:
                 if c in "=/" or "a" <= c <= "z" or "A" <= c <= "Z":
                     # a quoted value that never closes: html.parser finds
                     # the tag incomplete and, at EOF, emits it as decoded
-                    # text through the first '>' after the '<'
-                    gt = find(">", lt + 1)
+                    # text through the first '>' after the '<', then
+                    # re-parses from there. The text here runs through the
+                    # '>' after the attribute scan, which is that first '>'
+                    # unless one sits inside a value the scan passed:
+                    # resuming at that one would re-scan the attributes
+                    # behind it once per tag among them (quadratic)
                     text = rawdata[lt:gt + 1]
                     handle_data(_unescape(text) if "&" in text else text)
                 else:  # junk before '>': literal data

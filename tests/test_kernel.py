@@ -362,21 +362,25 @@ class TestDomBackends:
     @settings(max_examples=1500, deadline=None)
     def test_fuzz_matches_stdlib_reference(self, atoms):
         """Random markup soup builds the stdlib reference's tree, except
-        for the one deliberate difference that keeps the tokenizer linear:
-        a start tag whose attribute scan runs past the last '>' (its only
-        '>' sit inside quoted values) makes the rest of the page one
-        literal text node, where html.parser emits text through the first
-        '>' and re-parses the tail after it."""
+        for the one deliberate difference that keeps the tokenizer linear.
+        A start tag whose attribute scan passes a '>' inside a quoted value
+        and then stops at a value that never closes is one literal text
+        node through the next '>' after the scan (the rest of the page if
+        there is none). html.parser emits text only through the first '>'
+        and re-parses from there, so the trees part at that node and may
+        differ after it."""
         from anycrawl_spark.kernel.dom import _parse_stdlib, parse_html
 
         html = "".join(atoms)
         fast, ref = _tree_dump(parse_html(html)), _tree_dump(_parse_stdlib(html))
         if fast != ref:
-            *head, tail = fast
-            assert ref[:len(head)] == head, html
-            assert tail[1] == "text" and tail[2][:1] == "<", html
-            assert tail[2][1:2].isalpha(), html
-            assert "'" in tail[2] or '"' in tail[2], html
+            d = next(j for j, (a, b) in enumerate(zip(fast, ref)) if a != b)
+            (depth, kind, text), (rdepth, rkind, rtext) = fast[d], ref[d]
+            assert kind == rkind == "text" and depth == rdepth, html
+            assert text[:1] == "<" and text[1:2].isalpha(), html
+            assert "'" in text or '"' in text, html
+            assert rtext.endswith(">") and text.startswith(rtext), html
+            assert len(rtext) < len(text), html
 
     @pytest.mark.parametrize("unit, n", [
         ("<a ", 3000),          # start tags with no '>' left
@@ -394,6 +398,20 @@ class TestDomBackends:
 
         t0 = time.perf_counter()
         root = parse_html("<p>x</p>" + unit * n)
+        assert time.perf_counter() - t0 < 1.0
+        assert root.children[0].tag == "p"
+
+    def test_unclosed_value_behind_quoted_gts_parses_in_linear_time(self):
+        """Every tag's attribute scan passes a '>' inside a quoted value
+        and stops at the one value that never closes, at the end. Resuming
+        at the first '>' after each '<', as html.parser does, re-scans the
+        attributes of every later tag: seconds at this size."""
+        import time
+
+        from anycrawl_spark.kernel.dom import parse_html
+
+        t0 = time.perf_counter()
+        root = parse_html("<p>x</p><a " + 'x="><a " ' * 3000 + "w='>")
         assert time.perf_counter() - t0 < 1.0
         assert root.children[0].tag == "p"
 

@@ -18,7 +18,9 @@ A symbol only tests reach stays only with one of these reasons:
 - ``only port``: COVERAGE.md maps it to a SURVEY operator that no registry
   query or CLI path covers (the SURVEY id is named);
 - ``floor``: its tests are pinned by the tier-1 floor, so deleting it
-  would retire them (the pinned tests are named).
+  would retire them (the pinned tests are named). This reason is a
+  deferral, not a steady state: ``FLOOR_AT_INTRODUCTION`` freezes the set
+  it may cover, so floor keeps only shrink as their tests are retired.
 
 A new test-only symbol fails here, and so does a kept one that gains a
 program caller while its entry stays.
@@ -96,6 +98,48 @@ KEEP: dict[str, tuple[str, str]] = {
 }
 
 
+# Every symbol a ``floor`` entry may keep. Retiring one removes it here and
+# from KEEP, so a retired symbol cannot come back as a floor keep; adding a
+# name here defeats the guard.
+FLOOR_AT_INTRODUCTION = frozenset({
+    "autoengine.resolve_wait_until",
+    "cache.cache_lookup",
+    "cache.compute_domain_hash",
+    "controllers.browser_runtime_for_cache",
+    "controllers.resolve_wait_timeout_ms",
+    "controllers.should_check_cache",
+    "kernel.canonical.unique_key",
+    "kernel.llm_extract.get_model_capabilities",
+    "kernel.llm_extract.get_model_detail_config",
+    "kernel.markdown.html_to_markdown",
+    "monitor.build_email_html",
+    "monitor.build_email_text",
+    "monitor.build_task_payload",
+    "monitor.email_subject",
+    "monitor.snapshot_changes",
+    "operators.multimodal.documents_as_media",
+    "operators.multimodal.extract_features",
+    "proxy.normalize_proxy_url",
+    "proxy.proxy_failure_state",
+    "schemas.parse_monitor_create",
+    "schemas.parse_monitor_update",
+    "schemas.parse_task_create",
+    "schemas.parse_webhook_create",
+    "schemas.parse_webhook_update",
+    "schemas.resolve_track_mode",
+    "serp.merge_scrape_results",
+    "serp.resolve_search_engine",
+    "streaming.stateful.streaming_sessionize",
+    "template.validate_template_code",
+    "template.validate_template_id",
+    "template_handler.deep_merge_options_with_template",
+    "template_handler.resolve_price",
+    "webhooks.job_events_from_summary",
+    "webhooks.monitor_events",
+    "webhooks.sign_deliveries",
+})
+
+
 def _files(paths):
     for p in paths:
         if p.is_dir():
@@ -167,6 +211,12 @@ def test_keep_reasons_name_their_evidence():
         else:
             assert reason in (REF, FLOOR), key
             assert _test_exists(evidence), f"{key}: no test {evidence}"
+
+
+def test_floor_keeps_only_shrink():
+    floor = {key for key, (reason, _) in KEEP.items() if reason == FLOOR}
+    assert floor - FLOOR_AT_INTRODUCTION == set(), "a new floor keep: delete the symbol, or keep it as a reference or only port"
+    assert FLOOR_AT_INTRODUCTION - floor == set(), "a retired floor keep: drop it from FLOOR_AT_INTRODUCTION too"
 
 
 def test_every_package_constant_is_referenced():
