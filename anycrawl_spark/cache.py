@@ -15,10 +15,6 @@ Re-expresses ``managers/Cache.ts:24-214`` + ``libs/src/cache/index.ts:153-211``:
 
 from __future__ import annotations
 
-import hashlib
-import json
-from typing import Any
-
 from pyspark.sql import DataFrame, Window, functions as F
 
 CACHE_COLS = ["url_hash", "options_hash", "url", "markdown", "text", "title",
@@ -48,21 +44,6 @@ def kv_key_col(job_id: str, url_col) -> "F.Column":
         F.lit(f"crawl-data-{job_id}-"),
         F.base64(F.encode(url_col, "utf-8")),
     )
-
-
-def options_hash(options: dict[str, Any] | None) -> str:
-    """sha256 of the recursively key-sorted options JSON
-    (``sortKeys`` + ``computeCacheKey``, cache/index.ts:153-211)."""
-
-    def sort_keys(obj):
-        if isinstance(obj, dict):
-            return {k: sort_keys(obj[k]) for k in sorted(obj)}
-        if isinstance(obj, list):
-            return [sort_keys(x) for x in obj]
-        return obj
-
-    canonical = json.dumps(sort_keys(options or {}), separators=(",", ":"))
-    return hashlib.sha256(canonical.encode("utf-8")).hexdigest()
 
 
 def cache_lookup(frontier: DataFrame, cache: DataFrame, opts_hash: str,
@@ -518,8 +499,7 @@ def cache_key_cols(df: DataFrame) -> DataFrame:
 
     fmts = F.array_sort(F.coalesce(
         F.col("formats"), F.array(F.lit("markdown"))))
-    fmts_json = F.concat(F.lit('["'), F.array_join(fmts, '","'),
-                         F.lit('"]'))
+    fmts_json = F.to_json(fmts)
 
     lowered = F.lower(F.col("proxy"))
     proxy_norm = (

@@ -148,7 +148,7 @@ class CrawlConfig:
         parts = urlsplit(self.seed_url or "")
         if parts.scheme not in ("http", "https") or not parts.hostname:
             # CrawlSchema's z.string().url() rejects non-URL seeds; a
-            # scheme-less seed would otherwise canonicalize to a null-host
+            # scheme-less seed would otherwise canonicalize to an empty-host
             # junk row and 'complete' a one-page crawl of nothing
             raise ValueError(f"seed_url must be an absolute http(s) URL, "
                              f"got {self.seed_url!r}")
@@ -167,59 +167,49 @@ class CrawlConfig:
         return filter_family(self.seen_filter)
 
 
-def _strip_fragment(col):
-    return F.split(col, "#", 2)[0]
-
-
-# Canonical-column expression cache: the Column trees below are identical
-# for every caller with the same url column name, but building them costs
-# ~0.19 s of py4j round-trips — which the crawl loop used to pay EVERY
-# round for the links subtree (profiled: _canonical_cols 1.67 s of a 25 s
-# 10k crawl). Column objects are immutable and reusable across DataFrames;
-# the cache is keyed by the owning SparkContext's applicationId so a
-# restarted session (tests, CLI reruns) rebuilds instead of touching stale
-# JVM references.
-_CANON_EXPR_CACHE: dict[tuple[str, str], list] = {}
+# Canonical-column expression cache: the Column trees are the same for every
+# caller with one url column name and cost a py4j round trip per node to
+# build, which the crawl would pay every round. Keyed by applicationId, so a
+# restarted session rebuilds instead of reusing stale JVM references.
+_CANON_EXPR_CACHE: dict[tuple[str, str], tuple] = {}
 
 
 def _canonical_cols(df: DataFrame, url_col: str) -> DataFrame:
-    """Attach (url_hash, host, origin, path) derived from the fragment-stripped
-    canonical URL — the crawlee uniqueKey scope. All JVM expressions."""
-    from .kernel.canonical import canonical_url_col
+    """Attach (url_hash, host, origin, path) from one split of the url: the
+    hash of its fragment-stripped canonical URL (the crawlee uniqueKey
+    scope), its host, origin and canonical path. The split's shared parts
+    are projected once per layer; all JVM expressions."""
+    from .kernel.canonical import UrlSplit
 
     app_id = df.sparkSession.sparkContext.applicationId
     key = (app_id, url_col)
     cached = _CANON_EXPR_CACHE.get(key)
     if cached is None:
-        canon = _strip_fragment(canonical_url_col(url_col)).alias("__canon")
-        c = F.col("__canon")
-        derived = [
-            F.sha2(c, 256).alias("url_hash"),
-            F.lower(F.parse_url(c, F.lit("HOST"))).alias("host"),
-            F.concat(
-                F.lower(F.regexp_extract(c, r"^([A-Za-z][A-Za-z0-9+.-]*):", 1)),
-                F.lit("://"),
-                # netloc minus userinfo from the canonical URL: keeps the
-                # non-default port (canonicalization already stripped default
-                # ports and lowercased the host), matching origin_of() — a
-                # parse_url HOST here would drop ports and break same-origin
-                # crawls of ported seeds
-                F.regexp_replace(
-                    F.regexp_extract(c, r"^[^:]+://([^/?#]*)", 1),
-                    r"^.*@", ""),
-            ).alias("origin"),
-            F.coalesce(F.parse_url(c, F.lit("PATH")), F.lit("/")).alias("path"),
+        layers: list[list] = []
+
+        def stage(cols: dict) -> dict:
+            names = {n: f"__split{len(layers)}_{n}" for n in cols}
+            layers.append([c.alias(names[n]) for n, c in cols.items()])
+            return {n: F.col(names[n]) for n in cols}
+
+        split = UrlSplit(F.col(url_col), stage)
+        cached = layers, [
+            F.sha2(split.key, 256).alias("url_hash"),
+            split.host.alias("host"),
+            split.origin.alias("origin"),
+            split.path.alias("path"),
         ]
-        cached = [canon, derived]
         if len(_CANON_EXPR_CACHE) > 8:   # sessions come and go in tests
             _CANON_EXPR_CACHE.clear()
         _CANON_EXPR_CACHE[key] = cached
-    canon, derived = cached
+    layers, derived = cached
     # withColumn-replacement semantics for any colliding names (none of the
     # engine's callers collide; keeps the contract for external callers)
     base = [F.col(c) for c in df.columns
             if c not in ("url_hash", "host", "origin", "path")]
-    return df.select("*", canon).select(*base, *derived)
+    for cols in layers:
+        df = df.select("*", *cols)
+    return df.select(*base, *derived)
 
 
 def prepare_corpus(pages: DataFrame, dedup: bool = True) -> DataFrame:

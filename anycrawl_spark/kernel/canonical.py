@@ -10,21 +10,24 @@ Re-expresses the reference's URL normalization:
   ``/root/reference/packages/scrape/src/engines/Base.ts:464-473``: lowercased
   scheme/host, fragment stripped, prefixed with ``"{jobId}-"``.
 
-Two implementations are provided with identical observable output on valid
-http(s) URLs:
+Two implementations split with urlsplit's grammar and agree on every string:
 
-- :func:`normalize_url` — pure Python, used inside kernel tests and golden
-  files.
-- :func:`canonical_url_col` — a pyspark ``Column`` built from JVM-side
-  functions only (no Python UDF), used in the crawl hot path so Catalyst can
-  codegen it.
+- :func:`normalize_url` (with :func:`host_of`, :func:`origin_of`) — pure
+  Python, the reference for the kernel tests and golden files.
+- :class:`UrlSplit` / :func:`canonical_url_col` — pyspark Columns of JVM
+  built-ins (no Python UDF), total on every string, for the crawl hot path.
+
+Neither splits a bracketed (IPv6) authority: urlsplit drops the brackets
+(``http://[::1]/`` has hostname ``::1``) where ``new URL`` keeps them, so a
+URL with one keeps itself as its key.
 """
 
 from __future__ import annotations
 
-import hashlib
 from functools import lru_cache as _lru_cache
-from urllib.parse import urljoin, urlsplit, urlunsplit
+from urllib.parse import urljoin, urlsplit, urlunsplit, uses_netloc
+
+from pyspark.sql import functions as F
 
 TRACKING_PARAMS = (
     "utm_source", "utm_medium", "utm_campaign", "utm_term", "utm_content",
@@ -32,18 +35,22 @@ TRACKING_PARAMS = (
 )
 
 
-def _split_query(query: str) -> list[str]:
-    return [p for p in query.split("&") if p]
-
-
 def _param_key(pair: str) -> str:
     return pair.split("=", 1)[0]
+
+
+def split_url(url: str):
+    """``urlsplit``, refusing a bracketed authority too (ValueError)."""
+    parts = urlsplit(url)
+    if "[" in parts.netloc:
+        raise ValueError(f"bracketed authority in {url!r}")
+    return parts
 
 
 def normalize_url(url: str) -> str:
     """Pure-Python normalizeUrl with the reference's exact rule order."""
     try:
-        parts = urlsplit(url)
+        parts = split_url(url)
         if not parts.scheme or not parts.netloc:
             return url
         host = parts.hostname.lower() if parts.hostname else ""
@@ -60,7 +67,7 @@ def normalize_url(url: str) -> str:
             path = path[:-1]
         if not path:
             path = "/"
-        pairs = [p for p in _split_query(parts.query) if _param_key(p) not in TRACKING_PARAMS]
+        pairs = [p for p in parts.query.split("&") if p and _param_key(p) not in TRACKING_PARAMS]
         pairs.sort(key=_param_key)  # stable, key-only — URLSearchParams.sort() semantics
         query = "&".join(pairs)
         return urlunsplit((parts.scheme.lower(), netloc, path, query, parts.fragment))
@@ -77,11 +84,6 @@ def unique_key(url: str, job_id: str | None = None) -> str:
     norm = normalize_url(url)
     norm = norm.split("#", 1)[0]
     return f"{job_id}-{norm}" if job_id else norm
-
-
-def url_hash(url: str) -> str:
-    """sha256 hex of the canonical URL (page_cache.urlHash, PostgreSQL.ts:364-397)."""
-    return hashlib.sha256(normalize_url(url).encode("utf-8")).hexdigest()
 
 
 @_lru_cache(maxsize=512)
@@ -138,14 +140,14 @@ def resolve_url(base_url: str, href: str) -> str | None:
 
 def host_of(url: str) -> str:
     try:
-        return (urlsplit(url).hostname or "").lower()
+        return (split_url(url).hostname or "").lower()
     except ValueError:
         return ""
 
 
 def origin_of(url: str) -> str:
     try:
-        parts = urlsplit(url)
+        parts = split_url(url)
         scheme = parts.scheme.lower()
         host = (parts.hostname or "").lower()
         port = parts.port
@@ -208,69 +210,109 @@ def map_base_domain_of(host: str) -> str:
 # Spark Column builders (JVM-side; no Python in the hot path)
 # ---------------------------------------------------------------------------
 
+# urlsplit's grammar, RFC 3986 appendix B with urlsplit's scheme rule:
+# scheme ':' ['//' netloc] path ['?' query] ['#' fragment]
+_SPLIT_RX = (r"(?s)^(?:([A-Za-z][A-Za-z0-9+.-]*):)?(?://([^/?#]*))?([^?#]*)"
+             r"(?:\?([^#]*))?(?:#(.*))?")
+# a pair whose key (the text before its first '=') is a tracking param
+_TRACKING_RX = f"(?:^|&)(?:{'|'.join(TRACKING_PARAMS)})(?:=[^&]*)?(?=&|\\z)"
+# urlsplit drops the leading C0 controls and spaces, then every tab, CR, LF
+_C0_OR_SPACE = "".join(map(chr, range(0x21)))
+# The characters whose NFKC form holds one of '/?#@:' (Unicode 14.0, as
+# Python 3.11): urlsplit raises on a non-ASCII netloc holding one.
+NFKC_NETLOC_DELIMS = ("\u2047\u2048\u2049\u2100\u2101\u2105\u2106\u2a74\ufe13\ufe16"
+                      "\ufe55\ufe56\ufe5f\ufe6b\uff03\uff0f\uff1a\uff1f\uff20")
+
+
+def _or(part, default: str):
+    return F.when(part == "", default).otherwise(part)
+
+
+def _prefixed(sep: str, part):
+    return F.when(part == "", "").otherwise(F.concat(F.lit(sep), part))
+
+
+class UrlSplit:
+    """One split of a string Column with urlsplit's grammar: codegen'd JVM
+    built-ins, no parse_url, cast, index or lambda, so total on every
+    string. ``canonical`` is :func:`normalize_url`, ``key`` the same
+    without its fragment (the crawlee uniqueKey), ``host`` :func:`host_of`,
+    ``origin`` :func:`origin_of`, ``path`` the path of
+    ``split_url(normalize_url(url))`` ('/' when empty or unsplittable) and
+    ``path_query`` the input's own path and '?' query (what robots rules
+    match). ``stage`` gets each layer of shared parts as a dict of Columns
+    and returns the Columns to build on: ``_canonical_cols`` projects each
+    layer once, where one inlined expression repeats a part in every
+    branch that reads it."""
+
+    def __init__(self, url, stage=lambda cols: cols):
+        s = F.ltrim(F.translate(url, "\t\r\n", ""), F.lit(_C0_OR_SPACE))
+        scheme, netloc, p, query, fragment = stage({
+            n: F.regexp_extract(s, _SPLIT_RX, i) for i, n in enumerate(
+                ("scheme", "netloc", "path", "query", "fragment"), 1)}).values()
+        scheme = F.lower(scheme)
+        hostinfo = F.substring_index(netloc, "@", -1)
+        hostname = F.lower(F.substring_index(hostinfo, ":", 1))
+        # urlsplit's port is '' or 0-65535 in ASCII digits, else it raises;
+        # normalize_url writes str(int(port)) unless it is the default
+        port = F.regexp_extract(hostinfo, r"(?s)^[^:]*:(.*)", 1)
+        digits = F.regexp_extract(port, r"^0*([0-9]{1,5})\z", 1)
+        port_ok = (port == "") | ((digits != "") & ((F.length(digits) < 5) | (digits <= "65535")))
+        default = ((port == "") | ((scheme == "http") & (digits == "80"))
+                   | ((scheme == "https") & (digits == "443")))
+        # split_url refuses a netloc holding a bracket or an NFKC delimiter
+        splittable = ~netloc.rlike(f"[\\[\\]{NFKC_NETLOC_DELIMS}]")
+        parts = stage({
+            "scheme": scheme, "path": p, "query": query, "fragment": fragment,
+            "userinfo": F.left(netloc, F.length(netloc) - F.length(hostinfo) - 1),
+            "hostname": hostname, "splittable": splittable, "port_ok": port_ok,
+            "hostport": F.concat(hostname, F.when(default, "").otherwise(
+                F.concat(F.lit(":"), digits))),
+            # normalize_url rebuilds the URL, else returns it unchanged
+            "valid": (scheme != "") & (netloc != "") & splittable & port_ok,
+            "norm_path": F.when((F.length(p) > 1) & p.endswith("/"),
+                                F.left(p, F.length(p) - 1)).otherwise(_or(p, "/")),
+        })
+        (scheme, p, query, fragment, userinfo, hostname, splittable, port_ok,
+         hostport, valid, norm_path) = parts.values()
+        self.host = F.when(splittable, hostname).otherwise("")
+        self.origin = F.when(splittable & port_ok, F.concat(
+            scheme, F.lit("://"), hostport)).otherwise("")
+        self.path = F.when(~splittable, "/").when(valid, norm_path).otherwise(_or(p, "/"))
+        self.path_query = F.concat(_or(p, "/"), _prefixed("?", query))
+
+        # credentials rebuild as username[:password]: an empty username
+        # drops them, an empty password drops its ':'
+        username = F.substring_index(userinfo, ":", 1)
+        cred = (F.when(username == "", "")
+                .when(userinfo == F.concat(username, F.lit(":")), F.concat(username, F.lit("@")))
+                .otherwise(F.concat(userinfo, F.lit("@"))))
+        netloc = F.concat(cred, hostport)
+        # urlunsplit writes '//' before a netloc, and before an empty one
+        # under a uses_netloc scheme unless the path starts with '//'
+        sep = F.when((netloc != "") | (scheme.isin(*uses_netloc)
+                                       & ~norm_path.startswith("//")), "://").otherwise(":")
+        # drop the tracking pairs and the empty ones, then sort the rest by
+        # key, stably (URLSearchParams.sort()): (key, position, pair)
+        # structs sort as that with no lambda, which would stop codegen
+        q = F.regexp_replace(F.regexp_replace(query, _TRACKING_RX, ""),
+                             r"^&+|&+\z|&(?=&)", "")
+        pairs = F.split(q, "&")
+        ranked = F.sort_array(F.arrays_zip(
+            F.split(F.regexp_replace(q, "=[^&]*", ""), "&").alias("k"),
+            F.sequence(F.lit(1), F.size(pairs)).alias("i"), pairs.alias("p")))
+        self.key = F.when(valid, F.concat(
+            scheme, sep, netloc, norm_path, _prefixed("?", F.array_join(ranked["p"], "&")),
+        )).otherwise(F.substring_index(url, "#", 1))
+        self.canonical = F.when(valid, F.concat(self.key, _prefixed("#", fragment))
+                                ).otherwise(url)
+
+
 def canonical_url_col(col_name: str):
-    """A pyspark Column computing normalize_url entirely with built-ins.
-
-    Assumes well-formed absolute http(s) URLs (guaranteed for corpus URLs,
-    which are produced by :func:`resolve_url`). Stays inside whole-stage
-    codegen: parse_url / split / filter / array_sort / concat only.
-    """
-    from pyspark.sql import functions as F
-
-    c = F.col(col_name)
-    scheme = F.lower(F.regexp_extract(c, r"^([A-Za-z][A-Za-z0-9+.-]*):", 1))
-    # netloc from AUTHORITY (not HOST): keeps userinfo and non-default ports,
-    # matching normalize_url. userinfo splits at the LAST '@' (rpartition
-    # semantics), credentials rebuild as username[:password] with empty
-    # username dropping the credential and empty password dropping the ':'
-    # (urlsplit property semantics), default ports (http:80/https:443) strip,
-    # leading zeros in ports collapse via int round-trip.
-    auth = F.coalesce(F.parse_url(c, F.lit("AUTHORITY")), F.lit(""))
-    userinfo = F.regexp_extract(auth, r"^(.*)@", 1)
-    hostport = F.regexp_replace(auth, r"^.*@", "")
-    username = F.regexp_extract(userinfo, r"^([^:]*)", 1)
-    password = F.regexp_extract(userinfo, r"^[^:]*:(.*)$", 1)
-    cred = (
-        F.when(username == "", "")
-        .when(password == "", username)
-        .otherwise(F.concat(username, F.lit(":"), password))
-    )
-    bare_host = F.lower(F.regexp_replace(hostport, r":\d+$", ""))
-    port = F.when(hostport.rlike(r":\d+$"),
-                  F.regexp_extract(hostport, r":(\d+)$", 1).cast("int"))
-    keep_port = port.isNotNull() & ~(
-        ((scheme == "http") & (port == 80)) | ((scheme == "https") & (port == 443))
-    )
-    host = F.concat(
-        F.when(cred != "", F.concat(cred, F.lit("@"))).otherwise(F.lit("")),
-        bare_host,
-        F.when(keep_port, F.concat(F.lit(":"), port.cast("string")))
-         .otherwise(F.lit("")),
-    )
-    path = F.parse_url(c, F.lit("PATH"))
-    path = F.when(
-        (F.length(path) > 1) & path.endswith("/"), F.expr(f"substring(parse_url({col_name}, 'PATH'), 1, length(parse_url({col_name}, 'PATH')) - 1)")
-    ).otherwise(F.when(path == "", "/").otherwise(path))
-    query = F.coalesce(F.parse_url(c, F.lit("QUERY")), F.lit(""))
-    tracking = ", ".join(f"'{p}'" for p in TRACKING_PARAMS)
-    sorted_query = F.expr(
-        f"array_join(array_sort(filter(split(coalesce(parse_url({col_name}, 'QUERY'), ''), '&'),"
-        f" p -> p != '' AND NOT array_contains(array({tracking}), split(p, '=')[0])),"
-        " (a, b) -> CASE WHEN split(a,'=')[0] < split(b,'=')[0] THEN -1"
-        " WHEN split(a,'=')[0] > split(b,'=')[0] THEN 1 ELSE 0 END), '&')"
-    )
-    frag = F.parse_url(c, F.lit("REF"))
-    return F.concat(
-        scheme, F.lit("://"), host, path,
-        F.when(sorted_query != "", F.concat(F.lit("?"), sorted_query)).otherwise(F.lit("")),
-        F.when(frag.isNotNull() & (frag != ""), F.concat(F.lit("#"), frag)).otherwise(F.lit("")),
-    )
-
-
-def url_hash_col(col_name: str):
-    from pyspark.sql import functions as F
-
-    return F.sha2(canonical_url_col(col_name), 256)
+    """A pyspark Column computing :func:`normalize_url` with built-ins only:
+    it splits with urlsplit's grammar, is total, and equals normalize_url
+    on every string."""
+    return UrlSplit(F.col(col_name)).canonical
 
 
 def base_domain_col(host_col):
@@ -278,8 +320,6 @@ def base_domain_col(host_col):
     :func:`base_domain_of` (crawlee SameDomain): single-label hosts pass
     through (the old ``slice(-2)`` expression returned ``''`` for
     ``localhost``), multi-label public suffixes keep three labels."""
-    from pyspark.sql import functions as F
-
     labels = F.split(host_col, r"\.")
     n = F.size(labels)
     last2 = F.array_join(F.slice(labels, -2, 2), ".")
@@ -299,9 +339,3 @@ def map_base_domain_col(host_col):
     labels = F.split(host_col, r"\.")
     return F.when(F.size(labels) <= 2, host_col).otherwise(
         F.array_join(F.slice(labels, -2, 2), "."))
-
-
-def host_col(col_name: str):
-    from pyspark.sql import functions as F
-
-    return F.lower(F.parse_url(F.col(col_name), F.lit("HOST")))

@@ -19,7 +19,6 @@ from __future__ import annotations
 import re
 
 from .dom import (
-    Comment,
     Element,
     Node,
     Text,

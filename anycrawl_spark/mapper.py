@@ -12,6 +12,8 @@ from __future__ import annotations
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
+from anycrawl_spark.kernel.canonical import UrlSplit, map_base_domain_col, map_base_domain_of
+
 MAP_SOURCE_ORDER = {"sitemap": 0, "search": 1, "crawl": 2, "cache": 3}
 
 
@@ -62,8 +64,7 @@ def domain_filter(df: DataFrame, seed_host: str,
     """Keep exact-hostname urls, or same base-domain with
     ``include_subdomains`` (MapService.ts:301-329; the reference defaults
     ``includeSubdomains ?? false`` → exact hostname)."""
-    host = F.lower(F.parse_url(F.col("url"), F.lit("HOST")))
-    from anycrawl_spark.kernel.canonical import map_base_domain_col, map_base_domain_of
+    host = UrlSplit(F.col("url")).host
 
     if include_subdomains:
         return df.where(map_base_domain_col(host) == map_base_domain_of(seed_host))
@@ -76,9 +77,7 @@ def expand_sitemaps(robots: DataFrame, pages: DataFrame) -> DataFrame:
     sitemap expansion = explode + equi-join."""
     hosts = robots.select("host", F.explode("sitemaps").alias("sitemap_url"))
     page_hosts = pages.select(
-        F.col("url"),
-        F.lower(F.parse_url(F.col("url"), F.lit("HOST"))).alias("host"),
-    )
+        F.col("url"), UrlSplit(F.col("url")).host.alias("host"))
     return hosts.join(page_hosts, "host", "inner").select(
         "host", "url", F.lit(None).cast("string").alias("title"),
         F.lit(None).cast("string").alias("description"),

@@ -495,15 +495,10 @@ def robots_allowed_spec(candidates: DataFrame, rules: DataFrame,
     robots-parser (and the RFC) actually matches — instead of the bare
     ``path_col``."""
     if url_col is not None:
+        from anycrawl_spark.kernel.canonical import UrlSplit
+
         candidates = candidates.withColumn(
-            "__rpath",
-            F.concat(
-                F.coalesce(F.parse_url(F.col(url_col), F.lit("PATH")),
-                           F.lit("/")),
-                F.coalesce(
-                    F.concat(F.lit("?"),
-                             F.parse_url(F.col(url_col), F.lit("QUERY"))),
-                    F.lit(""))))
+            "__rpath", UrlSplit(F.col(url_col)).path_query)
         match_col = "__rpath"
     else:
         match_col = path_col
@@ -513,9 +508,9 @@ def robots_allowed_spec(candidates: DataFrame, rules: DataFrame,
         on=candidates[host_col] == F.col("__rhost"),
         how="left",
     )
-    best = F.expr(
-        f"array_max(transform(filter(__rrules, r -> {match_col} rlike r.rx),"
-        " r -> struct(r.spec AS spec, r.allow AS allow)))")
+    best = F.array_max(F.transform(
+        F.filter("__rrules", lambda r: F.rlike(F.col(match_col), r["rx"])),
+        lambda r: F.struct(r["spec"].alias("spec"), r["allow"].alias("allow"))))
     allowed = best.isNull() | (best["allow"] == 1)
     out = joined.where(allowed).drop("__rhost", "__rrules")
     return out.drop("__rpath") if url_col is not None else out

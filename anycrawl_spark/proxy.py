@@ -55,6 +55,8 @@ from typing import Optional, Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from anycrawl_spark.kernel.canonical import UrlSplit
+
 PROXY_FAILURE_TTL_MS = 7 * 24 * 60 * 60 * 1000  # ProxyCacheManager.ts:127
 
 # ---------------------------------------------------------------------------
@@ -583,9 +585,9 @@ def proxy_select(
     * ``failure_state``: :func:`proxy_failure_state` output.
     * ``base_urls`` / ``stealth_urls``: the env pools (driver config).
 
-    The hostname uses the JVM ``parse_url(..., 'HOST')`` lowered - parity
-    with JS ``URL.hostname`` for ASCII hosts; IDN hosts would need the
-    kernel's punycode path and are out of the replay's synthetic scope.
+    The hostname is the kernel's URL split (``UrlSplit.host``, lowered) -
+    parity with JS ``URL.hostname`` for ASCII hosts; IDN hosts would need
+    the kernel's punycode path and are out of the replay's synthetic scope.
 
     Every branch is JVM whole-stage-codegen; the only multi-pass piece is
     the rotation counter (see :func:`_rotation_counter_before`).
@@ -593,7 +595,7 @@ def proxy_select(
     match_url = F.when(
         F.col("original_url").isNotNull() & (F.col("original_url") != ""),
         F.col("original_url")).otherwise(F.col("url"))
-    host = F.lower(F.parse_url(match_url, F.lit("HOST")))
+    host = UrlSplit(match_url).host
     retry = F.when(F.col("retry_count") >= 0, F.col("retry_count")) \
         .otherwise(F.lit(0)).cast("long")
     tier0 = F.coalesce(F.col("user_tier"), F.lit(0)).cast("int")

@@ -18,6 +18,7 @@ from anycrawl_spark.kernel.canonical import (
     host_of,
     normalize_url,
     origin_of,
+    split_url,
 )
 from anycrawl_spark.kernel.extract import extract_page
 from anycrawl_spark.politeness import compile_path_patterns
@@ -67,17 +68,20 @@ def _passes_strategy(url: str, seed_url: str, strategy: str) -> bool:
     return True
 
 
+def robots_path(url: str) -> str:
+    """The path robots rules test: that of the URL's canonical key, '/'
+    when empty or when the URL does not split."""
+    try:
+        return split_url(normalize_url(url)).path or "/"
+    except ValueError:
+        return "/"
+
+
 def _robots_denied(url: str, robots: dict[str, list[str]] | None) -> bool:
     if robots is None:
         return False
-    from urllib.parse import urlsplit
-
-    parts = urlsplit(normalize_url(url))
-    path = parts.path or "/"
-    for prefix in robots.get((parts.hostname or "").lower(), []):
-        if path.startswith(prefix):
-            return True
-    return False
+    path = robots_path(url)
+    return any(path.startswith(p) for p in robots.get(host_of(url), []))
 
 
 def simulate_crawl(

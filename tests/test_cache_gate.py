@@ -248,6 +248,8 @@ class TestJvmParity:
              "cloakbrowser", None, "STEALTH", True, None),
             ("https://site.test/p5?q=1&utm_medium=m&z=0", "cheerio",
              None, None, ["markdown"], "", None, None),
+            ("https://site.test/p6", "cheerio", None, None, [], None, None,
+             None),
         ]
         df = spark.createDataFrame(
             rows,

@@ -2,6 +2,7 @@
 limits, depth, strategies, globs, politeness budgets, robots, batch parity,
 checkpoint resume (SURVEY.md §5.2 items 2-4)."""
 
+import hashlib
 import os
 
 import pytest
@@ -174,6 +175,45 @@ def _page(links: list[str]) -> str:
     return (f"<html><head><title>t</title></head><body><main>"
             f"<p>A page of the enqueue-boundary corpus.</p>{anchors}"
             f"</main></body></html>")
+
+
+# characters a page may put in an href that java.net.URI rejects
+BAD_CHARS = [" ", '"', "%", "<", ">", "[", "\\", "]", "^", "`", "{", "|", "}"]
+
+
+class TestBadHrefs:
+    """One bad href must not abort a crawl: the seed links /ok and one href
+    that a URI parser rejects, and the engine, in the default (ANSI) session,
+    visits and sees what the simulator does."""
+
+    SEED = "http://a.test/"
+
+    @pytest.mark.parametrize("href", [
+        *(f"/p{c}q" for c in BAD_CHARS),             # in the path
+        *(f"/p?q={c}q" for c in BAD_CHARS),          # in the query
+        *(f"/p#f{c}q" for c in BAD_CHARS),           # in the fragment
+        "http://a.test:99999999999/x", "http://a.test:/x",
+        "http://a.test:0080/x",
+    ])
+    def test_crawl_matches_simulator(self, spark, tmp_root, href):
+        import datetime
+        import html as html_lib
+
+        from anycrawl_spark.corpus import PAGES_SCHEMA
+
+        pages = {self.SEED: _page(["/ok", html_lib.escape(href)]),
+                 "http://a.test/ok": _page([])}
+        ts = datetime.datetime(2024, 1, 1)
+        corpus = spark.createDataFrame(
+            [(u, ts, h.encode(), "", "en") for u, h in pages.items()],
+            schema=PAGES_SCHEMA)
+        kw = dict(seed_url=self.SEED, strategy="all", max_depth=2, limit=10)
+        name = f"badhref_{hashlib.sha256(href.encode()).hexdigest()[:12]}"
+        _, _, visits, seen = run_engine(spark, corpus, tmp_root, name, **kw)
+        sim = simulate_crawl(corpus_to_dict(
+            [{"url": u, "html": h} for u, h in pages.items()]), **kw)
+        assert_parity(spark, visits, seen, sim)
+        assert len(visits) == 3
 
 
 class TestEnqueueBoundary:

@@ -31,7 +31,9 @@ def _corpus():
 
 class TestExtractionGoldens:
     def test_markdown_and_text_bytes(self):
+        from anycrawl_spark.kernel.dom import parse_html
         from anycrawl_spark.kernel.extract import extract_page
+        from anycrawl_spark.kernel.markdown import html_to_markdown, html_to_markdown_dom
 
         _, meta = _corpus()
         checked = 0
@@ -45,6 +47,9 @@ class TestExtractionGoldens:
                 assert doc["markdown"] == f.read(), f"markdown drift for {case}"
             with open(txt_path) as f:
                 assert doc["text"] == f.read(), f"text drift for {case}"
+            # the DOM path's whitespace-only-node strip stands in for the
+            # string path's '>\s+<' rewrite byte for byte
+            assert html_to_markdown_dom(parse_html(html)) == html_to_markdown(html), case
             checked += 1
         assert checked >= 15
 
@@ -78,8 +83,9 @@ class TestCanonicalGoldens:
                 assert normalize_url(url) == norm
                 assert hashlib.sha256(norm.encode()).hexdigest() == digest
 
-    # port/userinfo/default-port edge cases where the JVM expression used to
-    # diverge from the Python path (AUTHORITY vs HOST, ADVICE r1)
+    # port/userinfo/default-port edge cases, then strings urlsplit splits
+    # in its own way: bad ports, unsafe characters, removed tab/CR/LF,
+    # bracketed and NFKC-delimiter netlocs, schemes outside uses_netloc
     EDGE_URLS = [
         "http://example.com:8080/a/?b=2&a=1",
         "https://user:pw@example.com/x",
@@ -91,11 +97,32 @@ class TestCanonicalGoldens:
         "http://site000.test:80/p/1",
         "http://site000.test:0080/p/1",
         "http://a.b:8080/p?z=1&a=2",
+        "http://a.test:99999999999/x",
+        "http://a.test:65536/x",
+        "http://a.test:65535/x",
+        "http://a.test:/x",
+        "http://a.test:8a/x",
+        "http://a.test:80:80/x",
+        "http://A.test/a b/?q=a|b&p={1}#f^`<>",
+        "http://a.test/p%zz/[x]\\y?q=\"1\"",
+        " \x00http://a.\ttest/p\r\n/?b=\t1&a=2",
+        "http://[::1]:8080/x/",
+        "http://[::1/x",
+        "http://a\uff0ftest/x",
+        "http://user@/x",
+        "http://:80/x",
+        "http:///x",
+        "http://a.test//x//",
+        "foo://@//x",
+        "foo://@/x",
+        "mailto:a@b.test",
+        "//a.test/x",
+        "a.test/x",
     ]
 
     def test_jvm_column_matches_python(self, spark):
         """Engine (canonical_url_col) vs Python (normalize_url) cross-check
-        over the golden URL set plus port/userinfo edge cases."""
+        over the golden URL set plus the edge cases above."""
         from anycrawl_spark.kernel.canonical import canonical_url_col, normalize_url
 
         with open(os.path.join(GOLDEN, "canonical", "urls.tsv")) as f:

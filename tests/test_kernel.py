@@ -15,7 +15,6 @@ from anycrawl_spark.kernel.canonical import (
     origin_of,
     resolve_url,
     unique_key,
-    url_hash,
 )
 from anycrawl_spark.kernel.extract import extract_page, process_markdown_dom
 from anycrawl_spark.kernel.text import html_to_text
@@ -69,7 +68,8 @@ class TestCanonical:
     def test_url_hash_is_sha256_of_canonical(self):
         import hashlib
         expect = hashlib.sha256(b"https://example.com/p?a=1").hexdigest()
-        assert url_hash("https://EXAMPLE.com/p/?a=1&utm_source=z") == expect
+        got = normalize_url("https://EXAMPLE.com/p/?a=1&utm_source=z")
+        assert hashlib.sha256(got.encode()).hexdigest() == expect
 
     def test_resolve_relative(self):
         assert resolve_url("https://example.com/a/b", "/c") == "https://example.com/c"
@@ -470,7 +470,9 @@ class TestCanonicalProperties:
     def test_normalize_idempotent_and_hash_stable(self):
         from hypothesis import given, settings, strategies as st
 
-        from anycrawl_spark.kernel.canonical import normalize_url, url_hash
+        import hashlib
+
+        from anycrawl_spark.kernel.canonical import normalize_url
 
         label = st.text(alphabet="abcdefghijklmnopqrstuvwxyzABC0123456789-",
                         min_size=1, max_size=8)
@@ -507,7 +509,8 @@ class TestCanonicalProperties:
             path = urlsplit(once).path
             if not (len(path) > 1 and path.endswith("/")):
                 assert normalize_url(once) == once, (url, once)
-            assert url_hash(url) == url_hash(url)
+            assert hashlib.sha256(once.encode()).hexdigest() == \
+                hashlib.sha256(normalize_url(url).encode()).hexdigest()
             # tracking params never survive
             assert "utm_source=" not in once and "fbclid=" not in once
 
@@ -547,6 +550,84 @@ class TestCanonicalProperties:
         rows = df.select("u", canonical_url_col("u").alias("jvm")).collect()
         for r in rows:
             assert r["jvm"] == normalize_url(r["u"]), r["u"]
+
+
+    def test_nfkc_netloc_delims_match_unicodedata(self):
+        """The JVM split refuses the netloc characters urlsplit refuses:
+        those whose NFKC form holds a URL delimiter, per this Python's
+        unicodedata."""
+        import unicodedata
+
+        from anycrawl_spark.kernel.canonical import NFKC_NETLOC_DELIMS
+
+        found = "".join(
+            c for c in map(chr, range(0x80, 0x110000))
+            if not 0xD800 <= ord(c) <= 0xDFFF
+            and any(d in unicodedata.normalize("NFKC", c) for d in "/?#@:"))
+        assert found == NFKC_NETLOC_DELIMS
+
+    # hrefs over printable ASCII and non-ASCII (no surrogates: a URL column
+    # holds UTF-8), resolved as extract_page resolves them
+    HREF = st.text(st.one_of(
+        st.characters(min_codepoint=0x20, max_codepoint=0x7E),
+        st.characters(min_codepoint=0x80, blacklist_categories=("Cs",))),
+        max_size=12)
+    BASES = ["http://a.test/dir/page", "https://U:P@A.test:8443/d/?q#f",
+             "http://a.test:80/"]
+    # raw strings: userinfo, ports, bracketed hosts, tab/CR/LF anywhere
+    PIECE = st.text(st.sampled_from(
+        "aB0.-_~%:/?#@[]&= \t\r\n\x00|{}^`<>\\\"\u00e9\u0130\uff0f"), max_size=6)
+    RAW = st.builds(
+        lambda lead, scheme, user, host, port, path, query, frag: (
+            lead + scheme + user + host + port + path + query + frag),
+        st.sampled_from(["", " ", "\t", "\x01"]),
+        st.sampled_from(["http://", "HTTPS://", "ftp://", "foo://", "http:",
+                         "//", "x y://", ""]),
+        st.sampled_from(["", "u@", "u:p@", ":p@", "u:@", "a@b@"]) | PIECE.map(
+            lambda p: p + "@"),
+        st.sampled_from(["a.test", "A.Test", "", "[::1]", "[v1.x]", "[a",
+                         "b]", "xn--bcher-kva.test", "\u00fc.test"]) | PIECE,
+        st.sampled_from(["", ":", ":80", ":443", ":0080", ":0", ":65535",
+                         ":65536", ":99999999999", ":8a", ":\u0663"])
+        | st.integers(0, 70000).map(lambda n: f":{n}"),
+        st.sampled_from(["", "/", "/p/", "//x"]) | PIECE.map(lambda p: "/" + p),
+        st.sampled_from(["", "?", "?b=2&a=1&utm_source=x&a=0"]) | PIECE.map(
+            lambda p: "?" + p),
+        st.sampled_from(["", "#", "#f"]) | PIECE.map(lambda p: "#" + p),
+    )
+
+    # well-formed authorities at the port edges
+    PORTED = st.builds(
+        lambda scheme, host, port, rest: scheme + host + port + rest,
+        st.sampled_from(["http://", "https://", "HTTP://", "ftp://", "//"]),
+        st.sampled_from(["a.test", "A.Test", "u:p@a.test"]),
+        st.sampled_from(["", ":", ":0", ":80", ":443", ":0080", ":65535",
+                         ":65536", ":99999"]),
+        st.sampled_from(["", "/", "/p/", "/p?b=1&a=2&utm_source=x#f"]))
+
+    @given(st.lists(st.one_of(
+        st.tuples(st.sampled_from(BASES), HREF).map(lambda t: resolve_url(*t)),
+        RAW, PORTED), min_size=1, max_size=60))
+    @settings(max_examples=60, deadline=None)
+    def test_fuzz_split_matches_python_references(self, spark, urls):
+        """One Spark job per list: the JVM split gives normalize_url's
+        canonical URL and the crawl's (url_hash, host, origin, path) of
+        key_of, host_of, origin_of and the simulator's robots path."""
+        import hashlib
+
+        from anycrawl_spark.crawl import _canonical_cols
+        from anycrawl_spark.kernel.canonical import canonical_url_col
+        from simulator import key_of, robots_path
+
+        df = spark.createDataFrame([(u,) for u in urls], "url string")
+        rows = _canonical_cols(df.withColumn("canon", canonical_url_col("url")),
+                               "url").collect()
+        for r in rows:
+            u = r["url"]
+            assert r["canon"] == normalize_url(u), repr(u)
+            assert r["url_hash"] == hashlib.sha256(key_of(u).encode()).hexdigest(), repr(u)
+            assert (r["host"], r["origin"], r["path"]) == (
+                host_of(u), origin_of(u), robots_path(u)), repr(u)
 
 
 class TestMarkdownOCR:

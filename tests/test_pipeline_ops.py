@@ -6,7 +6,7 @@ import datetime
 import pytest
 from pyspark.sql import functions as F
 
-from anycrawl_spark.cache import cache_lookup, cache_upsert, options_hash
+from anycrawl_spark.cache import cache_lookup, cache_upsert
 from anycrawl_spark.monitor import (
     classify_price_change,
     lcs_diff,
@@ -153,14 +153,8 @@ class TestMultimodal:
 
 
 class TestCache:
-    def test_options_hash_key_order_invariant(self):
-        a = options_hash({"formats": ["markdown"], "only_main_content": True})
-        b = options_hash({"only_main_content": True, "formats": ["markdown"]})
-        assert a == b
-        assert a != options_hash({"formats": ["html"], "only_main_content": True})
-
     def test_lookup_newest_within_max_age(self, spark):
-        oh = options_hash({"formats": ["markdown"]})
+        oh = "opts-markdown"
         t = datetime.datetime(2025, 6, 1, 12, 0, 0)
         cache = spark.createDataFrame(
             [("h1", oh, "https://a.test/1", "OLD", "t", "T", 200, t - datetime.timedelta(days=3)),
@@ -186,7 +180,7 @@ class TestCache:
 
         assert ttl_for_tier("page") == DEFAULT_MAX_AGE_SECONDS == 2 * 86400
         assert ttl_for_tier("sitemap") == SITEMAP_MAX_AGE_SECONDS == 7 * 86400
-        oh = options_hash({})
+        oh = "opts-default"
         t = datetime.datetime(2025, 6, 1, 12, 0, 0)
         cache = spark.createDataFrame(
             [("h1", oh, "u1", "AGE3D", "t", "T", 200, t - datetime.timedelta(days=3))],

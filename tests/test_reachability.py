@@ -6,7 +6,9 @@ Program code is the package itself, ``tools/``, ``perfbench/``,
 ``tests/simulator.py`` (perfbench imports the simulator). A caller is an
 ``ast.Name``, ``ast.Attribute`` or import alias carrying the symbol's name
 outside the symbol's own definition, so a mention in a comment or
-docstring never counts. The registry's ``q_*`` functions are reached
+docstring never counts, nor does a read of a parameter or local of an
+enclosing function that shares the name. An import alias counts only
+because every package import must be read in its module. The registry's ``q_*`` functions are reached
 through ``REGISTRY`` and are skipped. No program file dispatches through
 ``importlib``, ``__import__`` or a string ``getattr``, so the static scan
 sees every call.
@@ -148,15 +150,52 @@ def _files(paths):
             yield p
 
 
-def _names(node) -> set[str]:
-    out = set()
-    for n in ast.walk(node):
-        if isinstance(n, ast.Name) and not isinstance(n.ctx, ast.Store):
+def _locals(fn) -> set[str]:
+    """The names a function or lambda binds as a parameter or assigned
+    local (``global``/``nonlocal`` names excluded)."""
+    a = fn.args
+    out = {x.arg for x in [*a.posonlyargs, *a.args, *a.kwonlyargs,
+                           a.vararg, a.kwarg] if x}
+    declared: set[str] = set()
+    stack = list(fn.body) if isinstance(fn.body, list) else [fn.body]
+    while stack:
+        n = stack.pop()
+        if isinstance(n, ast.Name) and not isinstance(n.ctx, ast.Load):
             out.add(n.id)
-        elif isinstance(n, ast.Attribute):
-            out.add(n.attr)
-        elif isinstance(n, ast.alias):
-            out.add(n.name.split(".")[-1])
+        elif isinstance(n, (ast.Global, ast.Nonlocal)):
+            declared.update(n.names)
+        elif isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+            out.add(n.name)
+            continue                     # a nested scope binds its own
+        elif isinstance(n, ast.Lambda):
+            continue
+        stack.extend(ast.iter_child_nodes(n))
+    return out - declared
+
+
+def _names(node, shadowed: frozenset = frozenset()) -> set[str]:
+    """The names ``node`` reads, except a name that a parameter or local of
+    an enclosing function binds: that read is not a caller."""
+    out = set()
+    if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.Lambda)):
+        # decorators and defaults run in the enclosing scope
+        outer = [*getattr(node, "decorator_list", []), *node.args.defaults,
+                 *[d for d in node.args.kw_defaults if d]]
+        for n in outer:
+            out |= _names(n, shadowed)
+        inner = shadowed | _locals(node)
+        for n in (node.body if isinstance(node.body, list) else [node.body]):
+            out |= _names(n, inner)
+        return out
+    if isinstance(node, ast.Name) and isinstance(node.ctx, ast.Load):
+        if node.id not in shadowed:
+            out.add(node.id)
+    elif isinstance(node, ast.Attribute):
+        out.add(node.attr)
+    elif isinstance(node, ast.alias):
+        out.add(node.name.split(".")[-1])
+    for n in ast.iter_child_nodes(node):
+        out |= _names(n, shadowed)
     return out
 
 
@@ -234,3 +273,36 @@ def test_every_package_constant_is_referenced():
                 if isinstance(t, ast.Name) and t.id not in used:
                     dead.append(f"{f.relative_to(ROOT)}:{t.id}")
     assert dead == []
+
+
+def _annotation_reads(tree) -> set[str]:
+    """Names read inside string annotations (``x: "DataFrame"``)."""
+    out = set()
+    for n in ast.walk(tree):
+        anns = ([n.returns] if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef))
+                else [n.annotation] if isinstance(n, (ast.arg, ast.AnnAssign))
+                else [])
+        for a in anns:
+            if isinstance(a, ast.Constant) and isinstance(a.value, str):
+                out |= {m.id for m in ast.walk(ast.parse(a.value, mode="eval"))
+                        if isinstance(m, ast.Name)}
+    return out
+
+
+def test_package_imports_are_read():
+    """Every name a package module imports is read in that module, so an
+    unused import cannot pass for a caller above."""
+    unused = []
+    for f in _files([PKG]):
+        tree = ast.parse(f.read_text())
+        read = {n.id for n in ast.walk(tree)
+                if isinstance(n, ast.Name) and isinstance(n.ctx, ast.Load)}
+        read |= _annotation_reads(tree)
+        for n in ast.walk(tree):
+            if isinstance(n, ast.ImportFrom) and n.module == "__future__":
+                continue
+            if isinstance(n, (ast.Import, ast.ImportFrom)):
+                unused += [f"{f.relative_to(ROOT)}:{a.lineno} {a.name}"
+                           for a in n.names
+                           if (a.asname or a.name.split(".")[0]) not in read]
+    assert unused == []
