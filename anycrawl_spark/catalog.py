@@ -10,8 +10,8 @@ resume — the manifest is the commit point, written atomically via
 write-temp + ``os.replace``.
 
 At cluster scale the only change is swapping this class for
-``df.writeTo(table).append()`` on an Iceberg catalog; the engine code only
-uses ``append_round`` / ``read`` / ``last_round``.
+``df.writeTo(table).append()`` on an Iceberg catalog; the engine writes
+through ``append_round`` (``results``) and ``append_round_local`` (the rest).
 """
 
 from __future__ import annotations
@@ -58,9 +58,9 @@ class Catalog:
     def append_round_local(self, arrow_table, table: str, round_no: int) -> None:
         """Driver-side parquet write (pyarrow) of one round's rows — same
         directory layout and read path as append_round, but no Spark job.
-        Only for driver-resident state (the exact seen set and the
-        pending frontiers); the other round tables use the distributed
-        writer."""
+        For the round tables the driver builds (the crawl's seen set,
+        pending frontiers, visits and metrics); ``results`` uses the
+        distributed writer."""
         import pyarrow.parquet as pq
 
         path = Path(self.round_path(table, round_no))

@@ -18,9 +18,10 @@ Each round r is one Spark batch over immutable checkpointed state:
                   (parent_seq, link_pos) order
                →  on the driver: seq assignment, pending_{r+1} = unadmitted
                   + retried + new rows, written with pyarrow beside the full
-                  seen set and the round's visits (admitted rows + fetch
-                  outcome); progress, per-partition lineage appended;
-                  manifest commit (atomic) → resumable
+                  seen set, the round's visits (admitted rows + fetch
+                  outcome) and its per-(partition, host) metrics rollup
+                  (only ``results`` is a Spark write); manifest commit
+                  (atomic) → resumable
 
 The frontier and the seen set are driver-resident: both are bounded by the
 zod ``limit`` (≤ 50,000 URLs enqueued per job), so the round admits from,
@@ -239,20 +240,20 @@ def prepare_corpus(pages: DataFrame, dedup: bool = True) -> DataFrame:
 class CrawlEngine:
     def __init__(self, spark: SparkSession, corpus: DataFrame,
                  checkpoint_dir: str, robots: DataFrame | None = None,
-                 cache_corpus: bool = True, prepared: bool = False) -> None:
+                 prepared: bool = False) -> None:
         """``prepared=True``: the caller already ran prepare_corpus (and
         typically persisted the result) — the corpus is shared across crawl
         jobs, as an Iceberg pages table would be at deployment."""
+        from pyspark.storagelevel import StorageLevel
+
         self.spark = spark
-        self.corpus = corpus if prepared else prepare_corpus(corpus)
-        if cache_corpus and not prepared:
+        if not prepared:
             # local/bench convenience: avoid re-scanning + re-canonicalizing
             # the corpus every round. At deployment scale the corpus is an
             # Iceberg table bucketed by url_hash instead (no cache needed —
             # the join prunes buckets).
-            from pyspark.storagelevel import StorageLevel
-
-            self.corpus = self.corpus.persist(StorageLevel.MEMORY_AND_DISK)
+            corpus = prepare_corpus(corpus).persist(
+                StorageLevel.MEMORY_AND_DISK)
         # Truncate the corpus lineage to a LogicalRDD (lazy localCheckpoint —
         # materialized by the first round's full corpus scan): every round
         # builds ~30 DataFrame ops whose eager analysis re-walks the whole
@@ -261,8 +262,7 @@ class CrawlEngine:
         # each of them cost ~10 ms per op on the driver. Content-identical;
         # blocks are released by the ContextCleaner when the engine goes
         # out of scope.
-        if cache_corpus or prepared:
-            self.corpus = self.corpus.localCheckpoint(eager=False)
+        self.corpus = corpus.localCheckpoint(eager=False)
         self.catalog = Catalog(checkpoint_dir, tables=TABLES)
         self.robots = robots
         # driver-resident seen state, cumulative through the newest round
@@ -277,10 +277,10 @@ class CrawlEngine:
         # round's deferred commit, like the seen state above.
         self._pending: pa.Table | None = None
         # -- write pipelining (see _finalize_prev) --------------------------
-        # The slow per-round parquet writes (results/metrics) overlap
-        # the NEXT round's compute jobs: round r submits them async and
-        # round r+1 finalizes (await -> commit -> release docs) right
-        # before its own state writes.
+        # The slow per-round results write overlaps the NEXT round's
+        # compute jobs: round r submits it async and round r+1 finalizes
+        # (await -> commit -> release docs) right before its own state
+        # writes.
         self._prev_inflight: dict | None = None
         self._writes: ThreadPoolExecutor | None = None
 
@@ -327,16 +327,15 @@ class CrawlEngine:
         self._pending = table
 
     def _finalize_prev(self) -> None:
-        """Complete the previous round's deferred tail: await its parquet
-        writes, commit its manifest entry, then release its cached docs
-        frame (only those writes read it)."""
+        """Complete the previous round's deferred tail: await its results
+        write, commit its manifest entry, then release its cached docs
+        frame (only that write reads it)."""
         prev = self._prev_inflight
         self._prev_inflight = None
         if prev is None:
             return
         try:
-            for fut in prev["futures"]:
-                fut.result()
+            prev["write"].result()
             self.catalog.commit_round(prev["round"], prev["tables"],
                                       prev["meta"], replace=CUMULATIVE_TABLES)
         finally:
@@ -533,6 +532,8 @@ class CrawlEngine:
             F.col("doc.text").alias("text"),
             F.col("doc.links").alias("links"),
             F.length("html").alias("bytes"),
+            # the metrics lineage (_write_state); the cache pins the ids
+            F.spark_partition_id().alias("partition_id"),
         ]
         # Base.ts:1294-1295: every result document carries the resolved
         # proxy mode name ('base' when no proxy option is set)
@@ -548,13 +549,6 @@ class CrawlEngine:
             final_attempt = final_attempt | ~should_retry_col(
                 F.col("error_message"))
         ex["outcome_key"] = final_attempt.alias("final")
-        ex["metrics_key"] = F.spark_partition_id().alias("partition_id")
-        ex["metrics_aggs"] = [
-            F.count("*").alias("urls"),
-            F.sum(F.when(F.col("status") == 200, 1).otherwise(0))
-            .alias("fetched"),
-            F.sum(F.coalesce(F.col("bytes"), F.lit(0))).alias("bytes")]
-        ex["job_id"] = F.lit(cfg.job_id).alias("job_id")
         ex["links_pre"] = [
             F.col("job_id"),
             F.col("depth").alias("parent_depth"),
@@ -694,11 +688,12 @@ class CrawlEngine:
                    ex: dict) -> dict:
         """One round as named stages over the driver-resident frontier
         ``self._pending``, admitted on the driver. The submission order is
-        load-bearing: the discovery collect, the outcome job and the docs
-        writes evaluate the cached docs frame concurrently, and all three
-        overlap the previous round's writes, which _finalize_prev awaits
-        only before this round's state writes. The driver then builds the
-        visits and the next pending from the two collects. The time stamps
+        load-bearing: the discovery collect, the outcome job and the
+        results write evaluate the cached docs frame concurrently, and all
+        three overlap the previous round's results write, which
+        _finalize_prev awaits only before this round's state writes. The
+        driver then builds the visits, the metrics and the next pending
+        from the two collects. The time stamps
         delimit the meta ``timings`` phases."""
         t0 = time.time()
         n_pending = self._pending.num_rows
@@ -717,8 +712,7 @@ class CrawlEngine:
         if progress["enqueued"] < cfg.limit:
             disc_fut = self._submit_discovery(cfg, r, progress, docs, ex)
         t_plan = time.time()
-        outcome_fut, doc_writes = self._submit_doc_writes(r, docs, docs_view,
-                                                          ex)
+        outcome_fut, results_fut = self._submit_doc_writes(r, docs_view, ex)
         new_rows = FRONTIER_ARROW_SCHEMA.empty_table()
         t_disc = t_plan
         if disc_fut is not None:
@@ -731,7 +725,7 @@ class CrawlEngine:
         # before this round's state writes.
         self._finalize_prev()
         outcome = outcome_fut.result()
-        state_tables = self._write_state(r, progress["enqueued"],
+        state_tables = self._write_state(r, cfg.job_id, progress["enqueued"],
                                          admitted_rows, outcome, new_rows)
         meta = self._round_meta(
             cfg, r, progress, outcome, new_rows.num_rows,
@@ -742,8 +736,8 @@ class CrawlEngine:
         # A crash before that resumes from the last committed round with
         # this round's directories dropped — exact-resume is unchanged.
         self._prev_inflight = {
-            "round": r, "futures": doc_writes,
-            "tables": ["results", "metrics"] + state_tables,
+            "round": r, "write": results_fut,
+            "tables": ["results"] + state_tables,
             "meta": meta, "docs": docs,
         }
         return meta
@@ -829,15 +823,13 @@ class CrawlEngine:
         # UDF materializes at full parallelism (the cache also pins that
         # width — canChangeCachedPlanOutputPartitioning is off, so AQE
         # cannot byte-coalesce the compute-dense extract stage). But every
-        # CONSUMER job (results/visits writes, outcome collect) then paid 64
+        # CONSUMER job (results write, outcome collect) then paid 64
         # task launches and wrote 64 splinter files per round regardless of
         # round size — for a 100-row round that is pure scheduling overhead
         # (measured ~0.55 s per job). Consumers therefore read a coalesced
         # view sized from the round size (~1k rows/task); coalesce over the
         # cached scan is a narrow op reading the same blocks, so the
-        # extraction work is not re-partitioned. The metrics aggregation
-        # stays on the full-width frame — its rows record
-        # spark_partition_id() lineage, which the view would renumber.
+        # extraction work is not re-partitioned.
         return docs, docs.coalesce(n_view)
 
     def _submit_discovery(self, cfg: CrawlConfig, r: int, progress: dict,
@@ -907,40 +899,27 @@ class CrawlEngine:
             lambda: links.orderBy("parent_seq", "link_pos").limit(capacity)
             .toArrow())
 
-    def _submit_doc_writes(self, r: int, docs: DataFrame,
-                           docs_view: DataFrame, ex: dict):
-        """The outcome job and the results / metrics writes, all submitted
-        async. Returns (the outcome future, the write futures)."""
-        # One job: one (seq, status, final) row per admitted URL, from
-        # which the driver derives the progress counts, the retries and
-        # the visits (_write_state). Nothing in the round needs it
-        # before the state writes — capacity uses the driver-known
-        # `enqueued` — so it runs concurrently with the discovery collect
-        # and the doc writes (block-level cache locks make the shared docs
-        # materialization single-compute).
+    def _submit_doc_writes(self, r: int, docs_view: DataFrame, ex: dict):
+        """The outcome job and the results write, both submitted async.
+        Returns (the outcome future, the write future)."""
+        # One job: one (seq, status, final, partition_id, bytes) row per
+        # admitted URL, from which the driver derives the progress counts,
+        # the retries, the visits and the metrics (_write_state). Nothing
+        # in the round needs it before the state writes — capacity uses
+        # the driver-known `enqueued` — so it runs concurrently with the
+        # discovery collect and the results write (block-level cache locks
+        # make the shared docs materialization single-compute).
         outcome_fut = self._writes.submit(
-            lambda: docs_view.select("seq", "status", ex["outcome_key"])
-            .toArrow())
+            lambda: docs_view.select("seq", "status", ex["outcome_key"],
+                                     "partition_id", "bytes").toArrow())
         # results: persistence gated by scrape_paths (F5) — links still
-        # flow. The docs-derived writes are independent reads of the
-        # cached docs → submitted concurrently (each write targets its own
-        # round directory). None of them is awaited in this round:
-        # _finalize_prev() awaits + commits them while the NEXT round's
-        # compute jobs run (write pipelining).
-        append = self.catalog.append_round
-        futures = [
-            self._writes.submit(
-                append, docs_view.where(F.col("should_scrape"))
-                .drop("links", "should_scrape"), "results", r),
-        ]
-        # per-partition lineage/metrics (north rule)
-        metrics = (
-            docs.groupBy(ex["metrics_key"], "host")
-            .agg(*ex["metrics_aggs"])
-            .select("*", F.lit(r).alias("round"), ex["job_id"])
-        )
-        futures.append(self._writes.submit(append, metrics, "metrics", r))
-        return outcome_fut, futures
+        # flow. Not awaited in this round: _finalize_prev() awaits +
+        # commits it while the NEXT round's compute jobs run (write
+        # pipelining).
+        return outcome_fut, self._writes.submit(
+            self.catalog.append_round,
+            docs_view.where(F.col("should_scrape"))
+            .drop("links", "should_scrape", "partition_id"), "results", r)
 
     @staticmethod
     def _enqueue(r: int, enqueued: int, disc: pa.Table) -> pa.Table:
@@ -957,10 +936,12 @@ class CrawlEngine:
             "attempt": pa.array([1] * n),
         }, schema=FRONTIER_ARROW_SCHEMA)
 
-    def _write_state(self, r: int, enqueued: int, admitted: pa.Table,
-                     outcome: pa.Table, new_rows: pa.Table) -> list[str]:
+    def _write_state(self, r: int, job_id: str, enqueued: int,
+                     admitted: pa.Table, outcome: pa.Table,
+                     new_rows: pa.Table) -> list[str]:
         """Round r's visits — the admitted rows beside their fetch
-        outcome — and next pending — the unadmitted rows, the retries
+        outcome —, metrics — their per-(partition, host) rollup — and
+        next pending — the unadmitted rows, the retries
         (attempt + 1, every other column kept) and the new rows — written
         with pyarrow, the latter kept as the driver's frontier, then the
         seen state grown by the new hashes and checkpointed as round r
@@ -979,6 +960,22 @@ class CrawlEngine:
             "status": outcome.column("status").cast(pa.int32()),
             "round": pa.array([r] * admitted.num_rows, pa.int32()),
         }), "visits", r)
+        # per-partition lineage (S10/A1/A7), grouped as Spark groups:
+        # every row counted, null hosts one group
+        rollup = pa.table({
+            "partition_id": outcome["partition_id"], "host": admitted["host"],
+            "fetched": pc.equal(outcome["status"], 200).cast(pa.int64()),
+            "bytes": pc.coalesce(outcome["bytes"].cast(pa.int64()), 0),
+        }).group_by(["partition_id", "host"], use_threads=False).aggregate(
+            [([], "count_all"), ("fetched", "sum"), ("bytes", "sum")])
+        n = rollup.num_rows
+        self.catalog.append_round_local(pa.table({
+            "partition_id": rollup["partition_id"], "host": rollup["host"],
+            "urls": rollup["count_all"], "fetched": rollup["fetched_sum"],
+            "bytes": rollup["bytes_sum"],
+            "round": pa.array([r] * n, pa.int32()),
+            "job_id": pa.array([job_id] * n, pa.string()),
+        }), "metrics", r)
         pending, seq = self._pending, self._pending.column("seq")
         not_final = outcome.filter(pc.invert(outcome.column("final")))
         retries = pending.filter(pc.is_in(
@@ -1000,7 +997,7 @@ class CrawlEngine:
         self.catalog.append_round_local(nxt, "pending", r)
         self._pending = nxt
         if new_rows.num_rows == 0:
-            return ["visits", "pending"]
+            return ["visits", "metrics", "pending"]
         hashes = new_rows.column("url_hash").to_pylist()
         new = set(hashes)
         # both invariants keep every URL to one visit: in-batch dedup
@@ -1014,7 +1011,7 @@ class CrawlEngine:
                 f"round {r} seen delta holds already-seen url hashes")
         self._seen |= new
         self._write_seen_state(r)
-        return ["visits", "pending"] + CUMULATIVE_TABLES
+        return ["visits", "metrics", "pending"] + CUMULATIVE_TABLES
 
     @staticmethod
     def _round_meta(cfg: CrawlConfig, r: int, progress: dict,

@@ -182,38 +182,71 @@ BAD_CHARS = [" ", '"', "%", "<", ">", "[", "\\", "]", "^", "`", "{", "|", "}"]
 
 
 class TestBadHrefs:
-    """One bad href must not abort a crawl: the seed links /ok and one href
-    that a URI parser rejects, and the engine, in the default (ANSI) session,
-    visits and sees what the simulator does."""
+    """One bad href must not abort a crawl: the seed links /ok and every
+    href that a URI parser rejects, and the engine, in the default (ANSI)
+    session, visits and sees what the simulator does. One crawl covers all
+    of them; each href keeps its own check against that crawl."""
 
     SEED = "http://a.test/"
-
-    @pytest.mark.parametrize("href", [
+    HREFS = [
         *(f"/p{c}q" for c in BAD_CHARS),             # in the path
         *(f"/p?q={c}q" for c in BAD_CHARS),          # in the query
         *(f"/p#f{c}q" for c in BAD_CHARS),           # in the fragment
         "http://a.test:99999999999/x", "http://a.test:/x",
         "http://a.test:0080/x",
-    ])
-    def test_crawl_matches_simulator(self, spark, tmp_root, href):
+    ]
+
+    @pytest.fixture(scope="class")
+    def crawl(self, spark, tmp_root):
         import datetime
         import html as html_lib
 
         from anycrawl_spark.corpus import PAGES_SCHEMA
 
-        pages = {self.SEED: _page(["/ok", html_lib.escape(href)]),
+        pages = {self.SEED: _page(["/ok", *map(html_lib.escape, self.HREFS)]),
                  "http://a.test/ok": _page([])}
         ts = datetime.datetime(2024, 1, 1)
         corpus = spark.createDataFrame(
             [(u, ts, h.encode(), "", "en") for u, h in pages.items()],
             schema=PAGES_SCHEMA)
-        kw = dict(seed_url=self.SEED, strategy="all", max_depth=2, limit=10)
-        name = f"badhref_{hashlib.sha256(href.encode()).hexdigest()[:12]}"
-        _, _, visits, seen = run_engine(spark, corpus, tmp_root, name, **kw)
+        kw = dict(seed_url=self.SEED, strategy="all", max_depth=2,
+                  limit=len(self.HREFS) + 10)
+        _, _, visits, seen = run_engine(spark, corpus, tmp_root, "badhrefs",
+                                        **kw)
         sim = simulate_crawl(corpus_to_dict(
             [{"url": u, "html": h} for u, h in pages.items()]), **kw)
+        return visits, seen, sim
+
+    def _mismatches(self, hrefs, seen, sim) -> str:
+        """The hrefs whose canonical key the engine's seen set is missing,
+        or holds where the simulator's does not ('' when none)."""
+        import html as html_lib
+
+        from anycrawl_spark.kernel.extract import extract_page
+
+        missing, unexpected = [], []
+        for href in hrefs:
+            links = extract_page(self.SEED, _page([html_lib.escape(href)]),
+                                 formats=("links",))["links"]
+            for key in {key_of(u) for u in links if u.startswith("http")}:
+                in_engine = hashlib.sha256(key.encode()).hexdigest() in seen
+                if in_engine != (key in sim.seen):
+                    (unexpected if in_engine else missing).append(href)
+        return (f"missing from the engine's seen set: {missing}; "
+                f"unexpected in it: {unexpected}"
+                if missing or unexpected else "")
+
+    @pytest.mark.parametrize("href", HREFS)
+    def test_crawl_matches_simulator(self, crawl, href):
+        _, seen, sim = crawl
+        assert not self._mismatches([href], seen, sim)
+
+    def test_one_crawl_matches_simulator(self, spark, crawl):
+        visits, seen, sim = crawl
+        assert not self._mismatches(self.HREFS, seen, sim)
         assert_parity(spark, visits, seen, sim)
-        assert len(visits) == 3
+        # the limit is not binding: every seen URL was visited once
+        assert len(visits) == len(sim.seen) > 2
 
 
 class TestEnqueueBoundary:
@@ -537,6 +570,56 @@ class TestRetries:
         # failure counted once in totals despite 3 visits
         n404_urls = len([u for u, vs in by_url.items() if all(s == 404 for _, s, _ in vs)])
         assert summary["failed"] == n404_urls
+
+
+class TestMetrics:
+    """The per-(partition, host) lineage table (S10/A1/A7): its types, its
+    rows summed over partitions against the visits' per-(round, host)
+    rollup over the corpus, and its partition ids."""
+
+    SCHEMA = [("partition_id", "int"), ("host", "string"),
+              ("urls", "bigint"), ("fetched", "bigint"), ("bytes", "bigint"),
+              ("round", "int"), ("job_id", "string")]
+
+    @pytest.mark.parametrize("extra", [
+        {"politeness_budget": 2},
+        {"max_attempts": 2, "simulate_fetch_errors": True},
+    ], ids=["budget", "retries"])
+    def test_rows_roll_up_visits(self, spark, small_corpus, tmp_root, extra):
+        from anycrawl_spark.crawl import prepare_corpus
+
+        name = "metrics_" + "_".join(extra)
+        engine = CrawlEngine(spark, small_corpus, os.path.join(tmp_root, name))
+        engine.run(CrawlConfig(job_id=name, seed_url=SEED, strategy="all",
+                               max_depth=4, limit=60, respect_robots=False,
+                               **extra))
+        metrics = engine.catalog.read(spark, "metrics")
+        assert [(f.name, f.dataType.simpleString())
+                for f in metrics.schema] == self.SCHEMA
+
+        got = {(r["round"], r["host"]): (r["urls"], r["fetched"], r["bytes"])
+               for r in metrics.groupBy("round", "host").agg(
+                   *[F.sum(c).alias(c) for c in ("urls", "fetched", "bytes")])
+               .collect()}
+        pages = prepare_corpus(small_corpus).select(
+            F.col("page_url_hash").alias("url_hash"), "html")
+        want = {(r["round"], r["host"]): (r["urls"], r["fetched"], r["bytes"])
+                for r in engine.visits().join(pages, "url_hash", "left")
+                .groupBy("round", "host").agg(
+                    F.count("*").alias("urls"),
+                    F.sum((F.col("status") == 200).cast("long"))
+                    .alias("fetched"),
+                    F.sum(F.coalesce(F.length("html"), F.lit(0)))
+                    .alias("bytes")).collect()}
+        assert got == want
+        # the premise: rounds hold failed fetches and several hosts
+        assert any(urls > fetched for urls, fetched, _ in want.values())
+        assert len({host for _, host in want}) > 1
+
+        ids = metrics.select("partition_id", "job_id").collect()
+        assert all(r["partition_id"] is not None and r["partition_id"] >= 0
+                   for r in ids)
+        assert {r["job_id"] for r in ids} == {name}
 
 
 class TestCombinedSemantics:
@@ -930,7 +1013,7 @@ class TestPipelinedCheckpointing:
                                                tmp_root, monkeypatch, point):
         """A crash inside round 3's deferred commit — before its manifest
         write, or after it but before the superseded copies are deleted —
-        or in round 3's state writes while its doc writes are in flight,
+        or in round 3's state writes while its results write is in flight,
         resumes to the uninterrupted crawl with one seen copy."""
         from anycrawl_spark.catalog import Catalog
 
@@ -954,8 +1037,8 @@ class TestPipelinedCheckpointing:
         write_state = CrawlEngine._write_state
 
         def crashing_state(engine, r, *args):
-            # round 3's results/visits/metrics writes were submitted
-            # before its state writes and are still uncommitted
+            # round 3's results write was submitted before its state
+            # writes and is still uncommitted
             tables = write_state(engine, r, *args)
             if r == 3:
                 raise Crash(point)
